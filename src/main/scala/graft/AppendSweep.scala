@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.algo.{LocalGraph, LocalKernels}
 import graft.graph.{EdgeListIngest, PropertyGraph}
 
@@ -76,13 +75,8 @@ object AppendSweep {
       case a if a.nonEmpty => a.map(_.toInt).toSeq
       case _ => (1 to 7)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-append-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     def dijkstraCost(pg: PropertyGraph): Double = {

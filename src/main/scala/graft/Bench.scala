@@ -17,23 +17,25 @@ import org.apache.spark.sql.SparkSession
   * is self-diagnosing about ambient contention.
   */
 object Bench {
+  /** The 1/5/15-minute /proc/loadavg fields, or None when unreadable:
+    * the one reader behind both the start/end stamps and the taint
+    * sample.
+    */
+  private def readLoadavg(): Option[Array[String]] =
+    try Some(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("/proc/loadavg"))).trim.split("\\s+").take(3))
+    catch { case _: Throwable => None }
+
   private def loadavg(): String =
-    try {
-      val s = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim.split("\\s+")
-      s"[${s(0)},${s(1)},${s(2)}]"
-    } catch { case _: Throwable => "[]" }
+    readLoadavg().fold("[]")(_.mkString("[", ",", "]"))
 
   /** One atomic (l1, l5) sample. Taint bit and risk band must derive from
     * the SAME sample — separate reads raced (round-6 advice): the JSON
     * could carry tainted=false next to load_risk=high.
     */
   private def loadSample(): (Double, Double) =
-    try {
-      val s = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg"))).trim.split("\\s+")
-      (s(0).toDouble, s(1).toDouble)
-    } catch { case _: Throwable => (-1.0, -1.0) }
+    readLoadavg().flatMap(s => scala.util.Try((s(0).toDouble, s(1).toDouble))
+      .toOption).getOrElse((-1.0, -1.0))
 
   /** Ambient load above this makes wall-clock timings meaningless (2-20×
     * inflation observed in rounds 2 and 4); gate on it rather than let a
@@ -92,14 +94,7 @@ object Bench {
         f"$waitedSec s — timings carry load_risk=$risk, tainted=$tainted")
     val loadStart = loadavg()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Sessions.local(cpus.toInt, "graft-bench")
     // JVM/codegen/scheduler warmup — excluded from per-query timings so
     // the first measured query isn't charged for one-time JIT costs
     spark.range(1L << 20).select((org.apache.spark.sql.functions.col("id") % 7)

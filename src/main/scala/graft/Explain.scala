@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `explain("formatted")` for selected registry
   * queries so pushdown / pruning / join strategy / codegen spans can be
   * inspected (the "iterate until it's the plan you'd want" loop).
@@ -21,13 +19,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else DefaultAudit
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = core.Sessions.local(4, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val qs = SparkEntry.queries
     names.foreach { n =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: time registry queries (same session config + noop
   * forcing as Bench) without paying for the other ~75. Repeats N times,
   * interleaving the named queries per rep, so cache-warm vs cold cost and
@@ -14,23 +12,22 @@ object ProfileQuery {
     val names = args(0).split(',').toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // dev-only A/B hook: SPARK_GRAFT_PROFILE_CONF="k=v;k=v" layers extra
     // session confs so candidate settings can be measured before any
-    // production code adopts them
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
+    // production code adopts them. Static confs reach the new context as
+    // spark.* system properties; runtime SQL confs are set after, so they
+    // override the session defaults as well.
+    val extra = sys.env.get("SPARK_GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(';')).filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        (k.trim, v.trim)
+      }
+    extra.foreach { case (k, v) => sys.props(k) = v }
+    val spark = core.Sessions.local(cpus, "graft-profile")
+    extra.foreach { case (k, v) =>
+      if (spark.conf.isModifiable(k)) spark.conf.set(k, v)
+    }
     // job/stage/task counters: ambient-load-proof signals (a query's
     // scheduling footprint is deterministic where its wall time is not)
     val jobs = new java.util.concurrent.atomic.AtomicLong

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.algo.{LocalGraph, LocalKernels}
 import graft.graph.EdgeListIngest
 
@@ -18,13 +17,8 @@ import graft.graph.EdgeListIngest
 object SliceSweep {
   def main(args: Array[String]): Unit = {
     val slices = if (args.nonEmpty) args.map(_.toInt).toSeq else (1 to 7)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-slice-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     val src = queries.Graph.Src

@@ -1,26 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = core.Sessions.local(cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (GRAFT_VERIFY_ONLY=q1,q2): the driver never
     // sets it, so the contract path always dumps every query.
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    val attempted = SparkEntry.queries.filter(kv => selected(kv._1))
+    val failed = attempted.count { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
@@ -29,10 +23,14 @@ object Verify {
         // state) so one query's storage doesn't squat on the next ~70
         // queries' execution memory; no-op for plain plans
         graft.core.Checkpoints.release(df)
+        false
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        true
       }
     }
+    // counted, not only printed: the exit code stays 0 (driver contract)
+    System.err.println(s"[verify] $failed/${attempted.size} queries failed")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

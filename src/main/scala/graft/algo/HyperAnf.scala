@@ -109,27 +109,4 @@ object HyperAnf {
     rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
   }
-
-  /** Per-node ball readoffs at exactly `rounds` hops:
-    * (node, n_est, n_occ) — raw estimate + occupied-register count
-    * (= distinct md5 buckets of the ball's members; deterministic, so
-    * the scale checks can bound it against exact sampled BFS ball
-    * sizes with the collision expectation m·(1−(1−1/m)^b)).
-    */
-  def ballEstimates(spark: SparkSession, nodes: DataFrame,
-      edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst"))
-    var regs = init(nodes)
-    for (_ <- 1 to rounds) {
-      val next = advance(e, regs)
-      graft.core.Checkpoints.release(regs)
-      regs = next
-    }
-    val est = HyperLogLog.estimateOccBy(regs, Seq("node"))
-      .select(col("node"), col("n_est"), col("n_occ"))
-      .localCheckpoint(true)
-    graft.core.Checkpoints.release(regs)
-    est
-  }
 }

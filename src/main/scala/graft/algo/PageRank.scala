@@ -40,8 +40,8 @@ object PageRank {
     * graph whose edge list fits on the driver runs the identical integer
     * recurrence sequentially (10 distributed iterations on a 3 705-node
     * graph are pure scheduling overhead); GraphAlgoSpec pins the two
-    * paths bit-equal, GraphScaleCheck exercises the distributed one at
-    * 2M edges.
+    * paths bit-equal; the distributed one is certified repartition-
+    * invariant at 2M edges (notes/distributed_scale_r13.md).
     */
   val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
 

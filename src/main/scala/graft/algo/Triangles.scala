@@ -32,7 +32,8 @@ object Triangles {
     * threshold the wedge enumeration runs on the driver over adjacency
     * sets (Σ outdeg² work, milliseconds at reference scale); above it
     * the distributed plan runs. GraphAlgoSpec pins the paths equal;
-    * GraphScaleCheck validates the distributed one at 2M edges.
+    * the distributed one matched a driver brute force at 2M edges
+    * (notes/distributed_scale_r13.md).
     */
   val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
 

@@ -24,14 +24,4 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** Apply graft defaults to an externally-built session (driver contract
-    * sessions from Verify/Bench): UTC + AQE; shuffle partitions are left
-    * to the caller.
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
 }

@@ -1098,13 +1098,20 @@ class GraphAlgoSpec extends AnyFunSuite {
   test("wcc/triangles/node-similarity: random digraphs ≡ brute force") {
     // seeded random graphs, every new operator (distributed path forced
     // for WCC/triangles) against an independent in-test brute force
-    for (seed <- Seq(3, 17, 59, 101, 211)) {
+    val random = Seq(3, 17, 59, 101, 211).map { seed =>
       val rnd = new scala.util.Random(seed)
       val n = 20 + rnd.nextInt(20)
       val pairs = (for (_ <- 0 until 60 + rnd.nextInt(60)) yield
         (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
         .filter(e => e._1 != e._2).distinct
-      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      (s"seed=$seed", (0 until n).map(i => s"v$i"), pairs)
+    }
+    // adversarial shape: a path whose ids sort along it, so min-label
+    // propagation would need n supersteps; hook+contract must not
+    val pathIds = (0 until 2000).map(i => f"p$i%04d")
+    val path = ("path n=2000", pathIds, pathIds.zip(pathIds.tail))
+    for ((label, ids, pairs) <- random :+ path) {
+      val nodesDf = ids.toDF("node")
       val edgesDf = pairs.toDF("src", "dst")
       // brute components (undirected BFS)
       val adj = scala.collection.mutable.HashMap
@@ -1114,7 +1121,7 @@ class GraphAlgoSpec extends AnyFunSuite {
         adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
       }
       val comp = scala.collection.mutable.HashMap.empty[String, String]
-      (0 until n).map(i => s"v$i").foreach { start =>
+      ids.foreach { start =>
         if (!comp.contains(start)) {
           val seen = scala.collection.mutable.Set(start)
           val q = scala.collection.mutable.Queue(start)
@@ -1131,7 +1138,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       val gotWcc = algo.GraphComponents.wcc(spark, nodesDf, edgesDf,
           localEdgeThreshold = 0L)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(gotWcc === comp.toMap, s"wcc seed=$seed")
+      assert(gotWcc === comp.toMap, s"wcc $label")
       // brute triangles over the simple undirected graph
       val cnt = scala.collection.mutable.HashMap.empty[String, Long]
         .withDefaultValue(0L)
@@ -1146,8 +1153,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       val gotTri = algo.Triangles.perNode(nodesDf, edgesDf,
           localEdgeThreshold = 0L)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(gotTri === (0 until n).map(i => s"v$i")
-        .map(v => v -> cnt(v)).toMap, s"triangles seed=$seed")
+      assert(gotTri === ids.map(v => v -> cnt(v)).toMap,
+        s"triangles $label")
       // brute neighbor-set Jaccard at 1/3
       val out = pairs.groupBy(_._1).map { case (k, es) =>
         k -> es.map(_._2).toSet }
@@ -1160,8 +1167,52 @@ class GraphAlgoSpec extends AnyFunSuite {
       val gotSim = algo.NodeSimilarity.jaccard(edgesDf, 1, 3)
         .collect().map(r => (r.getString(0), r.getString(1)) ->
           ((r.getLong(2), r.getLong(3)))).toMap
-      assert(gotSim === expSim, s"node-similarity seed=$seed")
+      assert(gotSim === expSim, s"node-similarity $label")
     }
+  }
+
+  test("forced-distributed kernels keep result-plan stats small " +
+      "(Checkpoints.freshStats barrier)") {
+    // Spark 4 localCheckpoint carries ESTIMATED origin stats into the
+    // checkpoint leaf; a kernel whose rounds fan the state out under
+    // several joins compounds them to megabit sizeInBytes (minutes of
+    // BigInteger planning) unless freshStats resets them each round.
+    // Slice 1 measured <= 5.6k bits (notes/ROUND13.md).
+    val rnd = new scala.util.Random(29)
+    val side = 30
+    def id(x: Int, y: Int) = f"g$x%02d_$y%02d"
+    // seeded road-like grid: 80% of the lattice links, costs 1..9
+    val links = for {
+      x <- 0 until side; y <- 0 until side
+      (dx, dy) <- Seq((1, 0), (0, 1))
+      if x + dx < side && y + dy < side && rnd.nextDouble() < 0.8
+    } yield (id(x, y), id(x + dx, y + dy), 1L + rnd.nextInt(9))
+    val nodes = (for (x <- 0 until side; y <- 0 until side)
+      yield id(x, y)).toDF("node")
+    val edges = links.map(l => (l._1, l._2)).toDF("src", "dst")
+    val weighted = links.toDF("src", "dst", "w")
+    // 10 rounds: without the barrier Louvain's estimate passes 2^14 bits
+    // by round 8 (about x2 a round) and reaches megabits by round 16
+    val kernels: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "louvain" -> (() => algo.Louvain.run(spark, nodes, edges,
+        rounds = 10, localEdgeThreshold = 0L)),
+      "louvain2l" -> (() => algo.Louvain.runTwoLevel(spark, nodes, edges,
+        rounds = 10, coarseRounds = 4, localEdgeThreshold = 0L)),
+      "louvainW" -> (() => algo.Louvain.runWeighted(spark, nodes, weighted,
+        rounds = 10, localEdgeThreshold = 0L)),
+      "labelprop" -> (() => algo.LabelPropagation.run(spark, nodes, edges,
+        rounds = 10, localEdgeThreshold = 0L)),
+      "kcore" -> (() => algo.KCore.core(spark, edges,
+        localEdgeThreshold = 0L)))
+    val bits = kernels.map { case (name, run) =>
+      val df = run()
+      val b = df.queryExecution.optimizedPlan.stats.sizeInBytes
+        .bigInteger.bitLength
+      core.Checkpoints.release(df)
+      name -> b
+    }
+    info(bits.map { case (n, b) => s"$n=$b" }.mkString("stat bits: ", " ", ""))
+    bits.foreach { case (name, b) => assert(b <= (1 << 14), s"$name: $b bits") }
   }
 
   test("kcore: fixture peel; forced-distributed ≡ local on slice 1") {
