@@ -213,12 +213,13 @@ object Bench {
     println(fullLine)
     // The collecting harness keeps only a truncated stdout tail (observed:
     // BENCH_r0{5..8}.json all carry parsed:null with the line cut mid-key),
-    // so ALSO persist the full JSON to a file in the repo — committed at
+    // so ALSO persist the full JSON to a file (default
+    // notes/bench_last.json under the working directory) — committed at
     // round end, it preserves every per-query timing for later comparison
     // even when the stdout capture clips.
     try {
       val out = java.nio.file.Paths.get(sys.env.getOrElse(
-        "SPARK_GRAFT_BENCH_OUT", "/root/repo/notes/bench_last.json"))
+        "SPARK_GRAFT_BENCH_OUT", "notes/bench_last.json")).toAbsolutePath
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, (fullLine + "\n").getBytes("UTF-8"))
     } catch {

@@ -33,7 +33,7 @@ object LocalGraph {
 
   /** Build from the min-cost projection plus optional coords.
     * One `collect()` — only valid on graphs that fit on the driver; callers
-    * gate on a size threshold (see ShortestPaths.Threshold).
+    * gate on the core.LocalBudget check (see ShortestPaths.route).
     */
   def fromProjection(projection: DataFrame, nodes: Option[DataFrame]): LocalGraph = {
     val edgeRows = projection.select("src", "dst", "cost").collect()

@@ -1,7 +1,8 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.graph.PropertyGraph
 
 /** Public algorithm API — each method returns a DataFrame shaped like the
@@ -15,135 +16,132 @@ import graft.graph.PropertyGraph
   * Execution strategy is adaptive (SURVEY §7.2): graphs whose projection
   * fits on the driver run the sequential CSR kernels (broadcast-adjacency
   * fast path — the reference graph tops out at 37k nodes / 101k edges);
-  * larger graphs run the distributed relaxation kernel. The cutover is an
-  * edge-count threshold; both paths produce identical results (asserted by
-  * the cross-kernel test suite).
+  * larger graphs run the distributed relaxation kernel. The cutover is
+  * the shared core.LocalBudget byte/row budget, checked once per call;
+  * both paths produce identical results (asserted by the cross-kernel
+  * test suite). Every point-to-point entry point goes through one route
+  * (`route`) and one of two driver-side shapers (`pathFrame`,
+  * `summaryFrame`).
   */
 object ShortestPaths {
 
-  /** Above this projection edge count, use the distributed kernel.
-    * Sized for driver safety, not driver capacity: 5M edge Rows collect
-    * to roughly 1 GB with object overhead — comfortable on any
-    * production driver heap, while still two orders of magnitude above
-    * the reference's largest graph (101k edges). Overridable per
-    * deployment via -Dgraft.local.edge.threshold; the distributed kernel
-    * is result-identical (cross-kernel suite), so the knob trades only
-    * wall-clock, never correctness.
-    */
-  val LocalEdgeThreshold: Long =
-    sys.props.get("graft.local.edge.threshold").map(_.toLong)
-      .getOrElse(graft.core.LocalBudget.MaxLocalEdges)
+  /** Row backstop of the budget check (the byte budget binds first). */
+  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
+
+  private type Path = Option[(Seq[String], Seq[Double])]
 
   private def localGraph(g: PropertyGraph): LocalGraph =
     LocalGraph.fromProjection(g.projection, Some(g.nodes))
 
   private def useLocal(g: PropertyGraph): Boolean = {
-    // shared byte-budget guard (core.LocalBudget): the sys-prop row cap
-    // survives as an explicit per-deployment backstop
     val (n, b) = graft.core.LocalBudget.measureEdges(g.projection)
     graft.core.LocalBudget.fitsLocal(n, b, LocalEdgeThreshold)
   }
 
+  /** Spark's `round(x, 4)` on a double: HALF_UP on the decimal form. */
+  private def r4(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** The one dispatch of every point-to-point entry point: one budget
+    * check, then `kernel` over the driver CSR (`csr`, dense src/dst ids)
+    * or, above the budget, the distributed relaxation with target
+    * early-exit. A*'s heuristic, ALT's bounds, the bidirectional scope
+    * cut and CH's shortcuts only prune a sequential search; at cluster
+    * scale the frontier kernel subsumes them.
+    */
+  private def route(spark: SparkSession, g: PropertyGraph, src: String,
+      dst: String, csr: PropertyGraph => LocalGraph = localGraph)(
+      kernel: (LocalGraph, Int, Int) => Option[LocalKernels.PathResult]): Path =
+    if (useLocal(g)) {
+      val lg = csr(g)
+      kernel(lg, lg.idOf(src), lg.idOf(dst))
+        .map(p => (p.nodes.toSeq.map(lg.ids), p.costs.toSeq))
+    } else {
+      val state = DistributedSSSP.run(spark, g.projection, Seq(src), Some(dst))
+      val res = DistributedSSSP.reconstructPath(
+        state.filter(col("source") === src), src, dst)
+      graft.core.Checkpoints.release(state)
+      res
+    }
+
+  /** (seq, node_id, cost) rows of a path; no rows when there is none. */
+  private def pathFrame(spark: SparkSession, path: Path): DataFrame = {
+    import spark.implicits._
+    val (nodes, costs) = path.getOrElse((Nil, Nil))
+    nodes.indices.map(i => (i, nodes(i), costs(i)))
+      .toDF("seq", "node_id", "cost")
+  }
+
+  private val SummarySchema = StructType(Seq(
+    StructField("path_node_number", LongType, nullable = false),
+    StructField("total_cost", DoubleType, nullable = true)))
+
+  /** The reference's `count(nodeId), Max(cost)` summary row (neo4j-code
+    * .txt:36), shaped on the driver from the collected path: exactly one
+    * row, total_cost null when there is no path, and no Spark job.
+    */
+  private def summaryFrame(spark: SparkSession, path: Path): DataFrame = {
+    val (nodes, costs) = path.getOrElse((Nil, Nil))
+    spark.createDataFrame(java.util.List.of(Row(nodes.size.toLong,
+      if (costs.isEmpty) null else r4(costs.max))), SummarySchema)
+  }
+
+  private def dijkstra(spark: SparkSession, g: PropertyGraph, src: String,
+      dst: String): Path =
+    route(spark, g, src, dst)(LocalKernels.dijkstra(_, _, _))
+
+  /** A* with admissible Euclidean heuristic (SURVEY §4.3). */
+  private def astar(spark: SparkSession, g: PropertyGraph, src: String,
+      dst: String): Path =
+    route(spark, g, src, dst)(LocalKernels.astar(_, _, _))
+
   /** G1: single-pair Dijkstra, streamed path rows with running cost. */
   def dijkstraPath(spark: SparkSession, g: PropertyGraph,
-      src: String, dst: String): DataFrame = {
-    import spark.implicits._
-    pathResult(spark, g, src, dst, astar = false) match {
-      case None => Seq.empty[(Int, String, Double)].toDF("seq", "node_id", "cost")
-      case Some((nodes, costs)) =>
-        nodes.indices.map(i => (i, nodes(i), costs(i)))
-          .toDF("seq", "node_id", "cost")
-    }
-  }
+      src: String, dst: String): DataFrame =
+    pathFrame(spark, dijkstra(spark, g, src, dst))
 
   /** G1 summary shape: count + Max over the path stream
     * (reference: neo4j-code.txt:36 `count(nodeId), Max(cost)`).
     */
   def dijkstraSummary(spark: SparkSession, g: PropertyGraph,
       src: String, dst: String): DataFrame =
-    dijkstraPath(spark, g, src, dst)
-      .agg(count(col("node_id")).as("path_node_number"),
-        round(max(col("cost")), 4).as("total_cost"))
+    summaryFrame(spark, dijkstra(spark, g, src, dst))
 
-  /** G4: A* with admissible Euclidean heuristic (SURVEY §4.3). */
+  /** G4: A* path rows. */
   def astarPath(spark: SparkSession, g: PropertyGraph,
-      src: String, dst: String): DataFrame = {
-    import spark.implicits._
-    pathResult(spark, g, src, dst, astar = true) match {
-      case None => Seq.empty[(Int, String, Double)].toDF("seq", "node_id", "cost")
-      case Some((nodes, costs)) =>
-        nodes.indices.map(i => (i, nodes(i), costs(i)))
-          .toDF("seq", "node_id", "cost")
-    }
-  }
+      src: String, dst: String): DataFrame =
+    pathFrame(spark, astar(spark, g, src, dst))
 
   def astarSummary(spark: SparkSession, g: PropertyGraph,
       src: String, dst: String): DataFrame =
-    astarPath(spark, g, src, dst)
-      .agg(count(col("node_id")).as("path_node_number"),
-        round(max(col("cost")), 4).as("total_cost"))
+    summaryFrame(spark, astar(spark, g, src, dst))
 
   /** Bidirectional Dijkstra summary (meet-in-the-middle,
     * LocalKernels.bidirectional) — exact ≡ Dijkstra, about half the
     * search scope without coordinates or precomputation; the remaining
     * classic from the reference's improvement list (IMPL.md:831-836).
     * The reversed CSR comes from LocalGraph.reverse (same dense index
-    * space — no id remapping). Above the local threshold the
-    * distributed frontier kernel subsumes the scope cut exactly as
-    * astarPath's fallback does: at cluster scale frontier width, not
-    * settled count, is the cost driver.
+    * space — no id remapping).
     */
   def bidirectionalSummary(spark: SparkSession, g: PropertyGraph,
-      src: String, dst: String): DataFrame = {
-    import spark.implicits._
-    val resOpt: Option[(Seq[String], Seq[Double])] =
-      if (useLocal(g)) {
-        val lg = localGraph(g)
-        LocalKernels.bidirectional(lg, LocalGraph.reverse(lg),
-            lg.idOf(src), lg.idOf(dst))._1
-          .map(p => (p.nodes.toSeq.map(lg.ids), p.costs.toSeq))
-      } else pathResult(spark, g, src, dst, astar = false)
-    val pathDf = resOpt match {
-      case None =>
-        Seq.empty[(Int, String, Double)].toDF("seq", "node_id", "cost")
-      case Some((nodes, costs)) =>
-        nodes.indices.map(i => (i, nodes(i), costs(i)))
-          .toDF("seq", "node_id", "cost")
-    }
-    pathDf.agg(count(col("node_id")).as("path_node_number"),
-      round(max(col("cost")), 4).as("total_cost"))
-  }
+      src: String, dst: String): DataFrame =
+    summaryFrame(spark, route(spark, g, src, dst) { (lg, s, t) =>
+      LocalKernels.bidirectional(lg, LocalGraph.reverse(lg), s, t)._1
+    })
 
   /** A* under ALT landmark lower bounds (Landmarks.altHeuristic) — the
     * reference's own "reduce the search scope" improvement direction
     * (IMPL.md:831-836) made concrete: same exact optimum as Dijkstra
     * (admissible + consistent bounds), fewer expanded nodes, and unlike
     * the Euclidean heuristic it needs no coordinates — pure topology.
-    * Above the local threshold the distributed frontier kernel subsumes
-    * the heuristic exactly as astarPath does.
     */
   def astarLandmarkSummary(spark: SparkSession, g: PropertyGraph,
-      src: String, dst: String, landmarks: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val resOpt: Option[(Seq[String], Seq[Double])] =
-      if (useLocal(g)) {
-        val lg = localGraph(g)
-        val present = landmarks.filter(l => lg.index.containsKey(l))
-          .map(lg.idOf)
-        LocalKernels.astarTable(lg, lg.idOf(src), lg.idOf(dst),
-            Landmarks.altHeuristic(lg, present, lg.idOf(dst)))._1
-          .map(p => (p.nodes.toSeq.map(lg.ids), p.costs.toSeq))
-      } else pathResult(spark, g, src, dst, astar = true)
-    val pathDf = resOpt match {
-      case None =>
-        Seq.empty[(Int, String, Double)].toDF("seq", "node_id", "cost")
-      case Some((nodes, costs)) =>
-        nodes.indices.map(i => (i, nodes(i), costs(i)))
-          .toDF("seq", "node_id", "cost")
-    }
-    pathDf.agg(count(col("node_id")).as("path_node_number"),
-      round(max(col("cost")), 4).as("total_cost"))
-  }
+      src: String, dst: String, landmarks: Seq[String]): DataFrame =
+    summaryFrame(spark, route(spark, g, src, dst) { (lg, s, t) =>
+      LocalKernels.astarTable(lg, s, t,
+        Landmarks.altHeuristic(lg, present(lg, landmarks), t))._1
+    })
 
   /** Bidirectional ALT (Goldberg–Harrelson's full form): the g33
     * landmark bounds and the g35 meet-in-the-middle scope cut COMBINED —
@@ -151,39 +149,28 @@ object ShortestPaths {
     * (Landmarks.bidiAltPotentials) while landmark-proved dead nodes are
     * pruned outright. Exact ≡ Dijkstra; the expansion count lands below
     * both parents on the canonical pair (GraphAlgoSpec pins the
-    * ordering). Above the local threshold the distributed frontier
-    * kernel subsumes the scope cut as in the other summaries.
+    * ordering).
     */
   def bidiAltSummary(spark: SparkSession, g: PropertyGraph,
-      src: String, dst: String, landmarks: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val resOpt: Option[(Seq[String], Seq[Double])] =
-      if (useLocal(g)) {
-        val lg = localGraph(g)
-        val present = landmarks.filter(l => lg.index.containsKey(l))
-          .map(lg.idOf)
-        val (pf, prune) = Landmarks.bidiAltPotentials(lg, present,
-          lg.idOf(src), lg.idOf(dst))
-        LocalKernels.bidirectionalAlt(lg, LocalGraph.reverse(lg),
-            lg.idOf(src), lg.idOf(dst), pf, prune)._1
-          .map(p => (p.nodes.toSeq.map(lg.ids), p.costs.toSeq))
-      } else pathResult(spark, g, src, dst, astar = false)
-    val pathDf = resOpt match {
-      case None =>
-        Seq.empty[(Int, String, Double)].toDF("seq", "node_id", "cost")
-      case Some((nodes, costs)) =>
-        nodes.indices.map(i => (i, nodes(i), costs(i)))
-          .toDF("seq", "node_id", "cost")
-    }
-    pathDf.agg(count(col("node_id")).as("path_node_number"),
-      round(max(col("cost")), 4).as("total_cost"))
-  }
+      src: String, dst: String, landmarks: Seq[String]): DataFrame =
+    summaryFrame(spark, route(spark, g, src, dst) { (lg, s, t) =>
+      val (pf, prune) =
+        Landmarks.bidiAltPotentials(lg, present(lg, landmarks), s, t)
+      LocalKernels.bidirectionalAlt(lg, LocalGraph.reverse(lg), s, t,
+        pf, prune)._1
+    })
+
+  /** Dense ids of the landmarks present in `lg`. */
+  private def present(lg: LocalGraph, landmarks: Seq[String]): Seq[Int] =
+    landmarks.filter(l => lg.index.containsKey(l)).map(lg.idOf)
 
   /** Contraction-hierarchy query (ContractionHierarchy): build the
     * hierarchy (one-time precompute — cached per projection identity so
     * repeated queries in a session pay it once, the g34 serve shape),
     * answer (src, dst) with two tiny upward searches, unpack shortcuts
-    * to original hops, re-walk forward for oracle-bit-equal costs.
+    * to original hops, re-walk forward for oracle-bit-equal costs. The
+    * cache is reached through `route`, so it is only read or built
+    * below the budget.
     *
     * Staleness contract under EdgeListIngest.append (g34's fail-safe
     * discipline, pinned by ChDistributedSpec): a shortcut is only valid
@@ -196,32 +183,22 @@ object ShortestPaths {
     */
   def chSummary(spark: SparkSession, g: PropertyGraph,
       src: String, dst: String): DataFrame = {
-    import spark.implicits._
-    val resOpt: Option[(Seq[String], Seq[Double])] =
-      if (useLocal(g)) {
-        val (lg, ch) = chCache.synchronized {
-          val got = chCache.get(g.projection)
-          if (got != null) got
-          else {
-            val freshLg = localGraph(g)
-            val built = (freshLg, ContractionHierarchy.build(freshLg))
-            chCache.put(g.projection, built)
-            built
-          }
-        }
-        ch.query(lg, lg.idOf(src), lg.idOf(dst))._1.map { arr =>
-          (arr.toSeq.map(lg.ids), LocalKernels.rewalk(lg, arr).toSeq)
-        }
-      } else pathResult(spark, g, src, dst, astar = false)
-    val pathDf = resOpt match {
-      case None =>
-        Seq.empty[(Int, String, Double)].toDF("seq", "node_id", "cost")
-      case Some((nodes, costs)) =>
-        nodes.indices.map(i => (i, nodes(i), costs(i)))
-          .toDF("seq", "node_id", "cost")
+    lazy val (csr, ch) = chCache.synchronized {
+      val got = chCache.get(g.projection)
+      if (got != null) got
+      else {
+        val fresh = localGraph(g)
+        val built = (fresh, ContractionHierarchy.build(fresh))
+        chCache.put(g.projection, built)
+        built
+      }
     }
-    pathDf.agg(count(col("node_id")).as("path_node_number"),
-      round(max(col("cost")), 4).as("total_cost"))
+    summaryFrame(spark, route(spark, g, src, dst, _ => csr) { (lg, s, t) =>
+      ch.query(lg, s, t)._1.map { arr =>
+        val costs = LocalKernels.rewalk(lg, arr)
+        LocalKernels.PathResult(arr, costs, costs.last)
+      }
+    })
   }
 
   /** One (dense index, hierarchy) pair per projection DataFrame
@@ -231,25 +208,6 @@ object ShortestPaths {
     */
   private val chCache =
     new java.util.WeakHashMap[AnyRef, (LocalGraph, ContractionHierarchy)]()
-
-  private def pathResult(spark: SparkSession, g: PropertyGraph, src: String,
-      dst: String, astar: Boolean): Option[(Seq[String], Seq[Double])] = {
-    if (useLocal(g)) {
-      val lg = localGraph(g)
-      val res = if (astar) LocalKernels.astar(lg, lg.idOf(src), lg.idOf(dst))
-        else LocalKernels.dijkstra(lg, lg.idOf(src), lg.idOf(dst))
-      res.map(p => (p.nodes.toSeq.map(lg.ids), p.costs.toSeq))
-    } else {
-      // Scale path: distributed relaxation with target early-exit. The
-      // heuristic bias of A* only prunes a sequential search; at cluster
-      // scale the frontier kernel subsumes it.
-      val state = DistributedSSSP.run(spark, g.projection, Seq(src), Some(dst))
-      val res = DistributedSSSP.reconstructPath(
-        state.filter(col("source") === src), src, dst)
-      graft.core.Checkpoints.release(state)
-      res
-    }
-  }
 
   /** G2: single-source all-targets distances (delta-stepping semantics —
     * same fixpoint, bucket scheduling is an implementation detail).
@@ -317,8 +275,6 @@ object ShortestPaths {
   def yen(spark: SparkSession, g: PropertyGraph, src: String, dst: String,
       k: Int): DataFrame = {
     import spark.implicits._
-    def r4(x: Double): Double =
-      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     if (useLocal(g)) {
       val lg = localGraph(g)
       val paths = LocalKernels.yen(lg, lg.idOf(src), lg.idOf(dst), k)

@@ -24,4 +24,10 @@ object Sessions {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Drops every entry of a per-(session, key) memo whose session's
+    * SparkContext has stopped — the memos call this on every access.
+    */
+  def purgeStopped[V](memo: java.util.Map[(SparkSession, String), V]): Unit =
+    memo.keySet().removeIf(_._1.sparkContext.isStopped)
 }

@@ -54,7 +54,8 @@ object Tables {
     * and no two consumers share one plan object (a shared frame made one
     * consumer's cache()/unpersist() visible to every other and froze the
     * listing for the session — r16 advice). Entries whose context has
-    * stopped are purged on access (the queries.Graph cache discipline).
+    * stopped are purged on access (Sessions.purgeStopped, shared with the
+    * queries.Graph caches).
     */
   private val probedParts = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), Integer]()
@@ -69,18 +70,11 @@ object Tables {
     */
   private[core] def load(spark: SparkSession, path: String,
       spread: Boolean): DataFrame = {
-    val it = probedParts.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
+    Sessions.purgeStopped(probedParts)
     val df = spark.read.parquet(path)
     if (!spread) df
-    else {
-      val parts: Int = probedParts.computeIfAbsent((spark, path),
-        _ => df.rdd.getNumPartitions)
-      val target = spark.sparkContext.defaultParallelism
-      if (parts * 2 <= target) df.repartition(target) else df
-    }
+    else spreadIfNarrow(spark, df, probedParts.computeIfAbsent((spark, path),
+      _ => df.rdd.getNumPartitions))
   }
 
   /** Unsplittable-input guard (optimization guide §2.5: "one huge
@@ -106,10 +100,12 @@ object Tables {
     * The probe (`df.rdd.getNumPartitions`) only plans the bare scan — no
     * job runs — and the result is memoized per (session, path) above.
     */
-  def spreadNarrowScan(spark: SparkSession, df: DataFrame)
-      : DataFrame = {
+  def spreadNarrowScan(spark: SparkSession, df: DataFrame): DataFrame =
+    spreadIfNarrow(spark, df, df.rdd.getNumPartitions)
+
+  private def spreadIfNarrow(spark: SparkSession, df: DataFrame,
+      scanParts: Int): DataFrame = {
     val target = spark.sparkContext.defaultParallelism
-    val scanParts = df.rdd.getNumPartitions
     if (scanParts * 2 <= target) df.repartition(target) else df
   }
 

@@ -64,6 +64,24 @@ object DistributedPercentile {
       buckets: Int = 0): DataFrame =
     exactKeys(df, Seq(groupCol), specs, buckets)
 
+  /** Range-bucket count: `buckets` when ≥ 1, else volume-adaptive — each
+    * range bucket is sorted in one task, and a fixed 32 paid 32-task
+    * stages on kilobyte inputs AND would under-partition a 100 TB one.
+    * The grain is 256 KB of ESTIMATED bytes per bucket (cap 32768): the
+    * estimate is compressed-scan-anchored and undercounts in-memory row
+    * size ~10-20x, so 256 KB estimated is a few MB of real sort per
+    * task — small enough to keep the CPU-bound sort parallel (a 64 MB
+    * grain measured a single bucket serializing a ~2M-row sort, +1.3 s
+    * on q36 at sf0.1). Shared with PrefixSum.
+    */
+  private[operators] def rangeBuckets(df: DataFrame, buckets: Int): Int =
+    if (buckets >= 1) buckets
+    else {
+      val per = 256L * 1024
+      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      ((bytes + per - 1) / per).max(1).min(32768).toInt
+    }
+
   private def containsBinary(dt: org.apache.spark.sql.types.DataType): Boolean =
     dt match {
       case BinaryType => true
@@ -108,27 +126,12 @@ object DistributedPercentile {
       .select(col("__g"), col("__tv.__t").as("__t"), col("__tv.__v").as("__v"))
       .filter(col("__v").isNotNull)
 
-    // Volume-adaptive bucket count (buckets = 0): each range bucket is
-    // sorted in one task — a fixed 32 paid 32-task stages (checkpoint,
-    // counts, selection) on kilobyte inputs AND would under-partition a
-    // 100 TB one. The grain is 256 KB of ESTIMATED bytes per bucket:
-    // the estimate is compressed-scan-anchored and undercounts
-    // in-memory row size ~10-20x, so 256 KB estimated is a few MB of
-    // real sort per task — small enough to keep the CPU-bound sort
-    // parallel (a 64 MB grain measured a single bucket serializing a
-    // ~2M-row sort, +1.3 s on q36 at sf0.1). The cut positions only
-    // affect which partition a rank lands in, never the selected values
-    // or the interpolation — results are bit-identical for any bucket
-    // count.
-    val nBuckets =
-      if (buckets >= 1) buckets
-      else {
-        val per = 256L * 1024
-        val bytes = tagged.queryExecution.optimizedPlan.stats.sizeInBytes
-        ((bytes + per - 1) / per).max(1).min(32768).toInt
-      }
+    // The cut positions only affect which partition a rank lands in,
+    // never the selected values or the interpolation — results are
+    // bit-identical for any bucket count.
     val parted = tagged
-      .repartitionByRange(nBuckets, col("__t"), col("__g"), col("__v"))
+      .repartitionByRange(rangeBuckets(tagged, buckets),
+        col("__t"), col("__g"), col("__v"))
       .withColumn("__part", spark_partition_id())
       .localCheckpoint()
     try {

@@ -87,21 +87,11 @@ object PrefixSum {
     // downstream narrow coalesce (which computes several parent
     // partitions inside one task — e.g. Verify's coalesce(1) writes),
     // whereas checkpointed data cannot change underneath us.
-    // Volume-adaptive bucket count (buckets = 0), the
-    // DistributedPercentile policy: 256 KB of ESTIMATED bytes per range
-    // bucket (the bucket sort is CPU-bound and the estimate undercounts
-    // in-memory size ~10-20x — see the grain note there) — the fixed 32
-    // paid 32-task stages on kilobyte inputs and would under-partition
-    // a 100 TB one. Cut positions never change a prefix sum (it is
-    // order-defined, not cut-defined).
-    val nBuckets =
-      if (buckets >= 1) buckets
-      else {
-        val per = 256L * 1024
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        ((bytes + per - 1) / per).max(1).min(32768).toInt
-      }
-    val parted = df.repartitionByRange(nBuckets, col(keyCol))
+    // Volume-adaptive bucket count (buckets = 0) is the shared
+    // DistributedPercentile.rangeBuckets grain. Cut positions never
+    // change a prefix sum (it is order-defined, not cut-defined).
+    val parted = df.repartitionByRange(
+      DistributedPercentile.rangeBuckets(df, buckets), col(keyCol))
       .withColumn("__bucket", spark_partition_id())
       .localCheckpoint()
     val work = weightCols.zip(wTmp).foldLeft(parted) { case (d, (w, t)) =>

@@ -47,10 +47,7 @@ object Graph {
   private val cache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), PropertyGraph]()
   def graphFor(spark: SparkSession, path: String): PropertyGraph = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
+    graft.core.Sessions.purgeStopped(cache)
     cache.computeIfAbsent((spark, path),
       { case (s, p) => EdgeListIngest.build(s, p).cache() })
   }
@@ -63,10 +60,7 @@ object Graph {
   private val appendCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), PropertyGraph]()
   private def appendedGraph(s: SparkSession): PropertyGraph = {
-    val it = appendCache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
+    graft.core.Sessions.purgeStopped(appendCache)
     appendCache.computeIfAbsent((s, Slice2EdgeList),
       { case (ss, p) =>
         EdgeListIngest.append(ss, graphFor(ss, DefaultEdgeList), p).cache()
