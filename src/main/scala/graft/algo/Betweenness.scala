@@ -54,22 +54,18 @@ object Betweenness {
 
   val Micro: Long = 1_000_000L
 
-  /** Same production-safe driver budget as GraphComponents. */
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** (node, bc_micro) for every node in `nodes`. `edges` must be the
     * algorithm projection (src, dst, cost) with positive costs and
     * parallel edges pre-collapsed to min cost.
     */
   def run(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       sources: Seq[String], maxHops: Int = 100,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val e = edges.select(col("src").cast("string"), col("dst").cast("string"),
       col("cost").cast("double")).cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
     val out =
-      if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-          localEdgeThreshold)) {
+      if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
         val pairs = e.collect().map(r =>
           (r.getString(0), r.getString(1), r.getDouble(2)))
         val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))

@@ -34,8 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Boruvka {
 
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** Minimum spanning forest of the UNDIRECTED view of `edges`
     * (src, dst, cost): parallel/reverse edges collapse to the
     * min-cost canonical pair, self-loops drop. Returns one row per
@@ -45,7 +43,8 @@ object Boruvka {
     */
   def mst(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = 20,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val cols = edges.columns
     val cand = edges.select(col(cols(0)).as("s"), col(cols(1)).as("d"),
         col(cols(2)).cast("double").as("cost"))
@@ -54,10 +53,8 @@ object Boruvka {
         greatest(col("s"), col("d")).as("b"))
       .agg(min(col("cost")).as("cost"))
       .cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(
-      cand.select("a", "b"))
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes + 8 * nEdges,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(cand, localEdgeThreshold,
+        payloadBytesPerRow = 8)) {
       // ---- local: Kruskal over the sorted edge array ------------------
       val ord = graft.algo.IndependentSet.Utf8Order
       val rows = cand.collect()
@@ -75,27 +72,11 @@ object Boruvka {
           else ord.lt(b1, b2)
         }
       cand.unpersist()
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent(c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Double)]
-      rows.foreach { case (a, b, c) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          out += ((a, b, c))
-        }
-      }
+      // keep each edge that joins two trees, in sorted order
+      val uf = new UnionFind[String]
       import spark.implicits._
-      return out.toSeq.toDF("src", "dst", "cost")
+      return rows.filter { case (a, b, _) => uf.union(a, b) }.toSeq
+        .toDF("src", "dst", "cost")
     }
     // ---- distributed: Borůvka hook + sever + jump + contract ----------
     // Component-level edges carry their ORIGINAL endpoints: (pa, pb)

@@ -23,26 +23,17 @@ object Coloring {
     */
   def greedy(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxColors: Int = 12, lubyRounds: Int = 8,
-      localEdgeThreshold: Long = IndependentSet.LocalEdgeThreshold)
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
       : DataFrame = {
     val allNodes = nodes.select(col(nodes.columns(0)).as("node"))
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       // ---- local: ONE collect, all MIS layers on driver adjacency ----
       val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
       e.unpersist()
       val nodeIds = allNodes.collect().map(_.getString(0))
-      val adj = collection.mutable.HashMap
-        .empty[String, collection.mutable.Set[String]]
-      pairs.foreach { case (a, b) =>
-        if (a != b) {
-          adj.getOrElseUpdate(a, collection.mutable.Set.empty) += b
-          adj.getOrElseUpdate(b, collection.mutable.Set.empty) += a
-        }
-      }
+      val adj = IndependentSet.undirectedAdjacency(pairs)
       val color = collection.mutable.HashMap.empty[String, Int]
       var uncolored = nodeIds.toBuffer
       var c = 0

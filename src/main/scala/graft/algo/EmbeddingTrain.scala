@@ -64,9 +64,7 @@ object EmbeddingTrain {
     val p = pairs.select(col(pairs.columns(0)).cast("string").as("center"),
       col(pairs.columns(1)).cast("string").as("context"),
       col(pairs.columns(2)).cast("long").as("n_pairs")).cache()
-    val (nPairs, estBytes) = graft.core.LocalBudget.measureEdges(p)
-    if (graft.core.LocalBudget.fitsLocal(nPairs, estBytes,
-        localPairThreshold)) {
+    if (graft.core.LocalBudget.fits(p, localPairThreshold)) {
       val rows = p.collect().map(r =>
         (r.getString(0), r.getString(1), r.getLong(2)))
       p.unpersist()

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * node id, a total, engine-portable choice (VARCHAR min orders the same
   * byte-wise in Spark and the SQL oracle).
   *
-  * Same adaptive dispatch policy as ShortestPaths: a slice whose edge
-  * list fits comfortably on the driver resolves in one collect +
+  * Adaptive dispatch through the shared LocalBudget gate: a slice whose
+  * edge list fits comfortably on the driver resolves in one collect +
   * union-find; above the threshold the distributed path runs
   * min-hooking with edge contraction (the Shiloach–Vishkin hook step
   * expressed as a per-root min-reduction, plus graph contraction each
@@ -36,46 +36,25 @@ import org.apache.spark.sql.functions._
   */
 object GraphComponents {
 
-  /** Production-safe driver budget: 5M edges ≈ a few hundred MB of Row
-    * overhead, far below executor/driver heaps; beyond it the
-    * distributed path costs only O(log n) rounds.
-    */
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** (node, component) for every node in `nodes`; `edges` is directed
     * (src, dst) and is symmetrized internally — isolated nodes become
     * their own singleton component.
     */
   def wcc(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 50,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
       e.unpersist()
       val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))
         .collect().map(_.getString(0))
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent(c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      pairs.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
+      val uf = new UnionFind[String]
+      pairs.foreach { case (a, b) => uf.union(a, b) }
       import spark.implicits._
-      return nodeIds.map(nId => (nId, find(nId))).toSeq
+      return nodeIds.map(nId => (nId, uf.find(nId))).toSeq
         .toDF("node", "component")
     }
     // ---- distributed: min-hook + contract ------------------------------

@@ -34,20 +34,18 @@ import org.apache.spark.sql.functions._
   */
 object Hits {
 
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
   val Mass: Long = 1_000_000_000_000L
   private val Ppm = 1_000_000L
 
   /** (node, hub_micro, auth_micro) after `iters` rounds. */
   def run(nodes: DataFrame, edges: DataFrame, iters: Int = 10,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val nodeIds = nodes.select(col(nodes.columns(0)).as("node"))
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).distinct().cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
       e.unpersist()
       val ids = nodeIds.collect().map(_.getString(0))

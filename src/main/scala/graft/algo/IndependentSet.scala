@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object IndependentSet {
 
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** Spark md5() of a UTF-8 string as the lowercase hex the SQL oracles
     * compare — local twin of the distributed priority column. One
     * thread-local digest (MessageDigest is stateful, and the local
@@ -79,6 +77,22 @@ object IndependentSet {
     * rule). Shared by the local fast path and [[Coloring]]'s layered
     * local path.
     */
+  /** Symmetric adjacency sets of `pairs`, self-loops dropped: the
+    * driver graph of the MIS, coloring, k-core and k-truss twins.
+    */
+  private[algo] def undirectedAdjacency(pairs: Iterable[(String, String)])
+      : collection.mutable.HashMap[String, collection.mutable.Set[String]] = {
+    val adj = collection.mutable.HashMap
+      .empty[String, collection.mutable.Set[String]]
+    pairs.foreach { case (a, b) =>
+      if (a != b) {
+        adj.getOrElseUpdate(a, collection.mutable.Set.empty) += b
+        adj.getOrElseUpdate(b, collection.mutable.Set.empty) += a
+      }
+    }
+    adj
+  }
+
   private[algo] def lubyLocal(nodeIds: Array[String],
       adj: collection.Map[String, collection.Set[String]],
       rounds: Int): collection.mutable.Set[String] = {
@@ -113,30 +127,21 @@ object IndependentSet {
   /** (node, in_mis 1|0) for every node in `nodes`; `edges` is directed
     * (src, dst), symmetrized internally, self-loops dropped. Isolated
     * nodes enter the MIS in round 1 (no undecided neighbor beats them).
-    * Same adaptive dispatch as GraphComponents.wcc: under the driver
-    * budget the identical recurrence runs on local adjacency.
+    * Under the shared LocalBudget gate the identical recurrence runs on
+    * local adjacency.
     */
   def luby(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       rounds: Int = 8,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val allNodes = nodes.select(col(nodes.columns(0)).as("node"))
     val e0 = edges.select(col(edges.columns(0)).as("a"),
         col(edges.columns(1)).as("b")).cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e0)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       val pairs = e0.collect().map(r => (r.getString(0), r.getString(1)))
       e0.unpersist()
       val nodeIds = allNodes.collect().map(_.getString(0))
-      val adj = collection.mutable.HashMap
-        .empty[String, collection.mutable.Set[String]]
-      pairs.foreach { case (a, b) =>
-        if (a != b) {
-          adj.getOrElseUpdate(a, collection.mutable.Set.empty) += b
-          adj.getOrElseUpdate(b, collection.mutable.Set.empty) += a
-        }
-      }
-      val mis = lubyLocal(nodeIds, adj, rounds)
+      val mis = lubyLocal(nodeIds, undirectedAdjacency(pairs), rounds)
       import spark.implicits._
       return nodeIds.map(v => (v, if (mis.contains(v)) 1L else 0L)).toSeq
         .toDF("node", "in_mis")

@@ -20,14 +20,13 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** (node, core_degree) for every member of the k-core of the
     * undirected simple projection of `edges`.
     */
   def core(spark: SparkSession, edges: DataFrame, k: Int = 2,
       maxIter: Int = 100,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select(col(edges.columns(0)).as("s"),
       col(edges.columns(1)).as("d"))
@@ -35,16 +34,10 @@ object KCore {
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
       .distinct().localCheckpoint(true)
-    if ({ val (n, b) = graft.core.LocalBudget.measureEdges(und)
-          graft.core.LocalBudget.fitsLocal(n, b, localEdgeThreshold) }) {
+    if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
       val pairs = und.collect().map(r => (r.getString(0), r.getString(1)))
       graft.core.Checkpoints.release(und)
-      val adj = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.Set[String]]
-      pairs.foreach { case (x, y) =>
-        adj.getOrElseUpdate(x, scala.collection.mutable.Set.empty) += y
-        adj.getOrElseUpdate(y, scala.collection.mutable.Set.empty) += x
-      }
+      val adj = IndependentSet.undirectedAdjacency(pairs)
       var changed = true
       while (changed) {
         val drop = adj.collect { case (n, vs) if vs.size < k => n }.toSeq

@@ -35,14 +35,12 @@ object LabelPropagation {
       : DataFrame = {
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"))
-    // Adaptive dispatch (the PageRank.run policy, shared byte budget):
+    // Adaptive dispatch through the shared LocalBudget gate:
     // 16 distributed rounds on a driver-sized graph are pure scheduling
     // overhead (~17 s on the 3 705-node slice); the sequential twin
     // localReference computes the identical label table, pinned
     // bit-equal by GraphAlgoSpec on both paths.
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
       val ids = nodes.select(col(nodes.columns(0)).cast("string"))
         .collect().map(_.getString(0))

@@ -63,40 +63,15 @@ object Louvain {
     * modularity-gain rounds. `edges` is directed (src, dst) and
     * symmetrized internally; parallel edges collapse (the unweighted
     * modularity contract: neighbor multiplicity is 0/1 per pair) and
-    * self-loops drop.
+    * self-loops drop. Exactly runMultiLevel with the level budget
+    * fixed at 1 (the g28 contract).
     */
   def run(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       rounds: Int = 16,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
-    val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
-      col(edges.columns(1)).cast("string").as("b"))
-    // Adaptive dispatch (the PageRank.run policy, shared byte budget):
-    // 16 distributed rounds on a driver-sized graph are scheduling
-    // overhead; the sequential twin computes the identical table,
-    // pinned bit-equal by GraphAlgoSpec on both paths.
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      val ids = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
-      val idSet = ids.toSet
-      val known = pairs.filter(p => idSet(p._1) && idSet(p._2))
-      val labels = localReference(ids, known, rounds)
-      import spark.implicits._
-      return ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
-    }
-    val (und, degs, twoM) = prepare(spark, nodes, e)
-    val labels0 = degs.select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
-    val labels = moveLoop(und.withColumn("w", lit(1L)), degs, twoM,
-      labels0, rounds)
-    graft.core.Checkpoints.release(und)
-    val out = labels.select(col("node"), col("lbl").as("community"))
-    graft.core.Checkpoints.release(degs)
-    out
-  }
+      : DataFrame =
+    runMultiLevel(spark, nodes, edges, rounds, maxLevels = 1,
+      localEdgeThreshold = localEdgeThreshold)
 
   /** WEIGHTED Louvain (gds.louvain with relationshipWeightProperty):
     * the same synchronous parity contract with edge weights in integer
@@ -116,13 +91,10 @@ object Louvain {
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"),
       col(edges.columns(2)).cast("long").as("w"))
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(
-      e.select("a", "b"))
-    // measureEdges prices only the two id columns; the collect below
-    // also pulls the Long weight — charge it (8 B/row) against the
-    // budget so the local-path guard reflects actual driver bytes.
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes + 8L * nEdges,
-        localEdgeThreshold)) {
+    // the collect below also pulls the Long weight — charge it
+    // (8 B/row) against the budget beside the two id columns
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold,
+        payloadBytesPerRow = 8)) {
       val triples = e.collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       val ids = nodes.select(col(nodes.columns(0)).cast("string"))
@@ -230,9 +202,11 @@ object Louvain {
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"))
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    // Adaptive dispatch through the shared LocalBudget gate: 16
+    // distributed rounds on a driver-sized graph are scheduling
+    // overhead; the sequential twin computes the identical table,
+    // pinned bit-equal by GraphAlgoSpec on both paths.
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
       val ids = nodes.select(col(nodes.columns(0)).cast("string"))
         .collect().map(_.getString(0))
@@ -459,7 +433,8 @@ object Louvain {
       pairs: Array[(String, String)], rounds: Int, coarseRounds: Int,
       maxLevels: Int): Map[String, String] = {
     var q = localReference(nodeIds, pairs, rounds)
-    val und = pairs.filter(p => p._1 != p._2)
+    // lazy: `run` (maxLevels = 1) never contracts
+    lazy val und = pairs.filter(p => p._1 != p._2)
       .flatMap(p => Seq(p, p.swap)).distinct
     var level = 1
     var converged = false

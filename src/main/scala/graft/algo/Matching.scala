@@ -22,8 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Matching {
 
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** Greedy WEIGHTED matching by locally-dominant edges (Preis 1999 /
     * Hoepman 2004): an edge matches when it is the heaviest undecided
     * edge at BOTH endpoints under the strict total order
@@ -36,7 +34,8 @@ object Matching {
     */
   def heaviest(spark: SparkSession, edges: DataFrame,
       rounds: Int = 10,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val cols = edges.columns
     val e0 = edges.select(col(cols(0)).as("s"), col(cols(1)).as("d"),
         col(cols(2)).cast("double").as("cost"))
@@ -45,10 +44,8 @@ object Matching {
         greatest(col("s"), col("d")).as("b"))
       .agg(max(col("cost")).as("cost"))
       .cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(
-      e0.select("a", "b"))
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes + 8 * nEdges,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e0, localEdgeThreshold,
+        payloadBytesPerRow = 8)) {
       // ---- local: THE unique greedy heaviest-first matching ----------
       val canon = e0.collect()
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
@@ -142,7 +139,8 @@ object Matching {
     */
   def maximal(spark: SparkSession, edges: DataFrame,
       rounds: Int = 8,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val e0 = edges.select(col(edges.columns(0)).as("s"),
         col(edges.columns(1)).as("d"))
       .filter(col("s") =!= col("d"))
@@ -150,9 +148,7 @@ object Matching {
         greatest(col("s"), col("d")).as("b"))
       .distinct()
       .cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e0)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local replay of the per-round dominance recurrence --------
       var ue = e0.collect().map(r => (r.getString(0), r.getString(1)))
         .toSet

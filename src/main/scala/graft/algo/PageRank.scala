@@ -1,6 +1,6 @@
 package graft.algo
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PageRank over the projected simple digraph, in EXACT integer
@@ -36,76 +36,34 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Same adaptive dispatch policy as ShortestPaths/GraphComponents: a
-    * graph whose edge list fits on the driver runs the identical integer
-    * recurrence sequentially (10 distributed iterations on a 3 705-node
-    * graph are pure scheduling overhead); GraphAlgoSpec pins the two
-    * paths bit-equal; the distributed one is certified repartition-
-    * invariant at 2M edges (notes/distributed_scale_r13.md).
-    */
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** (node, rank_micro) after `iters` iterations; `nodes` is a
     * one-column node-id frame, `edges` a (src, dst) simple digraph.
+    * A graph whose edge list fits the driver budget runs the identical
+    * integer recurrence sequentially (10 distributed iterations on a
+    * 3 705-node graph are pure scheduling overhead); GraphAlgoSpec pins
+    * the two paths bit-equal; the distributed one is certified
+    * repartition-invariant at 2M edges (notes/distributed_scale_r13.md).
     */
   def run(nodes: DataFrame, edges: DataFrame, iters: Int = 10,
       mass: Long = 1_000_000_000_000L,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val nodeIds = nodes.select(col(nodes.columns(0)).as("node"))
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist()
-      val ids = nodeIds.collect().map(_.getString(0))
-      val n = ids.length
-      require(n > 0, "empty node set")
-      val unit = mass / n
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
+      val (ids, pairs) = collectLocal(nodeIds, e)
+      require(ids.nonEmpty, "empty node set")
+      val unit = mass / ids.length
       val base = 15L * unit / 100L
-      val deg = pairs.groupBy(_._1).map { case (s, es) =>
-        s -> es.length.toLong }
-      var r = ids.map(_ -> unit).toMap
-      for (_ <- 1 to iters) {
-        val in = scala.collection.mutable.HashMap.empty[String, Long]
-          .withDefaultValue(0L)
-        // r.get: an edge whose src is outside the node frame contributes
-        // nothing — same as the distributed path's inner join of ranks
-        // with deg (deg still counts ALL out-edges, so mass sent toward
-        // ids outside the node set leaks identically on both paths)
-        pairs.foreach { case (s, d) =>
-          r.get(s).foreach(rs => in(d) += rs / deg(s)) }
-        r = ids.map(v => v -> (base + 85L * in(v) / 100L)).toMap
-      }
-      val spark = nodes.sparkSession
-      import spark.implicits._
-      return ids.map(v => (v, r(v))).toSeq.toDF("node", "rank_micro")
+      return localLoop(nodes, ids, pairs, iters, _ => unit, _ => base)
     }
     // N is a bounded driver scalar (one count), not a data collect
     val n = nodeIds.count()
     require(n > 0, "empty node set")
     val unit = mass / n
-    val base = 15L * unit / 100L
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).cache()
-    var ranks = nodeIds.withColumn("r", lit(unit)).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val contribs = ranks.join(deg, ranks("node") === deg("src"))
-        .selectExpr("src", "r div deg AS c")
-      val sums = e.join(contribs, Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum("c").as("m"))
-      val next = nodeIds.join(sums, Seq("node"), "left_outer")
-        .selectExpr("node",
-          s"CAST($base + (85 * coalesce(m, CAST(0 AS BIGINT))) div 100" +
-            " AS BIGINT) AS r")
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(ranks)
-      ranks = next
-    }
-    deg.unpersist()
-    e.unpersist()
-    ranks.select(col("node"), col("r").as("rank_micro"))
+    distributedLoop(nodeIds, e, iters, lit(unit), lit(15L * unit / 100L))
   }
 
   /** Personalized PageRank: the teleport mass returns to ONE seed node
@@ -118,53 +76,78 @@ object PageRank {
     */
   def personalized(nodes: DataFrame, edges: DataFrame, seed: String,
       iters: Int = 10, mass: Long = 1_000_000_000_000L,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val nodeIds = nodes.select(col(nodes.columns(0)).as("node"))
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
     val base = 15L * mass / 100L
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist()
-      val ids = nodeIds.collect().map(_.getString(0))
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
+      val (ids, pairs) = collectLocal(nodeIds, e)
       require(ids.contains(seed), s"seed $seed not in node set")
-      val deg = pairs.groupBy(_._1).map { case (s, es) =>
-        s -> es.length.toLong }
-      var r = ids.map(v => v -> (if (v == seed) mass else 0L)).toMap
-      for (_ <- 1 to iters) {
-        val in = scala.collection.mutable.HashMap.empty[String, Long]
-          .withDefaultValue(0L)
-        pairs.foreach { case (s, d) =>
-          r.get(s).foreach(rs => in(d) += rs / deg(s)) }
-        r = ids.map(v =>
-          v -> ((if (v == seed) base else 0L) + 85L * in(v) / 100L)).toMap
-      }
-      val spark = nodes.sparkSession
-      import spark.implicits._
-      return ids.map(v => (v, r(v))).toSeq.toDF("node", "rank_micro")
+      return localLoop(nodes, ids, pairs, iters,
+        v => if (v == seed) mass else 0L, v => if (v == seed) base else 0L)
     }
     // Same precondition as the local path: a missing seed must fail
     // loudly, not return an all-zero vector. One bounded count, once.
     require(nodeIds.filter(col("node") === lit(seed)).limit(1).count() == 1,
       s"seed $seed not in node set")
+    // teleport term via the Column API — `seed` is a data value, never
+    // spliced into SQL text (quotes in ids parse fine this way)
+    val atSeed = col("node") === lit(seed)
+    distributedLoop(nodeIds, e, iters,
+      when(atSeed, lit(mass)).otherwise(lit(0L)),
+      when(atSeed, lit(base)).otherwise(lit(0L)))
+  }
+
+  private def collectLocal(nodeIds: DataFrame, e: DataFrame)
+      : (Array[String], Array[(String, String)]) = {
+    val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
+    e.unpersist()
+    (nodeIds.collect().map(_.getString(0)), pairs)
+  }
+
+  /** The driver twin: `start(v)` is v's initial mass, `teleport(v)` the
+    * base it receives every round before the damped in-flow.
+    */
+  private def localLoop(nodes: DataFrame, ids: Array[String],
+      pairs: Array[(String, String)], iters: Int, start: String => Long,
+      teleport: String => Long): DataFrame = {
+    val deg = pairs.groupBy(_._1).map { case (s, es) =>
+      s -> es.length.toLong }
+    var r = ids.map(v => v -> start(v)).toMap
+    for (_ <- 1 to iters) {
+      val in = scala.collection.mutable.HashMap.empty[String, Long]
+        .withDefaultValue(0L)
+      // r.get: an edge whose src is outside the node frame contributes
+      // nothing — same as the distributed path's inner join of ranks
+      // with deg (deg still counts ALL out-edges, so mass sent toward
+      // ids outside the node set leaks identically on both paths)
+      pairs.foreach { case (s, d) =>
+        r.get(s).foreach(rs => in(d) += rs / deg(s)) }
+      r = ids.map(v => v -> (teleport(v) + 85L * in(v) / 100L)).toMap
+    }
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    ids.map(v => (v, r(v))).toSeq.toDF("node", "rank_micro")
+  }
+
+  /** The distributed twin of `localLoop`: `start` and `teleport` are
+    * bigint Columns over `node`.
+    */
+  private def distributedLoop(nodeIds: DataFrame, e: DataFrame, iters: Int,
+      start: Column, teleport: Column): DataFrame = {
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).cache()
-    var ranks = nodeIds.withColumn("r",
-        when(col("node") === lit(seed), lit(mass)).otherwise(lit(0L)))
-      .localCheckpoint(true)
+    var ranks = nodeIds.withColumn("r", start).localCheckpoint(true)
     for (_ <- 1 to iters) {
       val contribs = ranks.join(deg, ranks("node") === deg("src"))
         .selectExpr("src", "r div deg AS c")
       val sums = e.join(contribs, Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum("c").as("m"))
-      // teleport term via the Column API — `seed` is a data value, never
-      // spliced into SQL text (quotes in ids parse fine this way)
       val next = nodeIds.join(sums, Seq("node"), "left_outer")
         .select(col("node"),
-          (when(col("node") === lit(seed), lit(base)).otherwise(lit(0L)) +
-            expr("(85 * coalesce(m, CAST(0 AS BIGINT))) div 100"))
+          (teleport + expr("(85 * coalesce(m, CAST(0 AS BIGINT))) div 100"))
             .cast("bigint").as("r"))
         .localCheckpoint(true)
       graft.core.Checkpoints.release(ranks)

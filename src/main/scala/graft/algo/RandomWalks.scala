@@ -32,23 +32,17 @@ import org.apache.spark.sql.functions._
   */
 object RandomWalks {
 
-  /** Adaptive dispatch shared by both walkers (the PageRank.run policy,
-    * core.LocalBudget byte guard): a driver-sized graph runs the
-    * sequential twin instead of L supersteps of scheduling overhead.
-    * Returns None when the graph must stay distributed.
+  /** Adaptive dispatch shared by both walkers (the core.LocalBudget
+    * gate): a driver-sized graph runs the sequential twin instead of L
+    * supersteps of scheduling overhead. Returns None when the graph must
+    * stay distributed.
     */
   private def tryLocal(nodes: DataFrame, edges: DataFrame, edgeCap: Long,
       twin: (Array[String], Array[(String, String)]) =>
         Set[(String, Int, Int, String)]): Option[DataFrame] = {
-    // edgeCap <= 0 means "force distributed" (the spec hook): skip the
-    // measurement aggregation job entirely instead of paying for an
-    // answer the caller has already rejected
-    if (edgeCap <= 0) return None
     val e = edges.select(col(edges.columns(0)).cast("string").as("src"),
       col(edges.columns(1)).cast("string").as("dst"))
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (!graft.core.LocalBudget.fitsLocal(nEdges, estBytes, edgeCap))
-      return None
+    if (!graft.core.LocalBudget.fits(e, edgeCap)) return None
     // NOT filtered to the node frame: walks may traverse ids that only
     // appear as edge endpoints (both paths share that semantics).
     // ids DISTINCT to match the distributed paths' distinct node frame

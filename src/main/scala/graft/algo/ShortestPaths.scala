@@ -25,18 +25,14 @@ import graft.graph.PropertyGraph
   */
 object ShortestPaths {
 
-  /** Row backstop of the budget check (the byte budget binds first). */
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   private type Path = Option[(Seq[String], Seq[Double])]
 
   private def localGraph(g: PropertyGraph): LocalGraph =
     LocalGraph.fromProjection(g.projection, Some(g.nodes))
 
-  private def useLocal(g: PropertyGraph): Boolean = {
-    val (n, b) = graft.core.LocalBudget.measureEdges(g.projection)
-    graft.core.LocalBudget.fitsLocal(n, b, LocalEdgeThreshold)
-  }
+  private def useLocal(g: PropertyGraph): Boolean =
+    graft.core.LocalBudget.fits(g.projection,
+      graft.core.LocalBudget.MaxLocalEdges)
 
   /** Spark's `round(x, 4)` on a double: HALF_UP on the decimal form. */
   private def r4(x: Double): Double =

@@ -50,22 +50,18 @@ import org.apache.spark.sql.functions._
   */
 object StronglyConnected {
 
-  /** Same production-safe driver budget as GraphComponents. */
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** (node, component) for every node in `nodes`; `edges` is directed
     * (src, dst); parallel edges and self-loops are tolerated. Isolated
     * nodes become singleton components.
     */
   def scc(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxOuter: Int = 30,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val e = edges.select(col(edges.columns(0)).cast("string").as("src"),
         col(edges.columns(1)).cast("string").as("dst"))
       .filter(col("src") =!= col("dst")).distinct().cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
       e.unpersist()
       val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))

@@ -28,17 +28,15 @@ import org.apache.spark.sql.functions._
   */
 object Triangles {
 
-  /** Same adaptive dispatch policy as the other kernels: below the
-    * threshold the wedge enumeration runs on the driver over adjacency
-    * sets (Σ outdeg² work, milliseconds at reference scale); above it
-    * the distributed plan runs. GraphAlgoSpec pins the paths equal;
-    * the distributed one matched a driver brute force at 2M edges
-    * (notes/distributed_scale_r13.md).
+  /** Below the driver budget the wedge enumeration runs on the driver
+    * over adjacency sets (Σ outdeg² work, milliseconds at reference
+    * scale); above it the distributed plan runs. GraphAlgoSpec pins the
+    * paths equal; the distributed one matched a driver brute force at 2M
+    * edges (notes/distributed_scale_r13.md).
     */
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   def perNode(nodes: DataFrame, edges: DataFrame,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     val e = edges.select(col(edges.columns(0)).as("s"),
       col(edges.columns(1)).as("d"))
     // canonical undirected simple edges {a < b}
@@ -46,8 +44,7 @@ object Triangles {
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
       .distinct().cache()
-    if ({ val (n, b) = graft.core.LocalBudget.measureEdges(und)
-          graft.core.LocalBudget.fitsLocal(n, b, localEdgeThreshold) }) {
+    if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
       val pairs = und.collect().map(r => (r.getString(0), r.getString(1)))
       und.unpersist()
       val ids = nodes.select(col(nodes.columns(0)).cast("string"))
@@ -162,6 +159,7 @@ object Triangles {
     */
   def incrementalPerNode(nodes: DataFrame, undOld: DataFrame,
       undNew: DataFrame,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame =
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame =
     foldDelta(perNode(nodes, undOld, localEdgeThreshold), undOld, undNew)
 }

@@ -22,15 +22,14 @@ import org.apache.spark.sql.functions._
   */
 object Truss {
 
-  val LocalEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges
-
   /** Surviving canonical edges (src, dst) with src < dst of the k-truss
     * of `edges`' undirected view. `maxRounds` bounds the peel; the run
     * fails loudly if the fixpoint is not reached inside it.
     */
   def truss(spark: SparkSession, edges: DataFrame, k: Int,
       maxRounds: Int = 16,
-      localEdgeThreshold: Long = LocalEdgeThreshold): DataFrame = {
+      localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
+      : DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val minSup = k - 2
     val e0 = edges.select(col(edges.columns(0)).as("s"),
@@ -40,9 +39,7 @@ object Truss {
         greatest(col("s"), col("d")).as("b"))
       .distinct()
       .cache()
-    val (nEdges, estBytes) = graft.core.LocalBudget.measureEdges(e0)
-    if (graft.core.LocalBudget.fitsLocal(nEdges, estBytes,
-        localEdgeThreshold)) {
+    if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local peel on adjacency sets -------------------------------
       var es = e0.collect().map(r => (r.getString(0), r.getString(1)))
         .toSet
@@ -51,12 +48,7 @@ object Truss {
       var dropped = true
       while (dropped && r < maxRounds) {
         r += 1
-        val adj = collection.mutable.HashMap
-          .empty[String, collection.mutable.Set[String]]
-        es.foreach { case (a, b) =>
-          adj.getOrElseUpdate(a, collection.mutable.Set.empty) += b
-          adj.getOrElseUpdate(b, collection.mutable.Set.empty) += a
-        }
+        val adj = IndependentSet.undirectedAdjacency(es)
         val keep = es.filter { case (a, b) =>
           (adj(a) & adj(b)).size >= minSup
         }

@@ -3,22 +3,22 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Shared driver-budget guard for the graph kernels' adaptive local
-  * paths (PageRank, HITS, k-core, betweenness, triangles, SCC, WCC,
-  * label propagation, shortest paths).
+/** Shared driver-budget guard for the adaptive local paths of the graph
+  * kernels (PageRank, WCC, shortest paths, Louvain, …) and of transitive
+  * dedup grouping.
   *
-  * Round-8 review note: each kernel carried its own 5M-ROW threshold,
-  * but what actually bounds the local path is driver HEAP — 5M edges of
-  * 3-char ids and 5M edges of 200-char URLs are very different collects.
-  * This helper measures the real payload (one aggregation job over the
-  * already-cached edge frame, replacing the count() the kernels ran
-  * anyway) and admits the local path only while the estimated collected
-  * size fits a fixed byte budget. One constant, every call site.
+  * `fits` is the one gate: every adaptive kernel calls it once to choose
+  * between its sequential driver twin and its distributed kernel. It
+  * measures the real payload (one aggregation job over the edge frame,
+  * replacing the count() the kernels ran anyway) and admits the local
+  * path only while the estimated collected size fits a fixed byte budget
+  * and the caller's row cap. A negative cap returns false without
+  * running a job; a cap of 0 admits only an empty edge set.
   *
   * The per-kernel `localEdgeThreshold` parameter survives as a row-count
   * backstop and as the spec hook (pass 0 to force the distributed path);
-  * its default is high enough that the byte budget is the binding
-  * constraint for realistic ids.
+  * its default, `MaxLocalEdges`, is high enough that the byte budget is
+  * the binding constraint for realistic ids.
   */
 object LocalBudget {
 
@@ -80,4 +80,17 @@ object LocalBudget {
     */
   def fitsLocal(nEdges: Long, estBytes: Long, edgeCap: Long): Boolean =
     nEdges <= edgeCap && estBytes <= MaxLocalBytes
+
+  /** The dispatch gate: true iff `e` (string ids in its first two
+    * columns) fits the driver budget and the row cap `cap`, with
+    * `payloadBytesPerRow` extra bytes per row for columns the caller
+    * collects beyond the two ids (e.g. 8 for a weight). Runs one
+    * `measureEdges` aggregation, or none when `cap` is negative, since no
+    * row count is below it.
+    */
+  def fits(e: DataFrame, cap: Long, payloadBytesPerRow: Long = 0L): Boolean =
+    cap >= 0 && {
+      val (n, bytes) = measureEdges(e)
+      fitsLocal(n, bytes + payloadBytesPerRow * n, cap)
+    }
 }

@@ -789,32 +789,17 @@ object Dedup {
     // — r9 verdict item 6 retired the last bare row-count guard here):
     // a pair set that fits the driver budget resolves in one collect +
     // union-find instead of paying a shuffle per propagation superstep.
-    // measureEdges' string-length estimate over long ids overestimates
-    // the collected (Long, Long) rows, so the admit is conservative.
+    // The gate's string-length estimate over long ids overestimates the
+    // collected (Long, Long) rows, so the admit is conservative.
     val cached = pairs.select(col("id_a"), col("id_b")).transform(graft.core.Tables.shrinkForCache(_)).cache()
-    val (nPairs, estBytes) = graft.core.LocalBudget.measureEdges(cached)
-    if (graft.core.LocalBudget.fitsLocal(nPairs, estBytes, localThreshold)) {
+    if (graft.core.LocalBudget.fits(cached, localThreshold)) {
       val edges = cached.collect().map(r => (r.getLong(0), r.getLong(1)))
       cached.unpersist()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent(c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      edges.foreach { case (a, b) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
+      val uf = new graft.algo.UnionFind[Long]
+      edges.foreach { case (a, b) => uf.union(a, b) }
       val members = edges.flatMap(e => Seq(e._1, e._2)).distinct
       import spark.implicits._
-      return members.map(m => (m, find(m))).toSeq
+      return members.map(m => (m, uf.find(m))).toSeq
         .toDF("doc_id", "group_id")
     }
     cached.unpersist()

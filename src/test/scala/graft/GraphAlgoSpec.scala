@@ -1139,6 +1139,10 @@ class GraphAlgoSpec extends AnyFunSuite {
           localEdgeThreshold = 0L)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(gotWcc === comp.toMap, s"wcc $label")
+      // and the local union-find twin under the default budget
+      val localWcc = algo.GraphComponents.wcc(spark, nodesDf, edgesDf)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(localWcc === comp.toMap, s"local wcc $label")
       // brute triangles over the simple undirected graph
       val cnt = scala.collection.mutable.HashMap.empty[String, Long]
         .withDefaultValue(0L)
@@ -1615,6 +1619,101 @@ class GraphAlgoSpec extends AnyFunSuite {
     // truncation), never create mass
     assert(got.values.sum <= 1_000_000_000_000L)
     assert(got.values.sum > 600_000_000_000L)
+  }
+
+  test("pagerank + ppr: random digraphs — local and forced-distributed " +
+      "≡ sequential integer loop") {
+    for (seed <- Seq(5, 41, 97)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 15 + rnd.nextInt(15)
+      val ids = (0 until n).map(i => s"v$i")
+      // simple digraph; some nodes stay dangling or isolated
+      val edges = (for (_ <- 0 until 2 * n + rnd.nextInt(2 * n)) yield
+        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        .filter(e => e._1 != e._2).distinct
+      val deg = edges.groupBy(_._1).map { case (s, es) =>
+        s -> es.length.toLong }
+      // the slice-1 test's loop, with the start mass and teleport base
+      // as inputs so the personalized variant shares it
+      def sequential(start: String => Long,
+          teleport: String => Long): Map[String, Long] = {
+        var r = ids.map(v => v -> start(v)).toMap
+        for (_ <- 1 to 10) {
+          val in = scala.collection.mutable.HashMap.empty[String, Long]
+            .withDefaultValue(0L)
+          edges.foreach { case (s, d) => in(d) += r(s) / deg(s) }
+          r = ids.map(v => v -> (teleport(v) + 85L * in(v) / 100L)).toMap
+        }
+        r
+      }
+      val mass = 1_000_000_000_000L
+      val unit = mass / n
+      val uniform = sequential(_ => unit, _ => 15L * unit / 100L)
+      val pprSeed = edges.head._1
+      val ppr = sequential(v => if (v == pprSeed) mass else 0L,
+        v => if (v == pprSeed) 15L * mass / 100L else 0L)
+      val nodesDf = ids.toDF("node")
+      val edgesDf = edges.toDF("src", "dst")
+      def ranks(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+        df.collect().map(x => x.getString(0) -> x.getLong(1)).toMap
+      for (thr <- Seq(graft.core.LocalBudget.MaxLocalEdges, 0L)) {
+        assert(ranks(algo.PageRank.run(nodesDf, edgesDf, iters = 10,
+          localEdgeThreshold = thr)) === uniform,
+          s"pagerank seed=$seed threshold=$thr")
+        assert(ranks(algo.PageRank.personalized(nodesDf, edgesDf, pprSeed,
+          iters = 10, localEdgeThreshold = thr)) === ppr,
+          s"ppr seed=$seed threshold=$thr")
+      }
+    }
+  }
+
+  test("mst: random multigraphs with tied costs — local kruskal ≡ " +
+      "forced-distributed boruvka") {
+    // the generator of the slice-1 mst test's random multigraphs
+    for (seed <- Seq(7, 23, 71)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 12 + rnd.nextInt(10)
+      val raw = for (_ <- 0 until 50 + rnd.nextInt(40)) yield
+        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}",
+          (1 + rnd.nextInt(9)).toDouble) // small int costs force ties
+      val edgesDf = raw.toDF("src", "dst", "cost")
+      def forest(thr: Long): Set[(String, String, Double)] =
+        algo.Boruvka.mst(spark, edgesDf, localEdgeThreshold = thr)
+          .collect()
+          .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
+      val local = forest(graft.core.LocalBudget.MaxLocalEdges)
+      assert(local.nonEmpty, s"mst seed=$seed")
+      assert(local === forest(0L), s"mst seed=$seed")
+    }
+  }
+
+  test("k-core/k-truss/mis/coloring: random digraphs — local twin ≡ " +
+      "forced-distributed") {
+    for (seed <- Seq(11, 29, 83)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 12 + rnd.nextInt(8)
+      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      // self-loops and reverse/parallel duplicates kept: every kernel
+      // collapses them itself
+      val edgesDf = (for (_ <- 0 until 4 * n) yield
+        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}")).toDF("src", "dst")
+      val kernels: Seq[(String, Long => org.apache.spark.sql.DataFrame)] =
+        Seq(
+          "k-core" -> (t => algo.KCore.core(spark, edgesDf, k = 3,
+            localEdgeThreshold = t)),
+          "k-truss" -> (t => algo.Truss.truss(spark, edgesDf, k = 3,
+            localEdgeThreshold = t)),
+          "mis" -> (t => algo.IndependentSet.luby(spark, nodesDf, edgesDf,
+            localEdgeThreshold = t)),
+          "coloring" -> (t => algo.Coloring.greedy(spark, nodesDf, edgesDf,
+            localEdgeThreshold = t)))
+      for ((name, kernel) <- kernels) {
+        def rows(t: Long) = kernel(t).collect().map(_.toSeq).toSet
+        val local = rows(graft.core.LocalBudget.MaxLocalEdges)
+        assert(local.nonEmpty, s"$name seed=$seed")
+        assert(local === rows(0L), s"$name seed=$seed")
+      }
+    }
   }
 
   test("scc: empty node set returns an empty typed frame, not null") {
