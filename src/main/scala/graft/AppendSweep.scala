@@ -1,6 +1,6 @@
 package graft
 
-import graft.algo.{LocalGraph, LocalKernels}
+import graft.algo.{LocalKernels, ShortestPaths}
 import graft.graph.{EdgeListIngest, PropertyGraph}
 
 /** Incremental-maintenance sweep over the reference's 7 growing slices
@@ -80,7 +80,7 @@ object AppendSweep {
     spark.sparkContext.setLogLevel("ERROR")
 
     def dijkstraCost(pg: PropertyGraph): Double = {
-      val lg = LocalGraph.fromProjection(pg.projection, Some(pg.nodes))
+      val lg = ShortestPaths.localGraph(pg)
       LocalKernels.dijkstra(lg, lg.idOf(queries.Graph.Src),
         lg.idOf(queries.Graph.Dst)).map(_.totalCost).getOrElse(-1.0)
     }

@@ -191,7 +191,7 @@ object Bench {
     // DataFrame materialization; this isolates the algorithm.
     val kernels = try {
       val pg = queries.Graph.graphFor(spark, queries.Graph.edgeListPath)
-      val lg = graft.algo.LocalGraph.fromProjection(pg.projection, Some(pg.nodes))
+      val lg = graft.algo.ShortestPaths.localGraph(pg)
       val s = lg.idOf(queries.Graph.Src); val d = lg.idOf(queries.Graph.Dst)
       def med(f: => Unit): Double = {
         f

@@ -1,6 +1,6 @@
 package graft
 
-import graft.algo.{LocalGraph, LocalKernels}
+import graft.algo.{LocalKernels, ShortestPaths}
 import graft.graph.EdgeListIngest
 
 /** Scale-sweep harness reproducing the reference's benchmark shape
@@ -31,7 +31,7 @@ object SliceSweep {
       val pg = EdgeListIngest.build(spark, path).cache()
       val nNodes = pg.nodes.count()
       val nEdges = pg.edges.count()
-      val lg = LocalGraph.fromProjection(pg.projection, Some(pg.nodes))
+      val lg = ShortestPaths.localGraph(pg)
       val ingestS = (System.nanoTime() - t0) / 1e9
       val lines = EdgeListIngest.readRaw(spark, path).count()
 

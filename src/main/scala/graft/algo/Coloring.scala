@@ -30,9 +30,7 @@ object Coloring {
       col(edges.columns(1)).as("dst")).cache()
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       // ---- local: ONE collect, all MIS layers on driver adjacency ----
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist()
-      val nodeIds = allNodes.collect().map(_.getString(0))
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(allNodes))
       val adj = IndependentSet.undirectedAdjacency(pairs)
       val color = collection.mutable.HashMap.empty[String, Int]
       var uncolored = nodeIds.toBuffer

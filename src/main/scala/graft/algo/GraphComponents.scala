@@ -47,10 +47,7 @@ object GraphComponents {
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).cache()
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist()
-      val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodes))
       val uf = new UnionFind[String]
       pairs.foreach { case (a, b) => uf.union(a, b) }
       import spark.implicits._

@@ -46,9 +46,7 @@ object Hits {
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).distinct().cache()
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist()
-      val ids = nodeIds.collect().map(_.getString(0))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodeIds))
       return localRun(nodes.sparkSession, ids, pairs, iters)
     }
     val n = nodeIds.count()

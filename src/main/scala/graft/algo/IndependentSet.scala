@@ -138,9 +138,7 @@ object IndependentSet {
     val e0 = edges.select(col(edges.columns(0)).as("a"),
         col(edges.columns(1)).as("b")).cache()
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
-      val pairs = e0.collect().map(r => (r.getString(0), r.getString(1)))
-      e0.unpersist()
-      val nodeIds = allNodes.collect().map(_.getString(0))
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e0, _.unpersist(), Some(allNodes))
       val mis = lubyLocal(nodeIds, undirectedAdjacency(pairs), rounds)
       import spark.implicits._
       return nodeIds.map(v => (v, if (mis.contains(v)) 1L else 0L)).toSeq

@@ -35,8 +35,7 @@ object KCore {
         greatest(col("s"), col("d")).as("b"))
       .distinct().localCheckpoint(true)
     if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
-      val pairs = und.collect().map(r => (r.getString(0), r.getString(1)))
-      graft.core.Checkpoints.release(und)
+      val (pairs, _) = graft.core.LocalBudget.collectLocal(und, graft.core.Checkpoints.release)
       val adj = IndependentSet.undirectedAdjacency(pairs)
       var changed = true
       while (changed) {

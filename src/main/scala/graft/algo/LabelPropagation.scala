@@ -41,9 +41,7 @@ object LabelPropagation {
     // localReference computes the identical label table, pinned
     // bit-equal by GraphAlgoSpec on both paths.
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      val ids = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, nodes = Some(nodes))
       // drop edges touching ids outside the node frame — the distributed
       // loop's inner join on the neighbor label does the same, so a
       // label-less endpoint contributes nothing on either path

@@ -153,20 +153,6 @@ object Landmarks {
     estimateFromTables(fwd, rev, srcSet, dstSet)
   }
 
-  /** ALT (A*, Landmarks, Triangle inequality — Goldberg–Harrelson):
-    * the same landmark tables as LOWER bounds steering A*. For target t
-    * and landmark L, d(v,t) ≥ max(d(v,L) − d(t,L), d(L,t) − d(L,v));
-    * the heuristic is the max over landmarks, floored at 0 — admissible
-    * AND consistent, so A* under it returns the exact Dijkstra distance
-    * while expanding fewer nodes. ∞ conventions: a finite-minus-∞
-    * difference says nothing (skip); ∞-minus-finite proves v cannot
-    * reach t at all (if v→t and t→L then v→L), so h = ∞ and the search
-    * prunes v outright.
-    *
-    * Computes the |L| forward + |L| reverse tables with the sequential
-    * kernel on the shared dense index space (LocalGraph.reverse — no id
-    * remapping); driver cost O(|L|·(m + n log n)).
-    */
   /** Averaged landmark potentials for BIDIRECTIONAL ALT
     * (LocalKernels.bidirectionalAlt — Goldberg–Harrelson's full form;
     * the unidirectional altHeuristic is its pb = 0 special case).
@@ -192,9 +178,9 @@ object Landmarks {
     * potential (NaN terms — ∞ − ∞ — say nothing and are skipped,
     * exactly as in altHeuristic).
     */
-  def bidiAltPotentials(lg: LocalGraph, landmarkIds: Seq[Int],
-      source: Int, target: Int): (Array[Double], Array[Boolean]) = {
-    val rev = LocalGraph.reverse(lg)
+  def bidiAltPotentials(lg: LocalGraph, rev: LocalGraph,
+      landmarkIds: Seq[Int], source: Int, target: Int)
+      : (Array[Double], Array[Boolean]) = {
     val fwd = landmarkIds.map(l => LocalKernels.sssp(lg, l)._1).toArray
     val toL = landmarkIds.map(l => LocalKernels.sssp(rev, l)._1).toArray
     val pf = new Array[Double](lg.n)
@@ -222,9 +208,23 @@ object Landmarks {
     (pf, prune)
   }
 
-  def altHeuristic(lg: LocalGraph, landmarkIds: Seq[Int], target: Int)
-      : Array[Double] = {
-    val rev = LocalGraph.reverse(lg)
+  /** ALT (A*, Landmarks, Triangle inequality — Goldberg–Harrelson):
+    * the same landmark tables as LOWER bounds steering A*. For target t
+    * and landmark L, d(v,t) ≥ max(d(v,L) − d(t,L), d(L,t) − d(L,v));
+    * the heuristic is the max over landmarks, floored at 0 — admissible
+    * AND consistent, so A* under it returns the exact Dijkstra distance
+    * while expanding fewer nodes. ∞ conventions: a finite-minus-∞
+    * difference says nothing (skip); ∞-minus-finite proves v cannot
+    * reach t at all (if v→t and t→L then v→L), so h = ∞ and the search
+    * prunes v outright.
+    *
+    * Computes the |L| forward + |L| reverse tables with the sequential
+    * kernel over `lg` and its reversed CSR `rev` (LocalGraph.reverse:
+    * the shared dense index space — no id remapping; ShortestPaths passes
+    * its resident one); driver cost O(|L|·(m + n log n)).
+    */
+  def altHeuristic(lg: LocalGraph, rev: LocalGraph, landmarkIds: Seq[Int],
+      target: Int): Array[Double] = {
     val fwd = landmarkIds.map(l => LocalKernels.sssp(lg, l)._1).toArray
     val toL = landmarkIds.map(l => LocalKernels.sssp(rev, l)._1).toArray
     val h = new Array[Double](lg.n)

@@ -207,9 +207,7 @@ object Louvain {
     // overhead; the sequential twin computes the identical table,
     // pinned bit-equal by GraphAlgoSpec on both paths.
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      val ids = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, nodes = Some(nodes))
       val idSet = ids.toSet
       val known = pairs.filter(p => idSet(p._1) && idSet(p._2))
       val labels = localMultiLevel(ids, known, rounds, coarseRounds,

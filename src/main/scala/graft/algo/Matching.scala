@@ -150,9 +150,7 @@ object Matching {
       .cache()
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local replay of the per-round dominance recurrence --------
-      var ue = e0.collect().map(r => (r.getString(0), r.getString(1)))
-        .toSet
-      e0.unpersist()
+      var ue = graft.core.LocalBudget.collectLocal(e0, _.unpersist())._1.toSet
       val out = collection.mutable.ArrayBuffer.empty[(String, String)]
       var r = 0
       while (r < rounds && ue.nonEmpty) {

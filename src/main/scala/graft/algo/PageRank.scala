@@ -53,7 +53,7 @@ object PageRank {
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).cache()
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (ids, pairs) = collectLocal(nodeIds, e)
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodeIds))
       require(ids.nonEmpty, "empty node set")
       val unit = mass / ids.length
       val base = 15L * unit / 100L
@@ -84,7 +84,7 @@ object PageRank {
       col(edges.columns(1)).as("dst")).cache()
     val base = 15L * mass / 100L
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (ids, pairs) = collectLocal(nodeIds, e)
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodeIds))
       require(ids.contains(seed), s"seed $seed not in node set")
       return localLoop(nodes, ids, pairs, iters,
         v => if (v == seed) mass else 0L, v => if (v == seed) base else 0L)
@@ -99,13 +99,6 @@ object PageRank {
     distributedLoop(nodeIds, e, iters,
       when(atSeed, lit(mass)).otherwise(lit(0L)),
       when(atSeed, lit(base)).otherwise(lit(0L)))
-  }
-
-  private def collectLocal(nodeIds: DataFrame, e: DataFrame)
-      : (Array[String], Array[(String, String)]) = {
-    val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-    e.unpersist()
-    (nodeIds.collect().map(_.getString(0)), pairs)
   }
 
   /** The driver twin: `start(v)` is v's initial mass, `teleport(v)` the

@@ -62,10 +62,7 @@ object StronglyConnected {
         col(edges.columns(1)).cast("string").as("dst"))
       .filter(col("src") =!= col("dst")).distinct().cache()
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-      e.unpersist()
-      val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodes))
       return localTarjan(spark, nodeIds, pairs)
     }
     distributed(spark, nodes, e, maxOuter)

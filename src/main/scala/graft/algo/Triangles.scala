@@ -45,10 +45,7 @@ object Triangles {
         greatest(col("s"), col("d")).as("b"))
       .distinct().cache()
     if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
-      val pairs = und.collect().map(r => (r.getString(0), r.getString(1)))
-      und.unpersist()
-      val ids = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(und, _.unpersist(), Some(nodes))
       val adj = scala.collection.mutable.HashMap
         .empty[String, scala.collection.mutable.TreeSet[String]]
       pairs.foreach { case (a, b) =>

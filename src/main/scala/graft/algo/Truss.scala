@@ -41,9 +41,7 @@ object Truss {
       .cache()
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local peel on adjacency sets -------------------------------
-      var es = e0.collect().map(r => (r.getString(0), r.getString(1)))
-        .toSet
-      e0.unpersist()
+      var es = graft.core.LocalBudget.collectLocal(e0, _.unpersist())._1.toSet
       var r = 0
       var dropped = true
       while (dropped && r < maxRounds) {

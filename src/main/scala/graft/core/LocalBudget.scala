@@ -9,11 +9,12 @@ import org.apache.spark.sql.functions._
   *
   * `fits` is the one gate: every adaptive kernel calls it once to choose
   * between its sequential driver twin and its distributed kernel. It
-  * measures the real payload (one aggregation job over the edge frame,
+  * measures the real payload (one Spark job over the edge frame,
   * replacing the count() the kernels ran anyway) and admits the local
   * path only while the estimated collected size fits a fixed byte budget
   * and the caller's row cap. A negative cap returns false without
-  * running a job; a cap of 0 admits only an empty edge set.
+  * running a job; a cap of 0 admits only an empty edge set. The twins
+  * then share one collect prefix, `collectLocal`.
   *
   * The per-kernel `localEdgeThreshold` parameter survives as a row-count
   * backstop and as the spec hook (pass 0 to force the distributed path);
@@ -62,17 +63,20 @@ object LocalBudget {
   val MaxLocalFeatureRows: Long = 1_000_000L
 
   /** (rowCount, estimatedCollectedBytes) of a string edge frame, from
-    * ONE aggregation job over its first two columns — callers use this
-    * in place of the plain count() they ran before dispatching.
+    * ONE Spark job over its first two columns: a per-partition fold of
+    * the row count and `length(c0) + length(c1)`, with no exchange (a
+    * global `agg` would submit its shuffle map stage as a job of its
+    * own under AQE). A row with a null id counts but adds no characters,
+    * as SQL `sum` skips the null term.
     */
   def measureEdges(e: DataFrame): (Long, Long) = {
-    val r = e.agg(
-      count(lit(1)),
-      coalesce(sum(length(col(e.columns(0)).cast("string")) +
-        length(col(e.columns(1)).cast("string"))), lit(0L))).head()
-    val n = r.getLong(0)
+    val chars = e.select(length(col(e.columns(0)).cast("string")) +
+      length(col(e.columns(1)).cast("string")))
+    val (n, sum) = chars.queryExecution.toRdd.aggregate((0L, 0L))(
+      (acc, r) => (acc._1 + 1, if (r.isNullAt(0)) acc._2 else acc._2 + r.getInt(0)),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
     // 2 bytes/char (JVM strings are UTF-16 at worst) + per-row overhead
-    (n, 2L * r.getLong(1) + n * RowOverheadBytes)
+    (n, 2L * sum + n * RowOverheadBytes)
   }
 
   /** True iff a collect of `nEdges` rows / `estBytes` bytes fits the
@@ -93,4 +97,19 @@ object LocalBudget {
       val (n, bytes) = measureEdges(e)
       fitsLocal(n, bytes + payloadBytesPerRow * n, cap)
     }
+
+  /** The driver twin's prefix once `fits` admits `e`: the string id
+    * pairs in `e`'s first two columns, collected once; then
+    * `release(e)` (the caller's unpersist or Checkpoints.release); then
+    * the string ids in the first column of `nodes`, if given.
+    */
+  def collectLocal(e: DataFrame, release: DataFrame => Unit = _ => (),
+      nodes: Option[DataFrame] = None)
+      : (Array[(String, String)], Array[String]) = {
+    val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
+    release(e)
+    (pairs, nodes.fold(Array.empty[String])(nd =>
+      nd.select(col(nd.columns(0)).cast("string")).collect()
+        .map(_.getString(0))))
+  }
 }

@@ -1756,7 +1756,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     val landmarks = (0 until 40).map(i => (i * 17 + 1).toString)
       .filter(l => lg.index.containsKey(l)).map(lg.idOf)
     val s = lg.idOf("2022"); val t = lg.idOf("2802")
-    val h = Landmarks.altHeuristic(lg, landmarks, t)
+    val h = Landmarks.altHeuristic(lg, LocalGraph.reverse(lg), landmarks, t)
     val (altRes, altExp) = LocalKernels.astarTable(lg, s, t, h)
     val wsD = new LocalKernels.Workspace(lg.n)
     val dijRes = LocalKernels.dijkstra(lg, s, t, wsD)
@@ -1794,11 +1794,12 @@ class GraphAlgoSpec extends AnyFunSuite {
         .groupBy("src", "dst")
         .agg(org.apache.spark.sql.functions.min("cost").as("cost"))
       val rg = LocalGraph.fromProjection(proj, None)
+      val rrev = LocalGraph.reverse(rg)
       val lms = (0 until rg.n by 7).take(6)
       for (_ <- 0 until 20) {
         val a = rnd.nextInt(rg.n); val b = rnd.nextInt(rg.n)
         if (a != b) {
-          val hr = Landmarks.altHeuristic(rg, lms, b)
+          val hr = Landmarks.altHeuristic(rg, rrev, lms, b)
           val alt = LocalKernels.astarTable(rg, a, b, hr)._1
           val dij = LocalKernels.dijkstra(rg, a, b)
           assert(alt.map(_.totalCost) === dij.map(_.totalCost),
@@ -1874,7 +1875,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     val s = lg.idOf("2022"); val t = lg.idOf("2802")
     val lms = (0 until 40).map(i => (i * 17 + 1).toString)
       .filter(l => lg.index.containsKey(l)).map(lg.idOf)
-    val (pf, prune) = Landmarks.bidiAltPotentials(lg, lms, s, t)
+    val (pf, prune) = Landmarks.bidiAltPotentials(lg, rev, lms, s, t)
     // feasibility audit: BOTH directions' reduced edge costs must be
     // nonnegative (up to IEEE slack) — the soundness condition for the
     // meet-in-the-middle stop rule under a potential
@@ -1900,7 +1901,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     // the canonical pair (the combination beats both parents)
     val bdExp = LocalKernels.bidirectional(lg, rev, s, t)._2
     val altExp = LocalKernels.astarTable(lg, s, t,
-      Landmarks.altHeuristic(lg, lms, t))._2
+      Landmarks.altHeuristic(lg, rev, lms, t))._2
     info(s"expansions 2022->2802: bidiALT=$exp bidirectional=$bdExp " +
       s"ALT=$altExp dijkstra=${wsD.nSettled}")
     assert(exp < bdExp, s"bidiALT $exp !< bidirectional $bdExp")
@@ -1926,7 +1927,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       val rlms = (0 until rg.n by 7).take(6)
       for (_ <- 0 until 40) {
         val a = rnd.nextInt(rg.n); val b = rnd.nextInt(rg.n)
-        val (rpf, rprune) = Landmarks.bidiAltPotentials(rg, rlms, a, b)
+        val (rpf, rprune) = Landmarks.bidiAltPotentials(rg, rrev, rlms, a, b)
         val got = LocalKernels.bidirectionalAlt(rg, rrev, a, b, rpf, rprune)._1
         val want = if (a == b)
           Some(LocalKernels.PathResult(Array(a), Array(0.0), 0.0))

@@ -6,7 +6,8 @@ import graft.core.LocalBudget
 
 /** The one dispatch gate of the adaptive graph kernels: the cap rules
   * (negative refuses without a Spark job, 0 admits only the empty edge
-  * set) and the default cap admitting a small frame.
+  * set, any other cap measures in exactly one job) and the default cap
+  * admitting a small frame.
   */
 class LocalBudgetSpec extends AnyFunSuite {
 
@@ -15,25 +16,8 @@ class LocalBudgetSpec extends AnyFunSuite {
 
   private def small = Seq(("a", "b"), ("b", "c")).toDF("src", "dst")
 
-  /** Ids of the jobs `body` ran, read from the status tracker under a
-    * fresh job group. The tracker is fed asynchronously, in event order,
-    * so a sentinel job in a second group is awaited first: once it is
-    * visible, every job `body` started is too.
-    */
-  private def jobsOf(name: String)(body: => Unit): Seq[Int] = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(name, name)
-    try body finally sc.clearJobGroup()
-    val sentinel = s"$name-sentinel"
-    sc.setJobGroup(sentinel, sentinel)
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30_000_000_000L
-    while (sc.statusTracker.getJobIdsForGroup(sentinel).isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    assert(sc.statusTracker.getJobIdsForGroup(sentinel).nonEmpty,
-      "sentinel job never reached the status tracker")
-    sc.statusTracker.getJobIdsForGroup(name).toSeq
-  }
+  private def jobsOf(name: String)(body: => Unit): Seq[Int] =
+    JobGroups.jobsOf(spark, name)(body)
 
   test("negative cap refuses without running a Spark job") {
     var verdict = true
@@ -48,7 +32,7 @@ class LocalBudgetSpec extends AnyFunSuite {
       verdict = LocalBudget.fits(small, 10L)
     }
     assert(verdict)
-    assert(measured.nonEmpty, "no job recorded for the measurement")
+    assert(measured.size == 1, s"measurement ran jobs $measured, not one")
   }
 
   test("cap 0 admits an empty frame and refuses a non-empty one") {
@@ -66,5 +50,15 @@ class LocalBudgetSpec extends AnyFunSuite {
       payloadBytesPerRow = 8))
     assert(!LocalBudget.fits(small, LocalBudget.MaxLocalEdges,
       payloadBytesPerRow = LocalBudget.MaxLocalBytes))
+  }
+
+  test("measureEdges: a row with a null id counts but adds no characters") {
+    val withNull = Seq[(String, String)](("a", "b"), (null, "bc"), ("cd", null))
+      .toDF("src", "dst")
+    // 3 rows; characters only from the all-non-null row (1 + 1)
+    assert(LocalBudget.measureEdges(withNull) ===
+      ((3L, 2L * 2 + 3 * LocalBudget.RowOverheadBytes)))
+    assert(LocalBudget.measureEdges(small) ===
+      ((2L, 2L * 4 + 2 * LocalBudget.RowOverheadBytes)))
   }
 }
