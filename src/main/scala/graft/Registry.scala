@@ -10,18 +10,19 @@ object Registry {
 
   /** Driver-computed (LocalRelation) results — the graph kernels' local
     * twins, path reconstructions, sketch readoffs — plan their one write
-    * stage at `defaultParallelism` tasks (LocalTableScanExec parallelizes
-    * its rows across min(rows, cores)), so a 37k-row community table
-    * pays cores-many task dispatches to serialize ~1 MB. Coalesce such
-    * results by their EXACT size (LocalRelation stats are row-accurate;
-    * guide §2.2 — partition counts track volume, not core count). Only
-    * plans whose optimized form IS a LocalRelation are touched: anything
-    * distributed keeps its planned parallelism.
+    * stage at `defaultParallelism` tasks (LocalTableScanExec spreads its
+    * rows over min(rows, cores)), and AQE cannot coalesce them: there is
+    * no shuffle. `Tables.compact` sizes them by their exact bytes
+    * (LocalRelation stats are row-accurate). In the layout A/B in
+    * CHANGES.md, removing this together with the graph frames' compact
+    * took g16/g39/g44 from 4 jobs / 4 tasks to 5 / 36 at 32 cores; the
+    * two sites were not measured apart. Distributed plans keep their
+    * parallelism.
     */
   private def sizeLocalResult(df: DataFrame): DataFrame =
     df.queryExecution.optimizedPlan match {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        graft.core.Tables.sizedCoalesce(df)
+        graft.core.Tables.compact(df)
       case _ => df
     }
 

@@ -105,23 +105,7 @@ object Louvain {
       import spark.implicits._
       return ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
     }
-    val ns = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
-    // both orientations, min weight across every directed edge of the
-    // unordered pair; self-loops drop; endpoints restricted to known ids
-    val und = e.union(e.select(col("b").as("a"), col("a").as("b"),
-        col("w")))
-      .filter(col("a") =!= col("b"))
-      .join(ns.select(col("node").as("a")), Seq("a"), "left_semi")
-      .join(ns.select(col("node").as("b")), Seq("b"), "left_semi")
-      .groupBy("a", "b").agg(min(col("w")).as("w"))
-      .localCheckpoint(true)
-    val twoM = und.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0)
-    val degs = ns.join(und.withColumnRenamed("a", "node"), Seq("node"),
-        "left_outer")
-      .groupBy("node").agg(coalesce(sum(col("w")), lit(0L)).as("deg"))
-      .withColumn("odd", substring(md5(col("node")), 1, 1)
-        .isin("1", "3", "5", "7", "9", "b", "d", "f"))
-      .localCheckpoint(true)
+    val (und, degs, twoM) = prepare(nodes, e)
     val labels0 = degs.select(col("node"), col("node").as("lbl"))
       .localCheckpoint(true)
     val labels = moveLoop(und, degs, twoM, labels0, rounds)
@@ -215,12 +199,11 @@ object Louvain {
       import spark.implicits._
       return ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
     }
-    val (und, degs, twoM) = prepare(spark, nodes, e)
+    val (und, degs, twoM) = prepare(nodes, e.withColumn("w", lit(1L)))
     val labels0 = degs.select(col("node"), col("node").as("lbl"))
       .localCheckpoint(true)
     // q = composed mapping original node → current community
-    var q = moveLoop(und.withColumn("w", lit(1L)), degs, twoM,
-      labels0, rounds)
+    var q = moveLoop(und, degs, twoM, labels0, rounds)
     var level = 1
     var converged = false
     while (level < maxLevels && !converged) {
@@ -275,24 +258,28 @@ object Louvain {
     q.select(col("node"), col("lbl").as("community"))
   }
 
-  /** Symmetrized distinct neighbor pairs among known nodes, per-node
-    * degrees + move parity, and 2m. All checkpoint-backed; callers
-    * release. Filters both endpoints to the node set, matching the
-    * local twin's idSet filter.
+  /** Symmetrized weighted adjacency und(a, b, w) among known nodes,
+    * per-node weighted degrees + move parity, and 2m = Σw over `e`
+    * (a, b, w). Both orientations, MIN weight across every directed
+    * edge of the unordered pair, self-loops dropped. The unweighted
+    * callers pass w = 1, where the min is `distinct` and Σw the pair
+    * count. All checkpoint-backed; callers release. Filters both
+    * endpoints to the node set, matching the local twins' idSet filter.
     */
-  private def prepare(spark: SparkSession, nodes: DataFrame, e: DataFrame)
+  private def prepare(nodes: DataFrame, e: DataFrame)
       : (DataFrame, DataFrame, Long) = {
     val ns = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
-    val und = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
+    val und = e.union(e.select(col("b").as("a"), col("a").as("b"),
+        col("w")))
+      .filter(col("a") =!= col("b"))
       .join(ns.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(ns.select(col("node").as("b")), Seq("b"), "left_semi")
-      .select("a", "b")
+      .groupBy("a", "b").agg(min(col("w")).as("w"))
       .localCheckpoint(true)
-    val twoM = und.count() // each unordered pair appears twice = 2m
+    val twoM = und.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0)
     val degs = ns.join(und.withColumnRenamed("a", "node"), Seq("node"),
         "left_outer")
-      .groupBy("node").agg(count(col("b")).as("deg"))
+      .groupBy("node").agg(coalesce(sum(col("w")), lit(0L)).as("deg"))
       .withColumn("odd", substring(md5(col("node")), 1, 1)
         .isin("1", "3", "5", "7", "9", "b", "d", "f"))
       .localCheckpoint(true)
@@ -369,7 +356,7 @@ object Louvain {
       labels: DataFrame): DataFrame = {
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"))
-    val (und, degs, twoM) = prepare(spark, nodes, e)
+    val (und, degs, twoM) = prepare(nodes, e.withColumn("w", lit(1L)))
     val l = labels.select(col(labels.columns(0)).cast("string").as("node"),
       col(labels.columns(1)).cast("string").as("lbl"))
     val cut = und
@@ -395,23 +382,16 @@ object Louvain {
   }
 
   /** Reference implementation of the same contract for audits: plain
-    * in-memory synchronous parity-alternating rounds. Exercised by
+    * in-memory synchronous parity-alternating rounds, i.e.
+    * localWeightedReference at unit weights. Exercised by
     * GraphAlgoSpec against the DataFrame loop — any drift in the score
     * or the tie-break shows up as a diff here before the driver's
     * oracle sees it.
     */
   private[graft] def localReference(nodeIds: Array[String],
-      pairs: Array[(String, String)], rounds: Int): Map[String, String] = {
-    val und = pairs.filter(p => p._1 != p._2)
-      .flatMap(p => Seq(p, p.swap)).distinct
-    val wAdj: Map[String, Array[(String, Long)]] = und.groupBy(_._1)
-      .map { case (k, es) => k -> es.map(e => (e._2, 1L)) }
-    val deg: Map[String, Long] =
-      nodeIds.map(n => n -> wAdj.get(n).map(_.length.toLong).getOrElse(0L))
-        .toMap
-    weightedMoveRounds(nodeIds, wAdj, deg, und.length.toLong, rounds,
-      nodeIds.map(n => n -> n).toMap)
-  }
+      pairs: Array[(String, String)], rounds: Int): Map[String, String] =
+    localWeightedReference(nodeIds, pairs.map(p => (p._1, p._2, 1L)),
+      rounds)
 
   /** In-memory twin of runTwoLevel: level-1 rounds, contraction with
     * self-loop-aware weighted degrees, weighted coarse rounds,

@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   *
   * Parquet scans are columnar + vectorized; Catalyst pushes filters and
   * prunes columns, so callers should express selection declaratively and
-  * NOT pre-materialize.
+  * NOT pre-materialize. AQE coalesces the final stage of cached plans
+  * too (the `canChangeCachedPlanOutputPartitioning` conf in
+  * [[Sessions.local]]); [[Tables.compact]] sizes only the frames it
+  * cannot reach.
   */
 final class Tables(spark: SparkSession, sfDir: String) {
   def apply(name: String): DataFrame =
@@ -109,75 +112,29 @@ object Tables {
     if (scanParts * 2 <= target) df.repartition(target) else df
   }
 
-  /** Volume-sized partition count for a LONG-LIVED cached frame
-    * (optimization guide §2.2 "fewer, larger partitions" / VERDICT r16
-    * item 1: per-round and per-query stage task counts must track data
-    * volume, not `defaultParallelism`).
-    *
-    * Cached plans are materialized WITHOUT AQE partition coalescing
-    * (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning defaults
-    * false), so a cached frame built under shuffle.partitions = cores
-    * serves every later read as cores-many tasks — measured on the
-    * ~1 MB road graph at 32 cores: 5×32-task stages per local-twin graph
-    * query, ~0.2 s of pure task dispatch each, and the 8-core bench
-    * BEAT the 32-core bench on the family. Sizing the cache to
-    * ceil(bytes / minBytesPerPartition) keeps tiny graphs at 1–2
-    * partitions while a frame above cores×minBytes is returned
-    * UNCHANGED — the production path is a no-op, nothing is tuned to
-    * local mode.
-    *
-    * Plan-only: reads the optimizer's size ESTIMATE (no job). Estimates
-    * here are scan-anchored (file size × selectivity), accurate to the
-    * factor this needs.
+  /** Volume-sized partition count for a long-lived frame that AQE does
+    * not size: one with no shuffle at its top (a map over the spread
+    * `documents` scan, a driver-built LocalRelation), or a small graph
+    * frame that the kernels' joins must see as ONE partition at plan
+    * time. The frame gets ceil(bytes / 8 MB) partitions from its plan
+    * estimate (no job), so a small one becomes `SinglePartition` and the
+    * joins and aggregates over it plan no exchange; at or above
+    * cores × 8 MB it is returned unchanged, so production-sized input
+    * never pays this.
+    * `shuffle = false` narrows (the coalesce fuses into the producing
+    * stage, fine when the producer is cheap); `shuffle = true` adds one
+    * exchange, so a costly per-row map upstream keeps its parallelism.
+    * Each call site cites the layout A/B in CHANGES.md that kept it.
     */
-  def sizedCoalesce(df: DataFrame,
-      minBytesPerPartition: Long = 8L * 1024 * 1024): DataFrame =
-    sizedCoalesceBytes(df,
-      df.queryExecution.optimizedPlan.stats.sizeInBytes,
-      minBytesPerPartition)
-
-  /** [[sizedCoalesce]] with the size bound taken from ANOTHER frame —
-    * for aggregates/joins whose own estimate degenerates (Catalyst
-    * propagates the join's inflated product through the aggregate) but
-    * which are provably no larger than some upstream frame (e.g. a
-    * per-key rollup is bounded by its scan input).
-    */
-  def sizedCoalesce(df: DataFrame, boundedBy: DataFrame): DataFrame =
-    sizedCoalesceBytes(df,
-      boundedBy.queryExecution.optimizedPlan.stats.sizeInBytes,
-      8L * 1024 * 1024)
-
-  /** Volume-sized partitioning for a cache FED BY a wide compute stage.
-    *
-    * [[sizedCoalesce]] narrows (coalesce fuses into the producing
-    * stage), which would serialize the upstream per-row compute — wrong
-    * for the annotate/fingerprint maps that run 32-wide on purpose.
-    * This variant inserts ONE exchange instead: the map keeps its full
-    * parallelism and only the cached layout shrinks to track volume, so
-    * the cache's many consumers (cached plans skip AQE coalescing) stop
-    * paying cores-many task dispatches per read. No-op above
-    * cores×minBytes — production-shaped input never pays the exchange.
-    */
-  def shrinkForCache(df: DataFrame,
-      minBytesPerPartition: Long = 8L * 1024 * 1024): DataFrame = {
+  def compact(df: DataFrame, shuffle: Boolean = false): DataFrame = {
+    val perPartition = 8L << 20
     val cores = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= BigInt(minBytesPerPartition) * cores) df
+    if (bytes >= BigInt(perPartition) * cores) df
     else {
-      val target = ((bytes + minBytesPerPartition - 1) /
-        minBytesPerPartition).max(1).min(cores).toInt
-      df.repartition(target)
-    }
-  }
-
-  private def sizedCoalesceBytes(df: DataFrame, bytes: BigInt,
-      minBytesPerPartition: Long): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (bytes >= BigInt(minBytesPerPartition) * cores) df
-    else {
-      val target = ((bytes + minBytesPerPartition - 1) /
-        minBytesPerPartition).max(1).min(cores).toInt
-      df.coalesce(target)
+      val n = ((bytes + perPartition - 1) / perPartition).max(1).min(cores)
+        .toInt
+      if (shuffle) df.repartition(n) else df.coalesce(n)
     }
   }
 

@@ -99,15 +99,17 @@ object EdgeListIngest {
   def build(spark: SparkSession, path: String): PropertyGraph = {
     val raw = readRaw(spark, path).cache()
     // The graph frames are cached and re-read by EVERY g-query in the
-    // session; volume-size their cached partition counts (a ~1 MB slice
-    // graph does not need cores-many tasks per read — core.Tables doc).
-    // The spread raw scan keeps full parse parallelism; only the
-    // long-lived caches coalesce.
-    val n = graft.core.Tables.sizedCoalesce(nodes(raw))
+    // session. AQE sizes each cached shuffle output by volume
+    // (core.Sessions), but only `Tables.compact` makes a small graph ONE
+    // partition, so the kernels' joins and aggregates over it plan no
+    // exchange. In the layout A/B in CHANGES.md, removing this together
+    // with Registry.sizeLocalResult took g16/g39/g44 from 4 jobs / 4
+    // tasks to 5 / 36 at 32 cores (not measured apart). The spread raw
+    // scan keeps full parse parallelism.
+    val n = graft.core.Tables.compact(nodes(raw))
     val cand = dedupEdges(raw)
-    val e = graft.core.Tables.sizedCoalesce(resolve(cand, n))
-    val pend = graft.core.Tables.sizedCoalesce(
-      cand.join(e, EdgeCols, "left_anti"))
+    val e = graft.core.Tables.compact(resolve(cand, n))
+    val pend = cand.join(e, EdgeCols, "left_anti")
     // raw is registered so unpersistAll() can release it with the graph
     PropertyGraph(n, e, underlying = Seq(raw), pending = Some(pend))
   }
@@ -158,12 +160,10 @@ object EdgeListIngest {
     val raw = rawIn.filter(col("START_NODE").isNotNull)
     val newNodes = nodes(raw)
       .join(pg.nodes, Seq("nodeId", "x", "y"), "left_anti")
-    // union concatenates the parent's volume-sized partitions with the
-    // delta's shuffle partitions; re-size so the appended graph's caches
-    // (and the streaming maintainer's per-batch checkpoints) stay at a
-    // volume-appropriate count across generations
-    val allNodes = graft.core.Tables.sizedCoalesce(
-      pg.nodes.unionByName(newNodes))
+    // union concatenates the parent's partitions with the delta's;
+    // compact again so a small graph stays one partition across
+    // generations (and the streaming maintainer's per-batch checkpoints)
+    val allNodes = graft.core.Tables.compact(pg.nodes.unionByName(newNodes))
     val backlog = pg.pending.getOrElse(
       pg.edges.filter(lit(false)).select(EdgeCols.map(col): _*))
     // The candidate table (delta ∪ backlog, deduped, minus already-
@@ -185,14 +185,12 @@ object EdgeListIngest {
     // result frames anyway, and the cache round-trip measured SLOWER
     // (3.2 → 3.6 s on stream_graph_append) while the batch path won big
     // (g27 steady 2.7 → 1.6 s, 31 → 11 jobs).
-    val candBase = graft.core.Tables.sizedCoalesce(
-      dedupEdges(raw).unionByName(backlog)
-        .dropDuplicates(EdgeCols)
-        .join(pg.edges, EdgeCols, "left_anti"))
+    val candBase = dedupEdges(raw).unionByName(backlog)
+      .dropDuplicates(EdgeCols)
+      .join(pg.edges, EdgeCols, "left_anti")
     val candidates = if (cacheCandidates) candBase.cache() else candBase
     val resolved = resolve(candidates, allNodes)
-    val allEdges = graft.core.Tables.sizedCoalesce(
-      pg.edges.unionByName(resolved))
+    val allEdges = graft.core.Tables.compact(pg.edges.unionByName(resolved))
     val pend = candidates.join(resolved, EdgeCols, "left_anti")
     PropertyGraph(allNodes, allEdges,
       underlying = (if (cacheCandidates) Seq(candidates) else Nil) ++

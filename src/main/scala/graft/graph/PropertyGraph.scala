@@ -17,11 +17,12 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
   /** The algorithm projection: parallel edges pre-aggregated to min cost
     * per (src, dst) — sound for every shortest-path semantic and the
     * direct analogue of projecting into GDS memory (SURVEY §2.1 S5).
-    * Cached because every algorithm superstep re-reads it.
+    * Cached because every algorithm superstep re-reads it; it keeps the
+    * layout of `edges` (one partition for a small graph, see
+    * EdgeListIngest.build), larger ones are sized by AQE.
     */
   lazy val projection: DataFrame =
-    graft.core.Tables.sizedCoalesce(
-      edges.groupBy("src", "dst").agg(min("cost").as("cost"))).cache()
+    edges.groupBy("src", "dst").agg(min("cost").as("cost")).cache()
 
   def cache(): this.type = { nodes.cache(); edges.cache(); this }
 

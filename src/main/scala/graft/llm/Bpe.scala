@@ -156,7 +156,7 @@ object Bpe {
     * distinct-word count.
     */
   def train(docs: DataFrame, numMerges: Int): Seq[Merge] = {
-    val wc = wordCounts(docs).transform(graft.core.Tables.shrinkForCache(_)).cache()
+    val wc = wordCounts(docs).cache()
     try {
       if (wc.count() <= LocalWordThreshold)
         trainLocal(

@@ -35,7 +35,10 @@ object CorpusPipeline {
     // downstream dedup stage INLINES them into its own plan — paying
     // their evaluation AND a fresh codegen compilation per stage (~3×
     // the whole pipeline's cost, measured at sf0.1)
-    val filtered = annotated.filter(col("quality") >= minQuality).transform(graft.core.Tables.shrinkForCache(_)).cache()
+    // a map over the spread scan, which AQE cannot coalesce: its deletion
+    // read +0.8 s at 32 cores on pipeline_e2e (layout A/B in CHANGES.md)
+    val filtered = annotated.filter(col("quality") >= minQuality)
+      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
     try {
       // dedupCorpus returns an eagerly-materialized frame, so the cache
       // can be dropped before returning (finally: a dedup failure must

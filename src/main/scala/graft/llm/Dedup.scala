@@ -273,9 +273,14 @@ object Dedup {
     // candidate volume stops being quadratic in clone multiplicity
     // (tokens never contain whitespace, so the space-joined fingerprint
     // is collision-free up to md5).
+    // fped, withSig, candSh (minhashBandVerify) and dedupCorpus's
+    // survivors are maps over the spread `documents` scan: no shuffle at
+    // their top for AQE to coalesce, so Tables.compact sizes them. Their
+    // deletion read +0.4–0.8 s at 32 cores on minhash/dedup_corpus/
+    // pipeline_e2e in the layout A/B in CHANGES.md.
     val fped = docs.select(col("doc_id"),
         md5(concat_ws(" ", tokens(col("text")))).as("fp"))
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
     // Early-out (r9 verdict item): on a MOSTLY-DISTINCT corpus the
     // collapse grouping buys nothing and costs two extra shuffles —
     // doc-level banding finds the few clone pairs anyway (identical
@@ -294,7 +299,7 @@ object Dedup {
     val groups = fped.groupBy(col("fp"))
       .agg(min(col("doc_id")).as("rep_id"),
         count(lit(1)).as("n_members"))
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      .cache()
     val reps = docs.join(
       groups.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
 
@@ -351,7 +356,8 @@ object Dedup {
         call_function("graft_minhash_text", col("toks"), lit(w), lit(k))
           .as("sig"))
       .filter(col("sig").isNotNull)
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      // sized: see minhashNearDup's fped
+      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
     // explode into (band_id, band_key) keys — ids only, narrow shuffle.
     // The key is the band's signature VALUES joined as a string, not a
     // hash of them: same bucketing (equal slices ⇔ equal keys, with no
@@ -376,7 +382,7 @@ object Dedup {
         sp.join(withSig.select(col("doc_id").as("id_a")), Seq("id_a"),
           "left_semi"))
       case None => bandCands
-    }).transform(graft.core.Tables.shrinkForCache(_)).cache()
+    }).cache()
     // exact Jaccard verification — shingle sets materialized ONLY for
     // docs that appear in a candidate pair. On a typical corpus that set
     // is tiny and AQE turns these joins into broadcasts at runtime; on a
@@ -389,7 +395,8 @@ object Dedup {
       .join(candIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), shinglesFromTokens(col("toks"), w).as("sh"))
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      // sized: see minhashNearDup's fped
+      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
     val verified = cands
       .join(candSh.select(col("doc_id").as("id_a"),
         col("sh").as("sh_a")), Seq("id_a"))
@@ -457,7 +464,7 @@ object Dedup {
       .filter(col("doc_id") =!= col("bench_id"))
       .select(col("doc_id"), col("bench_id"))
       .dropDuplicates("doc_id", "bench_id")
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      .cache()
 
     // exact verify: corpus shingle sets only for candidate docs, bench
     // shingle sets for the whole (small) bench
@@ -523,7 +530,7 @@ object Dedup {
     // in clone multiplicity (the r9 10× scale run measured the cost).
     val fped = docs.select(col("doc_id"),
         md5(concat_ws(" ", tokens(col("text")))).as("fp"))
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      .cache()
     // Early-out (r9 verdict item, same reasoning as minhashNearDup): on
     // a mostly-distinct corpus the collapse grouping buys nothing and
     // costs two extra shuffles — the AllPairs prefix join finds clone
@@ -541,7 +548,7 @@ object Dedup {
     val groups = fped.groupBy(col("fp"))
       .agg(min(col("doc_id")).as("rep_id"),
         count(lit(1)).as("n_members"))
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      .cache()
     val reps = docs.join(
       groups.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
     // Eagerly checkpointed: a materialization BARRIER, not just reuse.
@@ -734,7 +741,9 @@ object Dedup {
     // signature-distinct band join and both expansion sides read it
     val sigs = docs
       .select(col("doc_id"), simhash(col("text")).as("simhash"))
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      // a map over the spread scan, which AQE cannot coalesce: its
+      // deletion read +0.8 s at 32 cores in the layout A/B in CHANGES.md
+      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
     val distinctSigs = sigs.select(col("simhash")).distinct()
     val banded = distinctSigs.select(col("simhash"),
       posexplode(array((0 until bands).map { b =>
@@ -791,7 +800,7 @@ object Dedup {
     // union-find instead of paying a shuffle per propagation superstep.
     // The gate's string-length estimate over long ids overestimates the
     // collected (Long, Long) rows, so the admit is conservative.
-    val cached = pairs.select(col("id_a"), col("id_b")).transform(graft.core.Tables.shrinkForCache(_)).cache()
+    val cached = pairs.select(col("id_a"), col("id_b")).cache()
     if (graft.core.LocalBudget.fits(cached, localThreshold)) {
       val edges = cached.collect().map(r => (r.getLong(0), r.getLong(1)))
       cached.unpersist()
@@ -861,7 +870,9 @@ object Dedup {
     // survivors feeds the signature scan, the candidate-shingle scan and
     // the final anti-join — cache it so the exact-dedup groupBy shuffle
     // runs once, not once per downstream reference
-    val survivors = docs.join(exactKeep, Seq("doc_id"), "left_semi").transform(graft.core.Tables.shrinkForCache(_)).cache()
+    val survivors = docs.join(exactKeep, Seq("doc_id"), "left_semi")
+      // sized: see minhashNearDup's fped
+      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
     // survivors carry one doc per fingerprintMd5, which IS the collapse
     // fingerprint — skip the (provably no-op) exact-duplicate collapse
     val pairs = minhashNearDup(survivors, w, k, bands, minJaccard,
@@ -910,7 +921,7 @@ object Dedup {
     val vecs = emb.select(col("vec_id"), col("embedding"))
     val sigs = vecs
       .select(col("vec_id"), hyperplaneBits(col("embedding"), nBits).as("hb"))
-      .transform(graft.core.Tables.shrinkForCache(_)).cache()
+      .cache()
     val banded = sigs.select(col("vec_id"),
       posexplode(array((0 until bands).map { b =>
         shiftrightunsigned(col("hb"), b * bitsPerBand)

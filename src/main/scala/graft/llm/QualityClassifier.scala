@@ -172,9 +172,9 @@ object QualityClassifier {
       .groupBy(col("doc_id"), col("label"),
         bucketOf(col("tok"), buckets).as("f"))
       .agg(count(lit(1)).as("x"))
-      .transform(graft.core.Tables.shrinkForCache(_)).localCheckpoint(true)
+      .localCheckpoint(true)
     // Docs with no tokens still get scored (score = 0, the empty dot).
-    val docsL = d.select(col("doc_id"), col("label")).transform(graft.core.Tables.shrinkForCache(_)).localCheckpoint(true)
+    val docsL = d.select(col("doc_id"), col("label")).localCheckpoint(true)
 
     // Fixed-width feature rows (4 longs ≈ 132 B collected): the
     // LocalBudget guard with a static row model.
@@ -216,7 +216,7 @@ object QualityClassifier {
         Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("label"),
         coalesce(col("dot"), lit(0L)).as("score"))
-      .transform(graft.core.Tables.shrinkForCache(_)).localCheckpoint(true)
+      .localCheckpoint(true)
     graft.core.Checkpoints.release(feats)
     graft.core.Checkpoints.release(docsL)
 

@@ -180,7 +180,7 @@ object Similarity {
     var prev: Option[DataFrame] = None
     var i = 0
     while (i < iters) {
-      val next = kmeansRefine(spark, assignToCentroids(vecs, cents)).transform(graft.core.Tables.shrinkForCache(_)).cache()
+      val next = kmeansRefine(spark, assignToCentroids(vecs, cents)).cache()
       next.count()
       // drop the previous iteration's cached centroids — repeated kmeans
       // calls in a long-lived session must not accumulate cached blocks
@@ -578,9 +578,7 @@ object Similarity {
     val nCent =
       if (nCentroids > 0) nCentroids else autoCentroids(vecs.count())
     val seeds = seedCentroids(vecs, nCent)
-    // collected exactly once — no cache (a cache() here also pinned the
-    // refine aggregation's 32 reduce partitions, since cached plans skip
-    // AQE coalescing; uncached, the collect runs with AQE)
+    // collected exactly once — no cache: the collect is the only reader
     val refined = kmeansRefine(spark, assignToCentroids(vecs, seeds), dim)
     val cents = refined.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq

@@ -2302,12 +2302,12 @@ object Graph {
           df.filter(col("src") =!= col("dst"))
             .select(least(col("src"), col("dst")).as("a"),
               greatest(col("src"), col("dst")).as("b")).distinct()
-        val undOld = und(e.filter(bucket =!= 0)).transform(graft.core.Tables.shrinkForCache(_)).cache()
+        val undOld = und(e.filter(bucket =!= 0)).cache()
         // delta edges whose canonical form is genuinely absent from the
         // standing graph (the multigraph can carry both orientations in
         // different buckets — those are not new undirected edges)
         val undNew = und(e.filter(bucket === 0))
-          .join(undOld, Seq("a", "b"), "left_anti").transform(graft.core.Tables.shrinkForCache(_)).cache()
+          .join(undOld, Seq("a", "b"), "left_anti").cache()
         graft.core.Checkpoints.owns(
           graft.algo.Triangles.incrementalPerNode(
               pg.nodes.select("nodeId"), undOld, undNew)

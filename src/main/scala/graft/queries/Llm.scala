@@ -855,7 +855,7 @@ object Llm {
         val emb = t(s, dir).embeddings
         val seeds = Similarity.seedCentroids(emb, 16)
         val refined = Similarity.kmeansRefine(s,
-          Similarity.assignToCentroids(emb, seeds)).transform(graft.core.Tables.shrinkForCache(_)).cache()
+          Similarity.assignToCentroids(emb, seeds)).cache()
         val assigned = Similarity.assignToCentroids(emb, refined)
         Similarity.ivfTopK(s, assigned, refined, queryVec(s, dir),
           k = 20, nProbe = 4)
@@ -1074,7 +1074,7 @@ object Llm {
         val emb = t(s, dir).embeddings
         val seeds = Similarity.seedCentroids(emb, 16)
         val refined = Similarity.kmeansRefine(s,
-          Similarity.assignToCentroids(emb, seeds)).transform(graft.core.Tables.shrinkForCache(_)).cache()
+          Similarity.assignToCentroids(emb, seeds)).cache()
         val cents = refined.collect()
           .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
         val model = Similarity.pqTrain(s, emb,

@@ -1696,21 +1696,15 @@ object Relational {
       (s, dir) => {
         val tt = t(s, dir)
         // cached: three consumers (basket count, per-brand counts, pair
-        // explode) would otherwise re-run the join+basket agg.
-        // sizedCoalesce (bounded by the lineitem scan — one basket row
-        // per orderkey, so the rollup can't exceed its input): cached
-        // plans skip AQE coalescing, so the cache would otherwise hold
-        // shuffle.partitions near-empty partitions and each consumer
-        // (including the three broadcast legs) would pay that many
-        // tasks per read
-        val liScan = tt.lineitem.select(col("l_orderkey"), col("l_partkey"))
-        val bk = graft.core.Tables.sizedCoalesce(
-          liScan
-            .join(broadcast(tt.part.select(col("p_partkey").as("l_partkey"),
-              col("p_brand"))), Seq("l_partkey"))
-            .groupBy(col("l_orderkey"))
-            .agg(sort_array(collect_set(col("p_brand"))).as("brands")),
-          boundedBy = liScan)
+        // explode) would otherwise re-run the join+basket agg. AQE sizes
+        // the basket reduce by its shuffled volume (core.Sessions) and
+        // the cache keeps that layout, so consumers read a few
+        // partitions, not shuffle.partitions near-empty ones
+        val bk = tt.lineitem.select(col("l_orderkey"), col("l_partkey"))
+          .join(broadcast(tt.part.select(col("p_partkey").as("l_partkey"),
+            col("p_brand"))), Seq("l_partkey"))
+          .groupBy(col("l_orderkey"))
+          .agg(sort_array(collect_set(col("p_brand"))).as("brands"))
           .cache()
         val nb = bk.agg(count(lit(1)).as("n_baskets"))
         val cnt = bk.select(explode(col("brands")).as("p_brand"))

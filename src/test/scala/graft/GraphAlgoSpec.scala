@@ -1217,6 +1217,26 @@ class GraphAlgoSpec extends AnyFunSuite {
     }
     info(bits.map { case (n, b) => s"$n=$b" }.mkString("stat bits: ", " ", ""))
     bits.foreach { case (name, b) => assert(b <= (1 << 14), s"$name: $b bits") }
+    // unweighted Louvain is the weighted setup at w = 1: on both
+    // dispatch paths `run` ≡ the local twin, and `runWeighted` over unit
+    // weights ≡ `run`
+    def labels(df: org.apache.spark.sql.DataFrame): Map[String, String] = {
+      val m = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      core.Checkpoints.release(df)
+      m
+    }
+    val ids = (for (x <- 0 until side; y <- 0 until side)
+      yield id(x, y)).toArray
+    val ref = algo.Louvain.localReference(ids,
+      links.map(l => (l._1, l._2)).toArray, 10)
+    val unit = links.map(l => (l._1, l._2, 1L)).toDF("src", "dst", "w")
+    Seq(0L, core.LocalBudget.MaxLocalEdges).foreach { cap =>
+      val run = labels(algo.Louvain.run(spark, nodes, edges, rounds = 10,
+        localEdgeThreshold = cap))
+      assert(run === ref, s"run, cap $cap")
+      assert(labels(algo.Louvain.runWeighted(spark, nodes, unit, rounds = 10,
+        localEdgeThreshold = cap)) === run, s"runWeighted, cap $cap")
+    }
   }
 
   test("kcore: fixture peel; forced-distributed ≡ local on slice 1") {

@@ -25,6 +25,23 @@ class PlanSpec extends AnyFunSuite {
     "Exchange hashpartitioning".r.findAllIn(p).length +
       "Exchange rangepartitioning".r.findAllIn(p).length
 
+  test("a cached aggregate is coalesced by AQE: reads track volume, " +
+      "not shuffle.partitions") {
+    // Sessions.local lets AQE size cached plans; a session without that
+    // conf serves this cache as shuffle.partitions (4) near-empty tasks
+    val df = spark.range(0, 1000).select((col("id") % 10).as("k"))
+      .groupBy("k").count()
+    val rows = df.collect().toSet
+    val cached = df.cache()
+    try {
+      assert(cached.count() === 10L)
+      val parts = cached.rdd.getNumPartitions
+      assert(parts < spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        s"$parts partitions")
+      assert(cached.collect().toSet === rows)
+    } finally cached.unpersist()
+  }
+
   test("as-of join: exactly one shuffle, no nested-loop or cartesian join") {
     val ev = core.Tables(spark, sf).events
     val purchases = ev.filter(col("event_type") === "purchase")
