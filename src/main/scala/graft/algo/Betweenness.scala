@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Betweenness centrality (Brandes) over the canonical source set — the
   * reference platform's gds.betweenness, sampled-source variant (exact
@@ -61,19 +62,16 @@ object Betweenness {
   def run(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       sources: Seq[String], maxHops: Int = 100,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
-    val e = edges.select(col("src").cast("string"), col("dst").cast("string"),
-      col("cost").cast("double")).cache()
-    val out =
-      if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-        val pairs = e.collect().map(r =>
-          (r.getString(0), r.getString(1), r.getDouble(2)))
-        val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))
-          .collect().map(_.getString(0))
-        local(spark, nodeIds, pairs, sources)
-      } else distributed(spark, nodes, e, sources, maxHops)
-    e.unpersist()
-    out
+      : DataFrame = Checkpoints.scoped { s =>
+    val e = s.cache(edges.select(col("src").cast("string"),
+      col("dst").cast("string"), col("cost").cast("double")))
+    if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
+      val pairs = e.collect().map(r =>
+        (r.getString(0), r.getString(1), r.getDouble(2)))
+      val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))
+        .collect().map(_.getString(0))
+      local(spark, nodeIds, pairs, sources)
+    } else distributed(s, spark, nodes, e, sources, maxHops)
   }
 
   /** Per-source Brandes: binary-heap Dijkstra, topological sweep by
@@ -155,25 +153,24 @@ object Betweenness {
     * kernel, then σ and δ as fixed-round full-recompute propagations over
     * the (source-keyed) shortest-path DAG.
     */
-  private def distributed(spark: SparkSession, nodes: DataFrame,
-      e: DataFrame, sources: Seq[String], maxHops: Int): DataFrame = {
+  private def distributed(s: Checkpoints.Scope, spark: SparkSession,
+      nodes: DataFrame, e: DataFrame, sources: Seq[String], maxHops: Int)
+      : DataFrame = {
     import spark.implicits._
     val present = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
       .filter(col("node").isin(sources: _*))
       .collect().map(_.getString(0)).toSeq
-    val dist = DistributedSSSP.run(spark, e, present)
-      .select(col("source"), col("nodeId").as("node"), col("dist"))
-      .localCheckpoint(true)
+    val dist = s.checkpoint(s.adopt(DistributedSSSP.run(spark, e, present))
+      .select(col("source"), col("nodeId").as("node"), col("dist")))
     // source-keyed shortest-path DAG: u→v iff dist(u)+cost = dist(v)
-    val dag = dist.select(col("source"), col("node").as("u"),
+    val dag = s.checkpoint(dist.select(col("source"), col("node").as("u"),
         col("dist").as("du"))
       .join(e, col("u") === col("src"))
       .join(dist.select(col("source").as("s2"), col("node").as("v"),
         col("dist").as("dv")),
         col("s2") === col("source") && col("v") === col("dst"))
       .filter(col("du") + col("cost") === col("dv"))
-      .select(col("source"), col("u"), col("v"))
-      .localCheckpoint(true)
+      .select(col("source"), col("u"), col("v")))
     val seeds = present.toDF("source")
       .select(col("source"), col("source").as("node"), lit(1L).as("sg"))
     // σ: full recompute per round — σ_k(v) = Σ_preds σ_{k-1}(u), seeds 1.
@@ -181,15 +178,17 @@ object Betweenness {
     // no-change round proves convergence since each round is a pure
     // function of the last), with maxHops as a hard cap that FAILS
     // loudly — a silently-truncated σ would produce wrong integers.
+    // `live` are the frames the steps read besides the iterate
     def toFixpoint(init: DataFrame,
         step: DataFrame => DataFrame,
-        key: Seq[String], valCol: String, what: String): DataFrame = {
-      var cur = init
+        key: Seq[String], valCol: String, what: String,
+        live: DataFrame*): DataFrame = {
+      var cur = s.checkpoint(init)
       var changed = 1L
       var iter = 0
       while (changed > 0 && iter < maxHops) {
         iter += 1
-        val next = step(cur)
+        val next = s.checkpoint(step(cur))
         // value diffs on shared keys PLUS newly-reached rows (the σ table
         // grows monotonically as propagation advances; an inner join
         // alone would miss the growth and stop early)
@@ -197,37 +196,28 @@ object Betweenness {
             cur.withColumnRenamed(valCol, "__old"), key)
           .filter(col(valCol) =!= col("__old")).count() +
           math.abs(next.count() - cur.count())
-        graft.core.Checkpoints.release(cur)
         cur = next
+        s.keep(live :+ cur: _*)
       }
-      if (changed > 0) {
-        graft.core.Checkpoints.release(cur)
+      if (changed > 0)
         throw new IllegalStateException(
           s"betweenness $what propagation still changing after $maxHops " +
             "rounds — the shortest-path DAG is deeper than maxHops; " +
             "raise it (rounds past the true depth are no-ops)")
-      }
       cur
     }
-    val sigma = toFixpoint(seeds.localCheckpoint(true),
-      s => sigmaStep(seeds, dag, s), Seq("source", "node"), "sg", "sigma")
+    val sigma = toFixpoint(seeds, sg => sigmaStep(seeds, dag, sg),
+      Seq("source", "node"), "sg", "sigma", dist, dag)
     // δ: δ_k(v) = Σ_succ (σ_v·(M+δ_{k-1}(w))) div σ_w, full recompute
     val delta = toFixpoint(
-      dist.select(col("source"), col("node"), lit(0L).as("dl"))
-        .localCheckpoint(true),
+      dist.select(col("source"), col("node"), lit(0L).as("dl")),
       d => deltaStep(dist, dag, sigma, d), Seq("source", "node"), "dl",
-      "delta")
-    val out = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
+      "delta", dist, dag, sigma)
+    s.checkpoint(nodes.select(col(nodes.columns(0)).cast("string").as("node"))
       .join(delta.filter(col("node") =!= col("source"))
           .groupBy("node").agg(sum(col("dl")).as("bc_micro")),
         Seq("node"), "left_outer")
-      .select(col("node"), coalesce(col("bc_micro"), lit(0L)).as("bc_micro"))
-      .localCheckpoint(true)
-    graft.core.Checkpoints.release(dist)
-    graft.core.Checkpoints.release(dag)
-    graft.core.Checkpoints.release(sigma)
-    graft.core.Checkpoints.release(delta)
-    out
+      .select(col("node"), coalesce(col("bc_micro"), lit(0L)).as("bc_micro")))
   }
 
   private def sigmaStep(seeds: DataFrame, dag: DataFrame,
@@ -237,7 +227,6 @@ object Betweenness {
           .join(sigma.withColumnRenamed("node", "u"), Seq("source", "u"))
           .groupBy(col("source"), col("v").as("node"))
           .agg(sum(col("sg")).as("sg")))
-      .localCheckpoint(true)
 
   private def deltaStep(dist: DataFrame, dag: DataFrame, sigma: DataFrame,
       delta: DataFrame): DataFrame = {
@@ -254,6 +243,5 @@ object Betweenness {
       .join(contrib, Seq("source", "node"), "left_outer")
       .select(col("source"), col("node"),
         coalesce(col("dl"), lit(0L)).as("dl"))
-      .localCheckpoint(true)
   }
 }

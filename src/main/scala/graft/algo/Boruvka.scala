@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Minimum spanning forest over the property graph — the classic
   * graph-library companion the reference's platform ships as
@@ -44,15 +45,14 @@ object Boruvka {
   def mst(spark: SparkSession, edges: DataFrame,
       maxRounds: Int = 20,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val cols = edges.columns
-    val cand = edges.select(col(cols(0)).as("s"), col(cols(1)).as("d"),
+    val cand = s.cache(edges.select(col(cols(0)).as("s"), col(cols(1)).as("d"),
         col(cols(2)).cast("double").as("cost"))
       .filter(col("s") =!= col("d"))
       .groupBy(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
-      .agg(min(col("cost")).as("cost"))
-      .cache()
+      .agg(min(col("cost")).as("cost")))
     if (graft.core.LocalBudget.fits(cand, localEdgeThreshold,
         payloadBytesPerRow = 8)) {
       // ---- local: Kruskal over the sorted edge array ------------------
@@ -71,24 +71,27 @@ object Boruvka {
           else if (a1 != a2) ord.lt(a1, a2)
           else ord.lt(b1, b2)
         }
-      cand.unpersist()
       // keep each edge that joins two trees, in sorted order
       val uf = new UnionFind[String]
       import spark.implicits._
-      return rows.filter { case (a, b, _) => uf.union(a, b) }.toSeq
+      rows.filter { case (a, b, _) => uf.union(a, b) }.toSeq
         .toDF("src", "dst", "cost")
-    }
-    // ---- distributed: Borůvka hook + sever + jump + contract ----------
+    } else distributed(s, spark, cand, maxRounds)
+  }
+
+  /** Borůvka hook + sever + jump + contract over the cached canonical
+    * edge list `cand` (a, b, cost).
+    */
+  private def distributed(s: Checkpoints.Scope, spark: SparkSession,
+      cand: DataFrame, maxRounds: Int): DataFrame = {
     // Component-level edges carry their ORIGINAL endpoints: (pa, pb)
     // are current component labels, (a, b, cost) the original edge that
     // realizes the minimum between them — what the output needs and what
     // the (cost, a, b) total order tie-breaks on.
-    var cedgesCp = cand
+    var cedges = s.checkpoint(cand
       .select(col("a").as("pa"), col("b").as("pb"),
-        col("cost"), col("a"), col("b"))
-      .localCheckpoint(true)
-    var cedges = cedgesCp
-    cand.unpersist()
+        col("cost"), col("a"), col("b")))
+    s.keep(cedges)
     var chosenAll: Option[DataFrame] = None
     var round = 0
     var merged = 1L
@@ -98,51 +101,44 @@ object Boruvka {
           col("cost"), col("a"), col("b"))
         .union(cedges.select(col("pb").as("c"), col("pa").as("o"),
           col("cost"), col("a"), col("b")))
-      val chosenCp = out
+      val chosen = s.fresh(out
         .groupBy("c")
         .agg(min(struct(col("cost"), col("a"), col("b"), col("o")))
           .as("m"))
         .select(col("c"), col("m.o").as("o"), col("m.cost").as("cost"),
-          col("m.a").as("a"), col("m.b").as("b"))
-        .localCheckpoint(true)
-      val chosen = graft.core.Checkpoints.freshStats(chosenCp)
-      merged = chosenCp.count()
+          col("m.a").as("a"), col("m.b").as("b")))
+      merged = chosen.count()
       if (merged > 0) {
         // 2. sever the pointer graph's 2-cycles at their minimum label:
         //    the chosen map c→o is a functional graph whose only cycles
         //    are mutual choices (strict total order); the smaller label
         //    of each pair becomes a root
-        var hooksCp = chosen.as("m")
+        var hooks = s.fresh(chosen.as("m")
           .join(chosen.select(col("c").as("oc"), col("o").as("oo")),
             col("m.o") === col("oc"), "left_outer")
           .select(col("m.c").as("c"),
             when(col("oo") === col("m.c") && col("m.c") < col("m.o"),
-              col("m.c")).otherwise(col("m.o")).as("t"))
-          .localCheckpoint(true)
-        var hooks = graft.core.Checkpoints.freshStats(hooksCp)
+              col("m.c")).otherwise(col("m.o")).as("t")))
         // 3. pointer-jump the severed forest to its roots (the iterated
         //    state is |components| rows, halving per jump)
         var jumped = 1L
         while (jumped > 0) {
-          val h2cp = hooks.as("h")
+          val h2 = s.fresh(hooks.as("h")
             .join(hooks.select(col("c").as("tc"), col("t").as("tt")),
               col("h.t") === col("tc"), "left_outer")
             .select(col("h.c").as("c"),
-              coalesce(col("tt"), col("h.t")).as("t"))
-            .localCheckpoint(true)
-          val h2 = graft.core.Checkpoints.freshStats(h2cp)
+              coalesce(col("tt"), col("h.t")).as("t")))
           jumped = h2.join(hooks.select(col("c"), col("t").as("old_t")),
               Seq("c"))
             .filter(col("t") =!= col("old_t")).count()
-          graft.core.Checkpoints.release(hooksCp)
-          hooksCp = h2cp
           hooks = h2
+          s.keep(Seq(cedges, chosen, hooks) ++ chosenAll: _*)
         }
         // 4. contract: re-map both endpoints through the closed hooks,
         //    drop intra-component edges, and pre-aggregate parallel
         //    component pairs back to their (cost, a, b) minimum so the
         //    edge list SHRINKS monotonically
-        val remappedCp = cedges
+        cedges = s.fresh(cedges
           .join(hooks.select(col("c").as("pa"), col("t").as("npa")),
             Seq("pa"), "left_outer")
           .join(hooks.select(col("c").as("pb"), col("t").as("npb")),
@@ -155,42 +151,25 @@ object Boruvka {
             greatest(col("qa"), col("qb")).as("pb"))
           .agg(min(struct(col("cost"), col("a"), col("b"))).as("m"))
           .select(col("pa"), col("pb"), col("m.cost").as("cost"),
-            col("m.a").as("a"), col("m.b").as("b"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(cedgesCp)
-        cedgesCp = remappedCp
-        cedges = graft.core.Checkpoints.freshStats(remappedCp)
-        graft.core.Checkpoints.release(hooksCp)
+            col("m.a").as("a"), col("m.b").as("b")))
         // 5. accumulate the chosen edges (both merge partners may choose
         //    the same edge → distinct)
-        val roundEdges = chosen.select(col("a"), col("b"), col("cost"))
-          .distinct().localCheckpoint(true)
-        chosenAll = Some(chosenAll match {
-          case None => roundEdges
-          case Some(acc) =>
-            val nxt = acc.union(roundEdges).localCheckpoint(true)
-            graft.core.Checkpoints.release(acc)
-            graft.core.Checkpoints.release(roundEdges)
-            nxt
-        })
+        val roundEdges = s.checkpoint(
+          chosen.select(col("a"), col("b"), col("cost")).distinct())
+        chosenAll = Some(chosenAll.fold(roundEdges)(acc =>
+          s.checkpoint(acc.union(roundEdges))))
       }
-      graft.core.Checkpoints.release(chosenCp)
+      s.keep(Seq(cedges) ++ chosenAll: _*)
       round += 1
-      if (sys.env.contains("GRAFT_MST_DEBUG"))
-        System.err.println(s"[mst] round $round merged=$merged")
     }
     // converged iff the last round merged nothing OR contracted the edge
     // list to empty (the final merging round may be the budget's last —
     // an empty cross-component edge list IS the fixpoint)
-    val done = merged == 0 || cedgesCp.count() == 0
-    graft.core.Checkpoints.release(cedgesCp)
-    if (!done) {
-      chosenAll.foreach(graft.core.Checkpoints.release)
+    if (merged > 0 && cedges.count() > 0)
       throw new IllegalStateException(
         s"boruvka did not converge within $maxRounds rounds — components " +
           "at least halve per round, so this indicates a pathological " +
           "input, not a tuning matter")
-    }
     chosenAll match {
       case Some(acc) =>
         acc.select(col("a").as("src"), col("b").as("dst"), col("cost"))

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Greedy graph coloring by iterated maximal independent sets (the
   * Jones–Plassmann family): layer c = the MIS of the residual graph,
@@ -24,13 +25,13 @@ object Coloring {
   def greedy(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxColors: Int = 12, lubyRounds: Int = 8,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val allNodes = nodes.select(col(nodes.columns(0)).as("node"))
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst")).cache()
+    val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst")))
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       // ---- local: ONE collect, all MIS layers on driver adjacency ----
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(allNodes))
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, Some(allNodes))
       val adj = IndependentSet.undirectedAdjacency(pairs)
       val color = collection.mutable.HashMap.empty[String, Int]
       var uncolored = nodeIds.toBuffer
@@ -51,51 +52,33 @@ object Coloring {
           s"coloring (local) left ${uncolored.size} nodes after " +
             s"$maxColors layers")
       import spark.implicits._
-      return nodeIds.map(v => (v, color(v))).toSeq.toDF("node", "color")
+      nodeIds.map(v => (v, color(v))).toSeq.toDF("node", "color")
+    } else {
+      var resid = s.checkpoint(allNodes)
+      var acc: Option[DataFrame] = None
+      var c = 0
+      var remaining = resid.count()
+      while (remaining > 0 && c < maxColors) {
+        c += 1
+        val subEdges = e
+          .join(resid.select(col("node").as("src")), Seq("src"), "left_semi")
+          .join(resid.select(col("node").as("dst")), Seq("dst"), "left_semi")
+          .select("src", "dst")
+        val mis = s.adopt(IndependentSet.luby(spark, resid, subEdges,
+          lubyRounds, localEdgeThreshold))
+        val colored = s.checkpoint(mis.filter(col("in_mis") === 1L)
+          .select(col("node"), lit(c).as("color")))
+        resid = s.fresh(mis.filter(col("in_mis") === 0L).select("node"))
+        acc = Some(acc.fold(colored)(a => s.checkpoint(a.union(colored))))
+        s.keep(e, resid, acc.get)
+        remaining = resid.count()
+      }
+      if (remaining > 0)
+        throw new IllegalStateException(
+          s"coloring left $remaining nodes after $maxColors layers — the " +
+            "layer count is bounded by max degree + 1, so raise maxColors " +
+            "for this graph")
+      acc.get
     }
-    var residCp = allNodes.localCheckpoint(true)
-    var resid = residCp
-    var acc: Option[DataFrame] = None
-    var c = 0
-    var remaining = residCp.count()
-    while (remaining > 0 && c < maxColors) {
-      c += 1
-      val subEdges = e
-        .join(resid.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(resid.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select("src", "dst")
-      val mis = IndependentSet.luby(spark, resid, subEdges, lubyRounds,
-        localEdgeThreshold)
-      val coloredCp = mis.filter(col("in_mis") === 1L)
-        .select(col("node"), lit(c).as("color"))
-        .localCheckpoint(true)
-      val newResidCp = mis.filter(col("in_mis") === 0L).select("node")
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(mis)
-      graft.core.Checkpoints.release(residCp)
-      residCp = newResidCp
-      resid = graft.core.Checkpoints.freshStats(newResidCp)
-      acc = Some(acc match {
-        case None => coloredCp
-        case Some(a) =>
-          val nxt = a.union(coloredCp).localCheckpoint(true)
-          graft.core.Checkpoints.release(a)
-          graft.core.Checkpoints.release(coloredCp)
-          nxt
-      })
-      remaining = residCp.count()
-      if (sys.env.contains("GRAFT_COLOR_DEBUG"))
-        System.err.println(s"[coloring] layer $c remaining=$remaining")
-    }
-    graft.core.Checkpoints.release(residCp)
-    e.unpersist()
-    if (remaining > 0) {
-      acc.foreach(graft.core.Checkpoints.release)
-      throw new IllegalStateException(
-        s"coloring left $remaining nodes after $maxColors layers — the " +
-          "layer count is bounded by max degree + 1, so raise maxColors " +
-          "for this graph")
-    }
-    acc.get
   }
 }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Distributed contraction-hierarchy BUILD — the scale twin of
   * [[ContractionHierarchy.build]] (whose doc names this design:
@@ -49,7 +50,7 @@ import org.apache.spark.sql.functions._
   * exponentially-sized plan strings into every execution-start event.
   * The shape that avoids both: every per-round frame becomes a true
   * LEAF — localCheckpoint, then re-wrap the materialized RDD WITHOUT
-  * origin stats ([[checkpointFresh]]): plans stay constant-depth,
+  * origin stats (`Scope.fresh`): plans stay constant-depth,
   * stats stay constant-size, and the price is one Row↔InternalRow
   * conversion per consumer over an already-cached RDD.
   *
@@ -77,16 +78,6 @@ object DistributedCH {
   final case class Built(chEdges: DataFrame, ranks: DataFrame,
       rounds: Int, nShortcuts: Long)
 
-  /** Eager checkpoint re-wrapped as a stats-free, plan-tree-cutting
-    * LEAF (see class doc); released via the Checkpoints.owns registry.
-    */
-  private def checkpointFresh(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val ck = df.localCheckpoint(true)
-    graft.core.Checkpoints.owns(
-      spark.createDataFrame(ck.rdd, ck.schema), ck)
-  }
-
   /** nodes: single-column node ids; edges: (src, dst, cost) directed
     * (parallel edges min-collapsed here, self-loops dropped).
     * `verbose` prints one line per round (level sizes + seconds) — the
@@ -97,11 +88,12 @@ object DistributedCH {
       verbose: Boolean = false, maxContractWork: Long = 4096,
       localWitnessCap: Int = 16,
       localFinishHardCap: Long = 2000000L,
-      stallHandoffEdges: Long = 200000L): Built = {
+      stallHandoffEdges: Long = 200000L): Built = Checkpoints.scoped { s =>
     import spark.implicits._
 
+    // a stats-free, plan-tree-cutting LEAF (see class doc) and its size
     def mat(df: DataFrame): (DataFrame, Long) = {
-      val c = checkpointFresh(df)
+      val c = s.fresh(df)
       (c, c.count())
     }
 
@@ -165,7 +157,6 @@ object DistributedCH {
         // rate test (which sCount == 0 would trivially satisfy); an
         // empty S on a driver-tractable core (≤ stallHandoffEdges)
         // still falls through to the handoff below.
-        Seq(pri, sSet).foreach(graft.core.Checkpoints.release)
         // min-guard: works are < 2^62, so once the cap passes them S is
         // nonempty and this branch can't loop — the guard only prevents
         // a sign flip from overflow
@@ -190,7 +181,6 @@ object DistributedCH {
         // off once progress genuinely stops. sCount ≥ 1 always holds
         // when any node fits the cap (priority leads with work, so the
         // global minimum among under-cap nodes has no smaller neighbor).
-        Seq(pri, sSet).foreach(graft.core.Checkpoints.release)
         stalled = true
       } else {
       val (marked, _) = mat(cur
@@ -201,13 +191,11 @@ object DistributedCH {
       // freeze: a pair leaves the working graph the round its first
       // endpoint contracts (ms and md are mutually exclusive — S is
       // independent), carrying its current (cost, via). Checkpointed
-      // (eager) so the buffered part survives this round's unpersists.
-      frozenParts += marked
+      // (eager) so the buffered part survives this round's frees.
+      frozenParts += s.checkpoint(marked
         .filter(col("ms").isNotNull || col("md").isNotNull)
-        .select("src", "dst", "cost", "via")
-        .localCheckpoint(true)
-      rankParts += sSet.withColumn("rank", lit(level))
-        .localCheckpoint(true)
+        .select("src", "dst", "cost", "via"))
+      rankParts += s.checkpoint(sSet.withColumn("rank", lit(level)))
       val scAll = marked.filter(col("md").isNotNull)
         .select(col("src").as("u"), col("dst").as("v"), col("cost").as("c1"))
         .join(marked.filter(col("ms").isNotNull)
@@ -282,10 +270,6 @@ object DistributedCH {
           col("m.via").as("via")))
       val (newRem, newRemCount) = mat(
         rem.join(sSet, Seq("node"), "left_anti"))
-      // all consumers are materialized leaves — release the round's
-      // intermediates and the previous incarnation now
-      Seq(pri, sSet, marked, cur, rem)
-        .foreach(graft.core.Checkpoints.release)
       cur = newCur; curCount = newCurCount
       rem = newRem; remCount = newRemCount
       if (verbose) println(f"[ch-build] level=$level |S|=$sCount " +
@@ -293,6 +277,9 @@ object DistributedCH {
         f"${(System.nanoTime() - t0) / 1e9}%.1f s")
       level += 1
       }
+      // all consumers are materialized leaves — free the round's
+      // intermediates and the previous incarnation now
+      s.keep(Seq(cur, rem) ++ frozenParts ++ rankParts: _*)
     }
 
     // local finish on the dense core. Isolated remaining nodes (no
@@ -318,8 +305,7 @@ object DistributedCH {
       val endpoints = cur.select(col("src").as("node"))
         .unionByName(cur.select(col("dst").as("node"))).distinct()
       val isolated = rem.join(endpoints, Seq("node"), "left_anti")
-      rankParts += isolated.withColumn("rank", lit(level))
-        .localCheckpoint(true)
+      rankParts += s.checkpoint(isolated.withColumn("rank", lit(level)))
       level += 1
       if (curCount > 0) {
         val t0 = System.nanoTime()
@@ -347,20 +333,14 @@ object DistributedCH {
       }
     }
 
-    val chEdges = (frozenParts ++ localEdgesDf)
+    val chEdges = s.checkpoint((frozenParts ++ localEdgesDf)
       .reduceOption(_ unionByName _)
       .getOrElse(Seq.empty[(String, String, Double, String)]
-        .toDF("src", "dst", "cost", "via"))
-      .localCheckpoint(true)
-    val ranks = (rankParts ++ localRanksDf)
+        .toDF("src", "dst", "cost", "via")))
+    val ranks = s.checkpoint((rankParts ++ localRanksDf)
       .reduceOption(_ unionByName _)
-      .getOrElse(Seq.empty[(String, Int)].toDF("node", "rank"))
-      .localCheckpoint(true)
+      .getOrElse(Seq.empty[(String, Int)].toDF("node", "rank")))
     val nShort = chEdges.filter(col("via") =!= "").count()
-    frozenParts.foreach(graft.core.Checkpoints.release)
-    rankParts.foreach(graft.core.Checkpoints.release)
-    graft.core.Checkpoints.release(cur)
-    graft.core.Checkpoints.release(rem)
     Built(chEdges, ranks, level, nShort)
   }
 

@@ -2,7 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Checkpoints
 
 /** Distributed single/multi-source weighted shortest paths as a
   * driver-orchestrated DataFrame relaxation loop (SURVEY §7.2 kernel):
@@ -21,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
   *  - supersteps = max hop count of any shortest path (graph diameter
   *    bound), independent of data volume per step;
   *  - state/frontier are localCheckpoint'ed EVERY iteration and the
-  *    previous incarnation unpersisted — without this the lineage grows
+  *    previous incarnation freed — without this the lineage grows
   *    superlinearly and planning dominates (SURVEY §7.5 risk #1);
   *  - multi-source: the same kernel keyed by (source, nodeId) relaxes any
   *    number of sources in one pass — APSP over a source set is one call,
@@ -48,7 +48,7 @@ object DistributedSSSP {
       target: Option[String] = None, maxIter: Int = 100000,
       delta: Option[Double] = None,
       bannedEdges: Seq[(String, String)] = Nil,
-      bannedNodes: Seq[String] = Nil): DataFrame = {
+      bannedNodes: Seq[String] = Nil): DataFrame = Checkpoints.scoped { s =>
     import spark.implicits._
 
     // Yen spur masks: tiny driver-side sets → broadcast anti-join /
@@ -64,12 +64,11 @@ object DistributedSSSP {
       if (bannedNodes.isEmpty) masked1
       else masked1.filter(!col("src").isin(bannedNodes: _*) &&
         !col("dst").isin(bannedNodes: _*))
-    val e = masked2.persist(StorageLevel.MEMORY_AND_DISK)
+    val e = s.cache(masked2)
 
-    var state = sources.map(s => (s, s, 0.0, ""))
+    var state = s.checkpoint(sources.map(src => (src, src, 0.0, ""))
       .toDF("source", "nodeId", "dist", "pred")
-      .repartition(col("nodeId"))
-      .localCheckpoint(true)
+      .repartition(col("nodeId")))
     var frontier = state
     var bound = delta.getOrElse(Double.PositiveInfinity)
     var iter = 0
@@ -98,53 +97,34 @@ object DistributedSSSP {
         .select(col("source"), col("nodeId"),
           col("s.dist").as("dist"), col("s.pred").as("pred"))
 
-      val improved = cand.join(
+      val improved = s.checkpoint(cand.join(
           state.select(col("source").as("o_source"),
             col("nodeId").as("o_nodeId"), col("dist").as("o_dist")),
           cand("source") === col("o_source") &&
             cand("nodeId") === col("o_nodeId"), "left_outer")
         .filter(col("o_dist").isNull || col("dist") < col("o_dist"))
-        .select(col("source"), col("nodeId"), col("dist"), col("pred"))
-        .localCheckpoint(true)
+        .select(col("source"), col("nodeId"), col("dist"), col("pred")))
 
       // bucket mode: nodes above the bound stay pending in the frontier
-      val pending = delta match {
-        case None => None
-        case Some(_) => Some(frontier.filter(col("dist") >= bound))
-      }
-      val newFrontier = pending match {
+      val newFrontier = delta match {
         case None => improved
-        case Some(rest) => rest.union(improved).localCheckpoint(true)
+        case Some(_) =>
+          s.checkpoint(frontier.filter(col("dist") >= bound).union(improved))
       }
 
-      if (newFrontier.isEmpty) {
-        done = true
-        // release the final (empty-or-stale) checkpoints: Yen runs this
-        // kernel K×hops times per query, so per-run leftovers accumulate.
-        // Checkpoints.release, not unpersist — the latter is a no-op on
-        // checkpointed frames (CacheManager never saw them).
-        graft.core.Checkpoints.release(improved)
-        if (newFrontier ne improved) graft.core.Checkpoints.release(newFrontier)
-      } else {
-        val nImproved = improved.count()
-        val newState =
-          if (nImproved == 0) state
-          else state.join(improved.select(col("source").as("i_source"),
-                col("nodeId").as("i_nodeId")),
+      // the final (empty-or-stale) checkpoints fall to the scope's close:
+      // Yen runs this kernel K×hops times per query, so per-run leftovers
+      // would accumulate
+      if (newFrontier.isEmpty) done = true
+      else {
+        if (improved.count() > 0)
+          state = s.checkpoint(state.join(improved.select(
+                col("source").as("i_source"), col("nodeId").as("i_nodeId")),
               state("source") === col("i_source") &&
                 state("nodeId") === col("i_nodeId"), "left_anti")
-            .union(improved)
-            .localCheckpoint(true)
-        if (newState ne state) graft.core.Checkpoints.release(state)
-        // the old frontier may alias the live state (iteration 1 with no
-        // improvement): release only when it isn't the surviving frame
-        if (frontier ne newState) graft.core.Checkpoints.release(frontier)
-        // delta mode wraps improved into a separate union checkpoint; the
-        // bare improved checkpoint is then dead once newState/newFrontier
-        // are materialized
-        if (newFrontier ne improved) graft.core.Checkpoints.release(improved)
-        state = newState
+            .union(improved))
         frontier = newFrontier
+        s.keep(e, state, frontier)
         // frontier-level early exit for SINGLE-source single-target
         // queries only: with multiple sources, min(dist) over all
         // sources' target rows settles once the CLOSEST source reaches
@@ -167,8 +147,6 @@ object DistributedSSSP {
       }
       iter += 1
     }
-    e.unpersist()
-    if (frontier ne state) graft.core.Checkpoints.release(frontier)
     state
   }
 

@@ -2,7 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.core.Checkpoints
 
 /** Yen's K loopless shortest paths over the DISTRIBUTED relaxation
   * kernel — the scale path for graphs whose projection exceeds the
@@ -47,35 +47,40 @@ object DistributedYen {
   final case class SpurSpec(id: Int, source: String,
       bannedEdges: Seq[(String, String)], bannedNodes: Seq[String])
 
-  private def checkpointed(df: DataFrame): DataFrame =
-    df.localCheckpoint(true)
-
   /** All spur searches of one Yen round as ONE relaxation loop.
-    * `edges` must already be a (src, dst, cost) frame (caller persists).
+    * `edges` must already be a (src, dst, cost) frame (caller caches).
     * Returns spur id → (nodes, running costs) for spurs that reach
     * `target`; unreachable spurs are absent.
     */
   private[algo] def runSpurBatch(spark: SparkSession, edges: DataFrame,
       spurs: Seq[SpurSpec], target: String,
       maxIter: Int = 100000): Map[Int, (Seq[String], Seq[Double])] = {
-    import spark.implicits._
     require(spurs.map(_.id).distinct.length == spurs.length,
       "duplicate spur ids")
     // degenerate spur (source == target): the empty path, settled now
     val (trivial, live) = spurs.partition(_.source == target)
     val trivialOut = trivial.map(s =>
       s.id -> (Seq(s.source), Seq(0.0))).toMap
-    if (live.isEmpty) return trivialOut
+    if (live.isEmpty) trivialOut
+    else trivialOut ++ relax(spark, edges, live, target, maxIter)
+  }
 
-    val bannedE = live.flatMap(s =>
-      s.bannedEdges.map(p => (s.id, p._1, p._2)))
-    val bannedN = live.flatMap(s => s.bannedNodes.map(n => (s.id, n)))
+  /** The batched relaxation and backward walk over the non-trivial
+    * spurs of [[runSpurBatch]].
+    */
+  private def relax(spark: SparkSession, edges: DataFrame,
+      live: Seq[SpurSpec], target: String, maxIter: Int)
+      : Map[Int, (Seq[String], Seq[Double])] = Checkpoints.scoped { s =>
+    import spark.implicits._
+    val bannedE = live.flatMap(sp =>
+      sp.bannedEdges.map(p => (sp.id, p._1, p._2)))
+    val bannedN = live.flatMap(sp => sp.bannedNodes.map(n => (sp.id, n)))
     val bannedEDf = if (bannedE.isEmpty) None
       else Some(bannedE.toDF("b_spur", "b_src", "b_dst"))
     val bannedNDf = if (bannedN.isEmpty) None
       else Some(bannedN.toDF("bn_spur", "bn_node"))
 
-    var state = checkpointed(live.map(s => (s.id, s.source, 0.0, ""))
+    var state = s.checkpoint(live.map(sp => (sp.id, sp.source, 0.0, ""))
       .toDF("spur", "nodeId", "dist", "pred")
       .repartition(col("nodeId")))
     var frontier = state
@@ -102,7 +107,7 @@ object DistributedYen {
         .select(col("spur"), col("nodeId"),
           col("s.dist").as("dist"), col("s.pred").as("pred"))
 
-      val improved = checkpointed(cand.join(
+      val improved = s.checkpoint(cand.join(
           state.select(col("spur").as("o_spur"),
             col("nodeId").as("o_nodeId"), col("dist").as("o_dist")),
           cand("spur") === col("o_spur") &&
@@ -110,19 +115,15 @@ object DistributedYen {
         .filter(col("o_dist").isNull || col("dist") < col("o_dist"))
         .select(col("spur"), col("nodeId"), col("dist"), col("pred")))
 
-      if (improved.isEmpty) {
-        done = true
-        graft.core.Checkpoints.release(improved)
-      } else {
-        val newState = checkpointed(
+      if (improved.isEmpty) done = true
+      else {
+        state = s.checkpoint(
           state.join(improved.select(col("spur").as("i_spur"),
                 col("nodeId").as("i_nodeId")),
               state("spur") === col("i_spur") &&
                 state("nodeId") === col("i_nodeId"), "left_anti")
             .union(improved))
-        graft.core.Checkpoints.release(state)
-        if (frontier ne state) graft.core.Checkpoints.release(frontier)
-        state = newState
+        frontier = improved
 
         // per-spur settling: a spur whose target dist ≤ its min frontier
         // dist can never improve (non-negative weights) — drop its rows
@@ -139,13 +140,12 @@ object DistributedYen {
         val settled = settledRows.filter(r =>
           !r.isNullAt(2) && r.getDouble(2) <= r.getDouble(1))
           .map(_.getInt(0)).toSet
-        if (settled.isEmpty) frontier = improved
-        else {
-          frontier = checkpointed(
+        if (settled.nonEmpty) {
+          frontier = s.checkpoint(
             improved.filter(!col("spur").isin(settled.toSeq: _*)))
-          graft.core.Checkpoints.release(improved)
-          if (frontier.isEmpty) done = true
+          done = frontier.isEmpty
         }
+        s.keep(state, frontier)
       }
       iter += 1
     }
@@ -161,7 +161,7 @@ object DistributedYen {
       scala.collection.mutable.ArrayBuffer[Double]]
     val seen = scala.collection.mutable.Map.empty[Int,
       scala.collection.mutable.HashSet[String]]
-    val srcOf = live.map(s => s.id -> s.source).toMap
+    val srcOf = live.map(sp => sp.id -> sp.source).toMap
     var cur = scala.collection.mutable.Map.empty[Int, String]
     val dead = scala.collection.mutable.HashSet.empty[Int]
     tRows.foreach { r =>
@@ -193,14 +193,11 @@ object DistributedYen {
         }
       }
     }
-    graft.core.Checkpoints.release(state)
-    if (frontier ne state) graft.core.Checkpoints.release(frontier)
-    val out = cur.keys.filterNot(dead).map { id =>
+    cur.keys.filterNot(dead).map { id =>
       val ns = (nodesBuf(id) += srcOf(id)).reverse.toSeq
       val ds = (distsBuf(id) += 0.0).reverse.toSeq
       id -> (ns, ds)
     }.toMap
-    trivialOut ++ out
   }
 
   /** Sequential single-spur search — the batched kernel's equivalence
@@ -212,7 +209,7 @@ object DistributedYen {
     val state = DistributedSSSP.run(spark, edges, Seq(src),
       target = Some(dst), bannedEdges = bannedE, bannedNodes = bannedN)
     val res = DistributedSSSP.reconstructPath(state, src, dst)
-    graft.core.Checkpoints.release(state)
+    Checkpoints.release(state)
     res.map { case (ns, cs) => Path(ns.toVector, cs.toVector) }
   }
 
@@ -222,70 +219,65 @@ object DistributedYen {
     * construction — same insertion order into the candidate pool).
     */
   def run(spark: SparkSession, edges: DataFrame, src: String, dst: String,
-      k: Int, batchSpurs: Boolean = true): Seq[Path] = {
-    val e = edges.select(col(edges.columns(0)).as("src"),
-        col(edges.columns(1)).as("dst"), col(edges.columns(2)).as("cost"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val accepted = scala.collection.mutable.ArrayBuffer.empty[Path]
-      val first =
-        if (batchSpurs)
-          runSpurBatch(spark, e, Seq(SpurSpec(0, src, Nil, Nil)), dst)
-            .get(0).map { case (ns, cs) => Path(ns.toVector, cs.toVector) }
-        else shortest(spark, e, src, dst, Nil, Nil)
-      first match {
-        case None => return Seq.empty
-        case Some(p) => accepted += p
-      }
-      implicit val ord: Ordering[(Path, Int)] = Ordering.by(-_._1.total)
-      val candidates =
-        scala.collection.mutable.PriorityQueue.empty[(Path, Int)]
-      val seen = scala.collection.mutable.HashSet[Vector[String]](
-        accepted.head.nodes)
-      var lastDev = 0 // Lawler's modification, as in LocalKernels.yen
+      k: Int, batchSpurs: Boolean = true): Seq[Path] = Checkpoints.scoped { s =>
+    val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst"), col(edges.columns(2)).as("cost")))
+    val first =
+      if (batchSpurs)
+        runSpurBatch(spark, e, Seq(SpurSpec(0, src, Nil, Nil)), dst)
+          .get(0).map { case (ns, cs) => Path(ns.toVector, cs.toVector) }
+      else shortest(spark, e, src, dst, Nil, Nil)
+    val accepted = scala.collection.mutable.ArrayBuffer.from(first)
+    implicit val ord: Ordering[(Path, Int)] = Ordering.by(-_._1.total)
+    val candidates =
+      scala.collection.mutable.PriorityQueue.empty[(Path, Int)]
+    val seen = scala.collection.mutable.HashSet.from(first.map(_.nodes))
+    var lastDev = 0 // Lawler's modification, as in LocalKernels.yen
+    var exhausted = first.isEmpty
 
-      while (accepted.length < k) {
-        val prev = accepted.last
-        // ban masks depend only on `accepted` — frozen for the round, so
-        // every spur search below is independent of the others
-        val specs = (lastDev until prev.nodes.length - 1).map { i =>
-          val spur = prev.nodes(i)
-          val root = prev.nodes.slice(0, i + 1)
-          val bannedE = accepted.toSeq
-            .filter(p => p.nodes.length > i + 1 && p.nodes.startsWith(root))
-            .map(p => (spur, p.nodes(i + 1)))
-            .distinct
-          (i, spur, root, prev.costs(i), bannedE, root.dropRight(1))
-        }
-        val results: Map[Int, Path] =
-          if (batchSpurs)
-            runSpurBatch(spark, e,
-              specs.map { case (i, spur, _, _, bE, bN) =>
-                SpurSpec(i, spur, bE, bN) }, dst)
-              .map { case (i, (ns, cs)) =>
-                i -> Path(ns.toVector, cs.toVector) }
-          else specs.flatMap { case (i, spur, _, _, bE, bN) =>
-            shortest(spark, e, spur, dst, bE, bN).map(i -> _)
-          }.toMap
-        // enqueue in ascending spur-index order: identical candidate-pool
-        // insertion sequence across both execution modes
-        specs.foreach { case (i, _, root, rootCost, _, _) =>
-          results.get(i).foreach { sp =>
-            val nodes = root.dropRight(1) ++ sp.nodes
-            if (!seen.contains(nodes)) {
-              seen += nodes
-              val costs = prev.costs.slice(0, i) ++
-                sp.costs.map(_ + rootCost)
-              candidates.enqueue((Path(nodes, costs), i))
-            }
+    while (!exhausted && accepted.length < k) {
+      val prev = accepted.last
+      // ban masks depend only on `accepted` — frozen for the round, so
+      // every spur search below is independent of the others
+      val specs = (lastDev until prev.nodes.length - 1).map { i =>
+        val spur = prev.nodes(i)
+        val root = prev.nodes.slice(0, i + 1)
+        val bannedE = accepted.toSeq
+          .filter(p => p.nodes.length > i + 1 && p.nodes.startsWith(root))
+          .map(p => (spur, p.nodes(i + 1)))
+          .distinct
+        (i, spur, root, prev.costs(i), bannedE, root.dropRight(1))
+      }
+      val results: Map[Int, Path] =
+        if (batchSpurs)
+          runSpurBatch(spark, e,
+            specs.map { case (i, spur, _, _, bE, bN) =>
+              SpurSpec(i, spur, bE, bN) }, dst)
+            .map { case (i, (ns, cs)) =>
+              i -> Path(ns.toVector, cs.toVector) }
+        else specs.flatMap { case (i, spur, _, _, bE, bN) =>
+          shortest(spark, e, spur, dst, bE, bN).map(i -> _)
+        }.toMap
+      // enqueue in ascending spur-index order: identical candidate-pool
+      // insertion sequence across both execution modes
+      specs.foreach { case (i, _, root, rootCost, _, _) =>
+        results.get(i).foreach { sp =>
+          val nodes = root.dropRight(1) ++ sp.nodes
+          if (!seen.contains(nodes)) {
+            seen += nodes
+            val costs = prev.costs.slice(0, i) ++
+              sp.costs.map(_ + rootCost)
+            candidates.enqueue((Path(nodes, costs), i))
           }
         }
-        if (candidates.isEmpty) return accepted.toSeq
+      }
+      if (candidates.isEmpty) exhausted = true
+      else {
         val (best, dev) = candidates.dequeue()
         accepted += best
         lastDev = dev
       }
-      accepted.toSeq
-    } finally e.unpersist()
+    }
+    accepted.toSeq
   }
 }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Node-embedding training over a skip-gram pair table — the stage that
   * turns RandomWalks.skipGramPairs' (center, context, n_pairs) corpus
@@ -58,34 +59,37 @@ object EmbeddingTrain {
   def train(nodes: DataFrame, pairs: DataFrame, dims: Int = 4,
       epochs: Int = 6,
       localPairThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     require(dims >= 1 && epochs >= 0, "dims >= 1 and epochs >= 0")
     val nd = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
-    val p = pairs.select(col(pairs.columns(0)).cast("string").as("center"),
+    val p = s.cache(pairs.select(col(pairs.columns(0)).cast("string").as("center"),
       col(pairs.columns(1)).cast("string").as("context"),
-      col(pairs.columns(2)).cast("long").as("n_pairs")).cache()
+      col(pairs.columns(2)).cast("long").as("n_pairs")))
     if (graft.core.LocalBudget.fits(p, localPairThreshold)) {
       val rows = p.collect().map(r =>
         (r.getString(0), r.getString(1), r.getLong(2)))
-      p.unpersist()
       val ids = nd.collect().map(_.getString(0))
-      return localTrain(nodes.sparkSession, ids, rows, dims, epochs)
-    }
+      localTrain(nodes.sparkSession, ids, rows, dims, epochs)
+    } else distributed(s, nd, p, dims, epochs)
+  }
+
+  /** The distributed epochs over the cached pair table `p`. */
+  private def distributed(s: Checkpoints.Scope, nd: DataFrame, p: DataFrame,
+      dims: Int, epochs: Int): DataFrame = {
     val dimLits = (0 until dims).map(lit(_))
-    var em = nd.select(col("node"), explode(array(dimLits: _*)).as("dim"))
+    var em = s.checkpoint(nd
+      .select(col("node"), explode(array(dimLits: _*)).as("dim"))
       .withColumn("val",
         conv(substring(md5(concat_ws("|", col("node"), col("dim"))), 1, 8),
-          16, 10).cast("long") % Modulus)
-      .localCheckpoint(true)
-    val tot = p.groupBy("center").agg(sum("n_pairs").as("n_tot"))
-      .localCheckpoint(true)
+          16, 10).cast("long") % Modulus))
+    val tot = s.checkpoint(p.groupBy("center").agg(sum("n_pairs").as("n_tot")))
     for (_ <- 1 to epochs) {
       val ctx = p
         .join(em.select(col("node").as("context"), col("dim"), col("val")),
           Seq("context"))
         .groupBy(col("center"), col("dim"))
         .agg(sum(col("n_pairs") * col("val")).as("cs"))
-      val next = em
+      em = s.checkpoint(em
         .join(ctx.withColumnRenamed("center", "node"), Seq("node", "dim"),
           "left_outer")
         .join(tot.withColumnRenamed("center", "node"), Seq("node"),
@@ -93,13 +97,9 @@ object EmbeddingTrain {
         .selectExpr("node", "dim",
           "CAST(CASE WHEN n_tot IS NULL OR n_tot = 0 THEN val " +
             "ELSE (7 * val + 3 * (coalesce(cs, CAST(0 AS BIGINT))" +
-            " div n_tot)) div 10 END AS BIGINT) AS val")
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(em)
-      em = next
+            " div n_tot)) div 10 END AS BIGINT) AS val"))
+      s.keep(p, tot, em)
     }
-    graft.core.Checkpoints.release(tot)
-    p.unpersist()
     em.select(col("node"), col("dim"), col("val"))
   }
 

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Weakly-connected components over the property graph — the standard
   * graph-library companion to the shortest-path family (the reference's
@@ -43,105 +44,83 @@ object GraphComponents {
   def wcc(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 50,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst")).cache()
+      : DataFrame = Checkpoints.scoped { s =>
+    val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst")))
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodes))
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
       val uf = new UnionFind[String]
       pairs.foreach { case (a, b) => uf.union(a, b) }
       import spark.implicits._
-      return nodeIds.map(nId => (nId, uf.find(nId))).toSeq
+      nodeIds.map(nId => (nId, uf.find(nId))).toSeq
         .toDF("node", "component")
-    }
-    // ---- distributed: min-hook + contract ------------------------------
-    // Every loop state keeps TWO handles: the checkpoint (releasable)
-    // and a stats-clean freshStats view the next round's plans read.
-    // hooks/cedges/labels all fan out under several joins per round, so
-    // without the barrier the propagated sizeInBytes estimate compounds
-    // multiplicatively — the audited result carried a 3.3-MEGABIT
-    // statistic and every later optimizer pass paid BigInteger math on
-    // it (see Checkpoints.freshStats).
-    var labelsCp = nodes.select(col(nodes.columns(0)).as("node"))
-      .withColumn("component", col("node"))
-      .localCheckpoint(true)
-    var labels = labelsCp
+    } else distributed(s, nodes, e, maxIter)
+  }
+
+  /** Min-hook + contract. hooks/cedges/labels all fan out under several
+    * joins per round, so each round's state is a stats-clean checkpoint
+    * (`Scope.fresh`): without the barrier the propagated sizeInBytes
+    * estimate compounds multiplicatively — the audited result carried a
+    * 3.3-MEGABIT statistic and every later optimizer pass paid
+    * BigInteger math on it.
+    */
+  private def distributed(s: Checkpoints.Scope, nodes: DataFrame,
+      e: DataFrame, maxIter: Int): DataFrame = {
+    var labels = s.checkpoint(nodes.select(col(nodes.columns(0)).as("node"))
+      .withColumn("component", col("node")))
     // contracted edge list between CURRENT roots, symmetric, loop-free
-    var cedgesCp = e.select(col("src").as("a"), col("dst").as("b"))
+    var cedges = s.checkpoint(e.select(col("src").as("a"), col("dst").as("b"))
       .union(e.select(col("dst").as("a"), col("src").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    var cedges = cedgesCp
-    e.unpersist()
+      .filter(col("a") =!= col("b")).distinct())
+    s.keep(labels, cedges)
     var iter = 0
     var hookCount = 1L
     while (hookCount > 0 && iter < maxIter) {
       // 1. hook every root to its minimum smaller neighbor root
-      var hooksCp = cedges.filter(col("b") < col("a"))
-        .groupBy(col("a").as("root")).agg(min(col("b")).as("tgt"))
-        .localCheckpoint(true)
-      var hooks = graft.core.Checkpoints.freshStats(hooksCp)
-      hookCount = hooksCp.count()
+      var hooks = s.fresh(cedges.filter(col("b") < col("a"))
+        .groupBy(col("a").as("root")).agg(min(col("b")).as("tgt")))
+      hookCount = hooks.count()
       if (hookCount > 0) {
         // 2. close the hook map on itself (chains a→b→c… halve per jump;
         //    the iterated table is |hooks| rows, never the node set)
         var jumped = 1L
         while (jumped > 0) {
-          val h2cp = hooks.as("h")
+          val h2 = s.fresh(hooks.as("h")
             .join(hooks.select(col("root").as("t_root"),
               col("tgt").as("t_tgt")),
               col("h.tgt") === col("t_root"), "left_outer")
             .select(col("h.root").as("root"),
-              coalesce(col("t_tgt"), col("h.tgt")).as("tgt"))
-            .localCheckpoint(true)
-          val h2 = graft.core.Checkpoints.freshStats(h2cp)
+              coalesce(col("t_tgt"), col("h.tgt")).as("tgt")))
           jumped = h2.join(hooks.select(col("root"),
               col("tgt").as("old_t")), Seq("root"))
             .filter(col("tgt") =!= col("old_t")).count()
-          graft.core.Checkpoints.release(hooksCp)
-          hooksCp = h2cp
           hooks = h2
+          s.keep(labels, cedges, hooks)
         }
         // 3. re-map labels and contract the edge list through the hooks
-        val nextLabelsCp = labels
+        labels = s.fresh(labels
           .join(hooks.select(col("root").as("component"), col("tgt")),
             Seq("component"), "left_outer")
           .select(col("node"),
-            coalesce(col("tgt"), col("component")).as("component"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(labelsCp)
-        labelsCp = nextLabelsCp
-        labels = graft.core.Checkpoints.freshStats(nextLabelsCp)
-        val remappedCp = cedges
+            coalesce(col("tgt"), col("component")).as("component")))
+        cedges = s.fresh(cedges
           .join(hooks.select(col("root").as("a"), col("tgt").as("na")),
             Seq("a"), "left_outer")
           .join(hooks.select(col("root").as("b"), col("tgt").as("nb")),
             Seq("b"), "left_outer")
           .select(coalesce(col("na"), col("a")).as("a"),
             coalesce(col("nb"), col("b")).as("b"))
-          .filter(col("a") =!= col("b")).distinct()
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(cedgesCp)
-        cedgesCp = remappedCp
-        cedges = graft.core.Checkpoints.freshStats(remappedCp)
+          .filter(col("a") =!= col("b")).distinct())
       }
-      graft.core.Checkpoints.release(hooksCp)
+      s.keep(labels, cedges)
       iter += 1
-      if (sys.env.contains("GRAFT_WCC_DEBUG"))
-        System.err.println(s"[wcc] round $iter hooks=$hookCount")
     }
-    graft.core.Checkpoints.release(cedgesCp)
-    if (hookCount > 0) {
-      // the labels checkpoint is never handed to the caller on this path,
-      // so release it before failing (KCore's non-convergence path does
-      // the same for its undirected edge state)
-      graft.core.Checkpoints.release(labelsCp)
+    if (hookCount > 0)
       throw new IllegalStateException(
         s"wcc did not converge within $maxIter rounds " +
           s"(last round hooked $hookCount roots); raise maxIter — " +
           "hook+contract needs O(log n) rounds, so hitting this bound " +
           "indicates a pathological input, not a tuning matter")
-    }
-    labelsCp
+    s.backing(labels)
   }
 }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Whole-graph statistical profile — one row of exact-integer
   * sufficient statistics over the undirected simple collapse of a
@@ -20,18 +21,18 @@ import org.apache.spark.sql.functions._
 object GraphProfile {
 
   /** nodes: single id column; edges: (src, dst) directed. */
-  def stats(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  def stats(nodes: DataFrame, edges: DataFrame): DataFrame =
+      Checkpoints.scoped { s =>
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst"))
-    val und = e.filter(col("src") =!= col("dst"))
+    val und = s.checkpoint(e.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct().localCheckpoint(true)
-    val deg = und.select(col("a").as("n"))
+      .distinct())
+    val deg = s.checkpoint(und.select(col("a").as("n"))
       .unionByName(und.select(col("b").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val tri = Triangles.perNode(nodes, e).localCheckpoint(true)
+      .groupBy("n").agg(count(lit(1)).as("deg")))
+    val tri = s.checkpoint(Triangles.perNode(nodes, e))
     val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
     val nEdges = e.agg(count(lit(1)).as("n_edges"))
     val nUnd = und.agg(count(lit(1)).as("n_und"))
@@ -66,7 +67,7 @@ object GraphProfile {
         "recompute with DECIMAL(38,0) for this graph")))
     val num = exact(col("n_und") * 2 * col("sxy") - col("sx") * col("sx"))
     val den = exact(col("n_und") * 2 * col("sx2") - col("sx") * col("sx"))
-    val out = nNodes.crossJoin(nEdges).crossJoin(nUnd).crossJoin(degAgg)
+    s.checkpoint(nNodes.crossJoin(nEdges).crossJoin(nUnd).crossJoin(degAgg)
       .crossJoin(nTri).crossJoin(lcc).crossJoin(ast)
       .select(col("n_nodes"), col("n_edges"), col("n_und"),
         col("max_deg"), col("wedges"), col("n_tri").as("n_triangles"),
@@ -75,9 +76,6 @@ object GraphProfile {
         round((col("n_tri") * 3).cast("double") /
           col("wedges").cast("double"), 6).as("global_cc"),
         round(num.cast("double") / den.cast("double"), 6)
-          .as("assortativity"))
-      .localCheckpoint(true)
-    Seq(und, deg, tri).foreach(graft.core.Checkpoints.release)
-    out
+          .as("assortativity")))
   }
 }

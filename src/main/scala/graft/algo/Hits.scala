@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** HITS (hubs & authorities, Kleinberg) over the projected simple
   * digraph — the link-analysis companion to PageRank (`gds.alpha.hits`
@@ -40,30 +41,34 @@ object Hits {
   /** (node, hub_micro, auth_micro) after `iters` rounds. */
   def run(nodes: DataFrame, edges: DataFrame, iters: Int = 10,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val nodeIds = nodes.select(col(nodes.columns(0)).as("node"))
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst")).distinct().cache()
+    val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst")).distinct())
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodeIds))
-      return localRun(nodes.sparkSession, ids, pairs, iters)
-    }
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
+      localRun(nodes.sparkSession, ids, pairs, iters)
+    } else distributed(s, nodeIds, e, iters)
+  }
+
+  /** The distributed rounds over the cached simple edge list `e`. */
+  private def distributed(s: Checkpoints.Scope, nodeIds: DataFrame,
+      e: DataFrame, iters: Int): DataFrame = {
     val n = nodeIds.count()
     require(n > 0, "empty node set")
     val unit = Mass / n
-    var state = nodeIds.select(col("node"), lit(unit).as("hub"),
-      lit(unit).as("auth")).localCheckpoint(true)
+    var state = s.checkpoint(nodeIds.select(col("node"), lit(unit).as("hub"),
+      lit(unit).as("auth")))
     for (_ <- 1 to iters) {
       // auth pull: sum hub over in-edges, ppm-normalize
       val authRaw = e.join(state.select(col("node").as("src"),
           col("hub")), Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum("hub").as("raw"))
-      val withAuthRaw = state
+      val withAuthRaw = s.checkpoint(state
         .join(authRaw, Seq("node"), "left_outer")
         .select(col("node"), col("hub"), col("auth"),
-          coalesce(col("raw"), lit(0L)).as("raw"))
-        .localCheckpoint(true)
+          coalesce(col("raw"), lit(0L)).as("raw")))
       val s1 = withAuthRaw.agg(sum("raw")).head().getLong(0)
       val afterAuth =
         if (s1 == 0L) withAuthRaw.select(col("node"), col("hub"), col("auth"))
@@ -73,23 +78,17 @@ object Hits {
       val hubRaw = e.join(afterAuth.select(col("node").as("dst"),
           col("auth")), Seq("dst"))
         .groupBy(col("src").as("node")).agg(sum("auth").as("raw"))
-      val withHubRaw = afterAuth
+      val withHubRaw = s.checkpoint(afterAuth
         .join(hubRaw, Seq("node"), "left_outer")
         .select(col("node"), col("hub"), col("auth"),
-          coalesce(col("raw"), lit(0L)).as("raw"))
-        .localCheckpoint(true)
+          coalesce(col("raw"), lit(0L)).as("raw")))
       val s2 = withHubRaw.agg(sum("raw")).head().getLong(0)
-      val next =
-        (if (s2 == 0L) withHubRaw.select(col("node"), col("hub"), col("auth"))
-         else withHubRaw.selectExpr("node",
-           s"CAST((raw * $Ppm div $s2) * $Ppm AS BIGINT) AS hub", "auth"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(state)
-      graft.core.Checkpoints.release(withAuthRaw)
-      graft.core.Checkpoints.release(withHubRaw)
-      state = next
+      state = s.checkpoint(
+        if (s2 == 0L) withHubRaw.select(col("node"), col("hub"), col("auth"))
+        else withHubRaw.selectExpr("node",
+          s"CAST((raw * $Ppm div $s2) * $Ppm AS BIGINT) AS hub", "auth"))
+      s.keep(e, state)
     }
-    e.unpersist()
     state.select(col("node"), col("hub").as("hub_micro"),
       col("auth").as("auth_micro"))
   }

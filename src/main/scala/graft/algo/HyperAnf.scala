@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 import graft.operators.HyperLogLog
 
 /** HyperANF (Boldi–Rosa–Vigna, WWW 2011): the neighborhood function
@@ -41,14 +42,12 @@ object HyperAnf {
         e.join(regs, e("dst") === regs("node"))
           .select(e("src").as("node"), col("bucket"), col("r")))
       .groupBy("node", "bucket").agg(max(col("r")).as("r"))
-      .localCheckpoint(true)
 
   /** Initial per-node single-key register frame (node, bucket, r). */
   private def init(nodes: DataFrame): DataFrame = {
     val (bucket, rho) = HyperLogLog.bucketAndRho(col("node").cast("string"))
     nodes.select(col(nodes.columns(0)).as("node"))
       .select(col("node"), bucket.as("bucket"), rho.as("r"))
-      .localCheckpoint(true)
   }
 
   /** N(r) for r = 0..rounds as (radius, nf_est, nf_occ):
@@ -64,7 +63,8 @@ object HyperAnf {
     *    effective-diameter flag off THIS column.
     */
   def neighborhoodFunction(spark: SparkSession, nodes: DataFrame,
-      edges: DataFrame, rounds: Int): Seq[(Int, Long, Long)] = {
+      edges: DataFrame, rounds: Int): Seq[(Int, Long, Long)] =
+      Checkpoints.scoped { s =>
     val e = edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst"))
     // BATCHED readoff actions (r16 batched ALL radii into one action;
@@ -85,8 +85,7 @@ object HyperAnf {
       HyperLogLog.estimateOccBy(r, Seq("node"))
         .agg(sum(col("n_est")).as("nf_est"), sum(col("n_occ")).as("nf_occ"))
         .select(lit(i).as("radius"), col("nf_est"), col("nf_occ"))
-    var regs = init(nodes)
-    var retained = scala.collection.mutable.ArrayBuffer(regs)
+    var regs = s.checkpoint(init(nodes))
     val legs = scala.collection.mutable.ArrayBuffer(nfDf(0, regs))
     val rows = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
@@ -95,17 +94,14 @@ object HyperAnf {
       legs.clear()
       // the LAST round's registers stay live (the next advance reads
       // them); everything older is done
-      retained.dropRight(1).foreach(graft.core.Checkpoints.release)
-      retained = retained.takeRight(1)
+      s.keep(regs)
     }
     for (i <- 1 to rounds) {
       if (legs.size >= ReadoffGroup) flush()
-      regs = advance(e, regs)
-      retained += regs
+      regs = s.checkpoint(advance(e, regs))
       legs += nfDf(i, regs)
     }
     flush()
-    retained.foreach(graft.core.Checkpoints.release)
     rows.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
   }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Maximal independent set by Luby's algorithm (1986) — the classic
   * symmetry-breaking primitive (conflict-free scheduling, graph
@@ -133,86 +134,60 @@ object IndependentSet {
   def luby(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       rounds: Int = 8,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val allNodes = nodes.select(col(nodes.columns(0)).as("node"))
-    val e0 = edges.select(col(edges.columns(0)).as("a"),
-        col(edges.columns(1)).as("b")).cache()
+    val e0 = s.cache(edges.select(col(edges.columns(0)).as("a"),
+        col(edges.columns(1)).as("b")))
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e0, _.unpersist(), Some(allNodes))
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e0, Some(allNodes))
       val mis = lubyLocal(nodeIds, undirectedAdjacency(pairs), rounds)
       import spark.implicits._
-      return nodeIds.map(v => (v, if (mis.contains(v)) 1L else 0L)).toSeq
+      nodeIds.map(v => (v, if (mis.contains(v)) 1L else 0L)).toSeq
         .toDF("node", "in_mis")
+    } else {
+      var und = s.checkpoint(allNodes)
+      var ue = s.checkpoint(e0.union(e0.select(col("b").as("a"), col("a").as("b")))
+        .filter(col("a") =!= col("b")).distinct())
+      s.keep(und, ue)
+      var misAcc: Option[DataFrame] = None
+      // early exit once nothing is undecided: later rounds are provably
+      // no-ops (empty cand/excl), so the result is identical to running
+      // the full budget — the SQL replay keeps its fixed rounds
+      var remaining = und.count()
+      var r = 0
+      while (r < rounds && remaining > 0) {
+        r += 1
+        val pr = und.select(col("node"),
+          md5(concat(lit(s"$r:"), col("node"))).as("p"))
+        // a node loses when ANY undecided neighbor's (priority, id) pair
+        // beats its own — strict: the pairs are distinct by the id field
+        val losers = ue
+          .join(pr.select(col("node").as("a"), col("p").as("pa")), Seq("a"))
+          .join(pr.select(col("node").as("b"), col("p").as("pb")), Seq("b"))
+          .filter(struct(col("pb"), col("b")) > struct(col("pa"), col("a")))
+          .select(col("a").as("node")).distinct()
+        val cand = s.fresh(und.join(losers, Seq("node"), "left_anti"))
+        val excl = ue.join(cand.select(col("node").as("b")), Seq("b"))
+          .select(col("a").as("node")).distinct()
+        und = s.fresh(und.join(cand, Seq("node"), "left_anti")
+          .join(excl, Seq("node"), "left_anti"))
+        ue = s.fresh(ue
+          .join(und.select(col("node").as("a")), Seq("a"), "left_semi")
+          .join(und.select(col("node").as("b")), Seq("b"), "left_semi")
+          .select(col("a"), col("b")))
+        misAcc = Some(misAcc.fold(s.backing(cand))(acc =>
+          s.checkpoint(acc.union(cand))))
+        s.keep(und, ue, misAcc.get)
+        remaining = und.count()
+      }
+      if (remaining > 0)
+        throw new IllegalStateException(
+          s"luby did not decide $remaining nodes within $rounds rounds; " +
+            "raise the budget (each round kills a constant edge fraction " +
+            "in expectation, so this signals a pathological input)")
+      allNodes.join(misAcc.get.withColumn("in_mis", lit(1L)), Seq("node"),
+          "left_outer")
+        .select(col("node"), coalesce(col("in_mis"), lit(0L)).as("in_mis"))
     }
-    var undCp = allNodes.localCheckpoint(true)
-    var und = undCp
-    var ueCp = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    var ue = ueCp
-    e0.unpersist()
-    var misAcc: Option[DataFrame] = None
-    // early exit once nothing is undecided: later rounds are provably
-    // no-ops (empty cand/excl), so the result is identical to running
-    // the full budget — the SQL replay keeps its fixed rounds
-    var remaining = undCp.count()
-    var r = 0
-    while (r < rounds && remaining > 0) {
-      r += 1
-      val pr = und.select(col("node"),
-        md5(concat(lit(s"$r:"), col("node"))).as("p"))
-      // a node loses when ANY undecided neighbor's (priority, id) pair
-      // beats its own — strict: the pairs are distinct by the id field
-      val losers = ue
-        .join(pr.select(col("node").as("a"), col("p").as("pa")), Seq("a"))
-        .join(pr.select(col("node").as("b"), col("p").as("pb")), Seq("b"))
-        .filter(struct(col("pb"), col("b")) > struct(col("pa"), col("a")))
-        .select(col("a").as("node")).distinct()
-      val candCp = und.join(losers, Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      val cand = graft.core.Checkpoints.freshStats(candCp)
-      val excl = ue.join(cand.select(col("node").as("b")), Seq("b"))
-        .select(col("a").as("node")).distinct()
-      val newUndCp = und.join(cand, Seq("node"), "left_anti")
-        .join(excl, Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(undCp)
-      undCp = newUndCp
-      und = graft.core.Checkpoints.freshStats(newUndCp)
-      val newUeCp = ue
-        .join(und.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(und.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(ueCp)
-      ueCp = newUeCp
-      ue = graft.core.Checkpoints.freshStats(newUeCp)
-      misAcc = Some(misAcc match {
-        case None => candCp
-        case Some(acc) =>
-          val nxt = acc.union(cand).localCheckpoint(true)
-          graft.core.Checkpoints.release(acc)
-          graft.core.Checkpoints.release(candCp)
-          nxt
-      })
-      remaining = undCp.count()
-      if (sys.env.contains("GRAFT_MIS_DEBUG"))
-        System.err.println(s"[mis] round $r remaining=$remaining")
-    }
-    val leftover = remaining
-    graft.core.Checkpoints.release(ueCp)
-    if (leftover > 0) {
-      graft.core.Checkpoints.release(undCp)
-      misAcc.foreach(graft.core.Checkpoints.release)
-      throw new IllegalStateException(
-        s"luby did not decide $leftover nodes within $rounds rounds; " +
-          "raise the budget (each round kills a constant edge fraction " +
-          "in expectation, so this signals a pathological input)")
-    }
-    graft.core.Checkpoints.release(undCp)
-    val mis = misAcc.get
-    allNodes.join(mis.withColumn("in_mis", lit(1L)), Seq("node"),
-        "left_outer")
-      .select(col("node"), coalesce(col("in_mis"), lit(0L)).as("in_mis"))
   }
 }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** k-core decomposition (membership + in-core degree for a fixed k) —
   * the reference platform's `gds.kcore` family: iteratively peel nodes
@@ -26,16 +27,16 @@ object KCore {
   def core(spark: SparkSession, edges: DataFrame, k: Int = 2,
       maxIter: Int = 100,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     require(k >= 1, s"k must be >= 1, got $k")
     val e = edges.select(col(edges.columns(0)).as("s"),
       col(edges.columns(1)).as("d"))
-    var und = e.filter(col("s") =!= col("d"))
+    var und = s.checkpoint(e.filter(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
-      .distinct().localCheckpoint(true)
+      .distinct())
     if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
-      val (pairs, _) = graft.core.LocalBudget.collectLocal(und, graft.core.Checkpoints.release)
+      val (pairs, _) = graft.core.LocalBudget.collectLocal(und)
       val adj = IndependentSet.undirectedAdjacency(pairs)
       var changed = true
       while (changed) {
@@ -47,42 +48,36 @@ object KCore {
         }
       }
       import spark.implicits._
-      return adj.toSeq.map { case (n, vs) => (n, vs.size.toLong) }
+      adj.toSeq.map { case (n, vs) => (n, vs.size.toLong) }
         .toDF("node", "core_degree")
+    } else {
+      var iter = 0
+      var changed = 1L
+      var nEdges = und.count()
+      while (changed > 0 && iter < maxIter) {
+        val deg = und.select(col("a").as("n"))
+          .union(und.select(col("b").as("n")))
+          .groupBy("n").agg(count(lit(1)).as("dg"))
+        val peeled = deg.filter(col("dg") < k).select(col("n"))
+        und = s.checkpoint(und
+          .join(peeled.select(col("n").as("a")), Seq("a"), "left_anti")
+          .join(peeled.select(col("n").as("b")), Seq("b"), "left_anti")
+          .select(col("a"), col("b")))
+        val nNext = und.count()
+        changed = nEdges - nNext
+        nEdges = nNext
+        s.keep(und)
+        iter += 1
+      }
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"k-core peel did not converge within $maxIter rounds " +
+            s"(last round removed $changed edges); raise maxIter — " +
+            "peel depth is graph-inherent (chains peel O(n) rounds), and " +
+            "a partial residual graph is NOT the k-core")
+      s.checkpoint(und.select(col("a").as("node"))
+        .union(und.select(col("b").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("core_degree")))
     }
-    var iter = 0
-    var changed = 1L
-    var nEdges = und.count()
-    while (changed > 0 && iter < maxIter) {
-      val deg = und.select(col("a").as("n"))
-        .union(und.select(col("b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("dg"))
-      val peeled = deg.filter(col("dg") < k).select(col("n"))
-      val next = und
-        .join(peeled.select(col("n").as("a")), Seq("a"), "left_anti")
-        .join(peeled.select(col("n").as("b")), Seq("b"), "left_anti")
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      val nNext = next.count()
-      changed = nEdges - nNext
-      nEdges = nNext
-      graft.core.Checkpoints.release(und)
-      und = next
-      iter += 1
-    }
-    if (changed > 0) {
-      graft.core.Checkpoints.release(und)
-      throw new IllegalStateException(
-        s"k-core peel did not converge within $maxIter rounds " +
-          s"(last round removed $changed edges); raise maxIter — " +
-          "peel depth is graph-inherent (chains peel O(n) rounds), and " +
-          "a partial residual graph is NOT the k-core")
-    }
-    val out = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("core_degree"))
-      .localCheckpoint(true)
-    graft.core.Checkpoints.release(und)
-    out
   }
 }

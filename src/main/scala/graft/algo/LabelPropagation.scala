@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Community detection by label propagation (the reference platform's
   * gds.labelPropagation), in the only formulation that is
@@ -32,7 +33,7 @@ object LabelPropagation {
   def run(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       rounds: Int = 16,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"))
     // Adaptive dispatch through the shared LocalBudget gate:
@@ -41,7 +42,7 @@ object LabelPropagation {
     // localReference computes the identical label table, pinned
     // bit-equal by GraphAlgoSpec on both paths.
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, nodes = Some(nodes))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
       // drop edges touching ids outside the node frame — the distributed
       // loop's inner join on the neighbor label does the same, so a
       // label-less endpoint contributes nothing on either path
@@ -49,14 +50,18 @@ object LabelPropagation {
       val known = pairs.filter(p => idSet(p._1) && idSet(p._2))
       val labels = localReference(ids, known, rounds)
       import spark.implicits._
-      return ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
-    }
-    val und = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      .filter(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    var labels = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
+      ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
+    } else distributed(s, nodes, e, rounds)
+  }
+
+  /** The distributed rounds over the directed edge list `e` (a, b). */
+  private def distributed(s: Checkpoints.Scope, nodes: DataFrame,
+      e: DataFrame, rounds: Int): DataFrame = {
+    val und = s.checkpoint(e.union(e.select(col("b").as("a"), col("a").as("b")))
+      .filter(col("a") =!= col("b")).distinct())
+    var labels = s.checkpoint(nodes
+      .select(col(nodes.columns(0)).cast("string").as("node"))
+      .withColumn("lbl", col("node")))
     for (_ <- 1 to rounds) {
       val counts = und
         .join(labels.select(col("node").as("b"), col("lbl")), Seq("b"))
@@ -69,13 +74,10 @@ object LabelPropagation {
           struct((-col("c")).as("nc"), col("lbl").as("lbl")).as("s"))
         .groupBy("node").agg(min(col("s")).as("s"))
         .select(col("node"), col("s.lbl").as("new_lbl"))
-      val next = labels.join(pick, Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(labels)
-      labels = next
+      labels = s.checkpoint(labels.join(pick, Seq("node"), "left_outer")
+        .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl")))
+      s.keep(und, labels)
     }
-    graft.core.Checkpoints.release(und)
     labels.select(col("node"), col("lbl").as("community"))
   }
 

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Louvain-style community detection (the reference platform's
   * production-tier gds.louvain behind neo4j-code.txt:4-11), in the only
@@ -55,7 +56,7 @@ import org.apache.spark.sql.functions._
   * is |communities|-sized — strictly cheaper than level 1. Nothing
   * collects to the driver on the distributed path, so the same rounds
   * run unchanged at 100 TB; localCheckpoint cuts lineage per round and
-  * Checkpoints.release frees the previous state eagerly.
+  * the kernel's Checkpoints scope frees the previous state eagerly.
   */
 object Louvain {
 
@@ -87,7 +88,7 @@ object Louvain {
   def runWeighted(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       rounds: Int = 16,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"),
       col(edges.columns(2)).cast("long").as("w"))
@@ -103,16 +104,12 @@ object Louvain {
       val known = triples.filter(t => idSet(t._1) && idSet(t._2))
       val labels = localWeightedReference(ids, known, rounds)
       import spark.implicits._
-      return ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
+      ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
+    } else {
+      val (und, degs, twoM) = prepare(s, nodes, e)
+      s.adopt(moveLoop(und, degs, twoM, rounds))
+        .select(col("node"), col("lbl").as("community"))
     }
-    val (und, degs, twoM) = prepare(nodes, e)
-    val labels0 = degs.select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
-    val labels = moveLoop(und, degs, twoM, labels0, rounds)
-    graft.core.Checkpoints.release(und)
-    val out = labels.select(col("node"), col("lbl").as("community"))
-    graft.core.Checkpoints.release(degs)
-    out
   }
 
   /** In-memory twin of runWeighted — weighted symmetrized adjacency +
@@ -182,7 +179,7 @@ object Louvain {
       edges: DataFrame, rounds: Int = 16, coarseRounds: Int = 8,
       maxLevels: Int = 4,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     require(maxLevels >= 1, s"maxLevels must be >= 1, got $maxLevels")
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"))
@@ -191,19 +188,22 @@ object Louvain {
     // overhead; the sequential twin computes the identical table,
     // pinned bit-equal by GraphAlgoSpec on both paths.
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, nodes = Some(nodes))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
       val idSet = ids.toSet
       val known = pairs.filter(p => idSet(p._1) && idSet(p._2))
       val labels = localMultiLevel(ids, known, rounds, coarseRounds,
         maxLevels)
       import spark.implicits._
-      return ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
-    }
-    val (und, degs, twoM) = prepare(nodes, e.withColumn("w", lit(1L)))
-    val labels0 = degs.select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
+      ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
+    } else levels(s, nodes, e, rounds, coarseRounds, maxLevels)
+  }
+
+  /** The distributed levels of [[runMultiLevel]] over `e` (a, b). */
+  private def levels(s: Checkpoints.Scope, nodes: DataFrame, e: DataFrame,
+      rounds: Int, coarseRounds: Int, maxLevels: Int): DataFrame = {
+    val (und, degs, twoM) = prepare(s, nodes, e.withColumn("w", lit(1L)))
     // q = composed mapping original node → current community
-    var q = moveLoop(und, degs, twoM, labels0, rounds)
+    var q = s.adopt(moveLoop(und, degs, twoM, rounds))
     var level = 1
     var converged = false
     while (level < maxLevels && !converged) {
@@ -211,50 +211,37 @@ object Louvain {
       // W(c1,c2) = # und rows between the communities (symmetric;
       // c1=c2 rows are the self-loop weight = 2 × internal undirected
       // edges). k(c) = Σ_c2 W(c,c2) = Σ_{i∈c} deg(i), so Σk stays 2m.
-      val wFull = und
+      val wFull = s.checkpoint(und
         .join(q.select(col("node").as("a"), col("lbl").as("c1")),
           Seq("a"))
         .join(q.select(col("node").as("b"), col("lbl").as("c2")),
           Seq("b"))
-        .groupBy("c1", "c2").agg(count(lit(1)).as("w"))
-        .localCheckpoint(true)
+        .groupBy("c1", "c2").agg(count(lit(1)).as("w")))
       // every community appears (isolated communities keep k = 0)
-      val coarseDegs = q.select(col("lbl").as("node")).distinct()
+      val coarseDegs = s.checkpoint(q.select(col("lbl").as("node")).distinct()
         .join(wFull.groupBy(col("c1").as("node"))
             .agg(sum(col("w")).as("deg")),
           Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
         .withColumn("odd", substring(md5(col("node")), 1, 1)
-          .isin("1", "3", "5", "7", "9", "b", "d", "f"))
-        .localCheckpoint(true)
-      val coarse0 = coarseDegs.select(col("node"), col("node").as("lbl"))
-        .localCheckpoint(true)
+          .isin("1", "3", "5", "7", "9", "b", "d", "f")))
       // self-loops feed k (via coarseDegs) but not w(i,c): the move
       // score counts links to OTHER members only — textbook ΔQ
-      val lj = moveLoop(
+      val lj = s.adopt(moveLoop(
         wFull.filter(col("c1") =!= col("c2"))
           .select(col("c1").as("a"), col("c2").as("b"), col("w")),
-        coarseDegs, twoM, coarse0, coarseRounds)
-      if (lj.filter(col("node") =!= col("lbl")).count() == 0L) {
-        // identity level — every further level is a provable no-op
-        converged = true
-        graft.core.Checkpoints.release(lj)
-      } else {
+        coarseDegs, twoM, coarseRounds))
+      // an identity level makes every further level a provable no-op
+      converged = lj.filter(col("node") =!= col("lbl")).count() == 0L
+      if (!converged) {
         val proj = lj.select(col("node").as("c_from"),
           col("lbl").as("c_to"))
-        val q2 = q.join(proj, q("lbl") === proj("c_from"))
-          .select(q("node"), col("c_to").as("lbl"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(q)
-        graft.core.Checkpoints.release(lj)
-        q = q2
+        q = s.checkpoint(q.join(proj, q("lbl") === proj("c_from"))
+          .select(q("node"), col("c_to").as("lbl")))
       }
-      graft.core.Checkpoints.release(wFull)
-      graft.core.Checkpoints.release(coarseDegs)
+      s.keep(und, degs, q)
       level += 1
     }
-    graft.core.Checkpoints.release(und)
-    graft.core.Checkpoints.release(degs)
     q.select(col("node"), col("lbl").as("community"))
   }
 
@@ -263,44 +250,41 @@ object Louvain {
     * (a, b, w). Both orientations, MIN weight across every directed
     * edge of the unordered pair, self-loops dropped. The unweighted
     * callers pass w = 1, where the min is `distinct` and Σw the pair
-    * count. All checkpoint-backed; callers release. Filters both
+    * count. Both frames are checkpoints held by `s`. Filters both
     * endpoints to the node set, matching the local twins' idSet filter.
     */
-  private def prepare(nodes: DataFrame, e: DataFrame)
+  private def prepare(s: Checkpoints.Scope, nodes: DataFrame, e: DataFrame)
       : (DataFrame, DataFrame, Long) = {
     val ns = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
-    val und = e.union(e.select(col("b").as("a"), col("a").as("b"),
+    val und = s.checkpoint(e.union(e.select(col("b").as("a"), col("a").as("b"),
         col("w")))
       .filter(col("a") =!= col("b"))
       .join(ns.select(col("node").as("a")), Seq("a"), "left_semi")
       .join(ns.select(col("node").as("b")), Seq("b"), "left_semi")
-      .groupBy("a", "b").agg(min(col("w")).as("w"))
-      .localCheckpoint(true)
+      .groupBy("a", "b").agg(min(col("w")).as("w")))
     val twoM = und.agg(coalesce(sum(col("w")), lit(0L))).head().getLong(0)
-    val degs = ns.join(und.withColumnRenamed("a", "node"), Seq("node"),
-        "left_outer")
+    val degs = s.checkpoint(ns.join(und.withColumnRenamed("a", "node"),
+        Seq("node"), "left_outer")
       .groupBy("node").agg(coalesce(sum(col("w")), lit(0L)).as("deg"))
       .withColumn("odd", substring(md5(col("node")), 1, 1)
-        .isin("1", "3", "5", "7", "9", "b", "d", "f"))
-      .localCheckpoint(true)
+        .isin("1", "3", "5", "7", "9", "b", "d", "f")))
     (und, degs, twoM)
   }
 
   /** The shared synchronous parity-alternating move loop over a
     * weighted adjacency `adj(a, b, w)` (a ≠ b rows only; level 1 uses
-    * unit weights) and `degs(node, deg, odd)`. Returns the final
-    * (node, lbl) table (checkpoint-backed; callers project under their
-    * own renames, e.g. runTwoLevel's `proj` frame).
+    * unit weights) and `degs(node, deg, odd)`, starting from singleton
+    * communities. Returns the final (node, lbl) table (one checkpoint;
+    * callers project under their own renames, e.g. runTwoLevel's `proj`
+    * frame, and release it).
     */
   private def moveLoop(adj: DataFrame, degs: DataFrame, twoM: Long,
-      labels0: DataFrame, rounds: Int): DataFrame = {
-    // labelsCp is the checkpoint handle (releasable); labels is the
-    // stats-clean view each round reads — the round plan fans the state
-    // out under THREE joins, so without the barrier the propagated
-    // sizeInBytes estimate compounds multiplicatively per round (see
-    // Checkpoints.freshStats) and optimizer time explodes
-    var labelsCp = labels0
-    var labels = labels0
+      rounds: Int): DataFrame = Checkpoints.scoped { s =>
+    // each round reads a stats-clean checkpoint of the labels — the round
+    // plan fans the state out under THREE joins, so without the barrier
+    // the propagated sizeInBytes estimate compounds multiplicatively per
+    // round (see Scope.fresh) and optimizer time explodes
+    var labels = s.checkpoint(degs.select(col("node"), col("node").as("lbl")))
     for (i <- 1 to rounds) {
       val sig = labels.join(degs.select("node", "deg"), Seq("node"))
         .groupBy(col("lbl").as("cand")).agg(sum("deg").as("s"))
@@ -329,17 +313,14 @@ object Louvain {
           struct((-col("sc")).as("ns"), col("cand").as("cand")).as("p"))
         .groupBy("node").agg(min(col("p")).as("p"))
         .select(col("node"), col("p.cand").as("new_lbl"))
-      val next = base.join(pick, Seq("node"), "left_outer")
+      labels = s.fresh(base.join(pick, Seq("node"), "left_outer")
         .select(col("node"),
           when(col("odd") === lit(i % 2 == 1),
             coalesce(col("new_lbl"), col("lbl"))).otherwise(col("lbl"))
-            .as("lbl"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(labelsCp)
-      labelsCp = next
-      labels = graft.core.Checkpoints.freshStats(next)
+            .as("lbl")))
+      s.keep(labels)
     }
-    labelsCp
+    s.backing(labels)
   }
 
   /** Per-community CONDUCTANCE over the symmetrized distinct-pair
@@ -353,10 +334,10 @@ object Louvain {
     * Output: (community, n_nodes, cut, vol, conductance).
     */
   def conductance(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-      labels: DataFrame): DataFrame = {
+      labels: DataFrame): DataFrame = Checkpoints.scoped { s =>
     val e = edges.select(col(edges.columns(0)).cast("string").as("a"),
       col(edges.columns(1)).cast("string").as("b"))
-    val (und, degs, twoM) = prepare(nodes, e.withColumn("w", lit(1L)))
+    val (und, degs, twoM) = prepare(s, nodes, e.withColumn("w", lit(1L)))
     val l = labels.select(col(labels.columns(0)).cast("string").as("node"),
       col(labels.columns(1)).cast("string").as("lbl"))
     val cut = und
@@ -368,17 +349,13 @@ object Louvain {
       .groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("deg")).as("vol"))
     val denom = least(col("vol"), lit(twoM) - col("vol"))
-    val out = vol.join(cut, Seq("community"), "left_outer")
+    s.checkpoint(vol.join(cut, Seq("community"), "left_outer")
       .select(col("community"), col("n_nodes"),
         coalesce(col("cut"), lit(0L)).as("cut"), col("vol"),
         graft.llm.TextAnalysis.portableRound(
           when(denom === 0L, lit(0.0))
             .otherwise(coalesce(col("cut"), lit(0L)).cast("double") / denom),
-          6).as("conductance"))
-      .localCheckpoint(true)
-    graft.core.Checkpoints.release(und)
-    graft.core.Checkpoints.release(degs)
-    out
+          6).as("conductance")))
   }
 
   /** Reference implementation of the same contract for audits: plain

@@ -1,7 +1,8 @@
 package graft.algo
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Maximal matching by locally-maximal edges (the Israeli–Itai /
   * Luby-on-the-line-graph family) — MIS's edge-side twin and the
@@ -35,21 +36,19 @@ object Matching {
   def heaviest(spark: SparkSession, edges: DataFrame,
       rounds: Int = 10,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val cols = edges.columns
-    val e0 = edges.select(col(cols(0)).as("s"), col(cols(1)).as("d"),
+    val e0 = s.cache(edges.select(col(cols(0)).as("s"), col(cols(1)).as("d"),
         col(cols(2)).cast("double").as("cost"))
       .filter(col("s") =!= col("d"))
       .groupBy(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
-      .agg(max(col("cost")).as("cost"))
-      .cache()
+      .agg(max(col("cost")).as("cost")))
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold,
         payloadBytesPerRow = 8)) {
       // ---- local: THE unique greedy heaviest-first matching ----------
       val canon = e0.collect()
         .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-      e0.unpersist()
       val ord = IndependentSet.Utf8Order
       val ordered = canon.sortWith { case ((a1, b1, c1), (a2, b2, c2)) =>
         // descending (cost, a, b) in the engines' UTF-8 binary order.
@@ -71,65 +70,22 @@ object Matching {
         }
       }
       import spark.implicits._
-      return out.toSeq.toDF("src", "dst", "cost")
-    }
-    var ueCp = e0.localCheckpoint(true)
-    e0.unpersist()
-    var ue = ueCp
-    var matchedAcc: Option[DataFrame] = None
-    var remaining = ueCp.count()
-    var r = 0
-    while (remaining > 0 && r < rounds) {
-      r += 1
-      val inc = ue.select(col("a").as("node"),
-          struct(col("cost"), col("a"), col("b")).as("k"))
-        .union(ue.select(col("b").as("node"),
-          struct(col("cost"), col("a"), col("b")).as("k")))
-      val winners = inc.groupBy("node").agg(max(col("k")).as("w"))
-      val matchedCp = ue
-        .join(winners.select(col("node").as("a"), col("w").as("wa")),
-          Seq("a"))
-        .join(winners.select(col("node").as("b"), col("w").as("wb")),
-          Seq("b"))
-        .filter(struct(col("cost"), col("a"), col("b")) === col("wa") &&
-          struct(col("cost"), col("a"), col("b")) === col("wb"))
-        .select(col("a"), col("b"), col("cost"))
-        .localCheckpoint(true)
-      val matched = graft.core.Checkpoints.freshStats(matchedCp)
-      val gone = matched.select(col("a").as("node"))
-        .union(matched.select(col("b").as("node"))).distinct()
-      val newUeCp = ue
-        .join(gone.select(col("node").as("a")), Seq("a"), "left_anti")
-        .join(gone.select(col("node").as("b")), Seq("b"), "left_anti")
-        .select(col("a"), col("b"), col("cost"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(ueCp)
-      ueCp = newUeCp
-      ue = graft.core.Checkpoints.freshStats(newUeCp)
-      matchedAcc = Some(matchedAcc match {
-        case None => matchedCp
-        case Some(acc) =>
-          val nxt = acc.union(matched).localCheckpoint(true)
-          graft.core.Checkpoints.release(acc)
-          graft.core.Checkpoints.release(matchedCp)
-          nxt
-      })
-      remaining = ueCp.count()
-    }
-    graft.core.Checkpoints.release(ueCp)
-    if (remaining > 0) {
-      matchedAcc.foreach(graft.core.Checkpoints.release)
-      throw new IllegalStateException(
-        s"weighted matching left $remaining undecided edges after " +
-          s"$rounds rounds — the globally heaviest edge matches every " +
-          "round, so this signals a pathological input")
-    }
-    matchedAcc match {
-      case Some(m) => m.select(col("a").as("src"), col("b").as("dst"),
-        col("cost"))
-      case None =>
-        import spark.implicits._
-        Seq.empty[(String, String, Double)].toDF("src", "dst", "cost")
+      out.toSeq.toDF("src", "dst", "cost")
+    } else {
+      val (matched, remaining) = matchRounds(s, e0, rounds,
+        _ => struct(col("cost"), col("a"), col("b")))
+      if (remaining > 0)
+        throw new IllegalStateException(
+          s"weighted matching left $remaining undecided edges after " +
+            s"$rounds rounds — the globally heaviest edge matches every " +
+            "round, so this signals a pathological input")
+      matched match {
+        case Some(m) => m.select(col("a").as("src"), col("b").as("dst"),
+          col("cost"))
+        case None =>
+          import spark.implicits._
+          Seq.empty[(String, String, Double)].toDF("src", "dst", "cost")
+      }
     }
   }
 
@@ -140,17 +96,16 @@ object Matching {
   def maximal(spark: SparkSession, edges: DataFrame,
       rounds: Int = 8,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
-    val e0 = edges.select(col(edges.columns(0)).as("s"),
+      : DataFrame = Checkpoints.scoped { s =>
+    val e0 = s.cache(edges.select(col(edges.columns(0)).as("s"),
         col(edges.columns(1)).as("d"))
       .filter(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .cache()
+      .distinct())
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local replay of the per-round dominance recurrence --------
-      var ue = graft.core.LocalBudget.collectLocal(e0, _.unpersist())._1.toSet
+      var ue = graft.core.LocalBudget.collectLocal(e0)._1.toSet
       val out = collection.mutable.ArrayBuffer.empty[(String, String)]
       var r = 0
       while (r < rounds && ue.nonEmpty) {
@@ -181,75 +136,67 @@ object Matching {
           s"matching (local) left ${ue.size} undecided edges after " +
             s"$rounds rounds")
       import spark.implicits._
-      return out.toSeq.toDF("src", "dst")
+      out.toSeq.toDF("src", "dst")
+    } else {
+      val (matched, remaining) = matchRounds(s, e0, rounds, r =>
+        struct(md5(concat(lit(s"$r:"), col("a"), lit(":"), col("b"))),
+          col("a"), col("b")))
+      if (remaining > 0)
+        throw new IllegalStateException(
+          s"matching left $remaining undecided edges after $rounds rounds; " +
+            "raise the budget (a constant edge fraction dies per round in " +
+            "expectation, so this signals a pathological input)")
+      matched match {
+        case Some(m) => m.select(col("a").as("src"), col("b").as("dst"))
+        case None =>
+          import spark.implicits._
+          Seq.empty[(String, String)].toDF("src", "dst")
+      }
     }
-    var ueCp = e0.localCheckpoint(true)
-    e0.unpersist()
-    var ue = ueCp
+  }
+
+  /** The distributed rounds both matchings share, over the canonical
+    * undirected edge list `e0` (a, b, …): each round every endpoint
+    * picks its incident edge of largest `key(round)` (a struct ending in
+    * (a, b), so the pick is unique), the edges picked at BOTH endpoints
+    * match, and every edge touching a matched endpoint drops. Returns
+    * the matched edges with `e0`'s columns (None when no round ran) and
+    * the number of edges still undecided. Stops early on an empty edge
+    * list: later rounds are provably no-ops, identical result to the
+    * full budget.
+    */
+  private def matchRounds(s: Checkpoints.Scope, e0: DataFrame, rounds: Int,
+      key: Int => Column): (Option[DataFrame], Long) = {
+    val cols = e0.columns.toSeq.map(col)
+    var ue = s.checkpoint(e0)
+    s.keep(ue)
     var matchedAcc: Option[DataFrame] = None
-    // early exit on an empty undecided edge list: later rounds are
-    // provably no-ops, identical result to the full budget
-    var remainingEdges = ueCp.count()
+    var remaining = ue.count()
     var r = 0
-    while (r < rounds && remainingEdges > 0) {
+    while (remaining > 0 && r < rounds) {
       r += 1
-      val pe = ue.select(col("a"), col("b"),
-        md5(concat(lit(s"$r:"), col("a"), lit(":"), col("b"))).as("p"))
-      // per-endpoint winner: the max (p, a, b) among incident edges
-      val inc = pe.select(col("a").as("node"),
-          struct(col("p"), col("a"), col("b")).as("k"))
-        .union(pe.select(col("b").as("node"),
-          struct(col("p"), col("a"), col("b")).as("k")))
-      val winners = inc.groupBy("node").agg(max(col("k")).as("w"))
-      // matched = edges that are the winner at BOTH endpoints
-      val matchedCp = pe
+      val keyed = ue.withColumn("k", key(r))
+      val winners = keyed.select(col("a").as("node"), col("k"))
+        .union(keyed.select(col("b").as("node"), col("k")))
+        .groupBy("node").agg(max(col("k")).as("w"))
+      val matched = s.fresh(keyed
         .join(winners.select(col("node").as("a"), col("w").as("wa")),
           Seq("a"))
         .join(winners.select(col("node").as("b"), col("w").as("wb")),
           Seq("b"))
-        .filter(struct(col("p"), col("a"), col("b")) === col("wa") &&
-          struct(col("p"), col("a"), col("b")) === col("wb"))
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      val matched = graft.core.Checkpoints.freshStats(matchedCp)
-      // drop every edge incident to a matched endpoint
+        .filter(col("k") === col("wa") && col("k") === col("wb"))
+        .select(cols: _*))
       val gone = matched.select(col("a").as("node"))
         .union(matched.select(col("b").as("node"))).distinct()
-      val newUeCp = ue
+      ue = s.fresh(ue
         .join(gone.select(col("node").as("a")), Seq("a"), "left_anti")
         .join(gone.select(col("node").as("b")), Seq("b"), "left_anti")
-        .select(col("a"), col("b"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(ueCp)
-      ueCp = newUeCp
-      ue = graft.core.Checkpoints.freshStats(newUeCp)
-      matchedAcc = Some(matchedAcc match {
-        case None => matchedCp
-        case Some(acc) =>
-          val nxt = acc.union(matched).localCheckpoint(true)
-          graft.core.Checkpoints.release(acc)
-          graft.core.Checkpoints.release(matchedCp)
-          nxt
-      })
-      remainingEdges = ueCp.count()
-      if (sys.env.contains("GRAFT_MATCH_DEBUG"))
-        System.err.println(s"[matching] round $r remaining=$remainingEdges")
+        .select(cols: _*))
+      matchedAcc = Some(matchedAcc.fold(s.backing(matched))(acc =>
+        s.checkpoint(acc.union(matched))))
+      s.keep(ue +: matchedAcc.toSeq: _*)
+      remaining = ue.count()
     }
-    val leftover = remainingEdges
-    if (leftover > 0) {
-      graft.core.Checkpoints.release(ueCp)
-      matchedAcc.foreach(graft.core.Checkpoints.release)
-      throw new IllegalStateException(
-        s"matching left $leftover undecided edges after $rounds rounds; " +
-          "raise the budget (a constant edge fraction dies per round in " +
-          "expectation, so this signals a pathological input)")
-    }
-    graft.core.Checkpoints.release(ueCp)
-    matchedAcc match {
-      case Some(m) => m.select(col("a").as("src"), col("b").as("dst"))
-      case None =>
-        import spark.implicits._
-        Seq.empty[(String, String)].toDF("src", "dst")
-    }
+    (matchedAcc, remaining)
   }
 }

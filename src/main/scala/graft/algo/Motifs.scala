@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Directed small-motif census per node — the graph-library companion
   * to the undirected triangle count (the reference platform's GDS line
@@ -27,7 +28,8 @@ import org.apache.spark.sql.functions._
   */
 object Motifs {
 
-  def counts(nodes: DataFrame, edges: DataFrame): DataFrame = {
+  def counts(nodes: DataFrame, edges: DataFrame): DataFrame =
+      Checkpoints.scoped { s =>
     // distinct enforces the documented contract in code: a raw
     // multigraph input would otherwise silently multiplicity-inflate
     // every count (pre-deduped callers pay one no-op exchange)
@@ -48,19 +50,15 @@ object Motifs {
     // scale aggregates are checkpointed eagerly so the cache can drop
     // before the caller consumes the output — the Triangles.perNode
     // release discipline.
-    val p2 = de.as("ab").join(de.as("bc"),
+    val p2 = s.cache(de.as("ab").join(de.as("bc"),
         col("bc.src") === col("ab.dst") && col("bc.dst") =!= col("ab.src"))
-      .select(col("ab.src").as("a"), col("bc.dst").as("c"))
-      .cache()
-    val ffl = p2.join(de.as("ac"),
+      .select(col("ab.src").as("a"), col("bc.dst").as("c")))
+    val ffl = s.checkpoint(p2.join(de.as("ac"),
         col("ac.src") === col("a") && col("ac.dst") === col("c"))
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("f"))
-      .localCheckpoint(true)
-    val cyc = p2.join(de.as("ca"),
+      .groupBy(col("a").as("node")).agg(count(lit(1)).as("f")))
+    val cyc = s.checkpoint(p2.join(de.as("ca"),
         col("ca.src") === col("c") && col("ca.dst") === col("a"))
-      .groupBy(col("a").as("node")).agg(count(lit(1)).as("cy"))
-      .localCheckpoint(true)
-    p2.unpersist()
+      .groupBy(col("a").as("node")).agg(count(lit(1)).as("cy")))
     nodes.select(col(nodes.columns(0)).as("node"))
       .join(outd, Seq("node"), "left_outer")
       .join(ind, Seq("node"), "left_outer")

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** PageRank over the projected simple digraph, in EXACT integer
   * arithmetic — the graph-library centrality companion to the
@@ -47,23 +48,24 @@ object PageRank {
   def run(nodes: DataFrame, edges: DataFrame, iters: Int = 10,
       mass: Long = 1_000_000_000_000L,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val nodeIds = nodes.select(col(nodes.columns(0)).as("node"))
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst")).cache()
+    val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst")))
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodeIds))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
       require(ids.nonEmpty, "empty node set")
       val unit = mass / ids.length
       val base = 15L * unit / 100L
-      return localLoop(nodes, ids, pairs, iters, _ => unit, _ => base)
+      localLoop(nodes, ids, pairs, iters, _ => unit, _ => base)
+    } else {
+      // N is a bounded driver scalar (one count), not a data collect
+      val n = nodeIds.count()
+      require(n > 0, "empty node set")
+      val unit = mass / n
+      distributedLoop(s, nodeIds, e, iters, lit(unit), lit(15L * unit / 100L))
     }
-    // N is a bounded driver scalar (one count), not a data collect
-    val n = nodeIds.count()
-    require(n > 0, "empty node set")
-    val unit = mass / n
-    distributedLoop(nodeIds, e, iters, lit(unit), lit(15L * unit / 100L))
   }
 
   /** Personalized PageRank: the teleport mass returns to ONE seed node
@@ -77,28 +79,29 @@ object PageRank {
   def personalized(nodes: DataFrame, edges: DataFrame, seed: String,
       iters: Int = 10, mass: Long = 1_000_000_000_000L,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val nodeIds = nodes.select(col(nodes.columns(0)).as("node"))
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst")).cache()
+    val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst")))
     val base = 15L * mass / 100L
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodeIds))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
       require(ids.contains(seed), s"seed $seed not in node set")
-      return localLoop(nodes, ids, pairs, iters,
+      localLoop(nodes, ids, pairs, iters,
         v => if (v == seed) mass else 0L, v => if (v == seed) base else 0L)
+    } else {
+      // Same precondition as the local path: a missing seed must fail
+      // loudly, not return an all-zero vector. One bounded count, once.
+      require(nodeIds.filter(col("node") === lit(seed)).limit(1).count() == 1,
+        s"seed $seed not in node set")
+      // teleport term via the Column API — `seed` is a data value, never
+      // spliced into SQL text (quotes in ids parse fine this way)
+      val atSeed = col("node") === lit(seed)
+      distributedLoop(s, nodeIds, e, iters,
+        when(atSeed, lit(mass)).otherwise(lit(0L)),
+        when(atSeed, lit(base)).otherwise(lit(0L)))
     }
-    // Same precondition as the local path: a missing seed must fail
-    // loudly, not return an all-zero vector. One bounded count, once.
-    require(nodeIds.filter(col("node") === lit(seed)).limit(1).count() == 1,
-      s"seed $seed not in node set")
-    // teleport term via the Column API — `seed` is a data value, never
-    // spliced into SQL text (quotes in ids parse fine this way)
-    val atSeed = col("node") === lit(seed)
-    distributedLoop(nodeIds, e, iters,
-      when(atSeed, lit(mass)).otherwise(lit(0L)),
-      when(atSeed, lit(base)).otherwise(lit(0L)))
   }
 
   /** The driver twin: `start(v)` is v's initial mass, `teleport(v)` the
@@ -129,25 +132,21 @@ object PageRank {
   /** The distributed twin of `localLoop`: `start` and `teleport` are
     * bigint Columns over `node`.
     */
-  private def distributedLoop(nodeIds: DataFrame, e: DataFrame, iters: Int,
-      start: Column, teleport: Column): DataFrame = {
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg")).cache()
-    var ranks = nodeIds.withColumn("r", start).localCheckpoint(true)
+  private def distributedLoop(s: Checkpoints.Scope, nodeIds: DataFrame,
+      e: DataFrame, iters: Int, start: Column, teleport: Column): DataFrame = {
+    val deg = s.cache(e.groupBy("src").agg(count(lit(1)).as("deg")))
+    var ranks = s.checkpoint(nodeIds.withColumn("r", start))
     for (_ <- 1 to iters) {
       val contribs = ranks.join(deg, ranks("node") === deg("src"))
         .selectExpr("src", "r div deg AS c")
       val sums = e.join(contribs, Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum("c").as("m"))
-      val next = nodeIds.join(sums, Seq("node"), "left_outer")
+      ranks = s.checkpoint(nodeIds.join(sums, Seq("node"), "left_outer")
         .select(col("node"),
           (teleport + expr("(85 * coalesce(m, CAST(0 AS BIGINT))) div 100"))
-            .cast("bigint").as("r"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(ranks)
-      ranks = next
+            .cast("bigint").as("r")))
+      s.keep(e, deg, ranks)
     }
-    deg.unpersist()
-    e.unpersist()
     ranks.select(col("node"), col("r").as("rank_micro"))
   }
 }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Deterministic random-walk sampling over the projected digraph — the
   * DeepWalk/node2vec corpus-generation shape (walk sequences feed a
@@ -67,33 +68,31 @@ object RandomWalks {
       : DataFrame = {
     require(numWalks >= 1 && length >= 1, "numWalks and length must be >= 1")
     tryLocal(nodes, edges, localEdgeThreshold,
-      localReference(_, _, numWalks, length)) match {
-      case Some(df) => return df
-      case None =>
-    }
+      localReference(_, _, numWalks, length))
+      .getOrElse(distributedWalks(nodes, edges, numWalks, length))
+  }
+
+  private def distributedWalks(nodes: DataFrame, edges: DataFrame,
+      numWalks: Int, length: Int): DataFrame = Checkpoints.scoped { s =>
     val nodeIds = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
       .distinct()
     val e = edges.select(col(edges.columns(0)).cast("string").as("src"),
       col(edges.columns(1)).cast("string").as("dst")).distinct()
     // ascending-id neighbor index + out-degree, computed once
-    val nbr = e.withColumn("idx",
+    val nbr = s.checkpoint(e.withColumn("idx",
         row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("src").orderBy("dst")) - 1)
-      .localCheckpoint(true)
-    val deg = nbr.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+          .partitionBy("src").orderBy("dst")) - 1))
+    val deg = s.checkpoint(nbr.groupBy("src").agg(count(lit(1)).as("deg")))
     val walkIds = (0 until numWalks).map(lit(_))
-    var frontier = nodeIds
+    var frontier = s.checkpoint(nodeIds
       .select(col("node").as("start"),
         explode(array(walkIds: _*)).as("walk"),
-        col("node").as("cur"))
-      .localCheckpoint(true)
+        col("node").as("cur")))
     // Each level is a pure projection of its (eagerly checkpointed)
     // frontier, so the output union is deferred to ONE materialization
     // at the end instead of re-writing the growing prefix every step
     // (O(corpus) total checkpoint bytes instead of O(L * corpus)). The
     // per-step frontiers stay alive until that union lands.
-    val kept = scala.collection.mutable.ListBuffer[DataFrame](frontier)
     val levels = scala.collection.mutable.ListBuffer[DataFrame](
       frontier.select(col("start"), col("walk"),
         lit(0).as("step"), col("cur").as("node")))
@@ -104,22 +103,16 @@ object RandomWalks {
         .withColumn("pick",
           conv(substring(md5(key), 1, 8), 16, 10).cast("long") % col("deg"))
         .select(col("start"), col("walk"), col("cur"), col("pick"))
-      val next = withPick
+      frontier = s.checkpoint(withPick
         .join(nbr, withPick("cur") === nbr("src") &&
           withPick("pick") === nbr("idx"))
-        .select(col("start"), col("walk"), col("dst").as("cur"))
-        .localCheckpoint(true)
-      kept += next
-      levels += next.select(col("start"), col("walk"),
+        .select(col("start"), col("walk"), col("dst").as("cur")))
+      levels += frontier.select(col("start"), col("walk"),
         lit(t).as("step"), col("cur").as("node"))
-      frontier = next
     }
-    val out = levels.reduce(_ union _).localCheckpoint(true)
-    kept.foreach(graft.core.Checkpoints.release)
-    graft.core.Checkpoints.release(nbr)
-    graft.core.Checkpoints.release(deg)
-    out.select(col("start").as("start_id"), col("walk").as("walk_id"),
-      col("step"), col("node").as("node_id"))
+    s.checkpoint(levels.reduce(_ union _))
+      .select(col("start").as("start_id"), col("walk").as("walk_id"),
+        col("step"), col("node").as("node_id"))
   }
 
   /** node2vec-style SECOND-ORDER biased walks (Grover & Leskovec): the
@@ -160,23 +153,25 @@ object RandomWalks {
       "weights must be positive integers")
     tryLocal(nodes, edges, localEdgeThreshold,
       localNode2vecReference(_, _, numWalks, length, retWeight, adjWeight,
-        farWeight)) match {
-      case Some(df) => return df
-      case None =>
-    }
+        farWeight))
+      .getOrElse(distributedNode2vec(nodes, edges, numWalks, length,
+        retWeight, adjWeight, farWeight))
+  }
+
+  private def distributedNode2vec(nodes: DataFrame, edges: DataFrame,
+      numWalks: Int, length: Int, retWeight: Int, adjWeight: Int,
+      farWeight: Int): DataFrame = Checkpoints.scoped { s =>
     import org.apache.spark.sql.expressions.Window
     val nodeIds = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
       .distinct()
-    val e = edges.select(col(edges.columns(0)).cast("string").as("src"),
-      col(edges.columns(1)).cast("string").as("dst")).distinct()
-      .localCheckpoint(true)
+    val e = s.checkpoint(edges
+      .select(col(edges.columns(0)).cast("string").as("src"),
+        col(edges.columns(1)).cast("string").as("dst")).distinct())
     val walkIds = (0 until numWalks).map(lit(_))
-    var frontier = nodeIds
+    var frontier = s.checkpoint(nodeIds
       .select(col("node").as("start"),
         explode(array(walkIds: _*)).as("walk"),
-        lit("").as("prev"), col("node").as("cur"))
-      .localCheckpoint(true)
-    val kept = scala.collection.mutable.ListBuffer[DataFrame](frontier)
+        lit("").as("prev"), col("node").as("cur")))
     val levels = scala.collection.mutable.ListBuffer[DataFrame](
       frontier.select(col("start"), col("walk"),
         lit(0).as("step"), col("cur").as("node")))
@@ -205,22 +200,17 @@ object RandomWalks {
       val key = concat_ws("|", col("start"), col("walk"), lit(t),
         col("cur"), col("prev"))
       val r = conv(substring(md5(key), 1, 8), 16, 10).cast("long") % tot
-      val next = flagged
+      frontier = s.checkpoint(flagged
         .withColumn("cum", cum).withColumn("r", r)
         .where(col("r") >= col("cum") - col("w") && col("r") < col("cum"))
         .select(col("start"), col("walk"), col("cur").as("prev"),
-          col("cand").as("cur"))
-        .localCheckpoint(true)
-      kept += next
-      levels += next.select(col("start"), col("walk"),
+          col("cand").as("cur")))
+      levels += frontier.select(col("start"), col("walk"),
         lit(t).as("step"), col("cur").as("node"))
-      frontier = next
     }
-    val out = levels.reduce(_ union _).localCheckpoint(true)
-    kept.foreach(graft.core.Checkpoints.release)
-    graft.core.Checkpoints.release(e)
-    out.select(col("start").as("start_id"), col("walk").as("walk_id"),
-      col("step"), col("node").as("node_id"))
+    s.checkpoint(levels.reduce(_ union _))
+      .select(col("start").as("start_id"), col("walk").as("walk_id"),
+        col("step"), col("node").as("node_id"))
   }
 
   /** Skip-gram (center, context) training pairs from a walk corpus —

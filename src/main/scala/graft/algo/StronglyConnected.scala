@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Strongly-connected components over the directed property graph — the
   * honest complement to GraphComponents' WCC on the reference corpus
@@ -57,15 +58,14 @@ object StronglyConnected {
   def scc(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
       maxOuter: Int = 30,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
-    val e = edges.select(col(edges.columns(0)).cast("string").as("src"),
+      : DataFrame = Checkpoints.scoped { s =>
+    val e = s.cache(edges.select(col(edges.columns(0)).cast("string").as("src"),
         col(edges.columns(1)).cast("string").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().cache()
+      .filter(col("src") =!= col("dst")).distinct())
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, _.unpersist(), Some(nodes))
-      return localTarjan(spark, nodeIds, pairs)
-    }
-    distributed(spark, nodes, e, maxOuter)
+      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
+      localTarjan(spark, nodeIds, pairs)
+    } else distributed(s, spark, nodes, e, maxOuter)
   }
 
   /** Iterative Tarjan (explicit work stack — recursion would blow the JVM
@@ -141,17 +141,29 @@ object StronglyConnected {
   /** FW-BW min-label refinement; `e` is the deduped loop-free edge set
     * (already cached by the caller).
     */
-  private def distributed(spark: SparkSession, nodes: DataFrame,
-      e: DataFrame, maxOuter: Int): DataFrame = {
+  private def distributed(s: Checkpoints.Scope, spark: SparkSession,
+      nodes: DataFrame, e: DataFrame, maxOuter: Int): DataFrame = {
     // active = (node, color); survivors of each round refine their color
-    var active = nodes.select(col(nodes.columns(0)).cast("string").as("node"))
-      .withColumn("color", lit(""))
-      .localCheckpoint(true)
-    var cedges = e.localCheckpoint(true)
-    e.unpersist()
-    var done: DataFrame = null // accumulated (node, component)
+    var active = s.checkpoint(nodes
+      .select(col(nodes.columns(0)).cast("string").as("node"))
+      .withColumn("color", lit("")))
+    var cedges = s.checkpoint(e)
+    s.keep(active, cedges)
+    var done: Option[DataFrame] = None // accumulated (node, component)
+    // checkpointed so the union chain never grows a lineage
+    def append(part: DataFrame): Unit =
+      done = Some(s.checkpoint(done.fold(part)(_.union(part))))
+    // the edges with both endpoints still active
+    def restrict(): Unit = {
+      val live = active.select("node")
+      cedges = s.checkpoint(cedges
+        .join(live.withColumnRenamed("node", "src"), Seq("src"))
+        .join(live.withColumnRenamed("node", "dst"), Seq("dst"))
+        .select("src", "dst"))
+    }
+    var converged = false
     var iter = 0
-    while (active != null && iter < maxOuter) {
+    while (!converged && iter < maxOuter) {
       iter += 1
       // --- 1. bounded trim passes -------------------------------------
       var trimPass = 0
@@ -160,98 +172,59 @@ object StronglyConnected {
         trimPass += 1
         val hasOut = cedges.select(col("src").as("node")).distinct()
         val hasIn = cedges.select(col("dst").as("node")).distinct()
-        val trimmed = active.select("node")
+        val trimmed = s.checkpoint(active.select("node")
           .except(hasOut.intersect(hasIn))
-          .withColumn("component", col("node"))
-          .localCheckpoint(true)
-        val nTrimmed = trimmed.count()
-        if (nTrimmed == 0) { graft.core.Checkpoints.release(trimmed); trimmedAny = false }
-        else {
-          done = append(done, trimmed)
-          val nextActive = active.join(trimmed.select("node"), Seq("node"),
-              "left_anti").localCheckpoint(true)
-          graft.core.Checkpoints.release(active)
-          active = nextActive
-          val keep = active.select("node")
-          val nextEdges = cedges
-            .join(keep.withColumnRenamed("node", "src"), Seq("src"))
-            .join(keep.withColumnRenamed("node", "dst"), Seq("dst"))
-            .select("src", "dst").localCheckpoint(true)
-          graft.core.Checkpoints.release(cedges)
-          cedges = nextEdges
+          .withColumn("component", col("node")))
+        trimmedAny = trimmed.count() > 0
+        if (trimmedAny) {
+          append(trimmed)
+          active = s.checkpoint(active.join(trimmed.select("node"),
+            Seq("node"), "left_anti"))
+          restrict()
         }
+        s.keep(Seq(active, cedges) ++ done: _*)
       }
-      if (active.isEmpty) {
-        graft.core.Checkpoints.release(active)
-        graft.core.Checkpoints.release(cedges)
-        active = null
-      } else {
+      converged = active.isEmpty
+      if (!converged) {
         // --- 2. F and B min-label fixpoints within color classes ------
         // edges restricted to same-color endpoints once per round
-        val colored = cedges
+        val colored = s.checkpoint(cedges
           .join(active.withColumnRenamed("node", "src")
             .withColumnRenamed("color", "c_src"), Seq("src"))
           .join(active.withColumnRenamed("node", "dst")
             .withColumnRenamed("color", "c_dst"), Seq("dst"))
           .filter(col("c_src") === col("c_dst"))
-          .select("src", "dst").localCheckpoint(true)
-        val f = fixpoint(active.select(col("node"), col("node").as("lbl")),
-          colored, forward = true)
-        val b = fixpoint(active.select(col("node"), col("node").as("lbl")),
-          colored, forward = false)
-        graft.core.Checkpoints.release(colored)
-        val fb = active.join(f.withColumnRenamed("lbl", "f"), Seq("node"))
-          .join(b.withColumnRenamed("lbl", "b"), Seq("node"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(f)
-        graft.core.Checkpoints.release(b)
+          .select("src", "dst"))
+        val f = s.adopt(fixpoint(active.select(col("node"),
+          col("node").as("lbl")), colored, forward = true))
+        val b = s.adopt(fixpoint(active.select(col("node"),
+          col("node").as("lbl")), colored, forward = false))
+        val fb = s.checkpoint(active
+          .join(f.withColumnRenamed("lbl", "f"), Seq("node"))
+          .join(b.withColumnRenamed("lbl", "b"), Seq("node")))
         // --- 3. finalize converged nodes ------------------------------
-        val conv = fb.filter(col("f") === col("b"))
-          .select(col("node"), col("f").as("component"))
-          .localCheckpoint(true)
-        done = append(done, conv)
-        val survivors = fb.filter(col("f") =!= col("b"))
+        append(s.checkpoint(fb.filter(col("f") === col("b"))
+          .select(col("node"), col("f").as("component"))))
+        active = s.checkpoint(fb.filter(col("f") =!= col("b"))
           .select(col("node"),
-            concat_ws("|", col("color"), col("f"), col("b")).as("color"))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(fb)
-        graft.core.Checkpoints.release(active)
-        graft.core.Checkpoints.release(conv)
-        active = survivors
-        if (active.isEmpty) {
-          graft.core.Checkpoints.release(active)
-          graft.core.Checkpoints.release(cedges)
-          active = null
-        } else {
-          val keep = active.select("node")
-          val nextEdges = cedges
-            .join(keep.withColumnRenamed("node", "src"), Seq("src"))
-            .join(keep.withColumnRenamed("node", "dst"), Seq("dst"))
-            .select("src", "dst").localCheckpoint(true)
-          graft.core.Checkpoints.release(cedges)
-          cedges = nextEdges
-        }
+            concat_ws("|", col("color"), col("f"), col("b")).as("color")))
+        converged = active.isEmpty
+        if (!converged) restrict()
+        s.keep(Seq(active, cedges) ++ done: _*)
       }
-      if (sys.env.contains("GRAFT_SCC_DEBUG"))
-        System.err.println(s"[scc] outer $iter active=" +
-          (if (active == null) 0 else active.count()))
     }
-    if (active != null) {
-      graft.core.Checkpoints.release(active)
-      graft.core.Checkpoints.release(cedges)
-      graft.core.Checkpoints.release(done)
+    if (!converged)
       throw new IllegalStateException(
         s"scc did not converge within $maxOuter refinement rounds — " +
           "FW-BW refinement strictly splits classes each round, so " +
           "hitting this bound indicates a pathological input")
-    }
-    if (done == null) {
-      // empty node set: nothing was ever trimmed or finalized, so no
-      // batch reached `done` — return an empty, correctly-typed frame
-      // instead of null (callers .select on the result)
+    // empty node set: nothing was ever trimmed or finalized, so no
+    // batch reached `done` — return an empty, correctly-typed frame
+    // instead of null (callers .select on the result)
+    done.getOrElse {
       import spark.implicits._
       Seq.empty[(String, String)].toDF("node", "component")
-    } else done
+    }
   }
 
   /** Min-label reachability fixpoint: lbl(v) ← min over the forward
@@ -260,35 +233,23 @@ object StronglyConnected {
     * iterated state is exactly |active| rows.
     */
   private def fixpoint(init: DataFrame, edges: DataFrame,
-      forward: Boolean): DataFrame = {
+      forward: Boolean): DataFrame = Checkpoints.scoped { s =>
     val (from, to) = if (forward) ("dst", "src") else ("src", "dst")
-    var cur = init.localCheckpoint(true)
+    var cur = s.checkpoint(init)
     var changed = 1L
     while (changed > 0) {
       val pulled = edges
         .join(cur.withColumnRenamed("node", from)
           .withColumnRenamed("lbl", "n_lbl"), Seq(from))
         .groupBy(col(to).as("node")).agg(min(col("n_lbl")).as("n_lbl"))
-      val next = cur.join(pulled, Seq("node"), "left_outer")
+      val next = s.checkpoint(cur.join(pulled, Seq("node"), "left_outer")
         .select(col("node"),
-          least(col("lbl"), coalesce(col("n_lbl"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
+          least(col("lbl"), coalesce(col("n_lbl"), col("lbl"))).as("lbl")))
       changed = next.join(cur.withColumnRenamed("lbl", "old"), Seq("node"))
         .filter(col("lbl") =!= col("old")).count()
-      graft.core.Checkpoints.release(cur)
       cur = next
+      s.keep(cur)
     }
     cur
   }
-
-  /** Accumulate finalized labels; checkpointed so the union chain never
-    * grows a lineage.
-    */
-  private def append(acc: DataFrame, part: DataFrame): DataFrame =
-    if (acc == null) part.localCheckpoint(true)
-    else {
-      val next = acc.union(part).localCheckpoint(true)
-      graft.core.Checkpoints.release(acc)
-      next
-    }
 }

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Exact per-node triangle counting — the graph-library clustering
   * primitive alongside WCC/PageRank (the reference's platform ships it
@@ -36,16 +37,16 @@ object Triangles {
     */
   def perNode(nodes: DataFrame, edges: DataFrame,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val e = edges.select(col(edges.columns(0)).as("s"),
       col(edges.columns(1)).as("d"))
     // canonical undirected simple edges {a < b}
-    val und = e.filter(col("s") =!= col("d"))
+    val und = s.cache(e.filter(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
-      .distinct().cache()
+      .distinct())
     if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(und, _.unpersist(), Some(nodes))
+      val (pairs, ids) = graft.core.LocalBudget.collectLocal(und, Some(nodes))
       val adj = scala.collection.mutable.HashMap
         .empty[String, scala.collection.mutable.TreeSet[String]]
       pairs.foreach { case (a, b) =>
@@ -70,9 +71,17 @@ object Triangles {
       }
       val spark = nodes.sparkSession
       import spark.implicits._
-      return ids.map(nId => (nId, cnt(nId))).toSeq
+      ids.map(nId => (nId, cnt(nId))).toSeq
         .toDF("node", "n_triangles")
-    }
+    } else distributed(s, nodes, und)
+  }
+
+  /** The distributed count over the cached canonical edge list `und`:
+    * orient each edge from its (deg, id)-smaller endpoint, then close
+    * wedges at their apex.
+    */
+  private def distributed(s: Checkpoints.Scope, nodes: DataFrame,
+      und: DataFrame): DataFrame = {
     val deg = und.select(col("a").as("n"))
       .union(und.select(col("b").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -80,12 +89,12 @@ object Triangles {
     val withDeg = und
       .join(deg.select(col("n").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("n").as("b"), col("deg").as("db")), Seq("b"))
-    val oriented = withDeg.select(
+    val oriented = s.cache(withDeg.select(
       when(col("da") < col("db") ||
         (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("u"), col("b").as("v")))
         .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("o"))
-      .select(col("o.u").as("u"), col("o.v").as("v")).cache()
+      .select(col("o.u").as("u"), col("o.v").as("v")))
     // wedges at apex u close into triangles via the canonical edge {v, w}
     val wedges = oriented.as("o1")
       .join(oriented.select(col("u").as("u2"), col("v").as("w")),
@@ -96,13 +105,10 @@ object Triangles {
       col("a") === col("v") && col("b") === col("w"))
       .select(col("u"), col("v"), col("w"))
     // node-scale result; materialized eagerly so the two cached
-    // intermediates can release before the caller consumes the output
-    val credit = tris.select(explode(array(col("u"), col("v"), col("w")))
-        .as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-      .localCheckpoint(true)
-    und.unpersist()
-    oriented.unpersist()
+    // intermediates free before the caller consumes the output
+    val credit = s.checkpoint(tris.select(explode(array(col("u"), col("v"),
+        col("w"))).as("node"))
+      .groupBy("node").agg(count(lit(1)).as("n_triangles")))
     nodes.select(col(nodes.columns(0)).as("node"))
       .join(credit, Seq("node"), "left_outer")
       .select(col("node"),

@@ -2,6 +2,7 @@ package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** k-truss decomposition (Cohen 2008) — the standard cohesive-subgraph
   * refinement of k-core: the maximal subgraph in which EVERY edge is
@@ -29,19 +30,18 @@ object Truss {
   def truss(spark: SparkSession, edges: DataFrame, k: Int,
       maxRounds: Int = 16,
       localEdgeThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val minSup = k - 2
-    val e0 = edges.select(col(edges.columns(0)).as("s"),
+    val e0 = s.cache(edges.select(col(edges.columns(0)).as("s"),
         col(edges.columns(1)).as("d"))
       .filter(col("s") =!= col("d"))
       .select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b"))
-      .distinct()
-      .cache()
+      .distinct())
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local peel on adjacency sets -------------------------------
-      var es = graft.core.LocalBudget.collectLocal(e0, _.unpersist())._1.toSet
+      var es = graft.core.LocalBudget.collectLocal(e0)._1.toSet
       var r = 0
       var dropped = true
       while (dropped && r < maxRounds) {
@@ -59,17 +59,20 @@ object Truss {
         throw new IllegalStateException(
           s"k-truss (local) did not reach a fixpoint in $maxRounds rounds")
       import spark.implicits._
-      return es.toSeq.toDF("src", "dst")
-    }
-    // ---- distributed peel ------------------------------------------
-    var ueCp = e0.localCheckpoint(true)
-    var ue = ueCp
-    e0.unpersist()
+      es.toSeq.toDF("src", "dst")
+    } else peel(s, e0, minSup, maxRounds)
+  }
+
+  /** The distributed peel over the cached canonical edge list `e0`. */
+  private def peel(s: Checkpoints.Scope, e0: DataFrame, minSup: Int,
+      maxRounds: Int): DataFrame = {
+    var ue = s.checkpoint(e0)
+    s.keep(ue)
     var r = 0
     var droppedN = 1L
     while (droppedN > 0 && r < maxRounds) {
       r += 1
-      val before = ueCp.count()
+      val before = ue.count()
       // degree-ordered orientation over the CURRENT edge set
       val deg = ue.select(col("a").as("n"))
         .union(ue.select(col("b").as("n")))
@@ -104,21 +107,14 @@ object Truss {
             greatest(col("y"), col("z")).as("b")))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .groupBy("a", "b").agg(count(lit(1)).as("sup"))
-      val keptCp = ue.join(support.filter(col("sup") >= minSup)
-          .select("a", "b"), Seq("a", "b"), "left_semi")
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(ueCp)
-      ueCp = keptCp
-      ue = graft.core.Checkpoints.freshStats(keptCp)
-      droppedN = before - ueCp.count()
-      if (sys.env.contains("GRAFT_TRUSS_DEBUG"))
-        System.err.println(s"[truss] round $r dropped=$droppedN")
+      ue = s.fresh(ue.join(support.filter(col("sup") >= minSup)
+          .select("a", "b"), Seq("a", "b"), "left_semi"))
+      s.keep(ue)
+      droppedN = before - ue.count()
     }
-    if (droppedN > 0 && ueCp.count() > 0) {
-      graft.core.Checkpoints.release(ueCp)
+    if (droppedN > 0 && ue.count() > 0)
       throw new IllegalStateException(
         s"k-truss did not reach a fixpoint in $maxRounds rounds")
-    }
-    ueCp.select(col("a").as("src"), col("b").as("dst"))
+    s.backing(ue).select(col("a").as("src"), col("b").as("dst"))
   }
 }

@@ -99,15 +99,13 @@ object LocalBudget {
     }
 
   /** The driver twin's prefix once `fits` admits `e`: the string id
-    * pairs in `e`'s first two columns, collected once; then
-    * `release(e)` (the caller's unpersist or Checkpoints.release); then
-    * the string ids in the first column of `nodes`, if given.
+    * pairs in `e`'s first two columns, collected once, then the string
+    * ids in the first column of `nodes`, if given. The caller's
+    * [[Checkpoints.scoped]] scope frees `e`.
     */
-  def collectLocal(e: DataFrame, release: DataFrame => Unit = _ => (),
-      nodes: Option[DataFrame] = None)
+  def collectLocal(e: DataFrame, nodes: Option[DataFrame] = None)
       : (Array[(String, String)], Array[String]) = {
     val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-    release(e)
     (pairs, nodes.fold(Array.empty[String])(nd =>
       nd.select(col(nd.columns(0)).cast("string")).collect()
         .map(_.getString(0))))

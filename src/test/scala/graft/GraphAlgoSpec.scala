@@ -279,25 +279,118 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("distributed kernel releases every checkpoint it creates") {
-    // Dataset.unpersist() is a no-op on localCheckpoint'ed frames, so the
-    // kernel must release through Checkpoints.release — assert the
-    // persistent-RDD registry returns to its pre-run population (suites
-    // run sequentially in the forked test JVM, so the diff is ours)
+    // Every forced-distributed kernel (localEdgeThreshold = 0, or its
+    // distributed entry point) on one seeded random digraph: run it,
+    // force its result, release the result, and the persistent-RDD
+    // registry is back at its pre-run population (suites run
+    // sequentially in the forked test JVM, so the diff is ours), with no
+    // RDD the run persisted left persisted (Leaks: the registry alone
+    // forgets garbage-collected RDDs). Dataset.unpersist() is a no-op on
+    // localCheckpoint'ed frames, so a kernel must release through
+    // Checkpoints. Each row also reports its Spark job count, the "same
+    // work" figure across refactors.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
     val rnd = new scala.util.Random(41)
-    val edges = (for {
-      _ <- 0 until 200
-      u = rnd.nextInt(30); v = rnd.nextInt(30)
+    val n = 24
+    val arcs = (for {
+      _ <- 0 until 80
+      u = rnd.nextInt(n); v = rnd.nextInt(n)
       if u != v
     } yield (s"n$u", s"n$v", 1.0 + rnd.nextInt(20) / 4.0)).distinct
-    val edf = edges.toDF("src", "dst", "cost")
+    val costs = arcs.toDF("src", "dst", "cost")
       .groupBy("src", "dst").agg(org.apache.spark.sql.functions.min("cost").as("cost"))
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    for (delta <- Seq(None, Some(3.0))) {
-      val state = DistributedSSSP.run(spark, edf, Seq("n0"), delta = delta)
-      core.Checkpoints.release(state)
+    val edges = costs.select("src", "dst")
+    val weights = costs.select(col("src"), col("dst"),
+      (col("cost") * 4).cast("long").as("w"))
+    val nodes = (0 until n).map(i => s"n$i").toDF("node")
+    val pairs = edges.withColumn("n_pairs", lit(1L))
+    val rows: Seq[(String, () => Any)] = Seq(
+      "pagerank" -> (() => algo.PageRank.run(nodes, edges, iters = 3,
+        localEdgeThreshold = 0L)),
+      "ppr" -> (() => algo.PageRank.personalized(nodes, edges, "n0",
+        iters = 3, localEdgeThreshold = 0L)),
+      "hits" -> (() => algo.Hits.run(nodes, edges, iters = 3,
+        localEdgeThreshold = 0L)),
+      "labelprop" -> (() => algo.LabelPropagation.run(spark, nodes, edges,
+        rounds = 3, localEdgeThreshold = 0L)),
+      "louvain" -> (() => algo.Louvain.run(spark, nodes, edges, rounds = 3,
+        localEdgeThreshold = 0L)),
+      "louvainW" -> (() => algo.Louvain.runWeighted(spark, nodes, weights,
+        rounds = 3, localEdgeThreshold = 0L)),
+      "louvain2l" -> (() => algo.Louvain.runTwoLevel(spark, nodes, edges,
+        rounds = 3, coarseRounds = 2, localEdgeThreshold = 0L)),
+      "louvainML" -> (() => algo.Louvain.runMultiLevel(spark, nodes, edges,
+        rounds = 3, coarseRounds = 2, maxLevels = 3,
+        localEdgeThreshold = 0L)),
+      "conductance" -> (() => algo.Louvain.conductance(spark, nodes, edges,
+        nodes.select(col("node"), col("node").as("lbl")))),
+      "kcore" -> (() => algo.KCore.core(spark, edges, k = 2,
+        localEdgeThreshold = 0L)),
+      "truss" -> (() => algo.Truss.truss(spark, edges, k = 3,
+        localEdgeThreshold = 0L)),
+      "mis" -> (() => algo.IndependentSet.luby(spark, nodes, edges,
+        localEdgeThreshold = 0L)),
+      "coloring" -> (() => algo.Coloring.greedy(spark, nodes, edges,
+        localEdgeThreshold = 0L)),
+      "matchW" -> (() => algo.Matching.heaviest(spark, costs,
+        localEdgeThreshold = 0L)),
+      "match" -> (() => algo.Matching.maximal(spark, edges,
+        localEdgeThreshold = 0L)),
+      "mst" -> (() => algo.Boruvka.mst(spark, costs,
+        localEdgeThreshold = 0L)),
+      "wcc" -> (() => algo.GraphComponents.wcc(spark, nodes, edges,
+        localEdgeThreshold = 0L)),
+      "scc" -> (() => algo.StronglyConnected.scc(spark, nodes, edges,
+        localEdgeThreshold = 0L)),
+      "betweenness" -> (() => algo.Betweenness.run(spark, nodes, costs,
+        Seq("n0", "n1"), localEdgeThreshold = 0L)),
+      "walks" -> (() => algo.RandomWalks.walks(nodes, edges, length = 3,
+        localEdgeThreshold = 0L)),
+      "node2vec" -> (() => algo.RandomWalks.node2vecWalks(nodes, edges,
+        length = 3, localEdgeThreshold = 0L)),
+      "embedding" -> (() => algo.EmbeddingTrain.train(nodes, pairs,
+        epochs = 2, localPairThreshold = 0L)),
+      "hyperanf" -> (() => algo.HyperAnf.neighborhoodFunction(spark, nodes,
+        edges, rounds = 3)),
+      "triangles" -> (() => algo.Triangles.perNode(nodes, edges,
+        localEdgeThreshold = 0L)),
+      "motifs" -> (() => algo.Motifs.counts(nodes, edges)),
+      "sssp" -> (() => DistributedSSSP.run(spark, costs, Seq("n0"))),
+      "sssp-delta" -> (() => DistributedSSSP.run(spark, costs, Seq("n0"),
+        delta = Some(3.0))),
+      "yen" -> (() => algo.DistributedYen.run(spark, costs, "n0", "n1", 3)),
+      "ch" -> (() => algo.DistributedCH.build(spark, nodes, costs,
+        localFinishEdges = 0L)),
+      // fails on purpose: the random digraph needs more than one Borůvka
+      // round and more than one color
+      "mst-fails" -> (() => intercept[IllegalStateException](
+        algo.Boruvka.mst(spark, costs, maxRounds = 1,
+          localEdgeThreshold = 0L))),
+      "coloring-fails" -> (() => intercept[IllegalStateException](
+        algo.Coloring.greedy(spark, nodes, edges, maxColors = 1,
+          localEdgeThreshold = 0L))))
+    def finish(out: Any): Unit = out match {
+      case df: DataFrame @unchecked =>
+        df.count(); core.Checkpoints.release(df)
+      case b: algo.DistributedCH.Built =>
+        Seq(b.chEdges, b.ranks).foreach { df =>
+          df.count(); core.Checkpoints.release(df) }
+      case _ =>
     }
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"leaked persistent RDDs: $leaked")
+    val report = rows.map { case (name, run) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      var jobs = Seq.empty[Int]
+      val stillPersisted = Leaks.of(spark) {
+        jobs = JobGroups.jobsOf(spark, s"leak-$name")(finish(run()))
+      }
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      (name, jobs.size, leaked ++ stillPersisted)
+    }
+    info(report.map { case (name, jobs, _) => s"$name=$jobs" }
+      .mkString("jobs: ", " ", ""))
+    report.foreach { case (name, _, leaked) =>
+      assert(leaked.isEmpty, s"$name leaked persistent RDDs: $leaked") }
   }
 
   test("graphFor memoizes per session; release drops and rebuilds") {
