@@ -57,17 +57,6 @@ object AppendSweep {
     delta.size
   }
 
-  /** Free a checkpointed generation (Dataset.unpersist is a no-op on
-    * localCheckpoint'ed frames — r9 ADVICE; release() reaches the RDD
-    * blocks directly) plus its projection cache.
-    */
-  private def releaseCheckpointed(pg: PropertyGraph): Unit = {
-    core.Checkpoints.release(pg.nodes)
-    core.Checkpoints.release(pg.edges)
-    pg.pending.foreach(core.Checkpoints.release)
-    pg.projection.unpersist()
-  }
-
   def main(args: Array[String]): Unit = {
     val streamMode = args.contains("stream")
     val deltaMode = args.contains("delta")
@@ -143,24 +132,17 @@ object AppendSweep {
     println("| slice | delta_rows | nodes | edges | pending | append_s | rebuild_s | dijkstra ≡ |")
     println("|---|---|---|---|---|---|---|---|")
     var inc: PropertyGraph = null
-    var incCheckpointed = false
     steps.foreach { case (i, path, nDelta) =>
       val t0 = System.nanoTime()
       inc = if (inc == null) EdgeListIngest.build(spark, path).cache()
         else {
-          val next = EdgeListIngest.append(spark, inc, path)
           // materialize the new generation eagerly, then free the raw
-          // scans it consumed and the previous generation's storage
-          // (r9 ADVICE: both leaked before — underlying was dropped
-          // unreleased and unpersist() no-ops on checkpointed frames)
-          val mat = PropertyGraph(
-            next.nodes.localCheckpoint(true),
-            next.edges.localCheckpoint(true),
-            pending = next.pending.map(_.localCheckpoint(true)))
-          next.underlying.foreach(_.unpersist())
-          if (incCheckpointed) releaseCheckpointed(inc)
-          else inc.unpersistAll()
-          incCheckpointed = true
+          // scan and candidates it consumed and the generation it
+          // replaces
+          val next = EdgeListIngest.append(spark, inc, path)
+          val mat = next.checkpoint()
+          next.unpersistAll()
+          inc.unpersistAll()
           mat
         }
       val (nI, eI, pI) = counts(inc)

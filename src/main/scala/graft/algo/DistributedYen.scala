@@ -205,12 +205,12 @@ object DistributedYen {
     */
   private def shortest(spark: SparkSession, edges: DataFrame,
       src: String, dst: String,
-      bannedE: Seq[(String, String)], bannedN: Seq[String]): Option[Path] = {
-    val state = DistributedSSSP.run(spark, edges, Seq(src),
-      target = Some(dst), bannedEdges = bannedE, bannedNodes = bannedN)
-    val res = DistributedSSSP.reconstructPath(state, src, dst)
-    Checkpoints.release(state)
-    res.map { case (ns, cs) => Path(ns.toVector, cs.toVector) }
+      bannedE: Seq[(String, String)], bannedN: Seq[String]): Option[Path] =
+      Checkpoints.scoped { s =>
+    val state = s.adopt(DistributedSSSP.run(spark, edges, Seq(src),
+      target = Some(dst), bannedEdges = bannedE, bannedNodes = bannedN))
+    DistributedSSSP.reconstructPath(state, src, dst)
+      .map { case (ns, cs) => Path(ns.toVector, cs.toVector) }
   }
 
   /** `batchSpurs = true` (default) runs each Yen round's independent

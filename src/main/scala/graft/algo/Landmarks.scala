@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Checkpoints
 import graft.graph.PropertyGraph
 
 /** Landmark (pivot) distance oracle — the standard scale answer when
@@ -52,12 +53,14 @@ object Landmarks {
     val fwd = ShortestPaths.apsp(spark, g, Some(present))
     // d(u → L) = d(L → u) on the reversed multigraph; apsp materializes
     // eagerly (local CSR collect or checkpointed supersteps), so the
-    // temporary reversed projection cache is dropped right after.
-    val revG = PropertyGraph(g.nodes,
-      g.edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("roadId"), col("cost")))
-    val rev = ShortestPaths.apsp(spark, revG, Some(present))
-    revG.projection.unpersist()
+    // scope drops the temporary reversed projection cache right after.
+    val rev = Checkpoints.scoped { s =>
+      val revG = PropertyGraph(g.nodes,
+        g.edges.select(col("dst").as("src"), col("src").as("dst"),
+          col("roadId"), col("cost")))
+      s.cache(revG.projection)
+      ShortestPaths.apsp(spark, revG, Some(present))
+    }
     def shape(t: DataFrame) = t.select(col("source_id").as("lm"),
       col("target_id").as("node"), col("distance").as("dist"))
     (shape(fwd), shape(rev))
@@ -129,16 +132,14 @@ object Landmarks {
     * the bound — rebuild the tables.
     */
   def persistTables(spark: SparkSession, g: PropertyGraph,
-      landmarks: Seq[String], dir: String): Unit = {
+      landmarks: Seq[String], dir: String): Unit = Checkpoints.scoped { s =>
+    // the written files become the durable copy — the scope frees any
+    // kernel checkpoint state still backing the in-session frames
     val (fwd, rev) = tables(spark, g, landmarks)
-    graft.sources.Sinks.parquet(fwd, dir + "/fwd",
+    graft.sources.Sinks.parquet(s.adopt(fwd), dir + "/fwd",
       partitionBy = Seq("lm"), sortWithinPartitionsBy = Seq("node"))
-    graft.sources.Sinks.parquet(rev, dir + "/rev",
+    graft.sources.Sinks.parquet(s.adopt(rev), dir + "/rev",
       partitionBy = Seq("lm"), sortWithinPartitionsBy = Seq("node"))
-    // the written files are now the durable copy — free any kernel
-    // checkpoint state still backing the in-session frames
-    graft.core.Checkpoints.release(fwd)
-    graft.core.Checkpoints.release(rev)
   }
 
   /** Answer a (srcSet × dstSet) batch purely from tables persisted by

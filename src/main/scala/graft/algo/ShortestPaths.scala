@@ -95,12 +95,12 @@ object ShortestPaths {
         val lg = r.lg
         kernel(r, lg.idOf(src), lg.idOf(dst))
           .map(p => (p.nodes.toSeq.map(lg.ids), p.costs.toSeq))
-      case None =>
-        val state = DistributedSSSP.run(spark, g.projection, Seq(src), Some(dst))
-        val res = DistributedSSSP.reconstructPath(
+      case None => graft.core.Checkpoints.scoped { s =>
+        val state = s.adopt(
+          DistributedSSSP.run(spark, g.projection, Seq(src), Some(dst)))
+        DistributedSSSP.reconstructPath(
           state.filter(col("source") === src), src, dst)
-        graft.core.Checkpoints.release(state)
-        res
+      }
     }
 
   /** (seq, node_id, cost) rows of a path; no rows when there is none. */

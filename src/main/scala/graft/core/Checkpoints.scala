@@ -3,68 +3,58 @@ package graft.core
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Deterministic release of materialized DataFrames, and the one scope
-  * every graph kernel materializes through.
+/** The one lifetime API of the engine: `scoped` + [[release]]. Outside
+  * `core/`, every cache and checkpoint is made inside
+  * `Checkpoints.scoped { s => … }` through `s` and freed by the scope
+  * or by `release(result)`. The one exception is a graph generation's
+  * own frames, which `PropertyGraph.unpersistAll` frees. No other code
+  * pairs a materialization with an `unpersist` of its own; LifetimeSpec
+  * lints the sources for it.
   *
   * `Dataset.unpersist()` consults only the CacheManager, which never saw
   * a checkpoint: `localCheckpoint` persists the UNDERLYING RDD (the
   * Dataset it returns is a plain scan over that RDD), so unpersist() on
   * the checkpointed frame is a silent no-op and the blocks linger until
-  * the ContextCleaner happens to GC the RDD object. Fine for one-shot
-  * queries; NOT fine for iterative kernels that checkpoint every
-  * superstep (SSSP relaxation, Yen's K×hops spur searches), where
-  * nondeterministic cleanup lets storage accumulate across iterations.
+  * the ContextCleaner happens to GC the RDD object. [[release]] reaches
+  * through the checkpoint scan's LogicalRDD leaf and unpersists the RDD
+  * itself; for any other plan shape it falls back to Dataset.unpersist()
+  * (the CacheManager path, correct for cache()/persist() frames).
   *
-  * release() reaches through the checkpoint scan's LogicalRDD leaf and
-  * unpersists the RDD itself — immediate, targeted block removal. For
-  * any other plan shape it falls back to Dataset.unpersist() (the
-  * CacheManager path, correct for cache()/persist() frames).
-  *
-  * [[scoped]] is the loan pattern over both: inside
-  * `Checkpoints.scoped { s => … }` a kernel makes every checkpoint,
-  * cache and stats-clean checkpoint through `s`, names the frames that
-  * stay live at each round boundary (`s.keep`), and writes no release
-  * of its own. The contract:
+  * The scope's contract:
+  *  - `s.checkpoint`, `s.cache` and `s.fresh` (a stats-clean checkpoint)
+  *    materialize and hold; `s.adopt` holds a frame materialized
+  *    elsewhere — another operator's result or a nested scope's;
   *  - `s.keep(live*)` frees every held frame not named, comparing by
-  *    identity, so a frame that aliases another needs no guard;
-  *  - a stats-clean checkpoint (`s.fresh`) is one frame: naming the view
-  *    keeps its checkpoint, and freeing the view frees it;
+  *    identity, so a frame that aliases another needs no guard; a
+  *    stats-clean view is one frame with its checkpoint;
   *  - when the scope closes, normally or by an exception, it frees every
   *    held frame the returned value does not read. The DataFrames of the
   *    returned value are the value itself, or the DataFrame fields of a
   *    returned case class, tuple or Option. A held frame they read stays
-  *    live: `release(result)` frees it, directly when it is a checkpoint
-  *    leaf of the result and through [[owns]] otherwise;
+  *    live until `release(result)`: directly when it is a checkpoint leaf
+  *    of the result, else through an entry the scope records against
+  *    the result (a query body's shared cache, q60's basket table);
+  *  - a `return` inside the body is a throwable in Scala 2.13, so it
+  *    frees everything held: branch with if/else instead;
   *  - the scope runs no Spark job of its own: everything it frees or
   *    inspects is driver-side plan and block-manager bookkeeping.
   */
 object Checkpoints {
 
-  /** Internal materializations a query result depends on, keyed by the
-    * result Dataset's identity. A query builder that caches a shared
-    * intermediate (q60's basket table feeds five consumers) cannot
-    * unpersist it before returning — the plan hasn't executed yet — so
-    * it registers the cache here via [[owns]] and the harness's
-    * post-execution release(result) frees it. Weak keys: if a caller
-    * drops the result without releasing, the entry (not the blocks —
-    * those fall to the ContextCleaner, the pre-registry status quo)
-    * vanishes with it.
+  /** Held frames a scope's result reads, keyed by the result Dataset's
+    * identity: the result has not executed when the scope closes, so
+    * they are freed by the harness's post-execution release(result).
+    * Weak keys: if a caller drops the result without releasing, the
+    * entry (not the blocks — those fall to the ContextCleaner) vanishes
+    * with it.
     */
   private val owned = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[DataFrame, Seq[() => Unit]]())
 
   private def ownsFree(result: DataFrame, free: Seq[() => Unit]): Unit =
     owned.merge(result, free, (a, b) => a ++ b)
-
-  /** Register cached/checkpointed frames that back `result` so that
-    * `release(result)` frees them once the result is materialized.
-    * Returns `result` for expression-position use.
-    */
-  def owns(result: DataFrame, cached: DataFrame*): DataFrame = {
-    ownsFree(result, cached.map(c => () => release(c)))
-    result
-  }
 
   /** Free the storage behind `df` now. Safe to call more than once.
     *
@@ -73,7 +63,7 @@ object Checkpoints {
     * distributed sssp/apsp results are projections over the kernel's
     * final state) — callers that are done with such a result can release
     * it. Only call when no other live frame shares the checkpoint.
-    * Also frees any intermediates registered against `df` via [[owns]].
+    * Also frees the held frames a scope recorded against `df`.
     */
   def release(df: DataFrame): Unit = {
     Option(owned.remove(df)).foreach(_.foreach(_()))
@@ -118,9 +108,13 @@ object Checkpoints {
       hold(cp, cp, () => release(cp))
     }
 
-    /** `df.cache()` (MEMORY_AND_DISK, lazy like cache() itself). */
-    def cache(df: DataFrame): DataFrame =
-      hold(df.cache(), df, () => { df.unpersist(); () })
+    /** `df.cache()` (MEMORY_AND_DISK, lazy like cache() itself). A frame
+      * cached already — a graph's projection — is held as it is.
+      */
+    def cache(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE) df.cache()
+      hold(df, df, () => { df.unpersist(); () })
+    }
 
     /** A stats-clean checkpoint of `df`: eager `localCheckpoint`, read
       * through a view whose leaf carries no origin statistics.

@@ -104,17 +104,18 @@ object Bpe {
   /** Superstep training over a word-frequency DataFrame that does not
     * fit a driver: per merge, one pair-count aggregate (map-side partial
     * combine, tiny result), a 1-row argmax collect, and a map-only
-    * rewrite, with PageRank-style deterministic checkpoint release so
-    * numMerges supersteps cannot accumulate storage.
+    * rewrite, each superstep's checkpoint freed once the next one exists
+    * so numMerges supersteps cannot accumulate storage.
     */
-  def trainDistributed(wordFreq: DataFrame, numMerges: Int): Seq[Merge] = {
+  def trainDistributed(wordFreq: DataFrame, numMerges: Int): Seq[Merge] =
+      graft.core.Checkpoints.scoped { s =>
     val spark = wordFreq.sparkSession
     import spark.implicits._
-    var words: Dataset[WordSyms] = wordFreq
+    var words: Dataset[WordSyms] = s.checkpoint(wordFreq
       .select(col("word"), col("freq").cast("long"))
       .as[(String, Long)]
       .map { case (w, f) => WordSyms(w, f, w.map(_.toString)) }
-      .localCheckpoint(true)
+      .toDF()).as[WordSyms]
     val merges = ArrayBuffer.empty[Merge]
     var r = 1
     var exhausted = false
@@ -132,15 +133,14 @@ object Bpe {
       else {
         val (a, b) = (best(0).getString(0), best(0).getString(1))
         merges += Merge(r, a, b)
-        val next = words
+        val next = s.checkpoint(words
           .map(ws => ws.copy(syms = mergePass(ws.syms.toIndexedSeq, a, b)))
-          .localCheckpoint(true)
-        graft.core.Checkpoints.release(words.toDF())
-        words = next
+          .toDF())
+        s.keep(next)
+        words = next.as[WordSyms]
         r += 1
       }
     }
-    graft.core.Checkpoints.release(words.toDF())
     merges.toSeq
   }
 
@@ -155,16 +155,15 @@ object Bpe {
     * counting) is always distributed; the vocab-sized loop dispatches on
     * distinct-word count.
     */
-  def train(docs: DataFrame, numMerges: Int): Seq[Merge] = {
-    val wc = wordCounts(docs).cache()
-    try {
-      if (wc.count() <= LocalWordThreshold)
-        trainLocal(
-          wc.collect().map(row => (row.getString(0), row.getLong(1))).toSeq
-            .sortBy(_._1), // deterministic iteration order
-          numMerges)
-      else trainDistributed(wc, numMerges)
-    } finally { wc.unpersist(); () }
+  def train(docs: DataFrame, numMerges: Int): Seq[Merge] =
+      graft.core.Checkpoints.scoped { s =>
+    val wc = s.cache(wordCounts(docs))
+    if (wc.count() <= LocalWordThreshold)
+      trainLocal(
+        wc.collect().map(row => (row.getString(0), row.getLong(1))).toSeq
+          .sortBy(_._1), // deterministic iteration order
+        numMerges)
+    else trainDistributed(wc, numMerges)
   }
 
   /** Encode one word with the learned merges, rank-ascending, one pass

@@ -25,7 +25,8 @@ object CorpusPipeline {
     */
   def prepare(docs: DataFrame, minQuality: Double = 0.3,
       minJaccard: Double = 0.8,
-      sampleFraction: Option[Double] = None): DataFrame = {
+      sampleFraction: Option[Double] = None): DataFrame =
+      graft.core.Checkpoints.scoped { s =>
     val annotated = docs
       .withColumn("lang_pred", TextAnalysis.langId(col("text")))
       .withColumn("quality", TextAnalysis.qualityScore(col("text")))
@@ -37,16 +38,14 @@ object CorpusPipeline {
     // the whole pipeline's cost, measured at sf0.1)
     // a map over the spread scan, which AQE cannot coalesce: its deletion
     // read +0.8 s at 32 cores on pipeline_e2e (layout A/B in CHANGES.md)
-    val filtered = annotated.filter(col("quality") >= minQuality)
-      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
-    try {
-      // dedupCorpus returns an eagerly-materialized frame, so the cache
-      // can be dropped before returning (finally: a dedup failure must
-      // not pin the annotated corpus for the rest of the session)
-      val deduped = Dedup.dedupCorpus(filtered, minJaccard = minJaccard)
-      sampleFraction.fold(deduped)(f =>
-        deduped.filter(TextAnalysis.sampleByFingerprint(col("text"), f)))
-    } finally filtered.unpersist()
+    val filtered = s.cache(annotated.filter(col("quality") >= minQuality)
+      .transform(graft.core.Tables.compact(_, shuffle = true)))
+    // dedupCorpus returns an eagerly-materialized frame the result does
+    // not read `filtered` through, so the scope drops the cache on return
+    // (and on a dedup failure)
+    val deduped = Dedup.dedupCorpus(filtered, minJaccard = minJaccard)
+    sampleFraction.fold(deduped)(f =>
+      deduped.filter(TextAnalysis.sampleByFingerprint(col("text"), f)))
   }
 
   /** Per-predicted-language summary of a prepared corpus. The quality

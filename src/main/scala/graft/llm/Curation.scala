@@ -131,7 +131,7 @@ object Curation {
     * and correctness is unaffected (the verify join stays exact).
     */
   def contaminationBloom(docs: DataFrame, bench: DataFrame, w: Int = 5)
-      : DataFrame = {
+      : DataFrame = graft.core.Checkpoints.scoped { scope =>
     val spark = docs.sparkSession
     // the explode sits DIRECTLY over the shingle HOF with `toks` bound
     // one projection below: hoisting the shingle array into its own
@@ -144,9 +144,9 @@ object Curation {
       .select(col("doc_id"),
         explode(Dedup.shinglesFromTokens(col("toks"), w)).as("ng"))
     // materialized once: the filter build AND the verify join read it
-    // (Bench/Verify release the blocks via core.Checkpoints)
-    val benchGrams = grams(bench).select(col("ng")).distinct()
-      .localCheckpoint()
+    // (a leaf of the result: release(result) frees it)
+    val benchGrams = scope.checkpoint(grams(bench).select(col("ng"))
+      .distinct())
     val nBench = benchGrams.count()
     val targetBits = math.min(1L << 28, math.max(1L << 16, nBench * 10))
     val numBits =

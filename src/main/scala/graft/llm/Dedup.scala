@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 
 /** Deduplication operators over `documents` (doc_id, text, ...).
   *
@@ -261,75 +262,71 @@ object Dedup {
     require(bands * rowsPerBand == k, "bands must divide signature length")
     graft.functions.GraftFunctions.register(
       org.apache.spark.sql.SparkSession.active)
-    if (!collapseExact) return minhashBandVerify(docs, w, k, bands,
-      minJaccard, selfPairs = None)
+    if (!collapseExact)
+      minhashBandVerify(docs, w, k, bands, minJaccard, selfPairs = None)
+    else Checkpoints.scoped { s =>
+      // Exact-duplicate collapse (r9, the same clone-cluster hardening
+      // as simhashNearDup/ImageDedup): every downstream value —
+      // signature, band keys, shingle set, Jaccard — is a pure function
+      // of the TOKEN SEQUENCE, so the banded join and verification run on
+      // ONE representative per distinct sequence, and verified pairs
+      // expand back to member pairs at the end. Output is provably
+      // identical; candidate volume stops being quadratic in clone
+      // multiplicity (tokens never contain whitespace, so the
+      // space-joined fingerprint is collision-free up to md5).
+      // fped, withSig, candSh (minhashBandVerify) and dedupCorpus's
+      // survivors are maps over the spread `documents` scan: no shuffle
+      // at their top for AQE to coalesce, so Tables.compact sizes them.
+      // Their deletion read +0.4–0.8 s at 32 cores on minhash/
+      // dedup_corpus/pipeline_e2e in the layout A/B in CHANGES.md.
+      val fped = s.cache(docs.select(col("doc_id"),
+          md5(concat_ws(" ", tokens(col("text")))).as("fp"))
+        .transform(graft.core.Tables.compact(_, shuffle = true)))
+      // Early-out (r9 verdict item): on a MOSTLY-DISTINCT corpus the
+      // collapse grouping buys nothing and costs two extra shuffles —
+      // doc-level banding finds the few clone pairs anyway (identical
+      // signatures share every band bucket, Jaccard 1 ≥ any threshold),
+      // so the output is identical either way. One approximate
+      // aggregate decides; the collapse engages only when clones are
+      // plentiful enough (>5%) to threaten the quadratic candidate
+      // blowup it exists to prevent.
+      val st = fped.agg(count(lit(1)), approx_count_distinct(col("fp")))
+        .head()
+      if (st.getLong(1) >= 0.95 * st.getLong(0)) {
+        s.keep()
+        minhashBandVerify(docs, w, k, bands, minJaccard, selfPairs = None)
+      } else {
+        val groups = s.cache(fped.groupBy(col("fp"))
+          .agg(min(col("doc_id")).as("rep_id"),
+            count(lit(1)).as("n_members")))
+        val reps = docs.join(groups.select(col("rep_id").as("doc_id")),
+          Seq("doc_id"), "left_semi")
 
-    // Exact-duplicate collapse (r9, the same clone-cluster hardening as
-    // simhashNearDup/ImageDedup): every downstream value — signature,
-    // band keys, shingle set, Jaccard — is a pure function of the TOKEN
-    // SEQUENCE, so the banded join and verification run on ONE
-    // representative per distinct sequence, and verified pairs expand
-    // back to member pairs at the end. Output is provably identical;
-    // candidate volume stops being quadratic in clone multiplicity
-    // (tokens never contain whitespace, so the space-joined fingerprint
-    // is collision-free up to md5).
-    // fped, withSig, candSh (minhashBandVerify) and dedupCorpus's
-    // survivors are maps over the spread `documents` scan: no shuffle at
-    // their top for AQE to coalesce, so Tables.compact sizes them. Their
-    // deletion read +0.4–0.8 s at 32 cores on minhash/dedup_corpus/
-    // pipeline_e2e in the layout A/B in CHANGES.md.
-    val fped = docs.select(col("doc_id"),
-        md5(concat_ws(" ", tokens(col("text")))).as("fp"))
-      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
-    // Early-out (r9 verdict item): on a MOSTLY-DISTINCT corpus the
-    // collapse grouping buys nothing and costs two extra shuffles —
-    // doc-level banding finds the few clone pairs anyway (identical
-    // signatures share every band bucket, Jaccard 1 ≥ any threshold),
-    // so the output is identical either way. One approximate aggregate
-    // decides; the collapse engages only when clones are plentiful
-    // enough (>5%) to threaten the quadratic candidate blowup it exists
-    // to prevent.
-    val st = fped.agg(count(lit(1)), approx_count_distinct(col("fp")))
-      .head()
-    if (st.getLong(1) >= 0.95 * st.getLong(0)) {
-      fped.unpersist()
-      return minhashBandVerify(docs, w, k, bands, minJaccard,
-        selfPairs = None)
+        // Exact-duplicate groups re-enter as rep SELF pairs
+        // (id_a = id_b): the shared verify computes their Jaccard on
+        // (sh, sh), so the empty-shingle and null-sig exclusions apply to
+        // clone groups exactly as they did to doc-level banding.
+        val selfPairs = groups.filter(col("n_members") > 1)
+          .select(col("rep_id").as("id_a"), col("rep_id").as("id_b"))
+        val verifiedReps = s.adopt(minhashBandVerify(reps, w, k, bands,
+          minJaccard, selfPairs = Some(selfPairs)))
+        // expand verified rep pairs to member pairs: cross-group pairs
+        // order by least/greatest (each unordered member pair appears
+        // exactly once because rep pairs carry id_a < id_b); same-group
+        // (self) pairs take the m_a < m_b half of the within-group cross
+        // join
+        val members = fped.join(groups.select(col("fp"), col("rep_id")),
+          Seq("fp"))
+        s.checkpoint(verifiedReps
+          .join(members.select(col("rep_id").as("id_a"),
+            col("doc_id").as("m_a")), Seq("id_a"))
+          .join(members.select(col("rep_id").as("id_b"),
+            col("doc_id").as("m_b")), Seq("id_b"))
+          .filter(col("id_a") =!= col("id_b") || col("m_a") < col("m_b"))
+          .select(least(col("m_a"), col("m_b")).as("id_a"),
+            greatest(col("m_a"), col("m_b")).as("id_b"), col("jaccard")))
+      }
     }
-    val groups = fped.groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("rep_id"),
-        count(lit(1)).as("n_members"))
-      .cache()
-    val reps = docs.join(
-      groups.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-
-    // Exact-duplicate groups re-enter as rep SELF pairs (id_a = id_b):
-    // the shared verify computes their Jaccard on (sh, sh), so the
-    // empty-shingle and null-sig exclusions apply to clone groups
-    // exactly as they did to doc-level banding.
-    val selfPairs = groups.filter(col("n_members") > 1)
-      .select(col("rep_id").as("id_a"), col("rep_id").as("id_b"))
-    val verifiedReps = minhashBandVerify(reps, w, k, bands, minJaccard,
-      selfPairs = Some(selfPairs))
-    // expand verified rep pairs to member pairs: cross-group pairs order
-    // by least/greatest (each unordered member pair appears exactly once
-    // because rep pairs carry id_a < id_b); same-group (self) pairs take
-    // the m_a < m_b half of the within-group cross join
-    val members = fped.join(groups.select(col("fp"), col("rep_id")),
-      Seq("fp"))
-    val verified = verifiedReps
-      .join(members.select(col("rep_id").as("id_a"),
-        col("doc_id").as("m_a")), Seq("id_a"))
-      .join(members.select(col("rep_id").as("id_b"),
-        col("doc_id").as("m_b")), Seq("id_b"))
-      .filter(col("id_a") =!= col("id_b") || col("m_a") < col("m_b"))
-      .select(least(col("m_a"), col("m_b")).as("id_a"),
-        greatest(col("m_a"), col("m_b")).as("id_b"), col("jaccard"))
-      .localCheckpoint(true)
-    graft.core.Checkpoints.release(verifiedReps)
-    fped.unpersist()
-    groups.unpersist()
-    verified
   }
 
   /** The signature → band-bucket join → exact-Jaccard-verify core shared
@@ -343,21 +340,21 @@ object Dedup {
     */
   private def minhashBandVerify(docs: DataFrame, w: Int, k: Int,
       bands: Int, minJaccard: Double,
-      selfPairs: Option[DataFrame]): DataFrame = {
+      selfPairs: Option[DataFrame]): DataFrame = Checkpoints.scoped { s =>
     val rowsPerBand = k / bands
     // Signature in one fused native pass (tokens → w-gram windows →
     // double-hash minima): no shingle strings or intermediate arrays are
     // materialized for the corpus — only candidates get real shingle
     // sets. (doc_id, sig) is k longs per doc — cache it so the banded
     // self-join computes each signature once, not twice.
-    val withSig = docs
+    val withSig = s.cache(docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         call_function("graft_minhash_text", col("toks"), lit(w), lit(k))
           .as("sig"))
       .filter(col("sig").isNotNull)
       // sized: see minhashNearDup's fped
-      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
+      .transform(graft.core.Tables.compact(_, shuffle = true)))
     // explode into (band_id, band_key) keys — ids only, narrow shuffle.
     // The key is the band's signature VALUES joined as a string, not a
     // hash of them: same bucketing (equal slices ⇔ equal keys, with no
@@ -377,12 +374,12 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val cands = (selfPairs match {
+    val cands = s.cache(selfPairs match {
       case Some(sp) => bandCands.union(
         sp.join(withSig.select(col("doc_id").as("id_a")), Seq("id_a"),
           "left_semi"))
       case None => bandCands
-    }).cache()
+    })
     // exact Jaccard verification — shingle sets materialized ONLY for
     // docs that appear in a candidate pair. On a typical corpus that set
     // is tiny and AQE turns these joins into broadcasts at runtime; on a
@@ -391,13 +388,16 @@ object Dedup {
     // instead of failing on the 8 GB broadcast limit.
     val candIds = cands.select(col("id_a").as("doc_id"))
       .union(cands.select(col("id_b").as("doc_id"))).distinct()
-    val candSh = docs
+    val candSh = s.cache(docs
       .join(candIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), shinglesFromTokens(col("toks"), w).as("sh"))
       // sized: see minhashNearDup's fped
-      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
-    val verified = cands
+      .transform(graft.core.Tables.compact(_, shuffle = true)))
+    // eager: the verified pair set is LSH-pruned; materializing it here
+    // lets the scope free the intermediates immediately instead of
+    // accumulating cached blocks across repeated dedup calls
+    s.checkpoint(cands
       .join(candSh.select(col("doc_id").as("id_a"),
         col("sh").as("sh_a")), Seq("id_a"))
       .join(candSh.select(col("doc_id").as("id_b"),
@@ -408,15 +408,7 @@ object Dedup {
       .withColumn("jaccard", TextAnalysis.portableRound(
         col("inter") / col("uni").cast("double"), 4))
       .filter(col("jaccard") >= minJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      // eager: the verified pair set is LSH-pruned; materializing it
-      // here lets the intermediates be unpersisted immediately instead
-      // of accumulating cached blocks across repeated dedup calls
-      .localCheckpoint(true)
-    withSig.unpersist()
-    cands.unpersist()
-    candSh.unpersist()
-    verified
+      .select(col("id_a"), col("id_b"), col("jaccard")))
   }
 
   /** Cross-corpus near-dup decontamination (MinHash+LSH): flag training
@@ -438,7 +430,8 @@ object Dedup {
     * (doc_id, n_bench_matches, max_jaccard ≥ minJaccard).
     */
   def crossNearDup(corpus: DataFrame, bench: DataFrame, w: Int = 3,
-      k: Int = 32, bands: Int = 8, minJaccard: Double = 0.6): DataFrame = {
+      k: Int = 32, bands: Int = 8, minJaccard: Double = 0.6): DataFrame =
+      Checkpoints.scoped { s =>
     val rowsPerBand = k / bands
     require(bands * rowsPerBand == k, "bands must divide signature length")
     graft.functions.GraftFunctions.register(
@@ -459,12 +452,11 @@ object Dedup {
 
     // candidates: corpus band rows against the (small) bench band rows —
     // no self-join; AQE broadcasts the bench side from observed size
-    val cands = banded(corpus, "doc_id")
+    val cands = s.cache(banded(corpus, "doc_id")
       .join(banded(bench, "bench_id"), Seq("band_id", "band_key"))
       .filter(col("doc_id") =!= col("bench_id"))
       .select(col("doc_id"), col("bench_id"))
-      .dropDuplicates("doc_id", "bench_id")
-      .cache()
+      .dropDuplicates("doc_id", "bench_id"))
 
     // exact verify: corpus shingle sets only for candidate docs, bench
     // shingle sets for the whole (small) bench
@@ -476,7 +468,7 @@ object Dedup {
       .select(col("doc_id").as("bench_id"), tokens(col("text")).as("toks"))
       .select(col("bench_id"),
         shinglesFromTokens(col("toks"), w).as("sh_b"))
-    val out = cands
+    s.checkpoint(cands
       .join(candSh, Seq("doc_id"))
       .join(benchSh, Seq("bench_id"))
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
@@ -487,10 +479,7 @@ object Dedup {
       .filter(col("jaccard") >= minJaccard)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bench_matches"),
-        max(col("jaccard")).as("max_jaccard"))
-      .localCheckpoint(true)
-    cands.unpersist()
-    out
+        max(col("jaccard")).as("max_jaccard")))
   }
 
   /** EXACT n-gram Jaccard self-join at scale via prefix filtering
@@ -518,7 +507,8 @@ object Dedup {
     * output (pairs are returned with integer intersection/union sizes).
     */
   def jaccardNearDup(docs: DataFrame, w: Int = 3,
-      minJacNum: Int = 3, minJacDen: Int = 5): DataFrame = {
+      minJacNum: Int = 3, minJacDen: Int = 5): DataFrame =
+      Checkpoints.scoped { s =>
     require(minJacNum > 0 && minJacNum <= minJacDen,
       s"threshold must be in (0,1]: $minJacNum/$minJacDen")
     // Exact-duplicate collapse (r9, shared with minhashNearDup): the
@@ -528,9 +518,8 @@ object Dedup {
     // sequence and verified pairs expand to member pairs at the end.
     // Without it, clone clusters make prefix-join candidates quadratic
     // in clone multiplicity (the r9 10× scale run measured the cost).
-    val fped = docs.select(col("doc_id"),
-        md5(concat_ws(" ", tokens(col("text")))).as("fp"))
-      .cache()
+    val fped = s.cache(docs.select(col("doc_id"),
+        md5(concat_ws(" ", tokens(col("text")))).as("fp")))
     // Early-out (r9 verdict item, same reasoning as minhashNearDup): on
     // a mostly-distinct corpus the collapse grouping buys nothing and
     // costs two extra shuffles — the AllPairs prefix join finds clone
@@ -539,55 +528,48 @@ object Dedup {
     val st = fped.agg(count(lit(1)), approx_count_distinct(col("fp")))
       .head()
     if (st.getLong(1) >= 0.95 * st.getLong(0)) {
-      fped.unpersist()
+      s.keep()
       val shAll = docs
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .select(col("doc_id"), shinglesFromTokens(col("toks"), w).as("sh"))
-      return jaccardPairsFromSets(shAll, minJacNum, minJacDen)
+      jaccardPairsFromSets(shAll, minJacNum, minJacDen)
+    } else {
+      val groups = s.cache(fped.groupBy(col("fp"))
+        .agg(min(col("doc_id")).as("rep_id"),
+          count(lit(1)).as("n_members")))
+      val reps = docs.join(groups.select(col("rep_id").as("doc_id")),
+        Seq("doc_id"), "left_semi")
+      // Eagerly checkpointed: a materialization BARRIER, not just reuse.
+      // The selfReps projection below reads size(sh), and without the
+      // barrier the optimizer collapses projections and inlines the full
+      // tokens expression into the shingle lambda, re-evaluating it PER
+      // ELEMENT (the documented HOF-interpreted pitfall — measured 81 s
+      // vs ~1 s on the 10× corpus for exactly this size() read).
+      val sh = s.checkpoint(reps
+        .select(col("doc_id"), tokens(col("text")).as("toks"))
+        .select(col("doc_id"), shinglesFromTokens(col("toks"), w).as("sh")))
+      val repPairs = s.adopt(jaccardPairsFromSets(sh, minJacNum, minJacDen))
+      // intra-clone pairs: identical NONEMPTY sets have Jaccard exactly 1
+      // (empty-set docs never reached the prefix join in the doc-level
+      // formulation either — explode skips them)
+      val selfReps = groups.filter(col("n_members") > 1)
+        .join(sh.select(col("doc_id").as("rep_id"),
+          size(col("sh")).cast("long").as("n_sh")), Seq("rep_id"))
+        .filter(col("n_sh") > 0)
+        .select(col("rep_id").as("id_a"), col("rep_id").as("id_b"),
+          col("n_sh").as("n_common"), col("n_sh").as("n_union"))
+      val members = fped.join(groups.select(col("fp"), col("rep_id")),
+        Seq("fp"))
+      s.checkpoint(repPairs.union(selfReps)
+        .join(members.select(col("rep_id").as("id_a"),
+          col("doc_id").as("m_a")), Seq("id_a"))
+        .join(members.select(col("rep_id").as("id_b"),
+          col("doc_id").as("m_b")), Seq("id_b"))
+        .filter(col("id_a") =!= col("id_b") || col("m_a") < col("m_b"))
+        .select(least(col("m_a"), col("m_b")).as("id_a"),
+          greatest(col("m_a"), col("m_b")).as("id_b"),
+          col("n_common"), col("n_union")))
     }
-    val groups = fped.groupBy(col("fp"))
-      .agg(min(col("doc_id")).as("rep_id"),
-        count(lit(1)).as("n_members"))
-      .cache()
-    val reps = docs.join(
-      groups.select(col("rep_id").as("doc_id")), Seq("doc_id"), "left_semi")
-    // Eagerly checkpointed: a materialization BARRIER, not just reuse.
-    // The selfReps projection below reads size(sh), and without the
-    // barrier the optimizer collapses projections and inlines the full
-    // tokens expression into the shingle lambda, re-evaluating it PER
-    // ELEMENT (the documented HOF-interpreted pitfall — measured 81 s
-    // vs ~1 s on the 10× corpus for exactly this size() read).
-    val sh = reps
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .select(col("doc_id"), shinglesFromTokens(col("toks"), w).as("sh"))
-      .localCheckpoint(true)
-    val repPairs = jaccardPairsFromSets(sh, minJacNum, minJacDen)
-    // intra-clone pairs: identical NONEMPTY sets have Jaccard exactly 1
-    // (empty-set docs never reached the prefix join in the doc-level
-    // formulation either — explode skips them)
-    val selfReps = groups.filter(col("n_members") > 1)
-      .join(sh.select(col("doc_id").as("rep_id"),
-        size(col("sh")).cast("long").as("n_sh")), Seq("rep_id"))
-      .filter(col("n_sh") > 0)
-      .select(col("rep_id").as("id_a"), col("rep_id").as("id_b"),
-        col("n_sh").as("n_common"), col("n_sh").as("n_union"))
-    val members = fped.join(groups.select(col("fp"), col("rep_id")),
-      Seq("fp"))
-    val expanded = repPairs.union(selfReps)
-      .join(members.select(col("rep_id").as("id_a"),
-        col("doc_id").as("m_a")), Seq("id_a"))
-      .join(members.select(col("rep_id").as("id_b"),
-        col("doc_id").as("m_b")), Seq("id_b"))
-      .filter(col("id_a") =!= col("id_b") || col("m_a") < col("m_b"))
-      .select(least(col("m_a"), col("m_b")).as("id_a"),
-        greatest(col("m_a"), col("m_b")).as("id_b"),
-        col("n_common"), col("n_union"))
-      .localCheckpoint(true)
-    fped.unpersist()
-    groups.unpersist()
-    graft.core.Checkpoints.release(sh)
-    graft.core.Checkpoints.release(repPairs)
-    expanded
   }
 
   /** Threshold-Jaccard similar pairs over arbitrary element SETS — the
@@ -600,12 +582,12 @@ object Dedup {
     * it directly.
     */
   def jaccardPairsFromSets(sets: DataFrame, minJacNum: Int,
-      minJacDen: Int): DataFrame = {
+      minJacDen: Int): DataFrame = Checkpoints.scoped { s =>
     require(minJacNum > 0 && minJacNum <= minJacDen,
       s"threshold must be in (0,1]: $minJacNum/$minJacDen")
-    val sh = sets.select(col(sets.columns(0)).as("doc_id"),
-        col(sets.columns(1)).as("sh"))
-      .cache() // read by the frequency agg, the prefix build and verify
+    // cached: read by the frequency agg, the prefix build and verify
+    val sh = s.cache(sets.select(col(sets.columns(0)).as("doc_id"),
+        col(sets.columns(1)).as("sh")))
     val exploded = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     val freq = exploded.groupBy(col("s")).agg(count(lit(1)).as("df"))
 
@@ -620,13 +602,13 @@ object Dedup {
       .partitionBy(col("doc_id"))
     val ceilT = floor((col("sz") * minJacNum + (minJacDen - 1))
       / lit(minJacDen)).cast("long")
-    val pref = exploded.join(freq, Seq("s"))
+    // cached: both sides of the self-join below
+    val pref = s.cache(exploded.join(freq, Seq("s"))
       .withColumn("sz", count(lit(1)).over(byDoc))
       .withColumn("rn",
         row_number().over(byDoc.orderBy(col("df"), col("s"))))
       .filter(col("rn") <= col("sz") - ceilT + 1)
-      .select(col("doc_id"), col("sz"), col("rn"), col("s"))
-      .cache() // both sides of the self-join below
+      .select(col("doc_id"), col("sz"), col("rn"), col("s")))
 
     // Candidate pairs grouped so the PPJoin positional filter (Xiao et
     // al. WWW'08) can run before any shingle array is materialized:
@@ -655,7 +637,7 @@ object Dedup {
           + (minJacNum + minJacDen - 1)) / lit(minJacNum + minJacDen)))
       .select(col("id_a"), col("id_b"))
 
-    val verified = cands
+    s.checkpoint(cands
       .join(sh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")),
         Seq("id_a"))
       .join(sh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")),
@@ -666,11 +648,7 @@ object Dedup {
         size(col("sh_a")) + size(col("sh_b")) - col("n_common"))
       .filter(col("n_common") * minJacDen >= col("n_union") * minJacNum)
       .select(col("id_a"), col("id_b"), col("n_common"),
-        col("n_union").cast("long").as("n_union"))
-      .localCheckpoint(true)
-    sh.unpersist()
-    pref.unpersist()
-    verified
+        col("n_union").cast("long").as("n_union")))
   }
 
   /** Brute-force n-gram Jaccard above a threshold — the small-data oracle
@@ -731,7 +709,7 @@ object Dedup {
     * size (every clone pair genuinely is a hamming-0 near-dup pair).
     */
   def simhashNearDup(docs: DataFrame, maxHamming: Int = 3,
-      bands: Int = 4): DataFrame = {
+      bands: Int = 4): DataFrame = Checkpoints.scoped { s =>
     require(maxHamming < bands, "pigeonhole needs maxHamming < bands")
     val bits = 64 / bands
     // 1L << 64 wraps to 1 (Scala shifts are mod 64): a full-width band
@@ -739,11 +717,11 @@ object Dedup {
     val mask = if (bits == 64) -1L else (1L << bits) - 1
     // (doc_id, simhash) is two longs per doc — cached because the
     // signature-distinct band join and both expansion sides read it
-    val sigs = docs
+    val sigs = s.cache(docs
       .select(col("doc_id"), simhash(col("text")).as("simhash"))
       // a map over the spread scan, which AQE cannot coalesce: its
       // deletion read +0.8 s at 32 cores in the layout A/B in CHANGES.md
-      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
+      .transform(graft.core.Tables.compact(_, shuffle = true)))
     val distinctSigs = sigs.select(col("simhash")).distinct()
     val banded = distinctSigs.select(col("simhash"),
       posexplode(array((0 until bands).map { b =>
@@ -769,16 +747,13 @@ object Dedup {
       .union(distinctSigs.select(col("simhash").as("sig_a"),
         col("simhash").as("sig_b"), lit(0).as("hamming")))
     // expand signature pairs back to ordered doc pairs
-    val verified = sigPairs
+    s.checkpoint(sigPairs
       .join(sigs.select(col("simhash").as("sig_a"),
         col("doc_id").as("id_a")), Seq("sig_a"))
       .join(sigs.select(col("simhash").as("sig_b"),
         col("doc_id").as("id_b")), Seq("sig_b"))
       .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .localCheckpoint(true)
-    sigs.unpersist()
-    verified
+      .select(col("id_a"), col("id_b"), col("hamming")))
   }
 
   // ---- transitive grouping + end-to-end corpus dedup ------------------
@@ -792,7 +767,7 @@ object Dedup {
     */
   def transitiveGroups(pairs: DataFrame, maxIter: Int = 50,
       localThreshold: Long = graft.core.LocalBudget.MaxLocalEdges)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { s =>
     val spark = pairs.sparkSession
     // Adaptive fast path (the shared core.LocalBudget byte-guard policy
     // — r9 verdict item 6 retired the last bare row-count guard here):
@@ -800,63 +775,59 @@ object Dedup {
     // union-find instead of paying a shuffle per propagation superstep.
     // The gate's string-length estimate over long ids overestimates the
     // collected (Long, Long) rows, so the admit is conservative.
-    val cached = pairs.select(col("id_a"), col("id_b")).cache()
+    val cached = s.cache(pairs.select(col("id_a"), col("id_b")))
     if (graft.core.LocalBudget.fits(cached, localThreshold)) {
       val edges = cached.collect().map(r => (r.getLong(0), r.getLong(1)))
-      cached.unpersist()
+      s.keep()
       val uf = new graft.algo.UnionFind[Long]
       edges.foreach { case (a, b) => uf.union(a, b) }
       val members = edges.flatMap(e => Seq(e._1, e._2)).distinct
       import spark.implicits._
-      return members.map(m => (m, uf.find(m))).toSeq
-        .toDF("doc_id", "group_id")
+      members.map(m => (m, uf.find(m))).toSeq.toDF("doc_id", "group_id")
+    } else {
+      s.keep()
+      val sym = s.cache(pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+        .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
+        .distinct())
+      var labels = s.checkpoint(sym.select(col("u").as("doc_id")).distinct()
+        .withColumn("group_id", col("doc_id")))
+      var changed = 1L
+      var iter = 0
+      while (changed > 0 && iter < maxIter) {
+        // step 1 — neighbor-min propagation (one join + one aggregation)
+        val neighborMin = sym
+          .join(labels, sym("v") === labels("doc_id"))
+          .groupBy(col("u").as("doc_id"))
+          .agg(min(col("group_id")).as("n_min"))
+        val propagated = labels.join(neighborMin, Seq("doc_id"), "left_outer")
+          .select(col("doc_id"),
+            least(col("group_id"), coalesce(col("n_min"), col("group_id")))
+              .as("group_id"))
+        // step 2 — pointer jumping: replace my label with my label's
+        // label. Labels are node ids, so the lookup is a self-join; this
+        // halves label-chain depth every superstep, turning O(diameter)
+        // rounds into O(log n) — a 5M-node near-dup chain converges in
+        // ~23 supersteps instead of 5M (Shiloach–Vishkin shortcutting).
+        val jumped = s.checkpoint(propagated.as("a")
+          .join(propagated.select(col("doc_id").as("j_id"),
+            col("group_id").as("j_grp")),
+            col("a.group_id") === col("j_id"), "left_outer")
+          .select(col("a.doc_id").as("doc_id"),
+            coalesce(col("j_grp"), col("a.group_id")).as("group_id")))
+        changed = jumped.join(labels.select(col("doc_id"),
+            col("group_id").as("old_grp")), Seq("doc_id"))
+          .filter(col("group_id") < col("old_grp")).count()
+        s.keep(sym, jumped)
+        labels = jumped
+        iter += 1
+      }
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"transitiveGroups did not converge after $maxIter iterations " +
+            s"($changed labels still improving) — the pair graph has a " +
+            s"component with diameter > $maxIter; raise maxIter")
+      labels
     }
-    cached.unpersist()
-    val sym = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("u").as("doc_id")).distinct()
-      .withColumn("group_id", col("doc_id"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      // step 1 — neighbor-min propagation (one join + one aggregation)
-      val neighborMin = sym
-        .join(labels, sym("v") === labels("doc_id"))
-        .groupBy(col("u").as("doc_id"))
-        .agg(min(col("group_id")).as("n_min"))
-      val propagated = labels.join(neighborMin, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          least(col("group_id"), coalesce(col("n_min"), col("group_id")))
-            .as("group_id"))
-      // step 2 — pointer jumping: replace my label with my label's label.
-      // Labels are node ids, so the lookup is a self-join; this halves
-      // label-chain depth every superstep, turning O(diameter) rounds
-      // into O(log n) — a 5M-node near-dup chain converges in ~23
-      // supersteps instead of 5M (Shiloach–Vishkin shortcutting).
-      val jumped = propagated.as("a")
-        .join(propagated.select(col("doc_id").as("j_id"),
-          col("group_id").as("j_grp")),
-          col("a.group_id") === col("j_id"), "left_outer")
-        .select(col("a.doc_id").as("doc_id"),
-          coalesce(col("j_grp"), col("a.group_id")).as("group_id"))
-        .localCheckpoint(true)
-      changed = jumped.join(labels.select(col("doc_id"),
-          col("group_id").as("old_grp")), Seq("doc_id"))
-        .filter(col("group_id") < col("old_grp")).count()
-      labels.unpersist()
-      labels = jumped
-      iter += 1
-    }
-    sym.unpersist()
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"transitiveGroups did not converge after $maxIter iterations " +
-          s"($changed labels still improving) — the pair graph has a " +
-          s"component with diameter > $maxIter; raise maxIter")
-    labels
   }
 
   /** End-to-end corpus dedup: exact fingerprint collapse, then MinHash
@@ -865,28 +836,25 @@ object Dedup {
     * near-dups keep themselves).
     */
   def dedupCorpus(docs: DataFrame, w: Int = 3, k: Int = 32, bands: Int = 8,
-      minJaccard: Double = 0.8): DataFrame = {
+      minJaccard: Double = 0.8): DataFrame = Checkpoints.scoped { s =>
     val exactKeep = exact(docs).select(col("keep_id").as("doc_id"))
     // survivors feeds the signature scan, the candidate-shingle scan and
     // the final anti-join — cache it so the exact-dedup groupBy shuffle
     // runs once, not once per downstream reference
-    val survivors = docs.join(exactKeep, Seq("doc_id"), "left_semi")
+    val survivors = s.cache(docs.join(exactKeep, Seq("doc_id"), "left_semi")
       // sized: see minhashNearDup's fped
-      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
+      .transform(graft.core.Tables.compact(_, shuffle = true)))
     // survivors carry one doc per fingerprintMd5, which IS the collapse
     // fingerprint — skip the (provably no-op) exact-duplicate collapse
-    val pairs = minhashNearDup(survivors, w, k, bands, minJaccard,
-      collapseExact = false)
-    val groups = transitiveGroups(pairs.select("id_a", "id_b"))
+    val pairs = s.adopt(minhashNearDup(survivors, w, k, bands, minJaccard,
+      collapseExact = false))
+    val groups = s.adopt(transitiveGroups(pairs.select("id_a", "id_b")))
     // `drop` is small only when the corpus has few near-dups — the
     // opposite of the dedup-heavy case this operator exists for, so let
     // AQE pick the join strategy from its observed size
     val drop = groups.filter(col("doc_id") =!= col("group_id"))
       .select(col("doc_id"))
-    val kept = survivors.join(drop, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    survivors.unpersist()
-    kept
+    s.checkpoint(survivors.join(drop, Seq("doc_id"), "left_anti"))
   }
 
   // ---- embedding cosine near-dup --------------------------------------
@@ -913,15 +881,15 @@ object Dedup {
     * never exploded through the banding shuffle.
     */
   def embeddingNearDup(emb: DataFrame,
-      minCosine: Double = 0.95, nBits: Int = 48, bands: Int = 4): DataFrame = {
+      minCosine: Double = 0.95, nBits: Int = 48, bands: Int = 4): DataFrame =
+      Checkpoints.scoped { s =>
     require(nBits % bands == 0 && nBits <= 64, "bands must divide nBits ≤ 64")
     val bitsPerBand = nBits / bands
     // same mod-64 shift wrap guard as simhashNearDup
     val mask = if (bitsPerBand == 64) -1L else (1L << bitsPerBand) - 1
     val vecs = emb.select(col("vec_id"), col("embedding"))
-    val sigs = vecs
-      .select(col("vec_id"), hyperplaneBits(col("embedding"), nBits).as("hb"))
-      .cache()
+    val sigs = s.cache(vecs
+      .select(col("vec_id"), hyperplaneBits(col("embedding"), nBits).as("hb")))
     val banded = sigs.select(col("vec_id"),
       posexplode(array((0 until bands).map { b =>
         shiftrightunsigned(col("hb"), b * bitsPerBand)
@@ -934,7 +902,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val verified = cands
+    s.checkpoint(cands
       .join(vecs.select(col("vec_id").as("id_a"),
         col("embedding").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("vec_id").as("id_b"),
@@ -942,9 +910,6 @@ object Dedup {
       .withColumn("cosine",
         round(Similarity.cosine(col("v_a"), col("v_b")), 4))
       .filter(col("cosine") >= minCosine)
-      .select(col("id_a"), col("id_b"), col("cosine"))
-      .localCheckpoint(true)
-    sigs.unpersist()
-    verified
+      .select(col("id_a"), col("id_b"), col("cosine")))
   }
 }

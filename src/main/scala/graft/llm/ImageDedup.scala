@@ -111,19 +111,19 @@ object ImageDedup {
     * not avoidable join skew.
     */
   def nearDup(hashes: DataFrame, maxHamming: Int = 2,
-      bands: Int = 4): DataFrame = {
+      bands: Int = 4): DataFrame = graft.core.Checkpoints.scoped { s =>
     require(maxHamming < bands, "pigeonhole needs maxHamming < bands")
     require(64 % bands == 0, s"bands must divide 64, got $bands")
     val bits = 64 / bands
     val mask = if (bits == 64) -1L else (1L << bits) - 1
     val subs = maxHamming + 1
-    val sigs = hashes.select(col("media_id"),
+    val sigs = s.cache(hashes.select(col("media_id"),
       shiftleft(col("dhash_hi"), 32).bitwiseOR(col("dhash_lo")).as("dh"),
       shiftleft(col("ahash_hi"), 32).bitwiseOR(col("ahash_lo")).as("ah"))
       // a map over the hashed media rows, which AQE cannot coalesce: its
       // deletion read +0.7–0.9 s at 32 cores on image/video/audio in the
       // layout A/B in CHANGES.md
-      .transform(graft.core.Tables.compact(_, shuffle = true)).cache()
+      .transform(graft.core.Tables.compact(_, shuffle = true)))
     // Band DISTINCT (dh, ah) signatures, not media rows (the r9 fix
     // shared with Dedup.simhashNearDup): duplicate-media clusters made
     // the doc-level candidate join quadratic in clone multiplicity
@@ -166,16 +166,13 @@ object ImageDedup {
       .union(distinctSigs.select(col("dh").as("dh_a"),
         col("ah").as("ah_a"), col("dh").as("dh_b"), col("ah").as("ah_b"),
         lit(0L).as("dhash_hamming"), lit(0L).as("ahash_hamming")))
-    val verified = sigPairs
+    s.checkpoint(sigPairs
       .join(sigs.select(col("dh").as("dh_a"), col("ah").as("ah_a"),
         col("media_id").as("id_a")), Seq("dh_a", "ah_a"))
       .join(sigs.select(col("dh").as("dh_b"), col("ah").as("ah_b"),
         col("media_id").as("id_b")), Seq("dh_b", "ah_b"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        col("dhash_hamming"), col("ahash_hamming"))
-      .localCheckpoint(true)
-    sigs.unpersist()
-    verified
+        col("dhash_hamming"), col("ahash_hamming")))
   }
 }

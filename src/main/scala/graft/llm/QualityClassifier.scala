@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import graft.core.Checkpoints
 
 /** Model-based quality filtering — the CCNet / FineWeb pattern: train a
   * linear text classifier against a weak label, then score the whole
@@ -123,8 +124,8 @@ object QualityClassifier {
     */
   def train(docs: DataFrame, buckets: Int = Buckets, epochs: Int = Epochs,
       localRowThreshold: Long = graft.core.LocalBudget.MaxLocalFeatureRows)
-      : DataFrame =
-    fit(docs, buckets, epochs, localRowThreshold) match {
+      : DataFrame = Checkpoints.scoped { scope =>
+    fit(scope, docs, buckets, epochs, localRowThreshold) match {
       case Left((spark, scored, tau, _)) =>
         import spark.implicits._
         scored.toSeq
@@ -135,6 +136,7 @@ object QualityClassifier {
         scores.select(col("doc_id"), col("label"), col("score"),
           when(col("score") > tau, 1L).otherwise(0L).as("pred"))
     }
+  }
 
   /** Train and return only the model (weights + τ) — the serving
     * artifact for `scoreCol`. The scored-corpus checkpoint the fit
@@ -143,38 +145,36 @@ object QualityClassifier {
   def trainModel(docs: DataFrame, buckets: Int = Buckets,
       epochs: Int = Epochs,
       localRowThreshold: Long = graft.core.LocalBudget.MaxLocalFeatureRows)
-      : RocchioModel =
-    fit(docs, buckets, epochs, localRowThreshold) match {
+      : RocchioModel = Checkpoints.scoped { scope =>
+    fit(scope, docs, buckets, epochs, localRowThreshold) match {
       case Left((_, _, tau, w)) => RocchioModel(w, tau)
-      case Right((scores, w, tau)) =>
-        graft.core.Checkpoints.release(scores)
-        RocchioModel(w, tau)
+      case Right((_, w, tau)) => RocchioModel(w, tau)
     }
+  }
 
   // Left = local path (spark, scored rows, tau, weights);
-  // Right = distributed (checkpointed scores frame, weights, tau)
+  // Right = distributed (scores checkpointed in `scope`, weights, tau)
   private type LocalFit =
     (SparkSession, Array[(Long, Long, Long)], Long, Array[Long])
   private type DistFit = (DataFrame, Array[Long], Long)
 
-  private def fit(docs: DataFrame, buckets: Int, epochs: Int,
-      localRowThreshold: Long): Either[LocalFit, DistFit] = {
+  private def fit(scope: Checkpoints.Scope, docs: DataFrame, buckets: Int,
+      epochs: Int, localRowThreshold: Long): Either[LocalFit, DistFit] = {
     require(buckets >= 1 && epochs >= 0, "buckets >= 1 and epochs >= 0")
     val s = docs.sparkSession
     val d = docs.select(col("doc_id").cast("long").as("doc_id"),
       col("label").cast("long").as("label"), col("text"))
     // Feature table, built once: (doc_id, label, f, x). Carrying label
     // here lets the centroid pass run without a join back to the docs.
-    val feats = d
+    val feats = scope.checkpoint(d
       .select(col("doc_id"), col("label"),
         explode(split(lower(trim(col("text"))), "\\s+")).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy(col("doc_id"), col("label"),
         bucketOf(col("tok"), buckets).as("f"))
-      .agg(count(lit(1)).as("x"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("x")))
     // Docs with no tokens still get scored (score = 0, the empty dot).
-    val docsL = d.select(col("doc_id"), col("label")).localCheckpoint(true)
+    val docsL = scope.checkpoint(d.select(col("doc_id"), col("label")))
 
     // Fixed-width feature rows (4 longs ≈ 132 B collected): the
     // LocalBudget guard with a static row model.
@@ -185,8 +185,7 @@ object QualityClassifier {
       val fr = feats.collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
       val dr = docsL.collect().map(r => (r.getLong(0), r.getLong(1)))
-      graft.core.Checkpoints.release(feats)
-      graft.core.Checkpoints.release(docsL)
+      scope.keep()
       val (scored, tau, w) = localFit(dr, fr, buckets, epochs)
       return Left((s, scored, tau, w))
     }
@@ -210,15 +209,13 @@ object QualityClassifier {
         StructField("wv", LongType, nullable = false))))
 
     // ---- scoring pass: one broadcast join + one per-doc sum ----------
-    val scores = docsL
+    val scores = scope.checkpoint(docsL
       .join(feats.join(broadcast(wDf), Seq("f"))
           .groupBy(col("doc_id")).agg(sum(col("x") * col("wv")).as("dot")),
         Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("label"),
-        coalesce(col("dot"), lit(0L)).as("score"))
-      .localCheckpoint(true)
-    graft.core.Checkpoints.release(feats)
-    graft.core.Checkpoints.release(docsL)
+        coalesce(col("dot"), lit(0L)).as("score")))
+    scope.keep(scores)
 
     // ---- threshold init + shrinking-step refinement -------------------
     // Overflow bound (cf. Louvain.runWeighted's Σw·k_max note): these

@@ -64,17 +64,17 @@ object Scoring {
     * order-independent and oracle-hashable.
     */
   def bm25(docs: DataFrame, terms: Seq[String], k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
+      b: Double = 0.75): DataFrame = graft.core.Checkpoints.scoped { scope =>
     // query terms pass through the document tokenizer's normalization —
     // an unlowered term would otherwise silently never match anything
     val qTerms = terms.map(_.trim.toLowerCase).filter(_.nonEmpty).distinct
     require(qTerms.nonEmpty, "bm25: need at least one non-empty query term")
     // tokenize once: stats, dfs and the returned tf plan all derive from
     // this checkpoint instead of re-scanning the corpus three times
-    // (Bench/Verify release it via core.Checkpoints after materializing)
-    val base = docs.select(col("doc_id"), toks(col("text")).as("tk"))
-      .withColumn("dl", size(col("tk")))
-      .localCheckpoint()
+    // (a leaf of the result: release(result) frees it)
+    val base = scope.checkpoint(docs
+      .select(col("doc_id"), toks(col("text")).as("tk"))
+      .withColumn("dl", size(col("tk"))))
     val statsRow = base.agg(count(lit(1)), sum(col("dl"))).head()
     val nDocs = statsRow.getLong(0)
     require(nDocs > 0, "bm25: empty corpus")
@@ -126,21 +126,21 @@ object Scoring {
     * micro-units before the per-doc sum (see object doc). Documents
     * with fewer than two tokens have no bigrams and are absent.
     */
-  def bigramNll(docs: DataFrame, k: Double = 0.5): DataFrame = {
+  def bigramNll(docs: DataFrame, k: Double = 0.5): DataFrame =
+      graft.core.Checkpoints.scoped { scope =>
     require(k > 0, s"add-k smoothing needs k > 0, got $k")
     val base = docs.select(col("doc_id"), toks(col("text")).as("tk"))
     // checkpoint the extracted bigrams: the returned plan reads them on
     // BOTH sides of the scoring join (model counts + per-doc stream), so
     // an unmaterialized subtree would tokenize the corpus twice more
-    // (Bench/Verify release the blocks via core.Checkpoints)
-    val bigrams = base
+    // (a leaf of the result: release(result) frees it)
+    val bigrams = scope.checkpoint(base
       .select(col("doc_id"), explode(arrays_zip(
         slice(col("tk"), lit(1), greatest(size(col("tk")) - 1, lit(0))).as("w1"),
         slice(col("tk"), lit(2), greatest(size(col("tk")) - 1, lit(0))).as("w2")))
         .as("bg"))
       .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .filter(col("w1") =!= "" && col("w2") =!= "")
-      .localCheckpoint()
+      .filter(col("w1") =!= "" && col("w2") =!= ""))
     val c2 = bigrams.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("c2"))
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))

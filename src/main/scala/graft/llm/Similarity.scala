@@ -164,39 +164,34 @@ object Similarity {
     * so iterations scale linearly with the corpus.
     */
   def kmeans(spark: SparkSession, emb: DataFrame, k: Int, iters: Int = 5)
-      : DataFrame = {
+      : DataFrame = graft.core.Checkpoints.scoped { s =>
     // cache the corpus for the refine loop: every iteration re-reads it
     // for assignment + mean aggregation, so an uncached loop costs
     // 2·iters full corpus scans — the dominant I/O at 100 TB (disk-
     // spillable storage level, same trade MLlib's KMeans makes).
     // If the CALLER already persisted emb, reuse their cache and leave
-    // its lifecycle alone — persist+unpersist here would silently drop
-    // a cache the caller still depends on (CacheManager keys by plan).
-    val callerCached =
-      emb.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val vecs = if (callerCached) emb
-      else emb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // its lifecycle alone — holding it here would silently drop a cache
+    // the caller still depends on (CacheManager keys by plan).
+    val vecs =
+      if (emb.storageLevel != org.apache.spark.storage.StorageLevel.NONE) emb
+      else s.cache(emb)
     var cents = seedCentroids(vecs, k)
-    var prev: Option[DataFrame] = None
     var i = 0
     while (i < iters) {
-      val next = kmeansRefine(spark, assignToCentroids(vecs, cents)).cache()
+      val next = s.cache(kmeansRefine(spark, assignToCentroids(vecs, cents)))
       next.count()
       // drop the previous iteration's cached centroids — repeated kmeans
       // calls in a long-lived session must not accumulate cached blocks
-      prev.foreach(_.unpersist())
-      prev = Some(next)
+      s.keep(vecs, next)
       cents = next
       i += 1
     }
-    // final assignment: collect the k refined centroids BEFORE releasing
+    // final assignment: collect the k refined centroids BEFORE freeing
     // the loop caches, so the returned (lazy) plan holds only literals
-    val out = assignToCentroids(emb,
-      cents.select(col("c_id"), col("c_vec")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq)
-    prev.foreach(_.unpersist())
-    if (!callerCached) vecs.unpersist()
-    out
+    val centRows = cents.select(col("c_id"), col("c_vec")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
+    s.keep()
+    assignToCentroids(emb, centRows)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. '23): k-means
@@ -548,19 +543,17 @@ object Similarity {
       k: Int = 10, m: Int = 6, efSearch: Int = 24, rounds: Int = 3,
       nCentroids: Int = 0, graphProbes: Int = 2, dim: Int = 64,
       entryProbes: Int = 4)
-      : DataFrame = {
+      : DataFrame = graft.core.Checkpoints.scoped { scope =>
     require(k >= 1 && m >= 1 && efSearch >= k && rounds >= 1,
       s"need k>=1, m>=1, efSearch>=k, rounds>=1")
     require(entryProbes >= 0, "entryProbes must be >= 0 (0 = all buckets)")
     import spark.implicits._
     // checkpointed (not cached) because the corpus is re-read by the
     // probe explode, the adjacency build, the entry argmax, and one
-    // rescore per beam round — and a checkpoint is released by the
-    // harness's Checkpoints.release walk over the returned plan, where
-    // a cache() would leak across queries
-    val allVecs = emb.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true)
+    // rescore per beam round; like the three checkpoints below it is a
+    // leaf of the result, freed by release(result)
+    val allVecs = scope.checkpoint(emb.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding")))
     // Clone-cluster collapse (the r9 simhash lesson in vector space):
     // exact-duplicate embeddings — the dominant shape of real corpora
     // (boilerplate, mirrored documents) — all land in the same buckets,
@@ -571,10 +564,9 @@ object Similarity {
     // (min vec_id — pure equality grouping, no float hashing), expand
     // the final beam back to member ids; cosine depends only on the
     // vector, so members inherit the rep's score EXACTLY.
-    val vecs = allVecs.groupBy(col("embedding"))
+    val vecs = scope.checkpoint(allVecs.groupBy(col("embedding"))
       .agg(min(col("vec_id")).as("vec_id"))
-      .select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true)
+      .select(col("vec_id"), col("embedding")))
     val nCent =
       if (nCentroids > 0) nCentroids else autoCentroids(vecs.count())
     val seeds = seedCentroids(vecs, nCent)
@@ -590,7 +582,8 @@ object Similarity {
       col("embedding").as("src_vec"))
     val bSide = probed.select(col("cid"), col("vec_id").as("dst"),
       col("embedding").as("dst_vec"))
-    val adj = aSide.join(bSide, Seq("cid"))
+    // reused by every beam round
+    val adj = scope.checkpoint(aSide.join(bSide, Seq("cid"))
       .filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"),
         cosine(col("src_vec"), col("dst_vec")).as("sim"))
@@ -598,8 +591,7 @@ object Similarity {
       .withColumn("rn", row_number().over(
         Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)))
       .filter(col("rn") <= m)
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true)   // reused by every beam round
+      .select(col("src"), col("dst")))
     // ---- entry points: most central vector per bucket ---------------
     val centDf = cents.toDF("c_id", "c_vec")
     val entries = assignToCentroids(vecs, cents)
@@ -609,7 +601,7 @@ object Similarity {
           (-col("vec_id")).as("nid")).as("s"))
       .groupBy("centroid_id").agg(max(col("s")).as("s"))
       .select(col("centroid_id"), (-col("s.nid")).as("vec_id"))
-    val q = queries.select(col("q_id"), col("q_vec")).localCheckpoint(true)
+    val q = scope.checkpoint(queries.select(col("q_id"), col("q_vec")))
     // ---- search: coarse routing, then beam expansion rounds ---------
     // entry routing is the same map-side centroid argmax as the build's
     // probe step — no shuffle, fan-out fixed at entryProbes per query

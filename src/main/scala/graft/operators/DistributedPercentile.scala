@@ -129,12 +129,11 @@ object DistributedPercentile {
     // The cut positions only affect which partition a rank lands in,
     // never the selected values or the interpolation — results are
     // bit-identical for any bucket count.
-    val parted = tagged
-      .repartitionByRange(rangeBuckets(tagged, buckets),
-        col("__t"), col("__g"), col("__v"))
-      .withColumn("__part", spark_partition_id())
-      .localCheckpoint()
-    try {
+    graft.core.Checkpoints.scoped { scope =>
+      val parted = scope.checkpoint(tagged
+        .repartitionByRange(rangeBuckets(tagged, buckets),
+          col("__t"), col("__g"), col("__v"))
+        .withColumn("__part", spark_partition_id()))
       // O(partitions + groups·columns) — bounded by group cardinality
       val sub = parted.groupBy(col("__part"), col("__t"), col("__g"))
         .agg(count(lit(1)).as("__n"))
@@ -219,6 +218,6 @@ object DistributedPercentile {
       }
       spark.createDataFrame(
         spark.sparkContext.parallelize(out, 1), outSchema)
-    } finally graft.core.Checkpoints.release(parted)
+    }
   }
 }

@@ -67,7 +67,7 @@ object PrefixSum {
     * long column per requested weight.
     */
   def runningMulti(df: DataFrame, keyCol: String, weightCols: Seq[String],
-      buckets: Int = 0): DataFrame = {
+      buckets: Int = 0): DataFrame = graft.core.Checkpoints.scoped { scope =>
     require(buckets >= 0, s"buckets must be >= 0 (0 = auto), got $buckets")
     require(weightCols.nonEmpty, "need at least one weight column")
     val wTmp = weightCols.indices.map(i => s"__w$i")
@@ -90,10 +90,9 @@ object PrefixSum {
     // Volume-adaptive bucket count (buckets = 0) is the shared
     // DistributedPercentile.rangeBuckets grain. Cut positions never
     // change a prefix sum (it is order-defined, not cut-defined).
-    val parted = df.repartitionByRange(
+    val parted = scope.checkpoint(df.repartitionByRange(
       DistributedPercentile.rangeBuckets(df, buckets), col(keyCol))
-      .withColumn("__bucket", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("__bucket", spark_partition_id()))
     val work = weightCols.zip(wTmp).foldLeft(parted) { case (d, (w, t)) =>
       d.withColumn(t, coalesce(col(w).cast("long"), lit(0L)))
     }

@@ -2250,14 +2250,14 @@ object Graph {
     // 100 TB this is the production shape for a growing graph: per
     // batch, work ∝ delta + one label-map join, never a full recompute.
     GQ("g45_incremental_wcc",
-      (s, _) => {
+      (s, _) => graft.core.Checkpoints.scoped { scope =>
         val pg = g(s)
         val e = pg.projection.select("src", "dst")
         val bucket = pmod(xxhash64(col("src"), col("dst")), lit(10))
         val old = e.filter(bucket =!= 0)
         val delta = e.filter(bucket === 0)
-        val base = graft.algo.GraphComponents.wcc(s,
-          pg.nodes.select("nodeId"), old).cache()
+        val base = scope.cache(graft.algo.GraphComponents.wcc(s,
+          pg.nodes.select("nodeId"), old))
         val contracted = delta
           .join(base.select(col("node").as("src"),
             col("component").as("cs")), Seq("src"))
@@ -2268,11 +2268,10 @@ object Graph {
           .distinct()
         val merged = graft.algo.GraphComponents.wcc(s, labelNodes,
           contracted)
-        graft.core.Checkpoints.owns(
-          base.join(merged.select(col("node").as("component"),
-              col("component").as("final_component")), Seq("component"))
-            .select(col("node").as("node_id"),
-              col("final_component").as("component")), base)
+        base.join(merged.select(col("node").as("component"),
+            col("component").as("final_component")), Seq("component"))
+          .select(col("node").as("node_id"),
+            col("final_component").as("component"))
       },
       sliceOracle(s"""WITH ${Oracle.edgesCte},
               |${Oracle.wccChain(Oracle.HopsWcc)}
@@ -2294,7 +2293,7 @@ object Graph {
     // batch, candidate volume ∝ Σ_(new edge) |N(a) ∩ N(b)| — delta-
     // proportional, never a recount of the standing graph.
     GQ("g46_incremental_triangles",
-      (s, _) => {
+      (s, _) => graft.core.Checkpoints.scoped { scope =>
         val pg = g(s)
         val e = pg.projection.select("src", "dst")
         val bucket = pmod(xxhash64(col("src"), col("dst")), lit(10))
@@ -2302,17 +2301,15 @@ object Graph {
           df.filter(col("src") =!= col("dst"))
             .select(least(col("src"), col("dst")).as("a"),
               greatest(col("src"), col("dst")).as("b")).distinct()
-        val undOld = und(e.filter(bucket =!= 0)).cache()
+        val undOld = scope.cache(und(e.filter(bucket =!= 0)))
         // delta edges whose canonical form is genuinely absent from the
         // standing graph (the multigraph can carry both orientations in
         // different buckets — those are not new undirected edges)
-        val undNew = und(e.filter(bucket === 0))
-          .join(undOld, Seq("a", "b"), "left_anti").cache()
-        graft.core.Checkpoints.owns(
-          graft.algo.Triangles.incrementalPerNode(
-              pg.nodes.select("nodeId"), undOld, undNew)
-            .select(col("node").as("node_id"), col("n_triangles")),
-          undOld, undNew)
+        val undNew = scope.cache(und(e.filter(bucket === 0))
+          .join(undOld, Seq("a", "b"), "left_anti"))
+        graft.algo.Triangles.incrementalPerNode(
+            pg.nodes.select("nodeId"), undOld, undNew)
+          .select(col("node").as("node_id"), col("n_triangles"))
       },
       sliceOracle(triangleOracleSql)),
 

@@ -851,11 +851,11 @@ object Llm {
     // ---- IVF-style pruned ANN (the scale path): seed → assign →
     // k-means centroid refinement (typed Aggregator) → re-assign → probe
     GQ("llm_ann_ivf",
-      (s, dir) => {
+      (s, dir) => graft.core.Checkpoints.scoped { scope =>
         val emb = t(s, dir).embeddings
         val seeds = Similarity.seedCentroids(emb, 16)
-        val refined = Similarity.kmeansRefine(s,
-          Similarity.assignToCentroids(emb, seeds)).cache()
+        val refined = scope.cache(Similarity.kmeansRefine(s,
+          Similarity.assignToCentroids(emb, seeds)))
         val assigned = Similarity.assignToCentroids(emb, refined)
         Similarity.ivfTopK(s, assigned, refined, queryVec(s, dir),
           k = 20, nProbe = 4)
@@ -1070,11 +1070,11 @@ object Llm {
     // composed; both deterministic, so the doubly-approximate result
     // hash-verifies.
     GQ("llm_pq_ivf",
-      (s, dir) => {
+      (s, dir) => graft.core.Checkpoints.scoped { scope =>
         val emb = t(s, dir).embeddings
         val seeds = Similarity.seedCentroids(emb, 16)
-        val refined = Similarity.kmeansRefine(s,
-          Similarity.assignToCentroids(emb, seeds)).cache()
+        val refined = scope.cache(Similarity.kmeansRefine(s,
+          Similarity.assignToCentroids(emb, seeds)))
         val cents = refined.collect()
           .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
         val model = Similarity.pqTrain(s, emb,

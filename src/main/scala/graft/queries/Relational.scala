@@ -1138,7 +1138,7 @@ object Relational {
     // green + after red would localize the break to the overwrite
     // itself; both red to the filter/checkpoint leg.
     GQ("q48b_sink_delete",
-      (s, dir) => {
+      (s, dir) => graft.core.Checkpoints.scoped { scope =>
         import org.apache.spark.sql.Row
         import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
         val orders = t(s, dir).orders
@@ -1148,9 +1148,8 @@ object Relational {
           val path = scratch + "/orders"
           graft.sources.Sinks.parquet(orders, path,
             partitionBy = Seq("o_orderstatus"), maxRecordsPerFile = 2000)
-          val retained = s.read.parquet(path)
-            .filter(col("o_orderstatus") =!= "O")
-            .localCheckpoint(true)
+          val retained = scope.checkpoint(s.read.parquet(path)
+            .filter(col("o_orderstatus") =!= "O"))
           val nRet = retained.groupBy(col("o_orderstatus"))
             .agg(count(lit(1)).as("n"))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1166,7 +1165,7 @@ object Relational {
           val after = s.read.parquet(path).groupBy(col("o_orderstatus"))
             .agg(count(lit(1)).as("n"))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-          graft.core.Checkpoints.release(retained)
+          scope.keep()
           val rows = statuses.map { st =>
             Row(st, nRet.getOrElse(st, 0L), after.getOrElse(st, 0L))
           }
@@ -1693,19 +1692,19 @@ object Relational {
     // lift = support·n_baskets / (cnt_a·cnt_b), one truncating division
     // shared by both engines.
     GQ("q60_frequent_pairs",
-      (s, dir) => {
+      (s, dir) => graft.core.Checkpoints.scoped { scope =>
         val tt = t(s, dir)
         // cached: three consumers (basket count, per-brand counts, pair
         // explode) would otherwise re-run the join+basket agg. AQE sizes
         // the basket reduce by its shuffled volume (core.Sessions) and
         // the cache keeps that layout, so consumers read a few
         // partitions, not shuffle.partitions near-empty ones
-        val bk = tt.lineitem.select(col("l_orderkey"), col("l_partkey"))
+        val bk = scope.cache(tt.lineitem
+          .select(col("l_orderkey"), col("l_partkey"))
           .join(broadcast(tt.part.select(col("p_partkey").as("l_partkey"),
             col("p_brand"))), Seq("l_partkey"))
           .groupBy(col("l_orderkey"))
-          .agg(sort_array(collect_set(col("p_brand"))).as("brands"))
-          .cache()
+          .agg(sort_array(collect_set(col("p_brand"))).as("brands")))
         val nb = bk.agg(count(lit(1)).as("n_baskets"))
         val cnt = bk.select(explode(col("brands")).as("p_brand"))
           .groupBy(col("p_brand")).agg(count(lit(1)).as("c"))
@@ -1721,7 +1720,7 @@ object Relational {
             col("p.brand_b").as("brand_b"))
           .agg(count(lit(1)).as("support"))
           .filter(col("support") >= 100)
-        graft.core.Checkpoints.owns(pairs
+        pairs
           .join(broadcast(cnt.select(col("p_brand").as("brand_a"),
             col("c").as("ca"))), Seq("brand_a"))
           .join(broadcast(cnt.select(col("p_brand").as("brand_b"),
@@ -1735,7 +1734,7 @@ object Relational {
             // the shared truncating integral divide (BIGINT result)
             expr("""(CAST(1000000 AS DECIMAL(38,0)) * support * n_baskets)
                     div (CAST(ca AS DECIMAL(38,0)) * cb)""")
-              .as("lift_micro")), bk)
+              .as("lift_micro"))
       },
       Some("""WITH cb AS (
              |  SELECT DISTINCT l.l_orderkey, p.p_brand
@@ -1862,14 +1861,13 @@ object Relational {
     // oracle replays register construction, merge, and both estimates,
     // so the whole algebra hash-verifies.
     GQ("q63_hll_setops",
-      (s, dir) => {
+      (s, dir) => graft.core.Checkpoints.scoped { scope =>
         import graft.operators.HyperLogLog
         val ords = t(s, dir).orders
           .filter(col("o_orderstatus").isin("F", "O"))
           .select(col("o_orderstatus").as("g"),
             col("o_custkey").cast("string").as("ck"))
-        val regs = HyperLogLog.sketchBy(ords, col("ck"), Seq("g"))
-          .cache()
+        val regs = scope.cache(HyperLogLog.sketchBy(ords, col("ck"), Seq("g")))
         def est(r: DataFrame, nm: String) =
           HyperLogLog.estimate(r).select(col("n_est").as(nm))
         val estA = est(regs.filter(col("g") === "F")
@@ -1892,14 +1890,13 @@ object Relational {
               .as("ho"))
           .filter(col("hf") === 1 && col("ho") === 1)
           .agg(count(lit(1)).as("n_inter_exact"))
-        graft.core.Checkpoints.owns(
-          exact.crossJoin(inter).crossJoin(estA).crossJoin(estB)
-            .crossJoin(estU)
-            .select(col("n_a_exact"), col("n_a_est"), col("n_b_exact"),
-              col("n_b_est"), col("n_union_exact"), col("n_union_est"),
-              col("n_inter_exact"),
-              greatest(col("n_a_est") + col("n_b_est") - col("n_union_est"),
-                lit(0L)).as("n_inter_est")), regs)
+        exact.crossJoin(inter).crossJoin(estA).crossJoin(estB)
+          .crossJoin(estU)
+          .select(col("n_a_exact"), col("n_a_est"), col("n_b_exact"),
+            col("n_b_est"), col("n_union_exact"), col("n_union_est"),
+            col("n_inter_exact"),
+            greatest(col("n_a_est") + col("n_b_est") - col("n_union_est"),
+              lit(0L)).as("n_inter_est"))
       },
       Some {
         val est = (src: String) =>
@@ -2379,7 +2376,7 @@ object Relational {
     // its verified matches (1-hop min-label — the transitive-closure
     // version is the CC kernel llm_dedup_corpus already certifies).
     GQ("q71_entity_resolution",
-      (s, dir) => {
+      (s, dir) => graft.core.Checkpoints.scoped { scope =>
         val base = t(s, dir).part.select(col("p_partkey").as("id"),
           concat_ws(" ", col("p_name"), col("p_brand"), col("p_type"))
             .as("name"),
@@ -2399,9 +2396,8 @@ object Relational {
         // however many clones the corpus stacks on each tuple. Groups
         // remember their min id (the label seed) and size (the match
         // count contribution).
-        val grp = recs.groupBy(col("name"), col("sz"), col("pc"))
-          .agg(min(col("id")).as("gmin"), count(lit(1)).as("gsz"))
-          .cache()
+        val grp = scope.cache(recs.groupBy(col("name"), col("sz"), col("pc"))
+          .agg(min(col("id")).as("gmin"), count(lit(1)).as("gsz")))
         val blocked = grp.withColumn("bk", expr("substring(name, 3, 8)"))
         // gmin < gmin orders distinct tuples (ids are unique, so group
         // minima are too); clone pairs never reach the join
@@ -2429,11 +2425,10 @@ object Relational {
             least(col("gmin"), coalesce(col("mng"), col("gmin")))
               .as("gentity"),
             coalesce(col("msz"), lit(0L)).as("mout"))
-        graft.core.Checkpoints.owns(
-          recs.join(gfull, Seq("name", "sz", "pc"))
-            .select(col("id").as("record_id"),
-              col("gentity").as("entity_id"),
-              (col("gsz") - 1 + col("mout")).as("n_matches")), grp)
+        recs.join(gfull, Seq("name", "sz", "pc"))
+          .select(col("id").as("record_id"),
+            col("gentity").as("entity_id"),
+            (col("gsz") - 1 + col("mout")).as("n_matches"))
       },
       Some("""WITH base AS (
              |  SELECT p_partkey AS id,
@@ -2476,16 +2471,15 @@ object Relational {
     // are integer-exact in both engines; 3.5 MADs is the conventional
     // outlier fence.
     GQ("q72_anomaly_mad",
-      (s, dir) => {
+      (s, dir) => graft.core.Checkpoints.scoped { scope =>
         // cached: the day table is tiny (bounded by the time range) but
         // three consumers (median, deviations, MAD) would otherwise
         // re-run the FACT scan + day aggregation each
-        val daily = t(s, dir).orders
+        val daily = scope.cache(t(s, dir).orders
           .groupBy(date_format(to_date(col("o_orderdate")), "yyyy-MM-dd")
             .as("day"))
           .agg(sum(round(col("o_totalprice") * 100).cast("long"))
-            .as("rev_cents"))
-          .cache()
+            .as("rev_cents")))
         val med = daily.agg(
           expr("cast(percentile(2 * rev_cents, 0.5) as bigint)")
             .as("med2x"))
@@ -2494,12 +2488,11 @@ object Relational {
             - col("med2x")))
         val mad = dev.agg(
           expr("cast(percentile(2 * dev2x, 0.5) as bigint)").as("mad2x2"))
-        graft.core.Checkpoints.owns(dev.crossJoin(broadcast(mad))
+        dev.crossJoin(broadcast(mad))
           .select(col("day"), col("rev_cents"),
             expr("(2000000 * dev2x) div mad2x2").as("score_micro"))
           .withColumn("is_outlier",
-            when(col("score_micro") >= 3500000L, 1L).otherwise(0L)),
-          daily)
+            when(col("score_micro") >= 3500000L, 1L).otherwise(0L))
       },
       Some("""WITH daily AS (
              |  SELECT CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS day,

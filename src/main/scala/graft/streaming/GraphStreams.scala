@@ -45,51 +45,14 @@ object GraphStreams {
     val q = src.writeStream
       .option("checkpointLocation", ck)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions.{col, lit}
-        val next = EdgeListIngest.appendRaw(spark, pg, batch,
-          cacheCandidates = false)
         // materialize BEFORE the batch frame expires / old state drops.
-        // ONE tagged-union checkpoint instead of three separate ones:
-        // nodes, edges and pending all hang off the same candidate/
-        // backlog subtrees, so materializing them as one action lets the
-        // scheduler reuse the shared exchanges within a single plan and
-        // pays one checkpoint job per batch instead of three (the query
-        // ran 50 jobs for 2 batches). The three graph frames are narrow
-        // tag-filters over the shared checkpoint; releasing any of them
-        // releases the one underlying RDD (release is idempotent).
-        val nullS = lit(null).cast("string")
-        val nullD = lit(null).cast("double")
-        val tagged = next.nodes.select(lit(0).as("tag"), col("nodeId"),
-            col("x"), col("y"), nullS.as("src"), nullS.as("dst"),
-            nullS.as("roadId"), nullD.as("cost"))
-          .unionByName(next.edges.select(lit(1).as("tag"),
-            nullS.as("nodeId"), nullD.as("x"), nullD.as("y"),
-            col("src"), col("dst"), col("roadId"), col("cost")))
-          .unionByName(next.pending.get.select(lit(2).as("tag"),
-            nullS.as("nodeId"), nullD.as("x"), nullD.as("y"),
-            col("src"), col("dst"), col("roadId"), col("cost")))
-          .localCheckpoint(true)
-        val mat = PropertyGraph(
-          tagged.filter(col("tag") === 0)
-            .select(col("nodeId"), col("x"), col("y")),
-          tagged.filter(col("tag") === 1)
-            .select(col("src"), col("dst"), col("roadId"), col("cost")),
-          pending = Some(tagged.filter(col("tag") === 2)
-            .select(col("src"), col("dst"), col("roadId"), col("cost"))))
-        if (generation > 0) {
-          graft.core.Checkpoints.release(pg.nodes)
-          graft.core.Checkpoints.release(pg.edges)
-          pg.pending.foreach(graft.core.Checkpoints.release)
-        }
-        // free only frames appendRaw itself ADDED this batch (with
-        // cacheCandidates = false that is none — next.underlying aliases
-        // pg.underlying). Releasing all of next.underlying here freed
-        // the CALLER-supplied initial graph's registered caches on the
-        // first micro-batch while the caller may still hold that graph
-        // (r16 advice).
-        next.underlying.diff(pg.underlying)
-          .foreach(graft.core.Checkpoints.release)
-        pg = mat
+        // appendRaw without cached candidates adds nothing to
+        // `underlying`, so the only storage to free is the generation
+        // this one replaces — never the caller's initial graph.
+        val next = EdgeListIngest.appendRaw(spark, pg, batch,
+          cacheCandidates = false).checkpoint()
+        if (generation > 0) pg.unpersistAll()
+        pg = next
         generation += 1
         ()
       }

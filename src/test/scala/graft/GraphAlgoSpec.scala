@@ -305,6 +305,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       (col("cost") * 4).cast("long").as("w"))
     val nodes = (0 until n).map(i => s"n$i").toDF("node")
     val pairs = edges.withColumn("n_pairs", lit(1L))
+    // a 41-node chain: six pointer-jumping supersteps to converge
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val rows: Seq[(String, () => Any)] = Seq(
       "pagerank" -> (() => algo.PageRank.run(nodes, edges, iters = 3,
         localEdgeThreshold = 0L)),
@@ -362,6 +364,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       "yen" -> (() => algo.DistributedYen.run(spark, costs, "n0", "n1", 3)),
       "ch" -> (() => algo.DistributedCH.build(spark, nodes, costs,
         localFinishEdges = 0L)),
+      "dedup-groups" -> (() => llm.Dedup.transitiveGroups(chain,
+        localThreshold = 0L)),
       // fails on purpose: the random digraph needs more than one Borůvka
       // round and more than one color
       "mst-fails" -> (() => intercept[IllegalStateException](
@@ -369,7 +373,11 @@ class GraphAlgoSpec extends AnyFunSuite {
           localEdgeThreshold = 0L))),
       "coloring-fails" -> (() => intercept[IllegalStateException](
         algo.Coloring.greedy(spark, nodes, edges, maxColors = 1,
-          localEdgeThreshold = 0L))))
+          localEdgeThreshold = 0L))),
+      // and the chain needs more than one superstep
+      "dedup-groups-fails" -> (() => intercept[IllegalStateException](
+        llm.Dedup.transitiveGroups(chain, maxIter = 1,
+          localThreshold = 0L))))
     def finish(out: Any): Unit = out match {
       case df: DataFrame @unchecked =>
         df.count(); core.Checkpoints.release(df)

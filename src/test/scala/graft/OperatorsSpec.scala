@@ -402,19 +402,19 @@ class OperatorsSpec extends AnyFunSuite {
     assert(disagree < 10, s"portableRound vs round disagreed on $disagree/10000")
   }
 
-  test("Checkpoints.owns: registered caches release with the result " +
-      "(round-13 advice: query-internal cache() lingered for the rest " +
-      "of a bench run)") {
+  test("a scope's cache read by its result is freed by release(result)") {
     import org.apache.spark.storage.StorageLevel
-    val shared = spark.range(100).select((col("id") % 7).as("k")).cache()
-    val result = core.Checkpoints.owns(
-      shared.groupBy("k").count().agg(sum("count").as("n")), shared)
+    var shared: org.apache.spark.sql.DataFrame = null
+    val result = core.Checkpoints.scoped { s =>
+      shared = s.cache(spark.range(100).select((col("id") % 7).as("k")))
+      shared.groupBy("k").count().agg(sum("count").as("n"))
+    }
     result.collect()
     assert(shared.storageLevel != StorageLevel.NONE,
       "shared intermediate should be cached while the result is live")
     core.Checkpoints.release(result)
     assert(shared.storageLevel == StorageLevel.NONE,
-      "release(result) must unpersist the registered intermediate")
+      "release(result) must unpersist the scope's intermediate")
     // idempotent: releasing again must not throw
     core.Checkpoints.release(result)
   }
