@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import org.apache.spark.scheduler._
+
 /** Dev utility: time registry queries (same session config + noop
   * forcing as Bench) without paying for the other ~75. Repeats N times,
   * interleaving the named queries per rep, so cache-warm vs cold cost and
@@ -29,36 +32,59 @@ object ProfileQuery {
       if (spark.conf.isModifiable(k)) spark.conf.set(k, v)
     }
     // job/stage/task counters: ambient-load-proof signals (a query's
-    // scheduling footprint is deterministic where its wall time is not)
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val stages = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
+    // scheduling footprint is deterministic where its wall time is not).
+    // Each run's jobs carry its tag as a local property (inherited by the
+    // threads Spark SQL spawns); a stage counts for the tag of the first
+    // job that listed it, whenever its completion event arrives.
+    val sc = spark.sparkContext
+    val TagKey = "graft.profile.tag"
+    val jobTag = new ConcurrentHashMap[Int, String]
+    val stageTag = new ConcurrentHashMap[Int, String]
+    val counts = new ConcurrentHashMap[String, Array[Long]] // jobs, stages, tasks
+    val ended = new ConcurrentHashMap[String, CountDownLatch]
+    def of(tag: String): Array[Long] = counts.computeIfAbsent(tag, _ => new Array[Long](3))
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(TagKey))).foreach { tag =>
+          jobTag.put(j.jobId, tag)
+          of(tag)(0) += 1
+          j.stageIds.foreach(stageTag.putIfAbsent(_, tag))
         }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(s.stageInfo.numTasks.toLong); ()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        Option(stageTag.get(s.stageInfo.stageId)).foreach { tag =>
+          of(tag)(1) += 1
+          of(tag)(2) += s.stageInfo.numTasks
         }
-      })
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        Option(jobTag.get(j.jobId)).flatMap(t => Option(ended.get(t)))
+          .foreach(_.countDown())
+    })
+    /** Runs a marker job and waits for its end event: the bus delivers
+      * events in order, so by then every earlier run's are counted.
+      */
+    def drain(tag: String): Unit = {
+      val latch = new CountDownLatch(1)
+      ended.put(tag, latch)
+      sc.setLocalProperty(TagKey, tag)
+      sc.parallelize(Seq(0), 1).count()
+      latch.await(60, TimeUnit.SECONDS)
+    }
     spark.range(1L << 20).selectExpr("id % 7 AS k").groupBy("k").count()
       .count() // JIT/scheduler warmup, as in Bench
     (1 to reps).foreach { i =>
       names.foreach { name =>
         val fn = SparkEntry.queries(name)
-        val (j0, s0, t0c) = (jobs.get, stages.get, tasks.get)
+        val tag = s"$name#$i"
+        sc.setLocalProperty(TagKey, tag)
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         df.write.format("noop").mode("overwrite").save()
         graft.core.Checkpoints.release(df)
-        println(f"[profile] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"jobs=${jobs.get - j0} stages=${stages.get - s0} " +
-          f"tasks=${tasks.get - t0c}")
+        val secs = (System.nanoTime() - t0) / 1e9
+        drain(s"drain $tag")
+        val Array(jobs, stages, tasks) = of(tag)
+        println(f"[profile] $name rep$i: $secs%.2f s " +
+          f"jobs=$jobs stages=$stages tasks=$tasks")
       }
     }
     spark.stop()

@@ -66,87 +66,53 @@ object Betweenness {
     val e = s.cache(edges.select(col("src").cast("string"),
       col("dst").cast("string"), col("cost").cast("double")))
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val pairs = e.collect().map(r =>
-        (r.getString(0), r.getString(1), r.getDouble(2)))
-      val nodeIds = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
-      local(spark, nodeIds, pairs, sources)
+      local(spark, graft.core.LocalBudget.collectLocal(e, Some(nodes),
+        Some(col("cost"))), sources)
     } else distributed(s, spark, nodes, e, sources, maxHops)
   }
 
-  /** Per-source Brandes: binary-heap Dijkstra, topological sweep by
-    * ascending dist, integer σ forward, micro fixed-point δ backward.
-    * Bit-identical to tools/betweenness_golden.py.
+  /** Per-source Brandes over `g` (its costs are the edge costs): Dijkstra,
+    * topological sweep by ascending dist, integer σ forward, micro
+    * fixed-point δ backward. Bit-identical to
+    * tools/betweenness_golden.py.
     */
-  private[algo] def local(spark: SparkSession, nodeIds: Array[String],
-      edges: Array[(String, String, Double)],
+  private def local(spark: SparkSession, g: LocalGraph,
       sources: Seq[String]): DataFrame = {
     import spark.implicits._
-    val present = nodeIds.toSet
-    val srcs = sources.filter(present.contains)
-    val adj = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[(String, Double)]]
-    edges.foreach { case (s, d, c) =>
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[(String, Double)]) += ((d, c))
-    }
-    val empty = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val bc = scala.collection.mutable.HashMap.empty[String, Long]
-      .withDefaultValue(0L)
+    val present = g.inNodes
+    val srcs = sources.map(g.find)
+      .filter(v => v >= 0 && present(v))
+    val bc = new Array[Long](g.n)
     // the independent per-source passes parallelize across the cluster
     // exactly like apsp's local mode; driver-side loop is fine at spec
     // scale and keeps the audit 1:1 with the golden script
     srcs.foreach { src =>
-      val dist = scala.collection.mutable.HashMap.empty[String, Double]
-      dist(src) = 0.0
-      val pq = scala.collection.mutable.PriorityQueue
-        .empty[(Double, String)](Ordering.by[(Double, String), Double](_._1).reverse)
-      pq.enqueue((0.0, src))
-      while (pq.nonEmpty) {
-        val (d, u) = pq.dequeue()
-        if (d <= dist.getOrElse(u, Double.PositiveInfinity)) {
-          adj.getOrElse(u, empty).foreach { case (v, c) =>
-            val nd = d + c
-            if (nd < dist.getOrElse(v, Double.PositiveInfinity)) {
-              dist(v) = nd
-              pq.enqueue((nd, v))
-            }
-          }
+      val (dist, _) = LocalKernels.sssp(g, src)
+      // reached ids by ascending dist: every shortest-path DAG edge
+      // u→v (dist(u)+cost = dist(v), exact double equality) runs
+      // forward in this order
+      val order = dist.indices.filter(v => !dist(v).isInfinite)
+        .sortBy(dist(_)).toArray
+      def dag(u: Int)(f: Int => Unit): Unit = {
+        var e = g.offsets(u)
+        while (e < g.offsets(u + 1)) {
+          val v = g.targets(e)
+          if (dist(u) + g.costs(e) == dist(v)) f(v)
+          e += 1
         }
       }
-      // shortest-path DAG by exact double equality
-      val dag = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-      val rdag = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-      edges.foreach { case (u, v, c) =>
-        if (dist.contains(u) && dist.contains(v) && dist(u) + c == dist(v)) {
-          dag.getOrElseUpdate(u,
-            scala.collection.mutable.ArrayBuffer.empty[String]) += v
-          rdag.getOrElseUpdate(v,
-            scala.collection.mutable.ArrayBuffer.empty[String]) += u
-        }
-      }
-      val order = dist.keys.toArray.sortBy(dist)
-      val sigma = scala.collection.mutable.HashMap.empty[String, Long]
-        .withDefaultValue(0L)
+      val sigma = new Array[Long](g.n)
       sigma(src) = 1L
-      val se = scala.collection.mutable.ArrayBuffer.empty[String]
-      order.foreach { v =>
-        rdag.getOrElse(v, se).foreach(u => sigma(v) += sigma(u))
-      }
-      val delta = scala.collection.mutable.HashMap.empty[String, Long]
-        .withDefaultValue(0L)
+      order.foreach(u => dag(u)(v => sigma(v) += sigma(u)))
+      val delta = new Array[Long](g.n)
       order.reverseIterator.foreach { v =>
         var acc = 0L
-        dag.getOrElse(v, se).foreach { w =>
-          acc += (sigma(v) * (Micro + delta(w))) / sigma(w)
-        }
+        dag(v)(w => acc += (sigma(v) * (Micro + delta(w))) / sigma(w))
         delta(v) = acc
       }
-      dist.keys.foreach(v => if (v != src) bc(v) += delta(v))
+      order.foreach(v => if (v != src) bc(v) += delta(v))
     }
-    nodeIds.toSeq.map(nId => (nId, bc(nId))).toDF("node", "bc_micro")
+    g.nodes.toSeq.map(v => (g.ids(v), bc(v))).toDF("node", "bc_micro")
   }
 
   /** Distributed sampled-source Brandes: distances from the relaxation

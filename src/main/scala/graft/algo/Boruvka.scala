@@ -56,25 +56,25 @@ object Boruvka {
     if (graft.core.LocalBudget.fits(cand, localEdgeThreshold,
         payloadBytesPerRow = 8)) {
       // ---- local: Kruskal over the sorted edge array ------------------
-      val ord = graft.algo.IndependentSet.Utf8Order
-      val rows = cand.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-        .sortWith { case ((a1, b1, c1), (a2, b2, c2)) =>
-          // ascending (cost, a, b) in the engines' UTF-8 binary order.
-          // Costs compare via Double.compare: `c1 != c2` is NOT a strict
-          // weak order when a cost is NaN (NaN != NaN but also !(NaN<x)),
-          // and TimSort throws on contract violations; Double.compare
-          // totals the order with NaN largest — the same rank Spark's
-          // nan-safe ordering gives it on the distributed path.
-          val cc = java.lang.Double.compare(c1, c2)
-          if (cc != 0) cc < 0
-          else if (a1 != a2) ord.lt(a1, a2)
-          else ord.lt(b1, b2)
-        }
+      val g = graft.core.LocalBudget.collectLocal(cand, weight = Some(col("cost")))
+      val (a, b, cost) = (g.sources, g.targets, g.costs)
+      // ascending (cost, a, b); Int order is the engines' id order.
+      // Costs compare via Double.compare: `c1 != c2` is NOT a strict
+      // weak order when a cost is NaN (NaN != NaN but also !(NaN<x)),
+      // and the sort throws on contract violations; Double.compare
+      // totals the order with NaN largest — the same rank Spark's
+      // nan-safe ordering gives it on the distributed path.
+      val sorted = a.indices.sortWith { (x, y) =>
+        val cc = java.lang.Double.compare(cost(x), cost(y))
+        if (cc != 0) cc < 0
+        else if (a(x) != a(y)) a(x) < a(y)
+        else b(x) < b(y)
+      }
       // keep each edge that joins two trees, in sorted order
-      val uf = new UnionFind[String]
+      val uf = new UnionFind(g.n)
       import spark.implicits._
-      rows.filter { case (a, b, _) => uf.union(a, b) }.toSeq
+      sorted.filter(e => uf.union(a(e), b(e)))
+        .map(e => (g.ids(a(e)), g.ids(b(e)), cost(e)))
         .toDF("src", "dst", "cost")
     } else distributed(s, spark, cand, maxRounds)
   }

@@ -31,28 +31,26 @@ object Coloring {
       col(edges.columns(1)).as("dst")))
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
       // ---- local: ONE collect, all MIS layers on driver adjacency ----
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, Some(allNodes))
-      val adj = IndependentSet.undirectedAdjacency(pairs)
-      val color = collection.mutable.HashMap.empty[String, Int]
-      var uncolored = nodeIds.toBuffer
+      val g = graft.core.LocalBudget.collectLocal(e, Some(allNodes))
+      val adj = LocalGraph.undirected(g)
+      val color = new Array[Int](g.n)
+      // an MIS run ignores neighbors outside its active set, so each
+      // layer runs on the full adjacency over the uncolored ids
+      val uncolored = g.inNodes
+      var left = uncolored.count(identity)
       var c = 0
-      while (uncolored.nonEmpty && c < maxColors) {
+      while (left > 0 && c < maxColors) {
         c += 1
-        val unSet = uncolored.toSet
-        val layerAdj = adj.map { case (k, vs) =>
-          k -> (vs.filter(unSet.contains): collection.Set[String])
+        val mis = IndependentSet.lubyLocal(adj, uncolored, lubyRounds)
+        mis.indices.foreach { v =>
+          if (mis(v)) { color(v) = c; uncolored(v) = false; left -= 1 }
         }
-        val mis = IndependentSet.lubyLocal(uncolored.toArray, layerAdj,
-          lubyRounds)
-        mis.foreach(v => color(v) = c)
-        uncolored = uncolored.filterNot(mis.contains)
       }
-      if (uncolored.nonEmpty)
+      if (left > 0)
         throw new IllegalStateException(
-          s"coloring (local) left ${uncolored.size} nodes after " +
-            s"$maxColors layers")
+          s"coloring (local) left $left nodes after $maxColors layers")
       import spark.implicits._
-      nodeIds.map(v => (v, color(v))).toSeq.toDF("node", "color")
+      g.nodes.map(v => (g.ids(v), color(v))).toSeq.toDF("node", "color")
     } else {
       var resid = s.checkpoint(allNodes)
       var acc: Option[DataFrame] = None

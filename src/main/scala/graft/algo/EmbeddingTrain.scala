@@ -66,10 +66,8 @@ object EmbeddingTrain {
       col(pairs.columns(1)).cast("string").as("context"),
       col(pairs.columns(2)).cast("long").as("n_pairs")))
     if (graft.core.LocalBudget.fits(p, localPairThreshold)) {
-      val rows = p.collect().map(r =>
-        (r.getString(0), r.getString(1), r.getLong(2)))
-      val ids = nd.collect().map(_.getString(0))
-      localTrain(nodes.sparkSession, ids, rows, dims, epochs)
+      localTrain(nodes.sparkSession, graft.core.LocalBudget.collectLocal(p,
+        Some(nd), Some(col("n_pairs"))), dims, epochs)
     } else distributed(s, nd, p, dims, epochs)
   }
 
@@ -103,47 +101,34 @@ object EmbeddingTrain {
     em.select(col("node"), col("dim"), col("val"))
   }
 
-  /** Sequential twin of the distributed recurrence (adaptive path) —
-    * identical md5 init and integer update, pinned bit-equal in
-    * GraphAlgoSpec.
+  /** Sequential twin of the distributed recurrence (adaptive path) over
+    * the pair graph `g` (center → context, costs = n_pairs) — identical
+    * md5 init and integer update, pinned bit-equal in GraphAlgoSpec.
     */
-  private[graft] def localTrain(spark: SparkSession, ids: Array[String],
-      pairRows: Array[(String, String, Long)], dims: Int, epochs: Int)
-      : DataFrame = {
+  private[graft] def localTrain(spark: SparkSession, g: LocalGraph,
+      dims: Int, epochs: Int): DataFrame = {
     import spark.implicits._
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h(key: String): Long = {
-      val hex = md.digest(key.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(8)
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val idSet = ids.toSet
-    var em: Map[(String, Int), Long] =
-      (for (v <- ids; k <- 0 until dims)
-        yield (v, k) -> (h(s"$v|$k") % Modulus)).toMap
+    val known = g.inNodes
+    var em = Array.tabulate(g.n, dims)((v, k) =>
+      if (known(v)) RandomWalks.h(s"${g.ids(v)}|$k") % Modulus else 0L)
     // context lookups mirror the distributed inner join: a context
     // outside the node frame contributes nothing, but its n_pairs still
     // lands in the center's total (tot is computed over ALL pairs)
-    val tot = pairRows.groupBy(_._1).map { case (c, rs) =>
-      c -> rs.map(_._3).sum }
+    val (src, pairs) = (g.sources, g.costs.map(_.toLong))
+    val tot = new Array[Long](g.n)
+    src.indices.foreach(e => tot(src(e)) += pairs(e))
     for (_ <- 1 to epochs) {
-      val cs = scala.collection.mutable.HashMap.empty[(String, Int), Long]
-        .withDefaultValue(0L)
-      pairRows.foreach { case (c, x, n) =>
-        if (idSet(x)) {
-          var k = 0
-          while (k < dims) { cs((c, k)) += n * em((x, k)); k += 1 }
-        }
+      val cs = Array.ofDim[Long](g.n, dims)
+      src.indices.foreach { e =>
+        val x = g.targets(e)
+        if (known(x)) for (k <- 0 until dims) cs(src(e))(k) += pairs(e) * em(x)(k)
       }
-      em = em.map { case ((v, k), old) =>
-        tot.get(v) match {
-          case Some(n) if n > 0 =>
-            (v, k) -> ((7L * old + 3L * (cs((v, k)) / n)) / 10L)
-          case _ => (v, k) -> old
-        }
-      }
+      val old = em
+      em = Array.tabulate(g.n, dims)((v, k) =>
+        if (known(v) && tot(v) > 0) (7L * old(v)(k) + 3L * (cs(v)(k) / tot(v))) / 10L
+        else old(v)(k))
     }
-    (for (v <- ids; k <- 0 until dims) yield (v, k, em((v, k))))
+    (for (v <- g.nodes; k <- 0 until dims) yield (g.ids(v), k, em(v)(k)))
       .toSeq.toDF("node", "dim", "val")
   }
 }

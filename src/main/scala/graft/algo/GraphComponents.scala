@@ -48,11 +48,11 @@ object GraphComponents {
     val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")))
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
-      val uf = new UnionFind[String]
-      pairs.foreach { case (a, b) => uf.union(a, b) }
+      val g = graft.core.LocalBudget.collectLocal(e, Some(nodes))
+      val uf = new UnionFind(g.n)
+      g.foreachEdge((a, b) => uf.union(a, b))
       import spark.implicits._
-      nodeIds.map(nId => (nId, uf.find(nId))).toSeq
+      g.nodes.map(v => (g.ids(v), g.ids(uf.find(v)))).toSeq
         .toDF("node", "component")
     } else distributed(s, nodes, e, maxIter)
   }

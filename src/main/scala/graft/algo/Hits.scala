@@ -47,8 +47,8 @@ object Hits {
     val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")).distinct())
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
-      localRun(nodes.sparkSession, ids, pairs, iters)
+      localRun(nodes.sparkSession,
+        graft.core.LocalBudget.collectLocal(e, Some(nodeIds)), iters)
     } else distributed(s, nodeIds, e, iters)
   }
 
@@ -96,31 +96,32 @@ object Hits {
   private[algo] def normScalar(raw: Long, total: Long): Long =
     (raw * Ppm / total) * Ppm
 
-  /** Sequential twin of the distributed recurrence (adaptive path). */
+  /** Sequential twin of the distributed recurrence (adaptive path) over
+    * the simple digraph `g`: edges touching ids outside the node frame
+    * carry nothing, as the distributed joins against the state drop them.
+    */
   private def localRun(spark: org.apache.spark.sql.SparkSession,
-      ids: Array[String], pairs: Array[(String, String)],
-      iters: Int): DataFrame = {
+      g: LocalGraph, iters: Int): DataFrame = {
     import spark.implicits._
-    require(ids.nonEmpty, "empty node set")
-    val present = ids.toSet
-    val unit = Mass / ids.length
-    var hub = ids.map(_ -> unit).toMap
-    var auth = ids.map(_ -> unit).toMap
-    for (_ <- 1 to iters) {
-      val authRaw = scala.collection.mutable.HashMap.empty[String, Long]
-        .withDefaultValue(0L)
-      pairs.foreach { case (s, d) =>
-        if (present.contains(d)) hub.get(s).foreach(h => authRaw(d) += h) }
-      val s1 = ids.iterator.map(authRaw).sum
-      if (s1 != 0L) auth = ids.map(v => v -> normScalar(authRaw(v), s1)).toMap
-      val hubRaw = scala.collection.mutable.HashMap.empty[String, Long]
-        .withDefaultValue(0L)
-      pairs.foreach { case (s, d) =>
-        if (present.contains(s)) auth.get(d).foreach(a => hubRaw(s) += a) }
-      val s2 = ids.iterator.map(hubRaw).sum
-      if (s2 != 0L) hub = ids.map(v => v -> normScalar(hubRaw(v), s2)).toMap
+    require(g.nodes.nonEmpty, "empty node set")
+    val known = g.inNodes
+    var hub = Array.fill(g.n)(Mass / g.nodes.length)
+    var auth = hub
+    // raw sums over known edges, ppm-normalized over the node rows; a
+    // zero total keeps the previous vector
+    def norm(raw: Array[Long], prev: Array[Long]): Array[Long] = {
+      val total = g.nodes.iterator.map(raw(_)).sum
+      if (total == 0L) prev else raw.map(normScalar(_, total))
     }
-    ids.toSeq.map(v => (v, hub(v), auth(v)))
+    for (_ <- 1 to iters) {
+      val authRaw = new Array[Long](g.n)
+      g.foreachEdge((s, d) => if (known(s) && known(d)) authRaw(d) += hub(s))
+      auth = norm(authRaw, auth)
+      val hubRaw = new Array[Long](g.n)
+      g.foreachEdge((s, d) => if (known(s) && known(d)) hubRaw(s) += auth(d))
+      hub = norm(hubRaw, hub)
+    }
+    g.nodes.toSeq.map(v => (g.ids(v), hub(v), auth(v)))
       .toDF("node", "hub_micro", "auth_micro")
   }
 }

@@ -51,76 +51,39 @@ object IndependentSet {
     new String(out)
   }
 
-  /** UTF-8 binary string order — what Spark's UTF8String comparison and
-    * DuckDB both use. Java String.compareTo is UTF-16 code-unit order,
-    * which DIVERGES for supplementary-plane characters, so every local
-    * twin tie-break goes through this ordering to keep the
-    * local ≡ distributed ≡ SQL contract total (benign for ASCII ids,
-    * load-bearing the day ids stop being ASCII).
+  /** The luby recurrence on the driver's symmetric simple graph `adj`
+    * over the ids `active` marks — bit-equal to the distributed rounds by
+    * construction (same priorities, same winner rule; Int order is the
+    * engines' id order). Shared by the local fast path and
+    * [[Coloring]]'s layered local path. Returns the MIS membership mask.
     */
-  private[algo] val Utf8Order: Ordering[String] = new Ordering[String] {
-    def compare(x: String, y: String): Int = {
-      val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) {
-        val c = (a(i) & 0xff) - (b(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      a.length - b.length
-    }
-  }
-
-  /** The luby recurrence on driver-local adjacency — bit-equal to the
-    * distributed rounds by construction (same priorities, same winner
-    * rule). Shared by the local fast path and [[Coloring]]'s layered
-    * local path.
-    */
-  /** Symmetric adjacency sets of `pairs`, self-loops dropped: the
-    * driver graph of the MIS, coloring, k-core and k-truss twins.
-    */
-  private[algo] def undirectedAdjacency(pairs: Iterable[(String, String)])
-      : collection.mutable.HashMap[String, collection.mutable.Set[String]] = {
-    val adj = collection.mutable.HashMap
-      .empty[String, collection.mutable.Set[String]]
-    pairs.foreach { case (a, b) =>
-      if (a != b) {
-        adj.getOrElseUpdate(a, collection.mutable.Set.empty) += b
-        adj.getOrElseUpdate(b, collection.mutable.Set.empty) += a
-      }
-    }
-    adj
-  }
-
-  private[algo] def lubyLocal(nodeIds: Array[String],
-      adj: collection.Map[String, collection.Set[String]],
-      rounds: Int): collection.mutable.Set[String] = {
-    val und = collection.mutable.Set[String](nodeIds: _*)
-    val mis = collection.mutable.Set.empty[String]
+  private[algo] def lubyLocal(adj: LocalGraph, active: Array[Boolean],
+      rounds: Int): Array[Boolean] = {
+    val und = active.clone()
+    val mis = new Array[Boolean](adj.n)
+    val pr = new Array[String](adj.n)
+    var remaining = und.count(identity)
     var r = 0
-    while (r < rounds && und.nonEmpty) {
+    while (r < rounds && remaining > 0) {
       r += 1
-      val pr = und.iterator.map(v => v -> md5hex(s"$r:$v")).toMap
-      val cand = und.filter { v =>
-        adj.getOrElse(v, Set.empty).forall { u =>
-          !und.contains(u) || {
-            val pv = pr(v); val pu = pr(u)
-            // priorities are ASCII hex (orderings agree); ids go through
-            // the UTF-8 order to match the engines' binary comparison
-            pv > pu || (pv == pu && Utf8Order.gt(v, u))
-          }
-        }
-      }.toSet
-      mis ++= cand
-      val excl = cand.flatMap(v => adj.getOrElse(v, Set.empty))
-      und --= cand
-      und --= excl
+      val live = und.indices.filter(und(_))
+      live.foreach(v => pr(v) = md5hex(s"$r:${adj.ids(v)}"))
+      // v wins when its (priority, id) pair beats every undecided neighbor's
+      val cand = live.filter(v => (adj.offsets(v) until adj.offsets(v + 1))
+        .forall { e =>
+          val u = adj.targets(e)
+          !und(u) || { val c = pr(v).compareTo(pr(u)); c > 0 || (c == 0 && v > u) }
+        })
+      cand.foreach { v =>
+        mis(v) = true
+        und(v) = false
+        (adj.offsets(v) until adj.offsets(v + 1)).foreach(e => und(adj.targets(e)) = false)
+      }
+      remaining = und.count(identity)
     }
-    if (und.nonEmpty)
+    if (remaining > 0)
       throw new IllegalStateException(
-        s"luby (local) did not decide ${und.size} nodes within $rounds " +
+        s"luby (local) did not decide $remaining nodes within $rounds " +
           "rounds")
     mis
   }
@@ -139,10 +102,10 @@ object IndependentSet {
     val e0 = s.cache(edges.select(col(edges.columns(0)).as("a"),
         col(edges.columns(1)).as("b")))
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e0, Some(allNodes))
-      val mis = lubyLocal(nodeIds, undirectedAdjacency(pairs), rounds)
+      val g = graft.core.LocalBudget.collectLocal(e0, Some(allNodes))
+      val mis = lubyLocal(LocalGraph.undirected(g), g.inNodes, rounds)
       import spark.implicits._
-      nodeIds.map(v => (v, if (mis.contains(v)) 1L else 0L)).toSeq
+      g.nodes.map(v => (g.ids(v), if (mis(v)) 1L else 0L)).toSeq
         .toDF("node", "in_mis")
     } else {
       var und = s.checkpoint(allNodes)

@@ -36,19 +36,18 @@ object KCore {
         greatest(col("s"), col("d")).as("b"))
       .distinct())
     if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
-      val (pairs, _) = graft.core.LocalBudget.collectLocal(und)
-      val adj = IndependentSet.undirectedAdjacency(pairs)
-      var changed = true
-      while (changed) {
-        val drop = adj.collect { case (n, vs) if vs.size < k => n }.toSeq
-        changed = drop.nonEmpty
-        drop.foreach { n =>
-          adj(n).foreach(v => adj(v) -= n)
-          adj.remove(n)
-        }
+      val adj = LocalGraph.undirected(graft.core.LocalBudget.collectLocal(und))
+      val deg = Array.tabulate(adj.n)(v => adj.offsets(v + 1) - adj.offsets(v))
+      val alive = Array.fill(adj.n)(true)
+      // peel to the fixpoint: a node leaves once its live degree is < k
+      var peel = deg.indices.filter(deg(_) < k)
+      while (peel.nonEmpty) {
+        peel.foreach(alive(_) = false)
+        peel = peel.flatMap(v => adj.targets.slice(adj.offsets(v), adj.offsets(v + 1)))
+          .filter(u => alive(u) && { deg(u) -= 1; deg(u) == k - 1 })
       }
       import spark.implicits._
-      adj.toSeq.map { case (n, vs) => (n, vs.size.toLong) }
+      deg.indices.filter(alive).map(v => (adj.ids(v), deg(v).toLong))
         .toDF("node", "core_degree")
     } else {
       var iter = 0

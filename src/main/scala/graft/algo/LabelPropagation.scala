@@ -42,15 +42,11 @@ object LabelPropagation {
     // localReference computes the identical label table, pinned
     // bit-equal by GraphAlgoSpec on both paths.
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
-      // drop edges touching ids outside the node frame — the distributed
-      // loop's inner join on the neighbor label does the same, so a
-      // label-less endpoint contributes nothing on either path
-      val idSet = ids.toSet
-      val known = pairs.filter(p => idSet(p._1) && idSet(p._2))
-      val labels = localReference(ids, known, rounds)
+      val g = graft.core.LocalBudget.collectLocal(e, Some(nodes))
+      val labels = localReference(g, rounds)
       import spark.implicits._
-      ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
+      g.nodes.toSeq.map(v => (g.ids(v), g.ids(labels(v))))
+        .toDF("node", "community")
     } else distributed(s, nodes, e, rounds)
   }
 
@@ -82,27 +78,27 @@ object LabelPropagation {
   }
 
   /** Reference implementation of the same contract for audits: plain
-    * in-memory synchronous rounds. Exercised by GraphAlgoSpec against the
-    * DataFrame loop on the full slice — any drift in the update rule
-    * shows up as a label diff here before the driver's oracle sees it.
+    * in-memory synchronous rounds over `g`, returning the label of every
+    * node-frame id. Edges touching ids outside the node frame drop — the
+    * distributed loop's inner join on the neighbor label does the same,
+    * so a label-less endpoint contributes nothing on either path.
+    * Exercised by GraphAlgoSpec against the DataFrame loop on the full
+    * slice — any drift in the update rule shows up as a label diff here
+    * before the driver's oracle sees it.
     */
-  private[graft] def localReference(nodeIds: Array[String],
-      pairs: Array[(String, String)], rounds: Int): Map[String, String] = {
-    val und = pairs.filter(p => p._1 != p._2)
-      .flatMap(p => Seq(p, p.swap)).distinct
-    val nbrs = und.groupBy(_._1).map { case (k, es) => k -> es.map(_._2) }
-    var labels = nodeIds.map(n => n -> n).toMap
+  private[graft] def localReference(g: LocalGraph, rounds: Int): Array[Int] = {
+    val und = LocalGraph.undirected(g, g.inNodes)
+    val members = g.distinctNodes.filter(v => und.offsets(v + 1) > und.offsets(v))
+    var labels = Array.tabulate(g.n)(identity)
     for (_ <- 1 to rounds) {
-      labels = nodeIds.map { n =>
-        nbrs.get(n) match {
-          case None => n -> labels(n)
-          case Some(ns) =>
-            val counts = ns.map(labels).groupBy(identity)
-              .map { case (l, xs) => (l, xs.length) }
-            val best = counts.minBy { case (l, c) => (-c, l) }._1
-            n -> best
-        }
-      }.toMap
+      val cur = labels
+      labels = cur.clone()
+      // the most frequent neighbor label, ties to the minimum label
+      members.foreach { v =>
+        labels(v) = (und.offsets(v) until und.offsets(v + 1))
+          .groupMapReduce(e => cur(und.targets(e)))(_ => 1)(_ + _)
+          .minBy { case (l, c) => (-c, l) }._1
+      }
     }
     labels
   }

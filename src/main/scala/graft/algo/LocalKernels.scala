@@ -134,7 +134,9 @@ object LocalKernels {
     */
   def astar(g: LocalGraph, source: Int, target: Int,
       ws: Workspace = null): Option[PathResult] = {
-    val tx = g.xs(target); val ty = g.ys(target)
+    // a graph built without coordinates searches as Dijkstra
+    val tx = if (g.xs.isEmpty) Double.NaN else g.xs(target)
+    val ty = if (g.ys.isEmpty) Double.NaN else g.ys(target)
     val h: Int => Double =
       if (tx.isNaN || ty.isNaN) null
       else { v =>

@@ -96,15 +96,9 @@ object Louvain {
     // (8 B/row) against the budget beside the two id columns
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold,
         payloadBytesPerRow = 8)) {
-      val triples = e.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      val ids = nodes.select(col(nodes.columns(0)).cast("string"))
-        .collect().map(_.getString(0))
-      val idSet = ids.toSet
-      val known = triples.filter(t => idSet(t._1) && idSet(t._2))
-      val labels = localWeightedReference(ids, known, rounds)
-      import spark.implicits._
-      ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
+      val g = graft.core.LocalBudget.collectLocal(e, Some(nodes),
+        Some(col("w")))
+      labelRows(spark, g, localWeightedReference(g, rounds))
     } else {
       val (und, degs, twoM) = prepare(s, nodes, e)
       s.adopt(moveLoop(und, degs, twoM, rounds))
@@ -112,28 +106,36 @@ object Louvain {
     }
   }
 
-  /** In-memory twin of runWeighted — weighted symmetrized adjacency +
-    * the shared weighted move recurrence.
+  /** (node, community) rows of the node frame under labels `lbl`. */
+  private def labelRows(spark: SparkSession, g: LocalGraph, lbl: Array[Int])
+      : DataFrame = {
+    import spark.implicits._
+    g.nodes.toSeq.map(v => (g.ids(v), g.ids(lbl(v)))).toDF("node", "community")
+  }
+
+  /** In-memory twin of runWeighted over `g` (its costs are the weights;
+    * unit weights when it has none, the `run` contract): the min-weight
+    * symmetrized adjacency among the node frame's ids + the shared move
+    * recurrence. Returns the community of every id. Exercised by
+    * GraphAlgoSpec against the DataFrame loop — any drift in the score or
+    * the tie-break shows up as a diff here before the driver's oracle
+    * sees it.
     */
-  private[graft] def localWeightedReference(nodeIds: Array[String],
-      triples: Array[(String, String, Long)], rounds: Int)
-      : Map[String, String] = {
-    val wMap = scala.collection.mutable.HashMap
-      .empty[(String, String), Long]
-    triples.filter(t => t._1 != t._2)
-      .flatMap(t => Seq((t._1, t._2, t._3), (t._2, t._1, t._3)))
-      .foreach { case (a, b, w) =>
-        val k = (a, b)
-        wMap(k) = wMap.get(k).map(math.min(_, w)).getOrElse(w)
-      }
-    val wAdj: Map[String, Array[(String, Long)]] = wMap.toArray
-      .map { case ((a, b), w) => (a, (b, w)) }
-      .groupBy(_._1).map { case (k, es) => k -> es.map(_._2) }
-    val deg: Map[String, Long] = nodeIds.map(n =>
-      n -> wAdj.get(n).map(_.map(_._2).sum).getOrElse(0L)).toMap
-    val twoM = wMap.valuesIterator.sum
-    weightedMoveRounds(nodeIds, wAdj, deg, twoM, rounds,
-      nodeIds.map(n => n -> n).toMap)
+  private[graft] def localWeightedReference(g: LocalGraph, rounds: Int)
+      : Array[Int] = {
+    val und = LocalGraph.undirected(g, g.inNodes)
+    val deg = degrees(und)
+    moveRounds(g.distinctNodes, und, deg, deg.sum, rounds)
+  }
+
+  private def weight(g: LocalGraph, e: Int): Long =
+    if (g.costs.isEmpty) 1L else g.costs(e).toLong
+
+  /** Weighted degree of every id of `g`. */
+  private def degrees(g: LocalGraph): Array[Long] = {
+    val (src, deg) = (g.sources, new Array[Long](g.n))
+    src.indices.foreach(e => deg(src(e)) += weight(g, e))
+    deg
   }
 
   /** Two-level (hierarchical) Louvain: `rounds` level-1 moving rounds,
@@ -188,13 +190,8 @@ object Louvain {
     // overhead; the sequential twin computes the identical table,
     // pinned bit-equal by GraphAlgoSpec on both paths.
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
-      val idSet = ids.toSet
-      val known = pairs.filter(p => idSet(p._1) && idSet(p._2))
-      val labels = localMultiLevel(ids, known, rounds, coarseRounds,
-        maxLevels)
-      import spark.implicits._
-      ids.toSeq.map(n => (n, labels(n))).toDF("node", "community")
+      val g = graft.core.LocalBudget.collectLocal(e, Some(nodes))
+      labelRows(spark, g, localMultiLevel(g, rounds, coarseRounds, maxLevels))
     } else levels(s, nodes, e, rounds, coarseRounds, maxLevels)
   }
 
@@ -358,126 +355,87 @@ object Louvain {
           6).as("conductance")))
   }
 
-  /** Reference implementation of the same contract for audits: plain
-    * in-memory synchronous parity-alternating rounds, i.e.
-    * localWeightedReference at unit weights. Exercised by
-    * GraphAlgoSpec against the DataFrame loop — any drift in the score
-    * or the tie-break shows up as a diff here before the driver's
-    * oracle sees it.
+  /** In-memory twin of runMultiLevel (maxLevels = 2 is runTwoLevel):
+    * contraction is recomputed from the base und rows against the
+    * COMPOSED mapping each level (same equivalence as the distributed
+    * path), and an identity level stops the loop.
     */
-  private[graft] def localReference(nodeIds: Array[String],
-      pairs: Array[(String, String)], rounds: Int): Map[String, String] =
-    localWeightedReference(nodeIds, pairs.map(p => (p._1, p._2, 1L)),
-      rounds)
-
-  /** In-memory twin of runTwoLevel: level-1 rounds, contraction with
-    * self-loop-aware weighted degrees, weighted coarse rounds,
-    * projection — localMultiLevel at the fixed level budget 2.
-    */
-  private[graft] def localTwoLevel(nodeIds: Array[String],
-      pairs: Array[(String, String)], rounds: Int, coarseRounds: Int)
-      : Map[String, String] =
-    localMultiLevel(nodeIds, pairs, rounds, coarseRounds, maxLevels = 2)
-
-  /** In-memory twin of runMultiLevel: contraction is recomputed from
-    * the base und rows against the COMPOSED mapping each level (same
-    * equivalence as the distributed path), and an identity level stops
-    * the loop.
-    */
-  private[graft] def localMultiLevel(nodeIds: Array[String],
-      pairs: Array[(String, String)], rounds: Int, coarseRounds: Int,
-      maxLevels: Int): Map[String, String] = {
-    var q = localReference(nodeIds, pairs, rounds)
+  private[graft] def localMultiLevel(g: LocalGraph, rounds: Int,
+      coarseRounds: Int, maxLevels: Int): Array[Int] = {
+    var q = localWeightedReference(g, rounds)
     // lazy: `run` (maxLevels = 1) never contracts
-    lazy val und = pairs.filter(p => p._1 != p._2)
-      .flatMap(p => Seq(p, p.swap)).distinct
+    lazy val und = LocalGraph.undirected(g, g.inNodes)
+    lazy val (src, members, deg) = (und.sources, g.distinctNodes, degrees(und))
     var level = 1
     var converged = false
     while (level < maxLevels && !converged) {
-      val wMap = scala.collection.mutable.HashMap
-        .empty[(String, String), Long].withDefaultValue(0L)
-      und.foreach { case (a, b) => wMap((q(a), q(b))) += 1L }
-      val coarseIds = q.values.toArray.distinct.sorted
-      val k = scala.collection.mutable.HashMap.empty[String, Long]
-        .withDefaultValue(0L)
-      wMap.foreach { case ((c1, _), w) => k(c1) += w }
-      val wAdj: Map[String, Array[(String, Long)]] = wMap.toArray
-        .collect { case ((c1, c2), w) if c1 != c2 => (c1, (c2, w)) }
-        .groupBy(_._1).map { case (c, es) => c -> es.map(_._2) }
-      val lj = weightedMoveRounds(coarseIds, wAdj,
-        coarseIds.map(c => c -> k(c)).toMap, und.length.toLong,
-        coarseRounds, coarseIds.map(c => c -> c).toMap)
-      if (lj.forall { case (n, l) => n == l }) converged = true
-      else q = q.map { case (n, c) => n -> lj(c) }
+      // communities are ids, so the coarse graph shares `g`'s id space:
+      // one unit entry per und row between two communities (the move
+      // rule sums them into W(c1, c2)); k(c) = Σ_{i∈c} deg(i) keeps the
+      // self-loop rows
+      val k = new Array[Long](g.n)
+      members.foreach(v => k(q(v)) += deg(v))
+      val cross = src.indices.filter(e => q(src(e)) != q(und.targets(e))).toArray
+      val coarse = LocalGraph.over(g, cross.map(e => q(src(e))),
+        cross.map(e => q(und.targets(e))), Array.emptyDoubleArray)
+      val coarseIds = members.map(q).distinct
+      val lj = moveRounds(coarseIds, coarse, k, src.length.toLong, coarseRounds)
+      converged = coarseIds.forall(c => lj(c) == c)
+      if (!converged) q = q.map(lj)
       level += 1
     }
     q
   }
 
-  /** The weighted synchronous move recurrence both in-memory paths
-    * share (unit weights at level 1).
+  /** The weighted synchronous move recurrence both in-memory paths share
+    * over the adjacency `adj`: `members` start as singleton communities
+    * and move on their parity's rounds. Labels are ids, so the min-label
+    * tie-break is the engines' id order.
     */
-  private def weightedMoveRounds(ids: Array[String],
-      wAdj: Map[String, Array[(String, Long)]], deg: Map[String, Long],
-      twoM: Long, rounds: Int, init: Map[String, String])
-      : Map[String, String] = {
-    val odd: Map[String, Boolean] = ids.map(n => n -> oddParity(n)).toMap
-    var lbl = init
+  private def moveRounds(members: Array[Int], adj: LocalGraph,
+      deg: Array[Long], twoM: Long, rounds: Int): Array[Int] = {
+    val odd = new Array[Boolean](adj.n)
+    members.foreach(v => odd(v) = oddParity(adj.ids(v)))
+    var lbl = Array.tabulate(adj.n)(identity)
+    val kin = new Array[Long](adj.n)
     for (i <- 1 to rounds) {
-      val sig: Map[String, Long] = ids.groupBy(lbl)
-        .map { case (c, ns) => c -> ns.map(deg).sum }
-      lbl = ids.map { n =>
-        if (odd(n) != (i % 2 == 1)) n -> lbl(n)
-        else {
-          val own = lbl(n); val d = deg(n)
-          val kin = scala.collection.mutable.HashMap.empty[String, Long]
-            .withDefaultValue(0L)
-          wAdj.getOrElse(n, Array.empty[(String, Long)])
-            .foreach { case (m, w) => kin(lbl(m)) += w }
-          val best = (kin.keySet.toSet + own).toSeq.map { c =>
-            val sc = twoM * kin(c) -
-              d * (sig.getOrElse(c, 0L) - (if (c == own) d else 0L))
-            (-sc, c)
-          }.min
-          n -> best._2
-        }
-      }.toMap
+      val sig = new Array[Long](adj.n)
+      members.foreach(v => sig(lbl(v)) += deg(v))
+      val next = lbl.clone()
+      for (v <- members if odd(v) == (i % 2 == 1)) {
+        val own = lbl(v); val d = deg(v)
+        val row = adj.offsets(v) until adj.offsets(v + 1)
+        row.foreach(e => kin(lbl(adj.targets(e))) += weight(adj, e))
+        // argmax score over neighbor communities ∪ own, min label on ties
+        val cands = (row.map(e => lbl(adj.targets(e))) :+ own).distinct
+        next(v) = cands.minBy(c =>
+          (-(twoM * kin(c) - d * (sig(c) - (if (c == own) d else 0L))), c))
+        cands.foreach(kin(_) = 0L)
+      }
+      lbl = next
     }
     lbl
   }
 
   /** Integer modularity numerator Q·(2m)² = Σ_C (2m·W(C,C) − Σtot(C)²)
-    * of a partition over the symmetrized distinct pairs — the audit
-    * metric the two-level spec uses (larger is better; exact integers,
-    * so cross-level comparison is exact).
+    * of a partition over the symmetrized distinct pairs among the node
+    * frame's ids — the audit metric the two-level spec uses (larger is
+    * better; exact integers, so cross-level comparison is exact).
     */
-  private[graft] def modularityNum(nodeIds: Array[String],
-      pairs: Array[(String, String)], lbl: Map[String, String]): BigInt = {
-    val idSet = nodeIds.toSet
-    val und = pairs
-      .filter(p => p._1 != p._2 && idSet(p._1) && idSet(p._2))
-      .flatMap(p => Seq(p, p.swap)).distinct
-    val twoM = BigInt(und.length)
-    val deg = scala.collection.mutable.HashMap.empty[String, Long]
-      .withDefaultValue(0L)
-    und.foreach { case (a, _) => deg(a) += 1L }
-    val intra = scala.collection.mutable.HashMap.empty[String, Long]
-      .withDefaultValue(0L)
-    und.foreach { case (a, b) => if (lbl(a) == lbl(b)) intra(lbl(a)) += 1L }
-    val tot = scala.collection.mutable.HashMap.empty[String, BigInt]
-      .withDefaultValue(BigInt(0))
-    nodeIds.foreach(n => tot(lbl(n)) += deg(n))
-    lbl.values.toSet.iterator.map { (c: String) =>
-      twoM * intra(c) - tot(c) * tot(c)
-    }.sum
+  private[graft] def modularityNum(g: LocalGraph, lbl: Array[Int]): BigInt = {
+    val und = LocalGraph.undirected(g, g.inNodes)
+    val (deg, members) = (degrees(und), g.distinctNodes)
+    val intra = new Array[Long](g.n)
+    und.foreachEdge((a, b) => if (lbl(a) == lbl(b)) intra(lbl(a)) += 1L)
+    val tot = new Array[Long](g.n)
+    members.foreach(v => tot(lbl(v)) += deg(v))
+    members.map(lbl).distinct.map(c =>
+      BigInt(und.targets.length) * intra(c) - BigInt(tot(c)) * tot(c)).sum
   }
 
   /** True iff the first hex digit of md5(s) is odd — the move-parity
     * predicate, evaluated identically by Spark's and DuckDB's md5.
     */
-  private[graft] def oddParity(s: String): Boolean = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8"))
-    ((d(0) >> 4) & 1) == 1
-  }
+  private[graft] def oddParity(s: String): Boolean =
+    "13579bdf".indexOf(IndependentSet.md5hex(s).charAt(0)) >= 0
 }

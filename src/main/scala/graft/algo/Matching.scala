@@ -47,30 +47,24 @@ object Matching {
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold,
         payloadBytesPerRow = 8)) {
       // ---- local: THE unique greedy heaviest-first matching ----------
-      val canon = e0.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-      val ord = IndependentSet.Utf8Order
-      val ordered = canon.sortWith { case ((a1, b1, c1), (a2, b2, c2)) =>
-        // descending (cost, a, b) in the engines' UTF-8 binary order.
-        // Double.compare, not !=/>: NaN costs would break sortWith's
-        // strict-weak-order contract (TimSort IllegalArgumentException)
-        // and diverge from Spark's nan-safe order on the distributed
-        // path; Double.compare ranks NaN largest, matching Spark.
-        val cc = java.lang.Double.compare(c1, c2)
+      val g = graft.core.LocalBudget.collectLocal(e0, weight = Some(col("cost")))
+      val (a, b, cost) = (g.sources, g.targets, g.costs)
+      // descending (cost, a, b); Int order is the engines' id order.
+      // Double.compare, not !=/>: NaN costs would break the sort's
+      // contract and diverge from Spark's nan-safe order on the
+      // distributed path; Double.compare ranks NaN largest, matching Spark.
+      val ordered = a.indices.sortWith { (x, y) =>
+        val cc = java.lang.Double.compare(cost(x), cost(y))
         if (cc != 0) cc > 0
-        else if (a1 != a2) ord.gt(a1, a2)
-        else ord.gt(b1, b2)
+        else if (a(x) != a(y)) a(x) > a(y)
+        else b(x) > b(y)
       }
-      val used = collection.mutable.Set.empty[String]
-      val out = collection.mutable.ArrayBuffer
-        .empty[(String, String, Double)]
-      ordered.foreach { case e @ (a, b, _) =>
-        if (!used.contains(a) && !used.contains(b)) {
-          used += a; used += b; out += e
-        }
+      val used = new Array[Boolean](g.n)
+      val out = ordered.filter { e =>
+        !used(a(e)) && !used(b(e)) && { used(a(e)) = true; used(b(e)) = true; true }
       }
       import spark.implicits._
-      out.toSeq.toDF("src", "dst", "cost")
+      out.map(e => (g.ids(a(e)), g.ids(b(e)), cost(e))).toDF("src", "dst", "cost")
     } else {
       val (matched, remaining) = matchRounds(s, e0, rounds,
         _ => struct(col("cost"), col("a"), col("b")))
@@ -105,38 +99,38 @@ object Matching {
       .distinct())
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local replay of the per-round dominance recurrence --------
-      var ue = graft.core.LocalBudget.collectLocal(e0)._1.toSet
-      val out = collection.mutable.ArrayBuffer.empty[(String, String)]
+      val g = graft.core.LocalBudget.collectLocal(e0)
+      val (a, b) = (g.sources, g.targets)
+      var ue: IndexedSeq[Int] = a.indices
+      val out = collection.mutable.ArrayBuffer.empty[Int]
+      val gone = new Array[Boolean](g.n)
+      val pe = new Array[String](a.length)
       var r = 0
       while (r < rounds && ue.nonEmpty) {
         r += 1
-        val pe = ue.iterator
-          .map(e => e -> IndependentSet.md5hex(s"$r:${e._1}:${e._2}"))
-          .toMap
-        val tupleOrd = Ordering.Tuple3(IndependentSet.Utf8Order,
-          IndependentSet.Utf8Order, IndependentSet.Utf8Order)
-        val win = collection.mutable.HashMap
-          .empty[String, (String, String, String)]
-        ue.foreach { case e @ (a, b) =>
-          val k = (pe(e), a, b)
-          Seq(a, b).foreach { n =>
-            if (!win.contains(n) || tupleOrd.gt(k, win(n))) win(n) = k
-          }
+        ue.foreach(e => pe(e) =
+          IndependentSet.md5hex(s"$r:${g.ids(a(e))}:${g.ids(b(e))}"))
+        // each endpoint's winner: its edge of max (priority, a, b)
+        def beats(e: Int, f: Int): Boolean = {
+          val c = pe(e).compareTo(pe(f))
+          c > 0 || (c == 0 && (a(e) > a(f) || (a(e) == a(f) && b(e) > b(f))))
         }
-        val m = ue.filter { case e @ (a, b) =>
-          val k = (pe(e), a, b)
-          win(a) == k && win(b) == k
+        val win = Array.fill(g.n)(-1)
+        ue.foreach { e =>
+          if (win(a(e)) < 0 || beats(e, win(a(e)))) win(a(e)) = e
+          if (win(b(e)) < 0 || beats(e, win(b(e)))) win(b(e)) = e
         }
+        val m = ue.filter(e => win(a(e)) == e && win(b(e)) == e)
         out ++= m
-        val gone = m.flatMap(e => Seq(e._1, e._2))
-        ue = ue.filter(e => !gone.contains(e._1) && !gone.contains(e._2))
+        m.foreach { e => gone(a(e)) = true; gone(b(e)) = true }
+        ue = ue.filter(e => !gone(a(e)) && !gone(b(e)))
       }
       if (ue.nonEmpty)
         throw new IllegalStateException(
-          s"matching (local) left ${ue.size} undecided edges after " +
+          s"matching (local) left ${ue.length} undecided edges after " +
             s"$rounds rounds")
       import spark.implicits._
-      out.toSeq.toDF("src", "dst")
+      out.toSeq.map(e => (g.ids(a(e)), g.ids(b(e)))).toDF("src", "dst")
     } else {
       val (matched, remaining) = matchRounds(s, e0, rounds, r =>
         struct(md5(concat(lit(s"$r:"), col("a"), lit(":"), col("b"))),

@@ -54,11 +54,11 @@ object PageRank {
     val e = s.cache(edges.select(col(edges.columns(0)).as("src"),
       col(edges.columns(1)).as("dst")))
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
-      require(ids.nonEmpty, "empty node set")
-      val unit = mass / ids.length
+      val g = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
+      require(g.nodes.nonEmpty, "empty node set")
+      val unit = mass / g.nodes.length
       val base = 15L * unit / 100L
-      localLoop(nodes, ids, pairs, iters, _ => unit, _ => base)
+      localLoop(nodes, g, iters, _ => unit, _ => base)
     } else {
       // N is a bounded driver scalar (one count), not a data collect
       val n = nodeIds.count()
@@ -86,10 +86,11 @@ object PageRank {
       col(edges.columns(1)).as("dst")))
     val base = 15L * mass / 100L
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
-      require(ids.contains(seed), s"seed $seed not in node set")
-      localLoop(nodes, ids, pairs, iters,
-        v => if (v == seed) mass else 0L, v => if (v == seed) base else 0L)
+      val g = graft.core.LocalBudget.collectLocal(e, Some(nodeIds))
+      val at = g.find(seed)
+      require(at >= 0 && g.inNodes(at), s"seed $seed not in node set")
+      localLoop(nodes, g, iters,
+        v => if (v == at) mass else 0L, v => if (v == at) base else 0L)
     } else {
       // Same precondition as the local path: a missing seed must fail
       // loudly, not return an all-zero vector. One bounded count, once.
@@ -107,26 +108,23 @@ object PageRank {
   /** The driver twin: `start(v)` is v's initial mass, `teleport(v)` the
     * base it receives every round before the damped in-flow.
     */
-  private def localLoop(nodes: DataFrame, ids: Array[String],
-      pairs: Array[(String, String)], iters: Int, start: String => Long,
-      teleport: String => Long): DataFrame = {
-    val deg = pairs.groupBy(_._1).map { case (s, es) =>
-      s -> es.length.toLong }
-    var r = ids.map(v => v -> start(v)).toMap
+  private def localLoop(nodes: DataFrame, g: LocalGraph, iters: Int,
+      start: Int => Long, teleport: Int => Long): DataFrame = {
+    val known = g.inNodes
+    val deg = Array.tabulate(g.n)(u => g.offsets(u + 1) - g.offsets(u))
+    var r = Array.tabulate(g.n)(v => if (known(v)) start(v) else 0L)
     for (_ <- 1 to iters) {
-      val in = scala.collection.mutable.HashMap.empty[String, Long]
-        .withDefaultValue(0L)
-      // r.get: an edge whose src is outside the node frame contributes
-      // nothing — same as the distributed path's inner join of ranks
-      // with deg (deg still counts ALL out-edges, so mass sent toward
-      // ids outside the node set leaks identically on both paths)
-      pairs.foreach { case (s, d) =>
-        r.get(s).foreach(rs => in(d) += rs / deg(s)) }
-      r = ids.map(v => v -> (teleport(v) + 85L * in(v) / 100L)).toMap
+      val in = new Array[Long](g.n)
+      // an edge whose src is outside the node frame contributes nothing
+      // — same as the distributed path's inner join of ranks with deg
+      // (deg still counts ALL out-edges, so mass sent toward ids outside
+      // the node set leaks identically on both paths)
+      g.foreachEdge((s, d) => if (known(s)) in(d) += r(s) / deg(s))
+      r = Array.tabulate(g.n)(v => teleport(v) + 85L * in(v) / 100L)
     }
     val spark = nodes.sparkSession
     import spark.implicits._
-    ids.map(v => (v, r(v))).toSeq.toDF("node", "rank_micro")
+    g.nodes.map(v => (g.ids(v), r(v))).toSeq.toDF("node", "rank_micro")
   }
 
   /** The distributed twin of `localLoop`: `start` and `teleport` are

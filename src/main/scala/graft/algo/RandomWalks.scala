@@ -39,8 +39,7 @@ object RandomWalks {
     * stay distributed.
     */
   private def tryLocal(nodes: DataFrame, edges: DataFrame, edgeCap: Long,
-      twin: (Array[String], Array[(String, String)]) =>
-        Set[(String, Int, Int, String)]): Option[DataFrame] = {
+      twin: LocalGraph => Set[(String, Int, Int, String)]): Option[DataFrame] = {
     val e = edges.select(col(edges.columns(0)).cast("string").as("src"),
       col(edges.columns(1)).cast("string").as("dst"))
     if (!graft.core.LocalBudget.fits(e, edgeCap)) return None
@@ -48,14 +47,10 @@ object RandomWalks {
     // appear as edge endpoints (both paths share that semantics).
     // ids DISTINCT to match the distributed paths' distinct node frame
     // (one walk set per distinct start node on either path).
-    val pairs = e.collect().map(r => (r.getString(0), r.getString(1)))
-    val ids = nodes.select(col(nodes.columns(0)).cast("string"))
-      .distinct()
-      .collect().map(_.getString(0))
+    val g = graft.core.LocalBudget.collectLocal(e, Some(nodes))
     val spark = nodes.sparkSession
     import spark.implicits._
-    Some(twin(ids, pairs).toSeq
-      .toDF("start_id", "walk_id", "step", "node_id"))
+    Some(twin(g).toSeq.toDF("start_id", "walk_id", "step", "node_id"))
   }
 
   /** Exploded walk corpus: (start_id, walk_id, step, node_id), one row
@@ -68,7 +63,7 @@ object RandomWalks {
       : DataFrame = {
     require(numWalks >= 1 && length >= 1, "numWalks and length must be >= 1")
     tryLocal(nodes, edges, localEdgeThreshold,
-      localReference(_, _, numWalks, length))
+      localReference(_, numWalks, length))
       .getOrElse(distributedWalks(nodes, edges, numWalks, length))
   }
 
@@ -152,7 +147,7 @@ object RandomWalks {
     require(retWeight >= 1 && adjWeight >= 1 && farWeight >= 1,
       "weights must be positive integers")
     tryLocal(nodes, edges, localEdgeThreshold,
-      localNode2vecReference(_, _, numWalks, length, retWeight, adjWeight,
+      localNode2vecReference(_, numWalks, length, retWeight, adjWeight,
         farWeight))
       .getOrElse(distributedNode2vec(nodes, edges, numWalks, length,
         retWeight, adjWeight, farWeight))
@@ -245,79 +240,70 @@ object RandomWalks {
       .agg(count(lit(1)).as("n_pairs"))
   }
 
-  /** In-memory reference of node2vecWalks' exact contract. */
-  private[graft] def localNode2vecReference(nodeIds: Array[String],
-      pairs: Array[(String, String)], numWalks: Int, length: Int,
-      retWeight: Int = 1, adjWeight: Int = 4, farWeight: Int = 2)
+  /** First 8 md5 hex digits of `key` as an integer — the engines'
+    * `conv(substr(md5(key), 1, 8), 16, 10)`.
+    */
+  private[algo] def h(key: String): Long =
+    java.lang.Long.parseLong(IndependentSet.md5hex(key).take(8), 16)
+
+  /** The walks from every distinct node-frame id over the simple graph
+    * `g` (rows ascending: the engines' neighbor order), stopping at dead
+    * ends; `step(start, walk, t, prev, cur)` picks the CSR entry of the
+    * next hop out of `cur` (prev = -1 on the first step).
+    */
+  private def walk(g: LocalGraph, numWalks: Int, length: Int)(
+      step: (Int, Int, Int, Int, Int) => Int)
       : Set[(String, Int, Int, String)] = {
-    val dpairs = pairs.distinct
-    val nbrs = dpairs.groupBy(_._1)
-      .map { case (k, es) => k -> es.map(_._2).distinct.sorted }
-    val edgeSet = dpairs.toSet
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h(key: String): Long = {
-      val hex = md.digest(key.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(8)
-      java.lang.Long.parseLong(hex, 16)
-    }
     val out = scala.collection.mutable.Set.empty[(String, Int, Int, String)]
-    for (v <- nodeIds; wk <- 0 until numWalks) {
-      var prev = ""
+    for (v <- g.distinctNodes; w <- 0 until numWalks) {
+      var prev = -1
       var cur = v
-      out += ((v, wk, 0, cur))
+      out += ((g.ids(v), w, 0, g.ids(cur)))
       var t = 1
-      var alive = true
-      while (t <= length && alive) {
-        nbrs.get(cur) match {
-          case Some(ns) =>
-            val ws = ns.map { x =>
-              if (x == prev) retWeight.toLong
-              else if (edgeSet.contains((prev, x))) adjWeight.toLong
-              else farWeight.toLong
-            }
-            val r = h(s"$v|$wk|$t|$cur|$prev") % ws.sum
-            var acc = 0L
-            var i = 0
-            while (acc + ws(i) <= r) { acc += ws(i); i += 1 }
-            prev = cur
-            cur = ns(i)
-            out += ((v, wk, t, cur))
-          case None => alive = false
-        }
+      while (t <= length && g.offsets(cur + 1) > g.offsets(cur)) {
+        val next = g.targets(step(v, w, t, prev, cur))
+        prev = cur
+        cur = next
+        out += ((g.ids(v), w, t, g.ids(cur)))
         t += 1
       }
     }
     out.toSet
   }
 
-  /** In-memory reference of the same contract for audits. */
-  private[graft] def localReference(nodeIds: Array[String],
-      pairs: Array[(String, String)], numWalks: Int, length: Int)
+  /** In-memory reference of node2vecWalks' exact contract over `g`. */
+  private[graft] def localNode2vecReference(g0: LocalGraph,
+      numWalks: Int, length: Int,
+      retWeight: Int = 1, adjWeight: Int = 4, farWeight: Int = 2)
       : Set[(String, Int, Int, String)] = {
-    val nbrs = pairs.distinct.groupBy(_._1)
-      .map { case (k, es) => k -> es.map(_._2).distinct.sorted }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h(key: String): Long = {
-      val hex = md.digest(key.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(8)
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val out = scala.collection.mutable.Set.empty[(String, Int, Int, String)]
-    for (v <- nodeIds; w <- 0 until numWalks) {
-      var cur = v
-      out += ((v, w, 0, cur))
-      var t = 1
-      var alive = true
-      while (t <= length && alive) {
-        nbrs.get(cur) match {
-          case Some(ns) =>
-            cur = ns((h(s"$v|$w|$t|$cur") % ns.length).toInt)
-            out += ((v, w, t, cur))
-          case None => alive = false
-        }
-        t += 1
+    val g = LocalGraph.directedSimple(g0)
+    def adjacent(p: Int, x: Int): Boolean = p >= 0 &&
+      java.util.Arrays.binarySearch(g.targets, g.offsets(p),
+        g.offsets(p + 1), x) >= 0
+    walk(g, numWalks, length) { (v, wk, t, prev, cur) =>
+      val from = g.offsets(cur)
+      val ws = (from until g.offsets(cur + 1)).map { e =>
+        val x = g.targets(e)
+        if (x == prev) retWeight.toLong
+        else if (adjacent(prev, x)) adjWeight.toLong
+        else farWeight.toLong
       }
+      val p = if (prev < 0) "" else g.ids(prev)
+      val r = h(s"${g.ids(v)}|$wk|$t|${g.ids(cur)}|$p") % ws.sum
+      var acc = 0L
+      var i = 0
+      while (acc + ws(i) <= r) { acc += ws(i); i += 1 }
+      from + i
     }
-    out.toSet
+  }
+
+  /** In-memory reference of the same contract for audits over `g`. */
+  private[graft] def localReference(g0: LocalGraph, numWalks: Int,
+      length: Int): Set[(String, Int, Int, String)] = {
+    val g = LocalGraph.directedSimple(g0)
+    walk(g, numWalks, length) { (v, w, t, _, cur) =>
+      val deg = g.offsets(cur + 1) - g.offsets(cur)
+      g.offsets(cur) + (h(s"${g.ids(v)}|$w|$t|${g.ids(cur)}") % deg).toInt
+    }
   }
 }

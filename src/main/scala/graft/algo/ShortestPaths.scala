@@ -199,7 +199,7 @@ object ShortestPaths {
 
   /** Dense ids of the landmarks present in `lg`. */
   private def present(lg: LocalGraph, landmarks: Seq[String]): Seq[Int] =
-    landmarks.filter(l => lg.index.containsKey(l)).map(lg.idOf)
+    landmarks.map(lg.find).filter(_ >= 0)
 
   /** Contraction-hierarchy query (ContractionHierarchy) over the
     * resident entry's hierarchy (built once per graph version — the g34

@@ -63,8 +63,7 @@ object StronglyConnected {
         col(edges.columns(1)).cast("string").as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     if (graft.core.LocalBudget.fits(e, localEdgeThreshold)) {
-      val (pairs, nodeIds) = graft.core.LocalBudget.collectLocal(e, Some(nodes))
-      localTarjan(spark, nodeIds, pairs)
+      localTarjan(spark, graft.core.LocalBudget.collectLocal(e, Some(nodes)))
     } else distributed(s, spark, nodes, e, maxOuter)
   }
 
@@ -72,69 +71,41 @@ object StronglyConnected {
     * stack on deep road-network chains), labeling each SCC by its min
     * member. Mirrors the independent tools/scc_golden.py audit.
     */
-  private[algo] def localTarjan(spark: SparkSession,
-      nodeIds: Array[String],
-      pairs: Array[(String, String)]): DataFrame = {
+  private def localTarjan(spark: SparkSession, g: LocalGraph): DataFrame = {
     import spark.implicits._
-    val adj = scala.collection.mutable.HashMap
-      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-    pairs.foreach { case (s, d) =>
-      adj.getOrElseUpdate(s,
-        scala.collection.mutable.ArrayBuffer.empty[String]) += d
-    }
-    val index = scala.collection.mutable.HashMap.empty[String, Int]
-    val low = scala.collection.mutable.HashMap.empty[String, Int]
-    val onStack = scala.collection.mutable.HashSet.empty[String]
-    val stack = scala.collection.mutable.ArrayBuffer.empty[String]
-    val label = scala.collection.mutable.HashMap.empty[String, String]
+    val index = Array.fill(g.n)(-1)
+    val low = new Array[Int](g.n)
+    val label = Array.fill(g.n)(-1) // set when popped: on stack ⇔ indexed, unlabeled
+    val next = new Array[Int](g.n)  // each open node's next CSR edge
+    val stack = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val work = scala.collection.mutable.ArrayBuffer.empty[Int] // the DFS path
     var counter = 0
-    val empty = scala.collection.mutable.ArrayBuffer.empty[String]
-    nodeIds.foreach { root =>
-      if (!index.contains(root)) {
-        // work entries: (node, next-neighbor position)
-        val work = scala.collection.mutable.ArrayBuffer[(String, Int)]((root, 0))
-        while (work.nonEmpty) {
-          val (v, pi) = work.last
-          if (pi == 0) {
-            index(v) = counter; low(v) = counter; counter += 1
-            stack += v; onStack += v
-          }
-          val nbrs = adj.getOrElse(v, empty)
-          var i = pi
-          var recursed = false
-          while (i < nbrs.length && !recursed) {
-            val w = nbrs(i)
-            if (!index.contains(w)) {
-              work(work.length - 1) = (v, i + 1)
-              work += ((w, 0))
-              recursed = true
-            } else {
-              if (onStack.contains(w)) low(v) = math.min(low(v), index(w))
-              i += 1
-            }
-          }
-          if (!recursed) {
-            work.remove(work.length - 1)
-            if (work.nonEmpty) {
-              val p = work.last._1
-              low(p) = math.min(low(p), low(v))
-            }
-            if (low(v) == index(v)) {
-              val comp = scala.collection.mutable.ArrayBuffer.empty[String]
-              var done = false
-              while (!done) {
-                val w = stack.remove(stack.length - 1)
-                onStack -= w; comp += w
-                if (w == v) done = true
-              }
-              val m = comp.min
-              comp.foreach(label(_) = m)
-            }
+    def open(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      next(v) = g.offsets(v); stack += v; work += v
+    }
+    g.nodes.foreach { root =>
+      if (index(root) < 0) open(root)
+      while (work.nonEmpty) {
+        val v = work.last
+        if (next(v) < g.offsets(v + 1)) {
+          val w = g.targets(next(v))
+          next(v) += 1
+          if (index(w) < 0) open(w)
+          else if (label(w) < 0) low(v) = math.min(low(v), index(w))
+        } else {
+          work.remove(work.length - 1)
+          if (work.nonEmpty) low(work.last) = math.min(low(work.last), low(v))
+          if (low(v) == index(v)) {
+            val comp = stack.drop(stack.lastIndexOf(v))
+            stack.dropRightInPlace(comp.length)
+            val m = comp.min
+            comp.foreach(label(_) = m)
           }
         }
       }
     }
-    nodeIds.toSeq.map(nId => (nId, label.getOrElse(nId, nId)))
+    g.nodes.toSeq.map(v => (g.ids(v), g.ids(label(v))))
       .toDF("node", "component")
   }
 

@@ -46,32 +46,23 @@ object Triangles {
         greatest(col("s"), col("d")).as("b"))
       .distinct())
     if (graft.core.LocalBudget.fits(und, localEdgeThreshold)) {
-      val (pairs, ids) = graft.core.LocalBudget.collectLocal(und, Some(nodes))
-      val adj = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.TreeSet[String]]
-      pairs.foreach { case (a, b) =>
-        adj.getOrElseUpdate(a, scala.collection.mutable.TreeSet.empty) += b
-        adj.getOrElseUpdate(b, scala.collection.mutable.TreeSet.empty) += a
-      }
-      val cnt = scala.collection.mutable.HashMap.empty[String, Long]
-        .withDefaultValue(0L)
-      adj.foreach { case (a, nbrs) =>
-        val above = nbrs.iteratorFrom(a).filter(_ > a).toArray
-        var i = 0
-        while (i < above.length) {
-          var j = i + 1
-          while (j < above.length) {
-            if (adj(above(i)).contains(above(j))) {
-              cnt(a) += 1; cnt(above(i)) += 1; cnt(above(j)) += 1
-            }
-            j += 1
-          }
-          i += 1
+      val g = graft.core.LocalBudget.collectLocal(und, Some(nodes))
+      val adj = LocalGraph.undirected(g)
+      val cnt = new Array[Long](g.n)
+      // each triangle u < v < w once: mark u's higher neighbors, then
+      // close every wedge u–v–w with w above v
+      val mark = Array.fill(g.n)(-1)
+      for (u <- 0 until g.n) {
+        val up = adj.targets.slice(adj.offsets(u), adj.offsets(u + 1)).filter(_ > u)
+        up.foreach(mark(_) = u)
+        for (v <- up; e <- adj.offsets(v) until adj.offsets(v + 1)) {
+          val w = adj.targets(e)
+          if (w > v && mark(w) == u) { cnt(u) += 1; cnt(v) += 1; cnt(w) += 1 }
         }
       }
       val spark = nodes.sparkSession
       import spark.implicits._
-      ids.map(nId => (nId, cnt(nId))).toSeq
+      g.nodes.map(v => (g.ids(v), cnt(v))).toSeq
         .toDF("node", "n_triangles")
     } else distributed(s, nodes, und)
   }

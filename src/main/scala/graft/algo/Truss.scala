@@ -41,12 +41,14 @@ object Truss {
       .distinct())
     if (graft.core.LocalBudget.fits(e0, localEdgeThreshold)) {
       // ---- local peel on adjacency sets -------------------------------
-      var es = graft.core.LocalBudget.collectLocal(e0)._1.toSet
+      val g = graft.core.LocalBudget.collectLocal(e0)
+      var es = g.sources.zip(g.targets).toSet
       var r = 0
       var dropped = true
       while (dropped && r < maxRounds) {
         r += 1
-        val adj = IndependentSet.undirectedAdjacency(es)
+        val adj = es.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+          .groupMap(_._1)(_._2).map { case (k, vs) => k -> vs.toSet }
         val keep = es.filter { case (a, b) =>
           (adj(a) & adj(b)).size >= minSup
         }
@@ -59,7 +61,7 @@ object Truss {
         throw new IllegalStateException(
           s"k-truss (local) did not reach a fixpoint in $maxRounds rounds")
       import spark.implicits._
-      es.toSeq.toDF("src", "dst")
+      es.toSeq.map { case (a, b) => (g.ids(a), g.ids(b)) }.toDF("src", "dst")
     } else peel(s, e0, minSup, maxRounds)
   }
 

@@ -21,8 +21,13 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
     * layout of `edges` (one partition for a small graph, see
     * EdgeListIngest.build), larger ones are sized by AQE.
     */
-  lazy val projection: DataFrame =
+  lazy val projection: DataFrame = {
+    projectionBuilt = true
     edges.groupBy("src", "dst").agg(min("cost").as("cost")).cache()
+  }
+
+  // freeing a graph must not build and cache the projection to uncache it
+  @volatile private var projectionBuilt = false
 
   def cache(): this.type = { nodes.cache(); edges.cache(); this }
 
@@ -57,7 +62,8 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
       pending = pending.map(_ => rows(2, edgeCols: _*)))
   }
 
-  /** Frees this generation: the graph caches, the projection, and every
+  /** Frees this generation: the graph caches, the projection if it was
+    * built, and every
     * frame the builder registered in `underlying` (the raw CSV scan,
     * append's candidate table, a checkpoint's tagged union) — without
     * the latter, loops like SliceSweep would accumulate unreachable
@@ -70,7 +76,8 @@ final case class PropertyGraph(nodes: DataFrame, edges: DataFrame,
     * while never releasing the cache (r16 advice).
     */
   def unpersistAll(): Unit =
-    (Seq(nodes, edges, projection) ++ pending ++ underlying).foreach { df =>
+    (Seq(nodes, edges) ++ Option.when(projectionBuilt)(projection) ++ pending ++
+        underlying).foreach { df =>
       df.unpersist()
       df.queryExecution.analyzed match {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>

@@ -779,11 +779,15 @@ object Dedup {
     if (graft.core.LocalBudget.fits(cached, localThreshold)) {
       val edges = cached.collect().map(r => (r.getLong(0), r.getLong(1)))
       s.keep()
-      val uf = new graft.algo.UnionFind[Long]
-      edges.foreach { case (a, b) => uf.union(a, b) }
-      val members = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      // intern in numeric order: the min-rooted union-find then labels
+      // each group with its minimum doc id
+      val members = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      def id(x: Long): Int = java.util.Arrays.binarySearch(members, x)
+      val uf = new graft.algo.UnionFind(members.length)
+      edges.foreach { case (a, b) => uf.union(id(a), id(b)) }
       import spark.implicits._
-      members.map(m => (m, uf.find(m))).toSeq.toDF("doc_id", "group_id")
+      members.indices.map(i => (members(i), members(uf.find(i))))
+        .toDF("doc_id", "group_id")
     } else {
       s.keep()
       val sym = s.cache(pairs.select(col("id_a").as("u"), col("id_b").as("v"))

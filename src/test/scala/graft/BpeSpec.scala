@@ -11,7 +11,7 @@ import graft.queries.BpeOracle
   * to the local one — the same technique as PageRank's local/distributed
   * parity pin.
   */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-bpe-test")
   import spark.implicits._

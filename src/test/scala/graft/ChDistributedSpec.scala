@@ -11,7 +11,7 @@ import graft.graph.EdgeListIngest
   * deterministically under repartitioning — and the serving contract
   * under EdgeListIngest.append must never serve stale shortcuts.
   */
-class ChDistributedSpec extends AnyFunSuite {
+class ChDistributedSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-test")
   import spark.implicits._

@@ -9,7 +9,7 @@ import graft.operators.PrefixSum
 /** Corpus-curation operators (llm.Curation) and the distributed prefix
   * sum underneath sequence packing (operators.PrefixSum).
   */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-curation-test")
   import spark.implicits._

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that miscounted nulls identically in both engines would still
   * hash-match — these wouldn't let it).
   */
-class DataQualitySpec extends AnyFunSuite {
+class DataQualitySpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-dq-test")
   private val Sf = "/root/testdata/sf0.001"

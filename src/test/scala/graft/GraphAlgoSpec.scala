@@ -9,7 +9,7 @@ import graft.graph.EdgeListIngest
   * (SURVEY §5.2: local Dijkstra ≡ distributed relaxation ≡ A* admissible
   * ≡ Yen top-1; path validity invariants).
   */
-class GraphAlgoSpec extends AnyFunSuite {
+class GraphAlgoSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-test")
   import spark.implicits._
@@ -18,6 +18,84 @@ class GraphAlgoSpec extends AnyFunSuite {
 
   lazy val pg = EdgeListIngest.build(spark, slice1).cache()
   lazy val lg = LocalGraph.fromProjection(pg.projection, Some(pg.nodes))
+
+  // ---- the twins' in-memory references take the one driver graph ----
+  // these build it from in-memory ids and edges the way the twins do,
+  // and name the Int labels they return
+
+  private def graphOf(nodeIds: Array[String], pairs: Array[(String, String)])
+      : LocalGraph =
+    LocalGraph.collect(pairs.toSeq.toDF("src", "dst"),
+      nodes = Some(nodeIds.toSeq.toDF("node")))
+
+  private def named(g: LocalGraph, lbl: Array[Int]): Map[String, String] =
+    g.nodes.map(v => g.ids(v) -> g.ids(lbl(v))).toMap
+
+  private def lpaRef(nodeIds: Array[String], pairs: Array[(String, String)],
+      rounds: Int): Map[String, String] = {
+    val g = graphOf(nodeIds, pairs)
+    named(g, algo.LabelPropagation.localReference(g, rounds))
+  }
+
+  private def louvainRef(nodeIds: Array[String], pairs: Array[(String, String)],
+      rounds: Int): Map[String, String] = {
+    val g = graphOf(nodeIds, pairs)
+    named(g, algo.Louvain.localWeightedReference(g, rounds))
+  }
+
+  private def twoLevelRef(nodeIds: Array[String],
+      pairs: Array[(String, String)], rounds: Int, coarseRounds: Int)
+      : Map[String, String] = {
+    val g = graphOf(nodeIds, pairs)
+    named(g, algo.Louvain.localMultiLevel(g, rounds, coarseRounds, 2))
+  }
+
+  private def multiLevelRef(nodeIds: Array[String],
+      pairs: Array[(String, String)], rounds: Int, coarseRounds: Int,
+      maxLevels: Int): Map[String, String] = {
+    val g = graphOf(nodeIds, pairs)
+    named(g, algo.Louvain.localMultiLevel(g, rounds, coarseRounds, maxLevels))
+  }
+
+  private def weightedRef(nodeIds: Array[String],
+      triples: Array[(String, String, Long)], rounds: Int)
+      : Map[String, String] = {
+    val g = LocalGraph.collect(triples.toSeq.toDF("src", "dst", "w"),
+      Some(org.apache.spark.sql.functions.col("w")),
+      Some(nodeIds.toSeq.toDF("node")))
+    named(g, algo.Louvain.localWeightedReference(g, rounds))
+  }
+
+  private def modularityOf(nodeIds: Array[String],
+      pairs: Array[(String, String)], lbl: Map[String, String]): BigInt = {
+    val g = graphOf(nodeIds, pairs)
+    algo.Louvain.modularityNum(g, Array.tabulate(g.n)(v =>
+      lbl.get(g.ids(v)).fold(v)(g.idOf)))
+  }
+
+  private def walksRef(nodeIds: Array[String], pairs: Array[(String, String)],
+      numWalks: Int, length: Int) =
+    algo.RandomWalks.localReference(graphOf(nodeIds, pairs), numWalks, length)
+
+  private def node2vecRef(nodeIds: Array[String],
+      pairs: Array[(String, String)], numWalks: Int, length: Int,
+      retWeight: Int = 1, adjWeight: Int = 4, farWeight: Int = 2) =
+    algo.RandomWalks.localNode2vecReference(graphOf(nodeIds, pairs),
+      numWalks, length, retWeight, adjWeight, farWeight)
+
+  /** Id alphabets of the random-graph equivalence specs: plain ASCII, and
+    * ids whose UTF-16 order disagrees with the engines' UTF-8 byte order
+    * (U+FF01 sorts below U+1F600 in UTF-8 but above its surrogate pair
+    * in UTF-16) — a twin that orders ids as Java Strings fails on it.
+    */
+  private val alphabets: Seq[(String, Int => String)] = Seq(
+    "ascii" -> (i => s"v$i"),
+    "mixed" -> (i => Seq("！", "😀", "！😀")(i % 3) + i))
+
+  /** The engines' string order (UTF-8 bytes), for brute-force expectations. */
+  private val engineOrder: Ordering[String] = Ordering.fromLessThan((a, b) =>
+    org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b)) < 0)
 
   test("graft_shortest_path SQL table function matches the DataFrame path") {
     graft.functions.GraftFunctions.register(spark)
@@ -489,13 +567,13 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("scc: random digraphs ≡ brute-force mutual reachability") {
-    for (seed <- Seq(7, 23, 71, 131, 223)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(7, 23, 71, 131, 223)) {
       val rnd = new scala.util.Random(seed)
       val n = 15 + rnd.nextInt(15)
       val pairs = (for (_ <- 0 until 35 + rnd.nextInt(40)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
         .filter(e => e._1 != e._2).distinct
-      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      val nodesDf = (0 until n).map(id).toDF("node")
       val edgesDf = pairs.toDF("src", "dst")
       // brute: forward-reachable sets by BFS, label = min mutual partner
       val adj = pairs.groupBy(_._1).map { case (k, es) =>
@@ -510,17 +588,17 @@ class GraphAlgoSpec extends AnyFunSuite {
         }
         seen.toSet
       }
-      val fwd = (0 until n).map(i => s"v$i").map(v => v -> reach(v)).toMap
+      val fwd = (0 until n).map(id).map(v => v -> reach(v)).toMap
       val expected = fwd.keys.map { v =>
-        v -> fwd(v).filter(u => fwd(u).contains(v)).min // v ∈ fwd(v)
+        v -> fwd(v).filter(u => fwd(u).contains(v)).min(engineOrder) // v ∈ fwd(v)
       }.toMap
       val dist = algo.StronglyConnected.scc(spark, nodesDf, edgesDf,
           localEdgeThreshold = 0L)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(dist === expected, s"scc-dist seed=$seed")
+      assert(dist === expected, s"scc-dist $alpha seed=$seed")
       val local = algo.StronglyConnected.scc(spark, nodesDf, edgesDf)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(local === expected, s"scc-local seed=$seed")
+      assert(local === expected, s"scc-local $alpha seed=$seed")
     }
   }
 
@@ -608,7 +686,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val nodeIds = nodes.collect().map(_.getString(0))
     val pairs = edges.collect().map(r => (r.getString(0), r.getString(1)))
-    val ref = algo.LabelPropagation.localReference(nodeIds, pairs, 16)
+    val ref = lpaRef(nodeIds, pairs, 16)
     assert(got.size === 3705)
     assert(got === ref)
     // and the adaptive dispatch (local path on a slice-1-sized graph)
@@ -630,7 +708,7 @@ class GraphAlgoSpec extends AnyFunSuite {
         localEdgeThreshold = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(r1 === Map("a" -> "b", "b" -> "a", "c" -> "a", "z" -> "z"))
-    val ref = algo.LabelPropagation.localReference(
+    val ref = lpaRef(
       Array("a", "b", "c", "z"), Array(("a", "b"), ("a", "c")), 16)
     val r16 = algo.LabelPropagation.run(spark, nodes, edges, rounds = 16,
         localEdgeThreshold = 0L)
@@ -642,13 +720,13 @@ class GraphAlgoSpec extends AnyFunSuite {
     val nodes = pg.nodes.select("nodeId")
     val edges = pg.projection.select("src", "dst")
     // force the DISTRIBUTED superstep loop — the adaptive local path IS
-    // localReference, so only the loop needs the cross-check
+    // localWeightedReference, so only the loop needs the cross-check
     val got = algo.Louvain.run(spark, nodes, edges, rounds = 16,
         localEdgeThreshold = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val nodeIds = nodes.collect().map(_.getString(0))
     val pairs = edges.collect().map(r => (r.getString(0), r.getString(1)))
-    val ref = algo.Louvain.localReference(nodeIds, pairs, 16)
+    val ref = louvainRef(nodeIds, pairs, 16)
     assert(got.size === 3705)
     assert(got === ref)
     // and the adaptive dispatch (local path on a slice-1-sized graph)
@@ -684,7 +762,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     }
     // modularity of the found partition exceeds the singleton baseline
     // (Q=.. for singletons is negative; planted split is ~0.46)
-    val part = algo.Louvain.localReference(
+    val part = louvainRef(
       (cliqueA ++ cliqueB).toArray, (intra :+ ("a0" -> "b0")).toArray, 16)
     val und = (intra :+ ("a0" -> "b0")).flatMap(p => Seq(p, p.swap)).distinct
     val deg = und.groupBy(_._1).map { case (k, es) => k -> es.size.toDouble }
@@ -706,7 +784,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     val dist = algo.Louvain.runTwoLevel(spark, nodes, edges, rounds = 16,
         coarseRounds = 8, localEdgeThreshold = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val ref = algo.Louvain.localTwoLevel(nodeIds, pairs, 16, 8)
+    val ref = twoLevelRef(nodeIds, pairs, 16, 8)
     assert(dist.size === 3705)
     assert(dist === ref)
     // adaptive dispatch (local path on slice 1) agrees bit for bit
@@ -716,9 +794,9 @@ class GraphAlgoSpec extends AnyFunSuite {
     // the coarse phase must never lose modularity vs the level-1
     // partition (every coarse move is argmax-gain including "stay"),
     // and must actually coarsen on this graph
-    val l1 = algo.Louvain.localReference(nodeIds, pairs, 16)
-    val q1 = algo.Louvain.modularityNum(nodeIds, pairs, l1)
-    val q2 = algo.Louvain.modularityNum(nodeIds, pairs, ref)
+    val l1 = louvainRef(nodeIds, pairs, 16)
+    val q1 = modularityOf(nodeIds, pairs, l1)
+    val q2 = modularityOf(nodeIds, pairs, ref)
     assert(q2 >= q1, s"coarse phase lost modularity: $q2 < $q1")
     assert(ref.values.toSet.size < l1.values.toSet.size)
   }
@@ -733,34 +811,54 @@ class GraphAlgoSpec extends AnyFunSuite {
       if i < j
     } yield (g(i), g(j)))
     val pairs = (intra :+ ("a0" -> "b0")).toArray
-    val got = algo.Louvain.localTwoLevel(
+    val got = twoLevelRef(
       (cliqueA ++ cliqueB).toArray, pairs, 16, 8)
     // two dense cliques joined by one bridge: coarsening must NOT merge
     // them (merging two equal-mass cliques loses modularity)
     assert(cliqueA.map(got).toSet.size === 1)
     assert(cliqueB.map(got).toSet.size === 1)
     assert(got("a0") !== got("b0"))
-    for (seed <- Seq(17, 59)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(17, 59)) {
       val rnd = new scala.util.Random(seed)
       val n = 15 + rnd.nextInt(15)
       val rndPairs = (for (_ <- 0 until 30 + rnd.nextInt(40)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
         .filter(e => e._1 != e._2).distinct
-      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      val nodesDf = (0 until n).map(id).toDF("node")
       val edgesDf = rndPairs.toDF("src", "dst")
       for ((r1, r2) <- Seq((4, 2), (16, 8))) {
         val g2 = algo.Louvain.runTwoLevel(spark, nodesDf, edgesDf, r1, r2,
             localEdgeThreshold = 0L)
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        val refR = algo.Louvain.localTwoLevel(
-          (0 until n).map(i => s"v$i").toArray, rndPairs.toArray, r1, r2)
-        assert(g2 === refR, s"two-level seed=$seed rounds=($r1,$r2)")
+        val refR = twoLevelRef(
+          (0 until n).map(id).toArray, rndPairs.toArray, r1, r2)
+        assert(g2 === refR, s"two-level $alpha seed=$seed rounds=($r1,$r2)")
       }
     }
   }
 
   test("multi-level louvain: distributed ≡ twin; per-level modularity " +
       "non-decrease; early stop ≡ deeper cap") {
+    // seeded random graphs on both id alphabets: forced-distributed
+    // levels ≡ the twin ≡ the adaptive dispatch
+    for ((alpha, id) <- alphabets; seed <- Seq(17, 59)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 15 + rnd.nextInt(15)
+      val rndPairs = (for (_ <- 0 until 30 + rnd.nextInt(40)) yield
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
+        .filter(e => e._1 != e._2).distinct
+      val nodesDf = (0 until n).map(id).toDF("node")
+      val edgesDf = rndPairs.toDF("src", "dst")
+      def levels(t: Long) = algo.Louvain.runMultiLevel(spark, nodesDf,
+          edgesDf, rounds = 16, coarseRounds = 8, maxLevels = 4,
+          localEdgeThreshold = t)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val distR = levels(0L)
+      assert(distR === multiLevelRef((0 until n).map(id).toArray,
+        rndPairs.toArray, 16, 8, 4), s"multi-level $alpha seed=$seed")
+      assert(levels(core.LocalBudget.MaxLocalEdges) === distR,
+        s"multi-level adaptive $alpha seed=$seed")
+    }
     val nodes = pg.nodes.select("nodeId")
     val edges = pg.projection.select("src", "dst")
     val nodeIds = nodes.collect().map(_.getString(0))
@@ -769,15 +867,15 @@ class GraphAlgoSpec extends AnyFunSuite {
         rounds = 16, coarseRounds = 8, maxLevels = 4,
         localEdgeThreshold = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val ref = algo.Louvain.localMultiLevel(nodeIds, pairs, 16, 8, 4)
+    val ref = multiLevelRef(nodeIds, pairs, 16, 8, 4)
     assert(dist.size === 3705)
     assert(dist === ref)
     // modularity never decreases level over level (each level's moves
     // are argmax-gain including "stay"), and the hierarchy strictly
     // coarsens past the two-level form on this graph before converging
     val byLevel = (1 to 4).map(l =>
-      algo.Louvain.localMultiLevel(nodeIds, pairs, 16, 8, l))
-    val qs = byLevel.map(algo.Louvain.modularityNum(nodeIds, pairs, _))
+      multiLevelRef(nodeIds, pairs, 16, 8, l))
+    val qs = byLevel.map(modularityOf(nodeIds, pairs, _))
     qs.sliding(2).foreach { case Seq(a, b) =>
       assert(b >= a, s"modularity decreased across a level: $qs")
     }
@@ -786,10 +884,10 @@ class GraphAlgoSpec extends AnyFunSuite {
     info(s"communities per level cap: $sizes, Q·(2m)²: $qs")
     // the early stop is a provable no-op: a deeper cap returns the
     // identical mapping once a level moves nothing
-    val deeper = algo.Louvain.localMultiLevel(nodeIds, pairs, 16, 8, 8)
+    val deeper = multiLevelRef(nodeIds, pairs, 16, 8, 8)
     assert(deeper === ref)
     // maxLevels = 2 reproduces the two-level contract exactly
-    assert(byLevel(1) === algo.Louvain.localTwoLevel(nodeIds, pairs, 16, 8))
+    assert(byLevel(1) === twoLevelRef(nodeIds, pairs, 16, 8))
   }
 
   test("weighted louvain: weights steer the partition; distributed ≡ " +
@@ -812,13 +910,31 @@ class GraphAlgoSpec extends AnyFunSuite {
       assert(got("c") === got("g"), s"thr=$thr")
       assert(got("a") !== got("c"), s"thr=$thr")
     }
+    // seeded random weighted graphs on both id alphabets: local twin ≡
+    // forced-distributed ≡ the in-memory weighted reference
+    for ((alpha, id) <- alphabets; seed <- Seq(13, 47)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 12 + rnd.nextInt(12)
+      val rndTriples = (for (_ <- 0 until 30 + rnd.nextInt(30)) yield
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n)), 1L + rnd.nextInt(20)))
+      val nodesR = (0 until n).map(id).toDF("node")
+      val edgesR = rndTriples.toDF("src", "dst", "w")
+      def weighted(t: Long) = algo.Louvain.runWeighted(spark, nodesR, edgesR,
+          rounds = 16, localEdgeThreshold = t)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val distR = weighted(0L)
+      assert(distR === weightedRef((0 until n).map(id).toArray,
+        rndTriples.toArray, 16), s"weighted $alpha seed=$seed")
+      assert(weighted(Long.MaxValue) === distR,
+        s"weighted adaptive $alpha seed=$seed")
+    }
     // asymmetric directed weights collapse to the min in BOTH engines
     val asym = Seq(("a", "b", 7L), ("b", "a", 3L)).toDF("src", "dst", "w")
     val gotAsym = algo.Louvain.runWeighted(spark,
         Seq("a", "b").toDF("node"), asym, rounds = 4,
         localEdgeThreshold = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val refAsym = algo.Louvain.localWeightedReference(
+    val refAsym = weightedRef(
       Array("a", "b"), Array(("a", "b", 7L), ("b", "a", 3L)), 4)
     assert(gotAsym === refAsym)
     // slice 1: forced-distributed ≡ in-memory weighted reference
@@ -828,7 +944,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     val dist = algo.Louvain.runWeighted(spark, pg.nodes.select("nodeId"),
         we, rounds = 8, localEdgeThreshold = 0L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val ref = algo.Louvain.localWeightedReference(
+    val ref = weightedRef(
       pg.nodes.select("nodeId").collect().map(_.getString(0)),
       we.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))),
       8)
@@ -863,41 +979,41 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("louvain: random graphs ≡ reference across rounds") {
-    for (seed <- Seq(11, 43, 71)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(11, 43, 71)) {
       val rnd = new scala.util.Random(seed)
       val n = 15 + rnd.nextInt(15)
       val pairs = (for (_ <- 0 until 30 + rnd.nextInt(40)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
         .filter(e => e._1 != e._2).distinct
-      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      val nodesDf = (0 until n).map(id).toDF("node")
       val edgesDf = pairs.toDF("src", "dst")
       for (rounds <- Seq(1, 4, 16)) {
         val got = algo.Louvain.run(spark, nodesDf, edgesDf, rounds,
             localEdgeThreshold = 0L)
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        val ref = algo.Louvain.localReference(
-          (0 until n).map(i => s"v$i").toArray, pairs.toArray, rounds)
-        assert(got === ref, s"louvain seed=$seed rounds=$rounds")
+        val ref = louvainRef(
+          (0 until n).map(id).toArray, pairs.toArray, rounds)
+        assert(got === ref, s"louvain $alpha seed=$seed rounds=$rounds")
       }
     }
   }
 
   test("label propagation: random graphs ≡ reference across rounds") {
-    for (seed <- Seq(5, 29, 97)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(5, 29, 97)) {
       val rnd = new scala.util.Random(seed)
       val n = 15 + rnd.nextInt(15)
       val pairs = (for (_ <- 0 until 30 + rnd.nextInt(40)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
         .filter(e => e._1 != e._2).distinct
-      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      val nodesDf = (0 until n).map(id).toDF("node")
       val edgesDf = pairs.toDF("src", "dst")
       for (rounds <- Seq(1, 4, 16)) {
         val got = algo.LabelPropagation.run(spark, nodesDf, edgesDf, rounds,
             localEdgeThreshold = 0L)
           .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        val ref = algo.LabelPropagation.localReference(
-          (0 until n).map(i => s"v$i").toArray, pairs.toArray, rounds)
-        assert(got === ref, s"lpa seed=$seed rounds=$rounds")
+        val ref = lpaRef(
+          (0 until n).map(id).toArray, pairs.toArray, rounds)
+        assert(got === ref, s"lpa $alpha seed=$seed rounds=$rounds")
       }
     }
   }
@@ -942,13 +1058,13 @@ class GraphAlgoSpec extends AnyFunSuite {
   }
 
   test("hits: random digraphs — distributed ≡ sequential across iterations") {
-    for (seed <- Seq(13, 61)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(13, 61)) {
       val rnd = new scala.util.Random(seed)
       val n = 15 + rnd.nextInt(15)
       val pairs = (for (_ <- 0 until 40 + rnd.nextInt(40)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
         .filter(e => e._1 != e._2).distinct
-      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      val nodesDf = (0 until n).map(id).toDF("node")
       val edgesDf = pairs.toDF("src", "dst")
       for (iters <- Seq(1, 5)) {
         val local = algo.Hits.run(nodesDf, edgesDf, iters)
@@ -958,7 +1074,7 @@ class GraphAlgoSpec extends AnyFunSuite {
             localEdgeThreshold = 0L)
           .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
           .toMap
-        assert(dist === local, s"hits seed=$seed iters=$iters")
+        assert(dist === local, s"hits $alpha seed=$seed iters=$iters")
       }
     }
   }
@@ -973,7 +1089,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     val nodeIds = pg.nodes.select("nodeId").collect().map(_.getString(0))
     val pairs = pg.projection.select("src", "dst").collect()
       .map(r => (r.getString(0), r.getString(1)))
-    val ref = algo.RandomWalks.localReference(nodeIds, pairs, 2, 8)
+    val ref = walksRef(nodeIds, pairs, 2, 8)
     assert(got === ref)
     // every (node, walk) pair has its step-0 row; walks genuinely move
     assert(got.count(_._3 == 0) === 3705 * 2)
@@ -1006,7 +1122,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3)))
       .toSet
-    val ref = algo.RandomWalks.localReference(Array("a", "b", "c"),
+    val ref = walksRef(Array("a", "b", "c"),
       Array(("a", "b"), ("a", "c"), ("c", "a")), 3, 5)
     assert(got === ref)
     assert(got.filter(t => t._1 == "b") === got.filter(t =>
@@ -1042,10 +1158,10 @@ class GraphAlgoSpec extends AnyFunSuite {
     val nodeIds = pg.nodes.select("nodeId").collect().map(_.getString(0))
     val pairs = pg.projection.select("src", "dst").collect()
       .map(r => (r.getString(0), r.getString(1)))
-    val ref = algo.RandomWalks.localNode2vecReference(nodeIds, pairs, 2, 8)
+    val ref = node2vecRef(nodeIds, pairs, 2, 8)
     assert(got === ref)
     // the bias must actually change trajectories vs the uniform walker
-    val uniform = algo.RandomWalks.localReference(nodeIds, pairs, 2, 8)
+    val uniform = walksRef(nodeIds, pairs, 2, 8)
     assert(got !== uniform)
     assert(got.count(_._3 == 0) === 3705 * 2)
     // adaptive dispatch (driver-sized graph -> sequential twin) agrees
@@ -1074,7 +1190,7 @@ class GraphAlgoSpec extends AnyFunSuite {
         .collect()
         .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3)))
         .toSet
-      val ref = algo.RandomWalks.localNode2vecReference(
+      val ref = node2vecRef(
         Array("a", "b", "c"), pairs, 2, 6, rw, aw, fw)
       assert(got === ref, s"weights=($rw,$aw,$fw)")
     }
@@ -1199,13 +1315,15 @@ class GraphAlgoSpec extends AnyFunSuite {
   test("wcc/triangles/node-similarity: random digraphs ≡ brute force") {
     // seeded random graphs, every new operator (distributed path forced
     // for WCC/triangles) against an independent in-test brute force
-    val random = Seq(3, 17, 59, 101, 211).map { seed =>
+    val random = for {
+      (alpha, id) <- alphabets; seed <- Seq(3, 17, 59, 101, 211)
+    } yield {
       val rnd = new scala.util.Random(seed)
       val n = 20 + rnd.nextInt(20)
       val pairs = (for (_ <- 0 until 60 + rnd.nextInt(60)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
         .filter(e => e._1 != e._2).distinct
-      (s"seed=$seed", (0 until n).map(i => s"v$i"), pairs)
+      (s"$alpha seed=$seed", (0 until n).map(id), pairs)
     }
     // adversarial shape: a path whose ids sort along it, so min-label
     // propagation would need n supersteps; hook+contract must not
@@ -1232,7 +1350,7 @@ class GraphAlgoSpec extends AnyFunSuite {
               if (seen.add(v)) q.enqueue(v)
             }
           }
-          val lbl = seen.min
+          val lbl = seen.min(engineOrder)
           seen.foreach(v => comp(v) = lbl)
         }
       }
@@ -1264,7 +1382,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       val out = pairs.groupBy(_._1).map { case (k, es) =>
         k -> es.map(_._2).toSet }
       val expSim = (for {
-        a <- out.keys; b <- out.keys if a < b
+        a <- out.keys; b <- out.keys if engineOrder.lt(a, b)
         common = (out(a) & out(b)).size
         union = (out(a) | out(b)).size
         if common * 3 >= union
@@ -1328,7 +1446,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     }
     val ids = (for (x <- 0 until side; y <- 0 until side)
       yield id(x, y)).toArray
-    val ref = algo.Louvain.localReference(ids,
+    val ref = louvainRef(ids,
       links.map(l => (l._1, l._2)).toArray, 10)
     val unit = links.map(l => (l._1, l._2, 1L)).toDF("src", "dst", "w")
     Seq(0L, core.LocalBudget.MaxLocalEdges).foreach { cap =>
@@ -1584,7 +1702,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       canon
         .sortWith { case ((a1, b1, c1), (a2, b2, c2)) =>
           if (c1 != c2) c1 > c2
-          else if (a1 != a2) a1 > a2 else b1 > b2 }
+          else if (a1 != a2) engineOrder.gt(a1, a2)
+          else engineOrder.gt(b1, b2) }
         .foreach { case e @ (a, b, _) =>
           if (!used.contains(a) && !used.contains(b)) {
             used += a; used += b; out += e
@@ -1594,9 +1713,40 @@ class GraphAlgoSpec extends AnyFunSuite {
     }
     def canonOf(raw: Seq[(String, String, Double)]) = raw
       .filter(e => e._1 != e._2)
-      .map(e => (Seq(e._1, e._2).min, Seq(e._1, e._2).max, e._3))
+      .map(e => (Seq(e._1, e._2).min(engineOrder),
+        Seq(e._1, e._2).max(engineOrder), e._3))
       .groupBy(e => (e._1, e._2))
       .map { case (_, es) => es.maxBy(_._3) }.toSeq
+    // small random graphs: ≡ greedy twin AND ≥ ½ of the brute optimum
+    def bruteOpt(canon: List[(String, String, Double)]): Double =
+      canon match {
+        case Nil => 0.0
+        case e :: rest =>
+          val without = bruteOpt(rest)
+          val withE = e._3 + bruteOpt(rest.filter(o =>
+            o._1 != e._1 && o._1 != e._2 && o._2 != e._1 && o._2 != e._2))
+          math.max(without, withE)
+      }
+    for ((alpha, id) <- alphabets; seed <- Seq(19, 61)) {
+      val rnd = new scala.util.Random(seed)
+      val n = 10
+      val raw = (for (_ <- 0 until 18) yield
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n)),
+          (1 + rnd.nextInt(50)).toDouble)).toSeq
+      val canon = canonOf(raw)
+      val got = algo.Matching.heaviest(spark, raw.toDF("src", "dst", "cost"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+        .toSet
+      assert(got === greedySeq(canon), s"$alpha seed=$seed")
+      val gotW = got.toSeq.map(_._3).sum
+      val optW = bruteOpt(canon.toList)
+      assert(gotW * 2 >= optW - 1e-9, s"$alpha seed=$seed got=$gotW opt=$optW")
+      // forced-distributed dominance rounds ≡ the local twin
+      assert(algo.Matching.heaviest(spark, raw.toDF("src", "dst", "cost"),
+          localEdgeThreshold = 0L)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+        .toSet === got, s"distributed $alpha seed=$seed")
+    }
     // slice 1: distributed rounds ≡ sequential greedy
     val sliceRaw = pg.projection.select("src", "dst", "cost").collect()
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
@@ -1612,31 +1762,6 @@ class GraphAlgoSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
       .toSet
     assert(distSlice === gotSlice)
-    // small random graphs: ≡ greedy twin AND ≥ ½ of the brute optimum
-    def bruteOpt(canon: List[(String, String, Double)]): Double =
-      canon match {
-        case Nil => 0.0
-        case e :: rest =>
-          val without = bruteOpt(rest)
-          val withE = e._3 + bruteOpt(rest.filter(o =>
-            o._1 != e._1 && o._1 != e._2 && o._2 != e._1 && o._2 != e._2))
-          math.max(without, withE)
-      }
-    for (seed <- Seq(19, 61)) {
-      val rnd = new scala.util.Random(seed)
-      val n = 10
-      val raw = (for (_ <- 0 until 18) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}",
-          (1 + rnd.nextInt(50)).toDouble)).toSeq
-      val canon = canonOf(raw)
-      val got = algo.Matching.heaviest(spark, raw.toDF("src", "dst", "cost"))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-        .toSet
-      assert(got === greedySeq(canon), s"seed=$seed")
-      val gotW = got.toSeq.map(_._3).sum
-      val optW = bruteOpt(canon.toList)
-      assert(gotW * 2 >= optW - 1e-9, s"seed=$seed got=$gotW opt=$optW")
-    }
   }
 
   test("k-truss: fixpoint invariants on slice 1; forced-distributed ≡ " +
@@ -1744,13 +1869,13 @@ class GraphAlgoSpec extends AnyFunSuite {
 
   test("pagerank + ppr: random digraphs — local and forced-distributed " +
       "≡ sequential integer loop") {
-    for (seed <- Seq(5, 41, 97)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(5, 41, 97)) {
       val rnd = new scala.util.Random(seed)
       val n = 15 + rnd.nextInt(15)
-      val ids = (0 until n).map(i => s"v$i")
+      val ids = (0 until n).map(id)
       // simple digraph; some nodes stay dangling or isolated
       val edges = (for (_ <- 0 until 2 * n + rnd.nextInt(2 * n)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}"))
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n))))
         .filter(e => e._1 != e._2).distinct
       val deg = edges.groupBy(_._1).map { case (s, es) =>
         s -> es.length.toLong }
@@ -1780,10 +1905,10 @@ class GraphAlgoSpec extends AnyFunSuite {
       for (thr <- Seq(graft.core.LocalBudget.MaxLocalEdges, 0L)) {
         assert(ranks(algo.PageRank.run(nodesDf, edgesDf, iters = 10,
           localEdgeThreshold = thr)) === uniform,
-          s"pagerank seed=$seed threshold=$thr")
+          s"pagerank $alpha seed=$seed threshold=$thr")
         assert(ranks(algo.PageRank.personalized(nodesDf, edgesDf, pprSeed,
           iters = 10, localEdgeThreshold = thr)) === ppr,
-          s"ppr seed=$seed threshold=$thr")
+          s"ppr $alpha seed=$seed threshold=$thr")
       }
     }
   }
@@ -1791,11 +1916,11 @@ class GraphAlgoSpec extends AnyFunSuite {
   test("mst: random multigraphs with tied costs — local kruskal ≡ " +
       "forced-distributed boruvka") {
     // the generator of the slice-1 mst test's random multigraphs
-    for (seed <- Seq(7, 23, 71)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(7, 23, 71)) {
       val rnd = new scala.util.Random(seed)
       val n = 12 + rnd.nextInt(10)
       val raw = for (_ <- 0 until 50 + rnd.nextInt(40)) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}",
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n)),
           (1 + rnd.nextInt(9)).toDouble) // small int costs force ties
       val edgesDf = raw.toDF("src", "dst", "cost")
       def forest(thr: Long): Set[(String, String, Double)] =
@@ -1803,21 +1928,21 @@ class GraphAlgoSpec extends AnyFunSuite {
           .collect()
           .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSet
       val local = forest(graft.core.LocalBudget.MaxLocalEdges)
-      assert(local.nonEmpty, s"mst seed=$seed")
-      assert(local === forest(0L), s"mst seed=$seed")
+      assert(local.nonEmpty, s"mst $alpha seed=$seed")
+      assert(local === forest(0L), s"mst $alpha seed=$seed")
     }
   }
 
   test("k-core/k-truss/mis/coloring: random digraphs — local twin ≡ " +
       "forced-distributed") {
-    for (seed <- Seq(11, 29, 83)) {
+    for ((alpha, id) <- alphabets; seed <- Seq(11, 29, 83)) {
       val rnd = new scala.util.Random(seed)
       val n = 12 + rnd.nextInt(8)
-      val nodesDf = (0 until n).map(i => s"v$i").toDF("node")
+      val nodesDf = (0 until n).map(id).toDF("node")
       // self-loops and reverse/parallel duplicates kept: every kernel
       // collapses them itself
       val edgesDf = (for (_ <- 0 until 4 * n) yield
-        (s"v${rnd.nextInt(n)}", s"v${rnd.nextInt(n)}")).toDF("src", "dst")
+        (id(rnd.nextInt(n)), id(rnd.nextInt(n)))).toDF("src", "dst")
       val kernels: Seq[(String, Long => org.apache.spark.sql.DataFrame)] =
         Seq(
           "k-core" -> (t => algo.KCore.core(spark, edgesDf, k = 3,
@@ -1831,8 +1956,8 @@ class GraphAlgoSpec extends AnyFunSuite {
       for ((name, kernel) <- kernels) {
         def rows(t: Long) = kernel(t).collect().map(_.toSeq).toSet
         val local = rows(graft.core.LocalBudget.MaxLocalEdges)
-        assert(local.nonEmpty, s"$name seed=$seed")
-        assert(local === rows(0L), s"$name seed=$seed")
+        assert(local.nonEmpty, s"$name $alpha seed=$seed")
+        assert(local === rows(0L), s"$name $alpha seed=$seed")
       }
     }
   }
@@ -1875,7 +2000,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       "coordinate-free on random digraphs") {
     import graft.algo.{Landmarks, LocalGraph}
     val landmarks = (0 until 40).map(i => (i * 17 + 1).toString)
-      .filter(l => lg.index.containsKey(l)).map(lg.idOf)
+      .map(lg.find).filter(_ >= 0)
     val s = lg.idOf("2022"); val t = lg.idOf("2802")
     val h = Landmarks.altHeuristic(lg, LocalGraph.reverse(lg), landmarks, t)
     val (altRes, altExp) = LocalKernels.astarTable(lg, s, t, h)
@@ -1995,7 +2120,7 @@ class GraphAlgoSpec extends AnyFunSuite {
     val rev = LocalGraph.reverse(lg)
     val s = lg.idOf("2022"); val t = lg.idOf("2802")
     val lms = (0 until 40).map(i => (i * 17 + 1).toString)
-      .filter(l => lg.index.containsKey(l)).map(lg.idOf)
+      .map(lg.find).filter(_ >= 0)
     val (pf, prune) = Landmarks.bidiAltPotentials(lg, rev, lms, s, t)
     // feasibility audit: BOTH directions' reduced edge costs must be
     // nonnegative (up to IEEE slack) — the soundness condition for the
@@ -2210,7 +2335,7 @@ class GraphAlgoSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(3)).toMap
     assert(est.nonEmpty)
     // exact distances from each queried source via the local kernel
-    val exact = srcSet.filter(s => lg.index.containsKey(s)).map { s =>
+    val exact = srcSet.filter(s => lg.find(s) >= 0).map { s =>
       val (d, _) = LocalKernels.sssp(lg, lg.idOf(s))
       s -> d
     }.toMap

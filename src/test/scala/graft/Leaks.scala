@@ -37,3 +37,16 @@ object Leaks {
       r.getStorageLevel != StorageLevel.NONE).map(_.id).toSeq.sorted
   }
 }
+
+/** Frees every plan cached in the shared session when a suite ends. The
+  * suites share one JVM and one session, so a fixture a suite caches (a
+  * `lazy val docs = ….cache()`, a seeded graph, an unreleased query
+  * result) would otherwise outlive it; LifetimeSpec names any plan it
+  * finds cached at its start.
+  */
+trait FreesCachedPlans extends org.scalatest.BeforeAndAfterAll {
+  this: org.scalatest.Suite =>
+  def spark: SparkSession
+  override def afterAll(): Unit =
+    try spark.catalog.clearCache() finally super.afterAll()
+}

@@ -32,6 +32,22 @@ class LifetimeSpec extends AnyFunSuite {
       .asInstanceOf[Int]
   }
 
+  /** Each plan in the session's CacheManager, named by its root and its
+    * leaves (the entries are private too, so also read reflectively).
+    */
+  private def cachedPlanNames: Seq[String] = {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val entries = cache.getClass.getDeclaredMethod("cachedData")
+    entries.setAccessible(true)
+    entries.invoke(cache)
+      .asInstanceOf[Seq[org.apache.spark.sql.execution.CachedData]]
+      .map { d =>
+        val leaves = d.plan.collectLeaves().map(_.simpleString(3)).distinct
+        s"${d.plan.nodeName} over ${leaves.mkString("; ")}".take(300)
+      }
+  }
+
   /** The RDDs `body` left persisted and the cached plans it added. */
   private def leftBehind(body: => Unit): (Seq[Int], Int) = {
     val plans = cachedPlans
@@ -43,6 +59,10 @@ class LifetimeSpec extends AnyFunSuite {
     queries.Graph.queries.map(_.name).toSet + "stream_graph_append"
 
   test("every sf-dir query frees what it materialized on release(result)") {
+    // suites sharing this JVM share the session: name what they left
+    val inherited = cachedPlanNames
+    info(s"${inherited.size} plans cached before this suite" +
+      inherited.mkString(if (inherited.isEmpty) "" else ":\n", "\n", ""))
     val sweep = Registry.all.filterNot(q => readsReference(q.name))
     assert(sweep.size == 159)
     val leaks = sweep.flatMap { q =>

@@ -8,7 +8,7 @@ import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
 /** LLM-pipeline operator invariants, including the LSH-vs-exact
   * validations that replace DuckDB oracles for hash-based ops.
   */
-class LlmOpsSpec extends AnyFunSuite {
+class LlmOpsSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-llm-test")
   import spark.implicits._

@@ -10,7 +10,7 @@ import graft.graph.{EdgeListIngest, PropertyGraph}
   * parent's entry stays valid for the parent, and a warm graph answers
   * a repeat query without a Spark job.
   */
-class ResidentGraphSpec extends AnyFunSuite {
+class ResidentGraphSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-test")
   import spark.implicits._

@@ -10,7 +10,7 @@ import graft.llm.Scoring
   * hash; these pin the semantics on cases small enough to verify by
   * hand).
   */
-class ScoringSpec extends AnyFunSuite {
+class ScoringSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-scoring-test")
 

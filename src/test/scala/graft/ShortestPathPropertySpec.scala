@@ -15,9 +15,7 @@ object ShortestPathPropertySpec extends Properties("ShortestPaths") {
     // min-cost per (src,dst) like PropertyGraph.projection
     val best = edges.groupBy(e => (e._1, e._2))
       .map { case ((u, v), es) => (u, v, es.map(_._3).min) }.toSeq
-    val index = new java.util.HashMap[String, Int]()
     val ids = (0 until n).map(_.toString).toArray
-    ids.zipWithIndex.foreach { case (s, i) => index.put(s, i) }
     val offsets = new Array[Int](n + 1)
     best.foreach { case (u, _, _) => offsets(u + 1) += 1 }
     (0 until n).foreach(i => offsets(i + 1) += offsets(i))
@@ -27,7 +25,7 @@ object ShortestPathPropertySpec extends Properties("ShortestPaths") {
     best.foreach { case (u, v, c) =>
       targets(pos(u)) = v; costs(pos(u)) = c; pos(u) += 1
     }
-    new LocalGraph(ids, index, offsets, targets, costs,
+    new LocalGraph(ids, offsets, targets, costs,
       Array.fill(n)(Double.NaN), Array.fill(n)(Double.NaN))
   }
 

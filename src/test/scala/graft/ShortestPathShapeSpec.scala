@@ -12,7 +12,7 @@ import graft.graph.EdgeListIngest
   * (kept here as a Spark aggregate over dijkstraPath's rows) in schema
   * and rows, and the path entry points keep their schema when empty.
   */
-class ShortestPathShapeSpec extends AnyFunSuite {
+class ShortestPathShapeSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-test")
   import spark.implicits._

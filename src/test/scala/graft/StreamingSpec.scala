@@ -8,7 +8,7 @@ import graft.streaming.EventStreams
 /** Streaming ≡ batch convergence on finite replayed input, plus the
   * custom-state sessionizer vs the built-in session_window.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-stream-test")
   import spark.implicits._

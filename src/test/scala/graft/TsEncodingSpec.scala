@@ -22,7 +22,7 @@ import graft.streaming.EventStreams
   * session-UTC TimestampType rows — so the NEXT encoding drift is caught
   * here, not by the driver.
   */
-class TsEncodingSpec extends AnyFunSuite {
+class TsEncodingSpec extends AnyFunSuite with FreesCachedPlans {
 
   lazy val spark: SparkSession = core.Sessions.local(4, "graft-tsenc-test")
 
